@@ -170,3 +170,24 @@ def test_registry_event_entries_on_empty_events_parquet(spark, tmp_path):
         df = registry.QUERIES[name](spark, sf_dir)
         assert df.count() == 0, name
         assert len(df.schema.fields) >= 2, name
+
+
+def test_oversized_basket_fails_loudly(spark):
+    """orders_basket_affinity and graph_triangle_count build a
+    basket's C(n, 2) pairs inside one row; a basket above the stated
+    cap must fail the query with its order key, not exhaust an
+    executor."""
+    import pytest
+
+    from trading212_etl_spark.registry._core import MAX_BASKET_PARTS, _basket_pairs
+
+    small = [(7, list(range(6))), (8, [1, 2])]
+    schema = "l_orderkey long, parts array<long>"
+    rows = _basket_pairs(spark.createDataFrame(small, schema)).collect()
+    assert len(rows) == 15  # C(6, 2); (1, 2) is counted twice
+    assert sum(r.pair_count for r in rows) == 16
+    big = small + [(9, list(range(MAX_BASKET_PARTS + 1)))]
+    with pytest.raises(
+        Exception, match=f"order 9 has more than {MAX_BASKET_PARTS} distinct parts"
+    ):
+        _basket_pairs(spark.createDataFrame(big, schema)).collect()

@@ -805,7 +805,7 @@ def test_ordered_scans_have_no_unpartitioned_window_over_data(spark):
 
 def test_ordered_prefix_sort_stage_is_parallel(spark):
     """>1 partition must survive the sort stage: the pareto scan's
-    row_number window hash-partitions on __pid (32 shuffle
+    row_number window hash-partitions on __pid (the session's shuffle
     partitions), not SinglePartition."""
     df = registry.QUERIES["orders_pareto_8020"](spark, SF)
     simple = df._jdf.queryExecution().executedPlan().toString()
@@ -865,32 +865,129 @@ def test_ivf_partitioned_probe_prunes_partitions(spark):
 
 
 def test_scaled_shuffle_partitions_grows_with_corpus_bytes(spark, tmp_path):
-    """VERDICT r10 item 3: the partitions-scale-with-bytes deployment
-    rule is CODE. The advisory stays at the 32 floor for harness-SF
-    corpora (sf0.1 is ~17 MB) and grows to ~bytes/8MiB once a corpus
-    outruns it — the 125x corpus (~2 GB) must land near the measured
-    bm25 optimum (256), never above the 4096 cap."""
-    from trading212_etl_spark.registry._core import (
-        _CORPUS_BYTES,
-        scaled_shuffle_partitions,
-    )
+    """The partitions-scale-with-bytes deployment rule is CODE
+    (session.shuffle_partitions_for). Harness-SF corpora sit at the
+    core-count floor (sf0.1 is ~17.5 MB = 3 × 8 MiB) and the count
+    grows to ~bytes/8MiB once a corpus outruns it — the 125x corpus
+    (~2 GB) must land near the measured bm25 optimum (256), never
+    above the 4096 cap."""
+    from trading212_etl_spark.session import input_bytes, shuffle_partitions_for
 
+    cores = spark.sparkContext.defaultParallelism
     sf01 = "/root/testdata/sf0.1"
-    assert scaled_shuffle_partitions(spark, sf01) == 32
-    # synthetic corpus sizes via the cache (the rule reads bytes, not
-    # files, past the walk)
+    assert shuffle_partitions_for(cores, input_bytes(sf01)) == max(cores, 3)
     for fake_bytes, lo, hi in [
         (2_000_000_000, 200, 300),   # the 125x corpus
         (400_000_000, 33, 64),       # the 25x corpus
         (10**14, 4096, 4096),        # 100 TB -> capped
     ]:
-        key = f"__fake_{fake_bytes}"
-        _CORPUS_BYTES[key] = fake_bytes
-        got = scaled_shuffle_partitions(spark, key)
+        got = shuffle_partitions_for(cores, fake_bytes)
         assert lo <= got <= hi, (fake_bytes, got)
     # unreadable path -> floor, not an exception
-    assert scaled_shuffle_partitions(spark, str(tmp_path / "nope")) == 32
+    assert shuffle_partitions_for(cores, input_bytes(str(tmp_path / "nope"))) == cores
 
+
+def _seq(scala_seq):
+    it = scala_seq.iterator()
+    while it.hasNext():
+        yield it.next()
+
+
+def _physical_nodes(node, into_exchanges: bool = True):
+    """Every node of a physical plan, descending into AQE's input
+    plan and cached relations' plans; with ``into_exchanges=False``
+    the walk stops at exchanges — the nodes of ONE stage."""
+    stack = [node]
+    while stack:
+        n = stack.pop()
+        yield n
+        cls = n.getClass().getSimpleName()
+        if cls == "AdaptiveSparkPlanExec":
+            stack.append(n.inputPlan())
+        elif cls == "InMemoryTableScanExec":
+            stack.append(n.relation().cachedPlan())
+        if into_exchanges or "Exchange" not in cls:
+            stack.extend(_seq(n.children()))
+
+
+def _is_file_scan(node) -> bool:
+    cls = node.getClass().getSimpleName()
+    return cls.endswith("ScanExec") and cls != "InMemoryTableScanExec"
+
+
+def _tokenizes(node) -> bool:
+    return any("regexp_extract_all" in e.toString() for e in _seq(node.expressions()))
+
+
+def tokenizer_below_fan_out(df, whole_subtree: bool) -> list[str]:
+    """Operators that evaluate ``regexp_extract_all`` below a
+    ``fan_out`` exchange (RoundRobinPartitioning): anywhere beneath it
+    with ``whole_subtree``, else only in a map stage that reads a file
+    scan — the under-split input fan_out exists to widen (a map stage
+    fed by another shuffle already runs wide). Asserts the plan has
+    such an exchange, so a pass is never vacuous."""
+    root = df._jdf.queryExecution().executedPlan()
+    exchanges = [
+        n
+        for n in _physical_nodes(root)
+        if n.getClass().getSimpleName() == "ShuffleExchangeExec"
+        and n.outputPartitioning().toString().startswith("RoundRobinPartitioning")
+    ]
+    assert exchanges, "no fan_out exchange in the plan"
+    found = []
+    for x in exchanges:
+        nodes = list(_physical_nodes(x.child(), into_exchanges=whole_subtree))
+        if whole_subtree or any(_is_file_scan(n) for n in nodes):
+            found += [n.nodeName() for n in nodes if _tokenizes(n)]
+    return found
+
+
+def test_curation_tokenizes_only_above_fan_out(spark):
+    """pipeline_curate_corpus: the quality/language filter must not be
+    pushed through the scoring projections and fan_out's round-robin
+    exchange down to the scan, where it inlined the tokenizer (21
+    regexp_extract_all per row) into a one-task Filter and the
+    tokenizer then ran again after the exchange. Nothing below the
+    exchange may tokenize."""
+    for name in ("pipeline_curate_corpus", "pipeline_curate_corpus_lsh"):
+        df = registry.QUERIES[name](spark, SF)
+        assert tokenizer_below_fan_out(df, whole_subtree=True) == [], name
+
+
+# at least one registry entry per fan_out call site (operators/dedup.py,
+# operators/textual.py, operators/similarity.py, registry/llm.py)
+FAN_OUT_SITES = [
+    "dedup_jaccard_pairs",          # dedup._shingle_sets
+    "dedup_boilerplate_lines",      # dedup.dedup_lines
+    "dedup_simhash",                # dedup.simhash
+    "dedup_substring_spans",        # dedup.substring_span_pairs
+    "text_quality_score",           # textual._with_tokens
+    "text_tfidf_topk",              # textual._with_tokens + explode
+    "text_unigram_lm_score",        # textual._with_tokens + explode
+    "text_bm25_topk",               # textual._with_tokens + explode
+    "similarity_topk_bruteforce",   # similarity.cosine_topk_bruteforce
+    "similarity_topk_lsh",          # similarity.cosine_topk_lsh
+    "similarity_topk_ivf",          # similarity.cosine_topk_ivf
+    "embedding_near_dup_lsh",       # similarity.embedding_near_dup_pairs_lsh
+    "embedding_kmeans_step",        # similarity.kmeans_lloyd_step
+    "similarity_hard_negatives",    # registry/llm.py
+    "similarity_matryoshka_recall", # registry/llm.py
+]
+
+
+def test_fan_out_map_stages_run_no_tokenizer(spark):
+    """Every fan_out call site: the scan stage feeding a round-robin
+    exchange never tokenizes. A filter over token-derived columns
+    (including the size(arr) > 0 that an inner explode of a token
+    column infers) is pushed through the exchange with the tokenizer
+    inlined; tokenizing before fan_out runs it in the one task of an
+    under-split scan."""
+    bad = {}
+    for name in FAN_OUT_SITES:
+        found = tokenizer_below_fan_out(registry.QUERIES[name](spark, SF), False)
+        if found:
+            bad[name] = found
+    assert bad == {}
 
 
 def test_approx_sketches_refutation_bounds(spark):

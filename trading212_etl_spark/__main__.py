@@ -7,7 +7,8 @@
 The CLI is the switch-over affordance for a user of the reference
 script: every operator the engine implements is runnable by name
 against any corpus directory, with the same session defaults the
-benchmark uses (AQE on, UTC, 32 shuffle partitions — session.py).
+benchmark uses (AQE on, UTC, local[cores] with shuffle partitions
+from the corpus bytes and core count — session.shuffle_partitions_for).
 `--explain` prints the formatted physical plan instead of rows, which
 is the first thing to read before running anything at scale
 (PLANS.md documents what to look for)."""

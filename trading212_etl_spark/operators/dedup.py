@@ -23,7 +23,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..partitioning import fan_out, freeze_partitions, materialize
-from .textual import tokens
+from .textual import explode_nonempty, tokens
 
 
 def exact_dedup(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -327,6 +327,18 @@ def jaccard_pairs(
     only (the hub route's candidate mass is already banding-bounded)
     and is IGNORED — with a runtime warning — when both are set.
     Default None keeps the complete pair set — the oracle path.
+
+    Hash collisions: shingles are compared as xxhash64 longs, not
+    strings — the self-join keys on them, and the ``top_k_per_doc``
+    route scores array_intersect over hashed shingle sets. Two
+    DISTINCT shingles with equal 64-bit hashes therefore count as one
+    shingle, which shifts ``n_common`` (and so J) for the document
+    pairs holding them: a pair can gain or lose a shingle in common,
+    and one near the threshold can appear or vanish. With S distinct
+    shingles in the corpus about S²/2^65 shingle pairs collide: none
+    expected below S ≈ 6·10^9, tens of thousands at S = 10^12. The
+    DuckDB oracles join on the strings, so a collision in a test
+    corpus shows as an oracle mismatch, not as silent drift.
     """
     if top_k_per_doc is not None:
         if max_df is not None:
@@ -371,24 +383,6 @@ def _warn_hubs_without_bound(hubs: int | None) -> None:
         )
 
 
-def _explode_nonempty(df, keep: list, array_col: str, alias: str):
-    """``explode`` minus Spark's ``InferFiltersFromGenerate`` trap: an
-    inner explode makes the optimizer infer ``size(arr) > 0``, and
-    predicate pushdown then RE-INLINES the whole array expression —
-    tokenizer regex included, inside the shingle transform lambda —
-    into a scan-stage interpreted Filter that costs O(tokens²) per
-    document (r7 lesson 3's pushdown half, caught live by jstack at
-    the r13 125× sweep: one scan task burned 10+ CPU-minutes
-    re-tokenizing inside the pushed filter). ``explode_outer`` admits
-    no such inference, and the null row an empty array contributes is
-    dropped on the generator OUTPUT attribute, which cannot push below
-    the Generate — so the result is row-identical to plain explode
-    with the quadratic filter gone."""
-    return df.select(
-        *keep, F.explode_outer(array_col).alias(alias)
-    ).filter(F.col(alias).isNotNull())
-
-
 def _common_shingle_counts(
     docs: DataFrame,
     n: int,
@@ -408,7 +402,7 @@ def _common_shingle_counts(
     sh = _shingle_sets(docs, n, id_col, tokens_col).withColumn(
         "set_size", F.size("shingles")
     )
-    exploded = _explode_nonempty(sh, ["id", "set_size"], "shingles", "__s").select(
+    exploded = explode_nonempty(sh, ["id", "set_size"], "shingles", "__s").select(
         "id", "set_size", F.xxhash64("__s").alias("shingle")
     )
     if max_df is not None:
@@ -532,7 +526,7 @@ def _signature_frame(sh: DataFrame, num_hashes: int, hash_fn: str) -> DataFrame:
     shingle row; the digests are materialized in a projection BEFORE
     the aggregate because CSE across sibling aggregate expressions is
     not guaranteed."""
-    ex = _explode_nonempty(sh, ["id"], "shingles", "s")
+    ex = explode_nonempty(sh, ["id"], "shingles", "s")
     if hash_fn == "md5":
         n_digests = (num_hashes + 3) // 4
         ex = ex.select(
@@ -641,6 +635,15 @@ def minhash_lsh_pairs(
         expressible as an oracle SQL and differentially testable.
         ~2-3x more signature CPU and 4x wider band keys; use it for
         parity gates, not the 100 TB run.
+
+    Hash collisions, in either mode: verification computes |∩| over
+    xxhash64-hashed shingle sets, so two DISTINCT shingles with equal
+    64-bit hashes count as one. Only a candidate pair whose two sets
+    hold colliding shingles is affected (its J moves by about
+    1/|A ∪ B| per collision, so a pair near the threshold can appear
+    or vanish); the chance is about |A|·|B|/2^64 per pair, ~5·10^-12
+    for two 10^4-shingle documents. The md5 signatures and bands are
+    exact strings, so candidate generation itself has no such class.
     """
     assert hash_fn in ("xxhash64", "md5"), hash_fn
     # the shingle sets feed THREE consumers with different downstream
@@ -770,7 +773,7 @@ def connected_components(
     their own trivial component and never enter the graph).
 
     Two r15 levers on top (guide §2.4 remove shuffles, §1.2 algorithm
-    first; measured in BENCH_SCALING.json ``cc_frontier_r15``):
+    first):
 
     - **one-pass symmetric edges**: the old ``fwd.union(swap(fwd))``
       had TWO plan branches over the un-materialized ``pairs``
@@ -920,7 +923,7 @@ def decontaminate(
     map-side combine. If a benchmark ever outgrew broadcast, dropping
     the hint degrades gracefully to a shuffle join on the same key.
     """
-    corpus = _explode_nonempty(
+    corpus = explode_nonempty(
         _shingle_sets(docs, n, id_col).withColumn(
             "set_size", F.size("shingles")
         ),
@@ -929,7 +932,7 @@ def decontaminate(
         "__s",
     ).select("id", "set_size", F.xxhash64("__s").alias("shingle"))
     bench = (
-        _explode_nonempty(
+        explode_nonempty(
             _shingle_sets(benchmark, n, id_col), [], "shingles", "__s"
         )
         .select(F.xxhash64("__s").alias("shingle"))
@@ -1060,7 +1063,7 @@ def decontaminate_bloom(
     ``probe_rows`` / ``maybe_rows`` counts proving the pre-filter
     actually prunes (not run by default — keeps the op action-free)."""
     bench = (
-        _explode_nonempty(
+        explode_nonempty(
             _shingle_sets(benchmark, n, id_col), [], "shingles", "__s"
         )
         .select(F.xxhash64("__s").alias("shingle"))
@@ -1095,7 +1098,7 @@ def _bloom_probe_confirm(
     load-from-sink (:func:`decontaminate_bloom_from_sink`) entries, so
     the two CANNOT diverge — the sink path's bit-identity claim is
     structural."""
-    corpus = _explode_nonempty(
+    corpus = explode_nonempty(
         _shingle_sets(docs, n, id_col).withColumn(
             "set_size", F.size("shingles")
         ),
@@ -1152,7 +1155,7 @@ def write_decontamination_sink(
     import os
 
     bench = (
-        _explode_nonempty(
+        explode_nonempty(
             _shingle_sets(benchmark, n, id_col), [], "shingles", "__s"
         )
         .select(F.xxhash64("__s").alias("shingle"))
@@ -1533,7 +1536,7 @@ def dedup_lines(
     # makes the optimizer infer size(lines) > 0 and push it below the
     # projection, re-inlining the caller's line-construction lambda
     # (tokenizer included) into a scan-stage interpreted Filter — the
-    # same quadratic trap _explode_nonempty documents.
+    # same quadratic trap textual.explode_nonempty documents.
     exploded = (
         fan_out(docs)
         .select(

@@ -47,6 +47,27 @@ def _with_tokens(docs: DataFrame, *keep: str) -> DataFrame:
     return fan_out(docs).select(*keep, tokens("text").alias("__toks"))
 
 
+def explode_nonempty(
+    df: DataFrame, keep: list, array_col: str, alias: str
+) -> DataFrame:
+    """``explode`` minus Spark's ``InferFiltersFromGenerate`` trap: an
+    inner explode of an array ATTRIBUTE (a projected column such as
+    ``__toks``) makes the optimizer infer ``size(arr) > 0``, and
+    predicate pushdown then RE-INLINES the whole array expression —
+    tokenizer regex included, inside the shingle transform lambda —
+    into a scan-stage interpreted Filter that costs O(tokens²) per
+    document (r7 lesson 3's pushdown half, caught live by jstack at
+    the r13 125× sweep: one scan task burned 10+ CPU-minutes
+    re-tokenizing inside the pushed filter). ``explode_outer`` admits
+    no such inference, and the null row an empty array contributes is
+    dropped on the generator OUTPUT attribute, which cannot push below
+    the Generate — so the result is row-identical to plain explode
+    with the quadratic filter gone."""
+    return df.select(
+        *keep, F.explode_outer(array_col).alias(alias)
+    ).filter(F.col(alias).isNotNull())
+
+
 def token_stats(docs: DataFrame) -> DataFrame:
     """Token counting: whitespace words + BPE-ish regex tokens +
     char/avg-length stats. One projection, zero shuffles — at 100 TB
@@ -188,8 +209,9 @@ def tfidf_top_terms(docs: DataFrame, k: int = 5, max_df: int | None = None) -> D
     from pyspark.sql import Window
 
     tf = (
-        _with_tokens(docs, "doc_id")
-        .select("doc_id", F.explode("__toks").alias("term"))
+        explode_nonempty(
+            _with_tokens(docs, "doc_id"), ["doc_id"], "__toks", "term"
+        )
         .groupBy("doc_id", "term")
         .agg(F.count("*").alias("tf"))
     )
@@ -325,8 +347,9 @@ def unigram_lm_score(docs: DataFrame) -> DataFrame:
     # (r14 plan audit: three copies of the explode→tf chain). Same
     # pin bm25_topk has carried since r6.
     tf = freeze_partitions(
-        _with_tokens(docs, "doc_id")
-        .select("doc_id", F.explode("__toks").alias("term"))
+        explode_nonempty(
+            _with_tokens(docs, "doc_id"), ["doc_id"], "__toks", "term"
+        )
         .groupBy("doc_id", "term")
         .agg(F.count("*").alias("tf"))
     )
@@ -538,8 +561,8 @@ def bm25_topk(
     from ..partitioning import freeze_partitions
 
     spark = docs.sparkSession
-    tok = _with_tokens(docs, "doc_id").select(
-        "doc_id", F.explode("__toks").alias("term")
+    tok = explode_nonempty(
+        _with_tokens(docs, "doc_id"), ["doc_id"], "__toks", "term"
     )
     # tf feeds FOUR derivations (dl, corpus stats, df, the match
     # join): pin it so the corpus is tokenized and count-aggregated

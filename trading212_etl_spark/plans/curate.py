@@ -9,8 +9,10 @@ canonicalize → filter → dedup → project, rebuilt over text.
 Scale shape, stage by stage:
 1. scoring is ONE pass — tokens materialized once (projection
    boundary, see operators/textual), quality + language computed as
-   sibling expressions, filters applied before anything shuffles;
-2. exact dedup groups 64-byte sha256 digests, not documents;
+   sibling expressions;
+2. exact dedup partitions by 64-byte sha256 digests, and the quality
+   and language filters apply on the window's output (pushed any
+   lower, they re-tokenize every row below the fan-out exchange);
 3. near-dup pairs come from the shingle join (or swap in
    minhash_lsh_pairs at cluster scale — same pair contract);
 4. removal is a left-anti join on the drop set (broadcast-able:
@@ -72,17 +74,28 @@ def curate_corpus(
         quality_bp_col(toks, F.col("text")).alias("quality_bp"),
         lang_pred_col(toks).alias("lang_pred"),
     )
-    kept = scored.filter(
-        (F.col("quality_bp") >= min_quality_bp) & F.col("lang_pred").isin(*langs)
-    )
     # exact dedup as keep-first-by-digest: ONE shuffle (partition by
     # sha256, min doc_id wins) instead of the groupBy-digest +
     # semi-join-back form, which costs a second exchange plus a
     # materialization of the filtered corpus for its two consumers.
     w = Window.partitionBy(F.sha2("text", 256)).orderBy("doc_id")
     canonical = (
-        kept.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
+        scored.withColumn("__rn", F.row_number().over(w))
+        # the quality/language filter goes AFTER the digest window on
+        # purpose. Above the projections, Catalyst pushes it through
+        # them and through fan_out's round-robin exchange to the scan,
+        # inlining the tokenizer into a one-task Filter (21
+        # regexp_extract_all per row) that runs again after the
+        # exchange; a filter on non-partition columns cannot cross a
+        # Window. Same survivors either way: quality_bp and lang_pred
+        # depend only on text, so one digest's docs pass or fail
+        # together, and the min doc_id of a passing digest is the min
+        # over its passing docs.
+        .filter(
+            (F.col("__rn") == 1)
+            & (F.col("quality_bp") >= min_quality_bp)
+            & F.col("lang_pred").isin(*langs)
+        )
         # text is only needed up to the digest — shingling reads the
         # token arrays; dropping it shrinks the materialized survivors
         .drop("__rn", "text")

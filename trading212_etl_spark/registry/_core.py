@@ -18,88 +18,75 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from ..partitioning import bounded_bucket
+from ..session import input_bytes, shuffle_partitions_for
 from ..sources import load_table
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
 
 
-def pin_oracle_confs(spark: SparkSession) -> None:
+def pin_oracle_confs(spark: SparkSession, sf_dir: str | None = None) -> None:
     """Pin runtime confs required for value-parity with the DuckDB
     oracle, whatever session the driver hands us (SURVEY §7: DuckDB
     timestamps are UTC-naive; a non-UTC Spark session shifts
-    date_format/to_date output by the zone offset)."""
+    date_format/to_date output by the zone offset), and size its
+    shuffles by the engine's one policy (session.shuffle_partitions_for)
+    over the session's cores and ``sf_dir``'s bytes — a vanilla
+    session's 200 partitions are pure scheduling overhead at harness
+    SFs. A ``get_session`` default session keeps its width unless
+    the corpus outgrows the floor."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    # Shuffle floor for a vanilla session (200 partitions are pure
-    # scheduling overhead at harness SFs); the registry wrapper then
-    # overrides per-query with the bytes-scaled advisory below.
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(max(_SHUFFLE_FLOOR, spark.sparkContext.defaultParallelism)),
+    n = shuffle_partitions_for(
+        spark.sparkContext.defaultParallelism,
+        input_bytes(sf_dir) if sf_dir else 0,
     )
+    spark.conf.set("spark.sql.shuffle.partitions", str(n))
 
 
-# bytes → shuffle-partition advisory (VERDICT r10 item 3: the
-# partitions-scale-with-bytes deployment rule as CODE, not prose).
-# 8 MiB of COMPRESSED parquet input per shuffle partition: zstd
-# decode plus the token/shingle explosions the heavy entries run put
-# the in-flight bytes at roughly 10x the on-disk bytes, i.e. ~100 MB
-# per task — the classic healthy-shuffle size. Calibration: the 125x
-# corpus (1.99 GB) maps to ~240 partitions, matching the measured
-# bm25 optimum (83.5 s at 32 partitions vs 51.3 s at 256; AQE can
-# coalesce small partitions but cannot SPLIT non-skewed oversize
-# ones), while sf0.1 (17.5 MB) stays at the 32-partition floor so the
-# bench protocol is untouched.
-_SHUFFLE_TARGET_BYTES = 8 << 20
-_SHUFFLE_FLOOR = 32
-_SHUFFLE_CAP = 4096
-_CORPUS_BYTES: dict[str, int] = {}
+# Largest basket (distinct parts in one order) whose C(n, 2) pair
+# array _basket_pairs builds inside ONE row: 1000 parts is
+# 499,500 pair structs, tens of MB held by a single task. The sf0.1
+# corpus' largest basket has 17 parts.
+MAX_BASKET_PARTS = 1000
 
 
-def _corpus_bytes(sf_dir: str) -> int:
-    """Total on-disk parquet bytes under ``sf_dir`` (cached — the
-    corpora are immutable for a session's lifetime). Non-local or
-    unreadable paths fall back to 0, i.e. the partition floor."""
-    if sf_dir not in _CORPUS_BYTES:
-        import os
+def _basket_pairs(baskets):
+    """(part_a, part_b, pair_count) over ``(l_orderkey, parts)`` rows
+    with ``parts`` sorted and distinct: every part_a < part_b pair of
+    a basket, counted across baskets. A basket above MAX_BASKET_PARTS
+    fails the query with its order key (``raise_error``, evaluated in
+    the same pass — no extra job) instead of exhausting an executor on
+    one quadratic row."""
+    from pyspark.sql import functions as F
 
-        total = 0
-        try:
-            for root, _dirs, files in os.walk(sf_dir):
-                for f in files:
-                    if f.endswith(".parquet"):
-                        try:
-                            total += os.path.getsize(os.path.join(root, f))
-                        except OSError:
-                            pass
-        except OSError:
-            total = 0
-        _CORPUS_BYTES[sf_dir] = total
-    return _CORPUS_BYTES[sf_dir]
-
-
-def scaled_shuffle_partitions(spark: SparkSession, sf_dir: str) -> int:
-    """Shuffle-partition count scaled to the corpus' input bytes:
-    ``max(floor, cores, ceil(bytes / 8 MiB))`` capped at 4096. The
-    floor keeps the sf0.01 driver harness and sf0.1 bench at 32
-    (a vanilla session's 200 partitions are pure scheduling overhead
-    there — AQE coalesces them for batch plans, but streaming queries
-    run with AQE off and pay every task per stage); the bytes term
-    grows partitions once a corpus outruns what ``floor`` partitions
-    can hold in executor memory. ``SPARK_GRAFT_SHUFFLE_TARGET_BYTES``
-    overrides the per-partition target (0 disables scaling)."""
-    import os
-
-    target = int(
-        os.environ.get(
-            "SPARK_GRAFT_SHUFFLE_TARGET_BYTES", str(_SHUFFLE_TARGET_BYTES)
+    guarded = F.when(
+        F.size("parts") <= MAX_BASKET_PARTS, F.col("parts")
+    ).otherwise(
+        F.raise_error(
+            F.concat(
+                F.lit("basket pairs: order "),
+                F.col("l_orderkey").cast("string"),
+                F.lit(f" has more than {MAX_BASKET_PARTS} distinct parts"),
+            )
         )
     )
-    floor = max(_SHUFFLE_FLOOR, spark.sparkContext.defaultParallelism)
-    if target <= 0:
-        return floor
-    scaled = -(-_corpus_bytes(sf_dir) // target)
-    return max(floor, min(_SHUFFLE_CAP, scaled))
+    return (
+        baskets.select(guarded.alias("parts"))
+        .select(
+            F.explode(
+                F.expr(
+                    "flatten(transform(parts, (x, i) ->"
+                    " transform(slice(parts, i + 2, size(parts)),"
+                    " y -> struct(x AS part_a, y AS part_b))))"
+                )
+            ).alias("p")
+        )
+        .groupBy(
+            F.col("p.part_a").alias("part_a"),
+            F.col("p.part_b").alias("part_b"),
+        )
+        .agg(F.count(F.lit(1)).alias("pair_count"))
+    )
 
 
 def register(name: str, oracle: str | None = None):
@@ -125,11 +112,7 @@ def register(name: str, oracle: str | None = None):
             from ..partitioning import release_pins
 
             release_pins()
-            pin_oracle_confs(spark)
-            spark.conf.set(
-                "spark.sql.shuffle.partitions",
-                str(scaled_shuffle_partitions(spark, sf_dir)),
-            )
+            pin_oracle_confs(spark, sf_dir)
             return fn(spark, sf_dir)
 
         wrapped.__name__ = fn.__name__

@@ -467,7 +467,7 @@ def q_events_concurrency_peak(spark, sf_dir):
     # 6 parquet scans / 16 Window nodes; after: 3 / 8). explode over a
     # 2-element literal-struct array emits exactly the same rows in
     # one pass; size(CreateArray) folds, so no InferFiltersFromGenerate
-    # residue can reach the scan (cf. operators/dedup._explode_nonempty).
+    # residue can reach the scan (cf. operators/textual.explode_nonempty).
     ep = F.explode(
         F.array(
             F.struct(

@@ -13,6 +13,7 @@ from ._core import (  # noqa: F401
     QUERIES,
     _SHINGLES,
     _TOKS,
+    _basket_pairs,
     _d38,
     _dsum,
     _dsum_sql,
@@ -1374,10 +1375,10 @@ def q_graph_triangle_count(spark, sf_dir):
     a self-join entirely: collect_set the basket per order (ONE
     shuffle on l_orderkey — also subsumes the distinct), then emit
     the ordered pairs with a flatten/transform expression — pure
-    whole-stage-codegen, quadratic only in basket size, and one
-    fewer exchange than the co-partitioned self-join form (the
-    basket-affinity entry keeps that form since it reuses the items
-    frame for per-item frequencies). The ≥ 2 support filter prunes
+    whole-stage-codegen, quadratic only in basket size (a basket
+    above MAX_BASKET_PARTS fails loudly), and one fewer exchange than
+    the co-partitioned self-join form; orders_basket_affinity shares
+    the generator (_core._basket_pairs). The ≥ 2 support filter prunes
     the long tail before any graph join runs; the pruned edge list
     is tiny relative to the fact table (3.4k edges from 60k
     lineitems at sf0.01), so the three-way join broadcasts; on a
@@ -1390,15 +1391,6 @@ def q_graph_triangle_count(spark, sf_dir):
         .groupBy("l_orderkey")
         .agg(F.sort_array(F.collect_set("l_partkey")).alias("parts"))
     )
-    pairs = baskets.select(
-        F.explode(
-            F.expr(
-                "flatten(transform(parts, (x, i) ->"
-                " transform(slice(parts, i + 2, size(parts)),"
-                " y -> struct(x AS u, y AS v))))"
-            )
-        ).alias("p")
-    ).select("p.u", "p.v")
     from ..partitioning import freeze_partitions
 
     # the pruned edge list has THREE join-side consumers (e1/e2/e3)
@@ -1406,10 +1398,9 @@ def q_graph_triangle_count(spark, sf_dir):
     # it once instead of re-running basket-aggregate + pair-explode +
     # edge-aggregate per side (r5: ~2.5 -> 1.8s at sf0.1)
     edges = freeze_partitions(
-        pairs.groupBy("u", "v")
-        .agg(F.count(F.lit(1)).alias("w"))
-        .where(F.col("w") >= 2)
-        .select("u", "v")
+        _basket_pairs(baskets)
+        .where(F.col("pair_count") >= 2)
+        .select(F.col("part_a").alias("u"), F.col("part_b").alias("v"))
     )
     e1 = edges.select(F.col("u").alias("a"), F.col("v").alias("b"))
     e2 = edges.select(F.col("u").alias("b"), F.col("v").alias("c"))

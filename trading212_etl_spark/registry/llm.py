@@ -238,8 +238,12 @@ def q_dedup_boilerplate_lines(spark, sf_dir):
 
     from ..operators.dedup import dedup_lines
     from ..operators.textual import tokens
+    from ..partitioning import fan_out
 
-    base = _t(spark, sf_dir, "documents").select(
+    # widen BEFORE tokenizing: dedup_lines' own fan_out sits above the
+    # line construction, so without this the tokenizer runs in the
+    # one-task scan stage of an under-split corpus
+    base = fan_out(_t(spark, sf_dir, "documents")).select(
         "doc_id", tokens("text").alias("__toks")
     )
     n = F.size("__toks")

@@ -13,6 +13,7 @@ from ._core import (  # noqa: F401
     QUERIES,
     _SHINGLES,
     _TOKS,
+    _basket_pairs,
     _d38,
     _dsum,
     _dsum_sql,
@@ -1264,8 +1265,10 @@ def q_orders_basket_affinity(spark, sf_dir):
     builds each order's sorted part set via collect_set (subsuming the
     old items distinct), and the ordered pairs explode from a
     slice/transform expression in pure codegen. The quadratic blowup
-    stays bounded by basket size (≤ C(13,2) pairs per order in this
-    corpus), and the old co-partitioned self-join — plus its distinct
+    stays bounded by basket size (≤ C(17,2) pairs per order at
+    sf0.1; a basket above MAX_BASKET_PARTS fails loudly — see
+    _core._basket_pairs), and the old co-partitioned self-join — plus
+    its distinct
     exchange and both SMJ sorts — disappears: per-item frequencies
     explode off the same basket frame (identical rows to the items
     groupBy) and the order count is a plain count of baskets (one row
@@ -1296,22 +1299,7 @@ def q_orders_basket_affinity(spark, sf_dir):
     freq = baskets.select(F.explode("parts").alias("l_partkey")).groupBy(
         "l_partkey"
     ).agg(F.count(F.lit(1)).alias("n_f"))
-    pairs = (
-        baskets.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(parts, (x, i) ->"
-                    " transform(slice(parts, i + 2, size(parts)),"
-                    " y -> struct(x AS part_a, y AS part_b))))"
-                )
-            ).alias("p")
-        )
-        .groupBy(
-            F.col("p.part_a").alias("part_a"),
-            F.col("p.part_b").alias("part_b"),
-        )
-        .agg(F.count(F.lit(1)).alias("pair_count"))
-    )
+    pairs = _basket_pairs(baskets)
     fa = freq.select(
         F.col("l_partkey").alias("part_a"), F.col("n_f").alias("n_fa")
     )
