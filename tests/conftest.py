@@ -4,6 +4,7 @@ import os
 
 import pytest
 
+from trading212_etl_spark.partitioning import release_pins
 from trading212_etl_spark.session import get_session
 
 SF_SMOKE = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
@@ -13,6 +14,14 @@ SF_SMOKE = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 def spark():
     s = get_session(app_name="tests", shuffle_partitions=8)
     yield s
+
+
+@pytest.fixture(autouse=True)
+def _release_test_pins():
+    """A registry build frees only the pins earlier registry builds
+    took, so the pins a test takes itself die with the test."""
+    yield
+    release_pins()
 
 
 @pytest.fixture(scope="session")

@@ -292,12 +292,6 @@ def test_concurrency_sweep_integrity(spark, sf_dir):
     from trading212_etl_spark.registry import QUERIES
     from trading212_etl_spark.sources import load_table
 
-    # The registry build sweeps ALL live pins (release_pins), so it
-    # must run BEFORE this test builds its own ordered_prefix frame:
-    # interleaving it between run's actions unpersists run's freeze
-    # pin, the re-planned branches resample the range exchange
-    # independently, and the day peaks corrupt (the exact hazard
-    # release_pins documents).
     peaks = {
         r["day"]: r["peak_concurrency"]
         for r in QUERIES["events_concurrency_peak"](spark, sf_dir).collect()

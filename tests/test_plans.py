@@ -590,87 +590,58 @@ def test_pack_sequences_single_shard_shuffle(spark):
     assert len([l for l in p.splitlines() if ") Exchange" in l]) == 1
 
 
-def test_materialize_policy_modes(spark):
-    """The conf-driven materialization policy (partitioning.materialize)
-    must cut lineage in every truncating configuration — including when
-    a non-truncating mode (persist/none) is requested at a truncate-
-    required call site (iterative fixpoints), which upgrades to a
-    truncating strategy instead of silently blowing up round-N plans."""
+def test_materialize_cuts_lineage(spark):
+    """partitioning.materialize must truncate lineage: the
+    materialized node is a plain RDD scan, with no Aggregate/Range
+    ancestry left in the plan (iterative fixpoints such as
+    connected_components rely on it)."""
     from trading212_etl_spark.partitioning import materialize
 
-    df = spark.range(64).selectExpr("id", "id % 7 AS k")
-    agg = df.groupBy("k").count()
-    try:
-        for mode in ("local", "persist", "none"):
-            spark.conf.set("spark.trading212.materialize", mode)
-            out = materialize(agg, truncate=True)
-            p = out._jdf.queryExecution().optimizedPlan().toString()
-            # lineage cut: the materialized node is a plain RDD scan,
-            # no Aggregate/Range ancestry in the plan
-            assert "Aggregate" not in p and "Range" not in p, (mode, p)
-        # non-truncating persist at a multi-consumer (truncate=False)
-        # site: honored as a disk persist, lineage retained
-        spark.conf.set("spark.trading212.materialize", "persist")
-        kept = materialize(agg, truncate=False)
-        assert kept.storageLevel.useDisk
-        kept.unpersist()
-        # pass-through mode
-        spark.conf.set("spark.trading212.materialize", "none")
-        same = materialize(agg, truncate=False)
-        assert same is agg
-    finally:
-        spark.conf.set("spark.trading212.materialize", "local")
+    agg = spark.range(64).selectExpr("id", "id % 7 AS k").groupBy("k").count()
+    p = materialize(agg)._jdf.queryExecution().optimizedPlan().toString()
+    assert "Aggregate" not in p and "Range" not in p, p
 
 
-def test_connected_components_cut_under_any_policy(spark):
-    """The CC fixpoint must stay correct and lineage-bounded even when
-    the session asks for a non-truncating materialization mode."""
-    from trading212_etl_spark.operators.dedup import connected_components
-
-    pairs = spark.createDataFrame(
-        [(1, 5), (3, 5), (7, 8)], ["doc_a", "doc_b"]
-    )
-    try:
-        spark.conf.set("spark.trading212.materialize", "none")
-        got = {
-            (r.doc_id, r.component)
-            for r in connected_components(pairs).collect()
-        }
-    finally:
-        spark.conf.set("spark.trading212.materialize", "local")
-    assert got == {(1, 1), (3, 1), (5, 1), (7, 7), (8, 7)}
-
-
-def test_connected_components_frontier_both_broadcast_arms(spark):
+def test_connected_components_frontier_both_broadcast_arms(spark, monkeypatch):
     """r15 frontier rewrite: each round joins edges against the
-    CHANGED labels only, broadcasting the frontier when it is under
-    spark.trading212.cc.broadcast_rows. A path graph of diameter 5
-    needs several propagation rounds with a shrinking frontier — the
-    labels must still converge to the exact closure in BOTH regimes
-    (rows=0 forces the shuffle-join arm, the default forces the
-    broadcast arm at this size), and exhausting max_iter must stay a
-    loud failure."""
+    CHANGED labels only, broadcasting the frontier when its rows times
+    its row width fit spark.sql.autoBroadcastJoinThreshold. A path
+    graph of diameter 5 needs several propagation rounds with a
+    shrinking frontier — the labels must still converge to the exact
+    closure in BOTH regimes (-1 forces the shuffle-join arm, the
+    default forces the broadcast arm at this size), and exhausting
+    max_iter must stay a loud failure."""
     import pytest
+    from pyspark.sql import functions as F
 
     from trading212_etl_spark.operators.dedup import connected_components
 
+    hinted = []
+    real_broadcast = F.broadcast
+    monkeypatch.setattr(
+        F, "broadcast", lambda df: hinted.append(df) or real_broadcast(df)
+    )
     pairs = spark.createDataFrame(
         [(2, 1), (2, 3), (3, 4), (5, 4), (5, 6), (10, 11)],
         ["doc_a", "doc_b"],
     )
     want = {(i, 1) for i in range(1, 7)} | {(10, 10), (11, 10)}
-    for rows in ("0", "1000000"):
-        spark.conf.set("spark.trading212.cc.broadcast_rows", rows)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    for threshold, arm in (("-1", "shuffle"), (old, "broadcast")):
+        spark.conf.set(key, threshold)
+        hinted.clear()
         try:
             got = {
                 (r.doc_id, r.component)
                 for r in connected_components(pairs).collect()
             }
-            assert got == want, rows
+            assert got == want, threshold
+            assert bool(hinted) == (arm == "broadcast"), threshold
             with pytest.raises(RuntimeError, match="did not converge"):
                 connected_components(pairs, max_iter=1)
         finally:
-            spark.conf.unset("spark.trading212.cc.broadcast_rows")
+            spark.conf.set(key, old)
 
 
 def test_model_quality_filter_zero_shuffle_no_python(spark):
@@ -1010,7 +981,10 @@ def test_approx_sketches_refutation_bounds(spark):
     from pyspark.sql import functions as F
 
     N = 200_000
-    df = spark.range(N).selectExpr(
+    # A fixed partition count: the merged sketches depend on how the
+    # rows are split, and spark.range(N) alone takes defaultParallelism
+    # partitions (at 4 the accuracy-20 median lands at rank error 1).
+    df = spark.range(0, N, 1, 32).selectExpr(
         "xxhash64(id) AS k",
         "cast(id AS double) * cast(id AS double) AS v",
     )

@@ -795,17 +795,18 @@ def connected_components(
       an empty frontier is exactly the old fixpoint. The frontier
       after round 1 is typically a tiny fraction of the graph
       (measured at 125×: 68 500 nodes → 495 → 2 → 0), and a small
-      frontier broadcast (rows-thresholded, conf
-      ``spark.trading212.cc.broadcast_rows``) turns the per-round
-      full-edge shuffle join into a broadcast probe over the
-      checkpointed edges — no fact-sized exchange after round 1.
-      Convergence is a count over the just-checkpointed rows (the
-      same join-free check as before, now also feeding the broadcast
-      decision).
+      frontier broadcast turns the per-round full-edge shuffle join
+      into a broadcast probe over the checkpointed edges — no
+      fact-sized exchange after round 1. Convergence is a count over
+      the just-checkpointed rows (the same join-free check as before),
+      and that count times the frontier's row width is the broadcast
+      decision: the frontier is broadcast when it fits Spark's own
+      ``spark.sql.autoBroadcastJoinThreshold`` (-1 disables), decided
+      on the driver with no extra job.
     """
     spark = pairs.sparkSession
-    bcast_rows = int(
-        spark.conf.get("spark.trading212.cc.broadcast_rows", "1000000")
+    bcast_bytes = (
+        spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
     )
     edges = materialize(
         pairs.select(
@@ -833,10 +834,11 @@ def connected_components(
     # whose label differs from its id — a cheap scan of the checkpoint.
     delta = labels.select("node", "label").filter(F.col("node") != F.col("label"))
     n_delta = delta.count()
+    row_bytes = delta._jdf.schema().defaultSize()
     for _ in range(max_iter):
         if n_delta == 0:
             break
-        dside = F.broadcast(delta) if n_delta <= bcast_rows else delta
+        dside = F.broadcast(delta) if n_delta * row_bytes <= bcast_bytes else delta
         neigh = (
             edges.join(dside, edges.dst == dside.node)
             .groupBy("src")

@@ -5,8 +5,8 @@ Two distinct hazards at the two ends of the scale spectrum:
 - **Under-split input** (bench/local): a small parquet file arrives as
   ONE split, so a CPU-heavy operator (regex shingling, MinHash, Arrow
   decode) serializes on one core while 31 idle. ``fan_out`` widens the
-  plan to cluster parallelism — and is a guarded no-op at 100 TB,
-  where the scan already yields thousands of splits.
+  plan to cluster parallelism (one round-robin shuffle, each row
+  moved once).
 - **Skewed shuffle keys** (cluster): one hot key turns a shuffle stage
   into a single straggler task. ``with_salt``/``unsalt_agg`` implement
   two-phase salted aggregation; AQE's skew-join splitting (enabled in
@@ -26,83 +26,61 @@ def fan_out(df: DataFrame, multiplier: int = 1) -> DataFrame:
     CPU-bound per-row work.
 
     The round-robin repartition shuffle moves each row once — trivially
-    amortized when downstream does regex/hash/codec work per row.
-
-    Conf-driven, not plan-driven: the previous width check
-    (``df.rdd.getNumPartitions() >= target``) forced a full
+    amortized when downstream does regex/hash/codec work per row. It
+    widens unconditionally: a width check
+    (``df.rdd.getNumPartitions() >= target``) would force a full
     physical-plan translation on the driver on EVERY call — pure
     driver-side overhead for the many operators that wrap their input
-    in ``fan_out``. Whether fan-out is useful is a property of the
-    DEPLOYMENT, not of one plan: under-split inputs happen in
-    local/bench mode (one small parquet file = one split), while on a
-    real cluster a 100 TB scan is already thousands of
-    ``maxPartitionBytes`` splits wide. So the switch is a session conf:
-    ``spark.trading212.fanout.enabled=false`` (set it in the cluster
-    session) makes every call a zero-cost no-op; the default (local)
-    widens unconditionally.
+    in ``fan_out``.
     """
-    spark = df.sparkSession
-    if spark.conf.get("spark.trading212.fanout.enabled", "true") == "false":
-        return df
-    target = spark.sparkContext.defaultParallelism * multiplier
+    target = df.sparkSession.sparkContext.defaultParallelism * multiplier
     return df.repartition(target)
 
 
-def materialize(df: DataFrame, *, truncate: bool = True) -> DataFrame:
-    """Conf-driven materialization policy for multi-consumer and
-    iterative plan nodes — the deployment lever behind every
-    ``localCheckpoint`` in this package.
+def _has_checkpoint_dir(df: DataFrame) -> bool:
+    """True when the session has a reliable checkpoint location
+    (``sparkContext.setCheckpointDir`` — Spark's own deployment
+    setting, an HDFS/S3 path on a cluster)."""
+    return df.sparkSession.sparkContext.getCheckpointDir() is not None
 
-    ``localCheckpoint`` is the right *local* call: eager, truncates
-    lineage, stores blocks on the executors. But it pins executor
-    memory/disk and dies with an executor, so a 1000-executor 100 TB
-    job wants a different strategy without touching operator code.
-    ``spark.trading212.materialize`` selects it:
 
-    - ``local`` (default) — ``localCheckpoint()``: eager + truncating,
-      executor-resident; the bench/local mode.
-    - ``reliable`` — ``checkpoint()``: eager + truncating, written to
-      the fault-tolerant ``sparkContext.setCheckpointDir`` location
-      (HDFS/S3); survives executor loss. The 100 TB setting.
-    - ``persist`` — ``persist(DISK_ONLY)``: lazy, avoids recomputation
-      across consumers but does NOT truncate lineage.
-    - ``none`` — pass-through (recompute per consumer).
+def materialize(df: DataFrame) -> DataFrame:
+    """Eager, lineage-cutting materialization for multi-consumer and
+    iterative plan nodes (e.g. connected_components, whose round-N
+    plan would otherwise embed rounds 1..N-1).
 
-    ``truncate=True`` marks call sites that *require* lineage cutting
-    (iterative fixpoints like connected_components, whose round-N plan
-    would otherwise embed rounds 1..N-1): there, non-truncating modes
-    (``persist``/``none``) are upgraded to the truncating equivalent
-    (``reliable`` if a checkpoint dir is configured, else ``local``)
-    rather than silently producing the plan-blowup the checkpoint
-    exists to prevent.
+    With a checkpoint directory set, ``checkpoint()`` writes the blocks
+    there, so they survive executor loss. Without one,
+    ``localCheckpoint()`` keeps them on the executors — the right call
+    locally, and the path every caller takes unless the deployment
+    sets a directory.
     """
-    spark = df.sparkSession
-    mode = spark.conf.get("spark.trading212.materialize", "local")
-    if mode in ("persist", "none") and truncate:
-        has_dir = spark.sparkContext.getCheckpointDir() is not None
-        mode = "reliable" if has_dir else "local"
-    if mode == "reliable":
+    if _has_checkpoint_dir(df):
         return df.checkpoint()
-    if mode == "persist":
-        from pyspark import StorageLevel
-
-        return _track_pin(df.persist(StorageLevel.DISK_ONLY))
-    if mode == "none":
-        return df
     return df.localCheckpoint()
 
 
 # -- pin lifecycle ----------------------------------------------------------
-# Every lazy persist the package takes (freeze_partitions, materialize's
-# `persist` mode) is recorded here so a long-lived session can RELEASE
-# it: without a release hook, each registry invocation leaves
-# MEMORY_AND_DISK blocks in the CacheManager forever, and the
-# CacheManager's canonicalized-plan lookup runs against every cached
-# entry on every query (~1.3-1.5x tax on untouched queries at ~100
-# accumulated pins, r5 measured) — the r5 verdict's blocker for calling
-# the policy cluster-ready. Eager localCheckpoint/checkpoint blocks are
-# NOT tracked: they live outside the CacheManager and are reclaimed by
-# the ContextCleaner when their RDD is garbage-collected.
+# Every lazy persist the package takes (freeze_partitions) is recorded
+# here so a long-lived session can RELEASE it: without a release hook,
+# each registry invocation leaves MEMORY_AND_DISK blocks in the
+# CacheManager forever, and the CacheManager's canonicalized-plan
+# lookup runs against every cached entry on every query (~1.3-1.5x tax
+# on untouched queries at ~100 accumulated pins, r5 measured). Eager
+# localCheckpoint/checkpoint blocks are NOT tracked: they live outside
+# the CacheManager and are reclaimed by the ContextCleaner when their
+# RDD is garbage-collected.
+#
+# Releasing a LIVE pin is NOT merely a lost cache hit — it can CORRUPT
+# results. After unpersist there is no InMemoryRelation; a later action
+# replans the lineage, and its broadcast subtree (the ordered_prefix
+# offsets) and main subtree each materialize their OWN instance of the
+# range exchange with independently sampled boundaries, so
+# ``spark_partition_id`` diverges between the branches and the offset
+# join mis-assigns. While the pin lives, block EVICTION is still safe —
+# a recompute of cached partition *i* re-reads the same immutable
+# shuffle outputs. So every release below frees only pins whose owner
+# says they are dead.
 
 _LIVE_PINS: list[DataFrame] = []
 
@@ -112,31 +90,31 @@ def _track_pin(df: DataFrame) -> DataFrame:
     return df
 
 
-def release_pins(blocking: bool = False) -> int:
-    """Unpersist every frame pinned since the last release; returns
-    the count. Call ONLY at points where every pinned frame is DEAD —
-    i.e. no DataFrame built on it will be actioned again (the registry
-    wrapper does this on each query build, because registry consumers
-    run build->action->build->action serially).
+def _release(pins: list[DataFrame], blocking: bool) -> int:
+    """Unpersist those of ``pins`` still tracked (a pin already freed
+    by another release is not unpersisted twice); returns the count."""
+    ids = {id(df) for df in pins}
+    dead = [df for df in _LIVE_PINS if id(df) in ids]
+    _LIVE_PINS[:] = [df for df in _LIVE_PINS if id(df) not in ids]
+    for df in dead:
+        df.unpersist(blocking=blocking)
+    return len(dead)
 
-    Releasing a LIVE freeze_partitions pin is NOT merely a lost cache
-    hit — it can CORRUPT results. After unpersist there is no
-    InMemoryRelation; a later action replans the lineage, and its
-    broadcast subtree (the ordered_prefix offsets) and main subtree
-    each materialize their OWN instance of the range exchange with
-    independently sampled boundaries, so ``spark_partition_id``
-    diverges between the branches and the offset join mis-assigns
-    (observed 2026-08: tests/test_events.py day-peak corruption when a
-    registry build swept a live test-local pin). While the pin lives,
-    block EVICTION is still safe — a recompute of cached partition *i*
-    re-reads the same immutable shuffle outputs. Library callers
-    composing operators around their own actions must scope with
-    ``pinned_scope()`` instead of calling this."""
-    n = 0
-    while _LIVE_PINS:
-        _LIVE_PINS.pop().unpersist(blocking=blocking)
-        n += 1
-    return n
+
+def _pins_since(before: list[DataFrame]) -> list[DataFrame]:
+    """The tracked pins not in ``before`` — a list the caller holds,
+    so no id in it can be reused by a newer frame."""
+    ids = {id(df) for df in before}
+    return [df for df in _LIVE_PINS if id(df) not in ids]
+
+
+def release_pins(blocking: bool = False) -> int:
+    """Unpersist every tracked pin; returns the count. Call ONLY at
+    points where every pinned frame in the session is DEAD — no
+    DataFrame built on one will be actioned again. Library callers
+    composing operators around their own actions scope with
+    ``pinned_scope()`` instead."""
+    return _release(list(_LIVE_PINS), blocking)
 
 
 @contextmanager
@@ -149,12 +127,27 @@ def pinned_scope(blocking: bool = False):
             result = some_operator(df)
             result.write.parquet(path)   # action INSIDE the scope
     """
-    mark = len(_LIVE_PINS)
+    before = list(_LIVE_PINS)
     try:
         yield
     finally:
-        while len(_LIVE_PINS) > mark:
-            _LIVE_PINS.pop().unpersist(blocking=blocking)
+        _release(_pins_since(before), blocking)
+
+
+@contextmanager
+def serial_pins(held: list[DataFrame]):
+    """Pins for callers that run build -> action -> build -> action
+    serially (the registry): on entry, release the pins ``held`` took
+    in the previous block — dead by the time the next build starts —
+    then record into ``held`` the pins this block takes. Pins taken
+    outside such blocks are never touched."""
+    _release(held, blocking=False)
+    held.clear()
+    before = list(_LIVE_PINS)
+    try:
+        yield
+    finally:
+        held.extend(_pins_since(before))
 
 
 def agg_parts(spark) -> int:
@@ -246,14 +239,11 @@ def freeze_partitions(df: DataFrame) -> DataFrame:
       exactly the same shuffle rows — ``spark_partition_id`` is the
       partition INDEX and cannot drift.
 
-    ``spark.trading212.materialize=reliable`` still upgrades to a
-    fault-tolerant ``checkpoint()`` for the 100 TB deployment (an
-    executor-loss recompute is then a checkpoint read, free of any
-    shuffle-service dependency); every other mode — including
-    ``none``, which would be UNSAFE here — persists.
+    With a checkpoint directory set, the pin is a fault-tolerant
+    ``checkpoint()`` instead (an executor-loss recompute is then a
+    checkpoint read, free of any shuffle-service dependency).
     """
-    spark = df.sparkSession
-    if spark.conf.get("spark.trading212.materialize", "local") == "reliable":
+    if _has_checkpoint_dir(df):
         return df.checkpoint()
     from pyspark import StorageLevel
 
@@ -284,10 +274,8 @@ def freeze_when_heavy(df: DataFrame) -> DataFrame:
     always at 100 TB — every duplicated pass is paid in full, and the
     pin wins. The decision input is the Catalyst ``sizeInBytes``
     estimate (derived from leaf file sizes — deterministic per
-    corpus), so the same code self-tunes from laptop to cluster;
-    ``spark.trading212.freeze.auto_bytes`` overrides the threshold
-    (set 0 to force pinning, e.g. for plan dumps of the at-scale
-    shape).
+    corpus), compared against ``_FREEZE_AUTO_BYTES``, so the same code
+    self-tunes from laptop to cluster.
     """
     return freeze_partitions(df) if is_heavy(df) else df
 
@@ -297,19 +285,13 @@ def is_heavy(df: DataFrame) -> bool:
     ``freeze_when_heavy`` threshold — exposed for operators that
     switch between a light shape and a pinned at-scale shape (DSIR)
     rather than merely toggling one pin."""
-    spark = df.sparkSession
-    thr = int(
-        spark.conf.get(
-            "spark.trading212.freeze.auto_bytes", str(_FREEZE_AUTO_BYTES)
-        )
-    )
     try:
         size = int(
             str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
         )
     except Exception:  # noqa: BLE001 — no estimate: assume heavy (scale-safe)
-        size = thr
-    return size >= thr
+        return True
+    return size >= _FREEZE_AUTO_BYTES
 
 
 def with_salt(df: DataFrame, n_buckets: int, col_name: str = "__salt") -> DataFrame:
@@ -448,9 +430,9 @@ def ordered_prefix(
     # freeze_partitions is the LAZY pin: one cached exchange feeds
     # both consumers, so pids cannot diverge, and no eager checkpoint
     # job runs per call (the r4 bench cost of the sort rewrites was
-    # exactly three such jobs chained in orders_rfm_segments);
-    # spark.trading212.materialize=reliable still upgrades it to a
-    # fault-tolerant checkpoint for the 100 TB deployment.
+    # exactly three such jobs chained in orders_rfm_segments); a
+    # session with a checkpoint directory gets a fault-tolerant
+    # checkpoint instead.
     ranged = freeze_partitions(
         df.repartitionByRange(n_parts, *order_by).withColumn(
             "__pid", F.spark_partition_id()

@@ -102,7 +102,8 @@ def curate_corpus(
         # materialized once: the near-dup stage consumes canonical
         # three times (both shingle-join sides + the final anti-join);
         # without this each consumer re-runs tokenize+score+dedup
-        # (measured 2x wall). Policy conf-driven: partitioning.materialize.
+        # (measured 2x wall). A lazy pin (partitioning.freeze_partitions),
+        # or a reliable checkpoint when the session sets a checkpoint dir.
     )
     canonical = freeze_partitions(canonical)
     # the scoring pass already materialized the token arrays — reuse

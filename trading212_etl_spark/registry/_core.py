@@ -17,12 +17,14 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..partitioning import bounded_bucket
+from ..partitioning import bounded_bucket, serial_pins
 from ..session import input_bytes, shuffle_partitions_for
 from ..sources import load_table
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
+# the lazy pins taken by the most recent registry build
+_REGISTRY_PINS: list[DataFrame] = []
 
 
 def pin_oracle_confs(spark: SparkSession, sf_dir: str | None = None) -> None:
@@ -96,24 +98,16 @@ def register(name: str, oracle: str | None = None):
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
         def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
             # Release the lazy persists pinned by PREVIOUS registry
-            # invocations (freeze_partitions / materialize=persist):
-            # registry consumers run build->action->build->action
-            # serially (driver, bench, tests), so pins from the prior
-            # query are dead weight by the time the next one is built —
-            # without this, a long-lived session accumulates
-            # CacheManager entries forever (VERDICT r5 item 5). This
-            # sweep is safe ONLY under that serial discipline: a swept
-            # freeze pin whose frame is actioned again later can
-            # mis-join ordered_prefix offsets (branches resample the
-            # range exchange independently — see release_pins). A
-            # caller that interleaves its own pinned frames with
-            # registry builds must finish its actions first or wrap
-            # them in pinned_scope().
-            from ..partitioning import release_pins
-
-            release_pins()
-            pin_oracle_confs(spark, sf_dir)
-            return fn(spark, sf_dir)
+            # builds (freeze_partitions): registry consumers run
+            # build->action->build->action serially (driver, bench,
+            # tests), so the prior query's pins are dead weight by the
+            # time the next one is built — without this, a long-lived
+            # session accumulates CacheManager entries forever
+            # (VERDICT r5 item 5). Pins a caller took outside the
+            # registry are its own and stay live.
+            with serial_pins(_REGISTRY_PINS):
+                pin_oracle_confs(spark, sf_dir)
+                return fn(spark, sf_dir)
 
         wrapped.__name__ = fn.__name__
         wrapped.__doc__ = fn.__doc__

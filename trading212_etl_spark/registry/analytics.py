@@ -543,9 +543,8 @@ def q_clean_mad_outliers(spark, sf_dir):
     )
     # dev is fact-sized with two consumers (MAD aggregate + the final
     # flag pass); the lazy pin turns three orders scans into two
-    # (~15% locally). At 100 TB this caches a fact-sized frame — the
-    # materialize=reliable/none conf remains the deployment lever if
-    # re-scanning beats caching on a given cluster.
+    # (~15% locally). At 100 TB this caches a fact-sized frame, or
+    # checkpoints it when the session sets a checkpoint directory.
     dev = freeze_partitions(
         o.join(F.broadcast(med), "o_orderstatus").select(
             "o_orderstatus",

@@ -78,14 +78,6 @@ def q_dedup_jaccard(spark, sf_dir):
     realistic corpus size; use the raw-string join if cryptographic
     exactness is ever required.
 
-    Stop-shingle lever (r10, VERDICT r9 item 5): set
-    ``SPARK_GRAFT_PAIRS_MAX_DF=<k>`` to drop shingles appearing in
-    more than k documents before the self-join — the standard cure
-    for the O(df²) hot-shingle blowup that makes this exact verifier
-    expensive on boilerplate-heavy corpora (J becomes a lower bound
-    for pairs sharing dropped shingles). UNSET by default, so the
-    driver/oracle runs stay exact.
-
     Top-k lever (r11 output bound; r12 candidate bound, VERDICT r11
     item 2): set ``SPARK_GRAFT_PAIRS_TOP_K=<k>`` to truncate the
     result to each document's k strongest partners (the kNN
@@ -101,13 +93,11 @@ def q_dedup_jaccard(spark, sf_dir):
 
     from ..operators.dedup import jaccard_pairs
 
-    max_df = os.environ.get("SPARK_GRAFT_PAIRS_MAX_DF")
     top_k = os.environ.get("SPARK_GRAFT_PAIRS_TOP_K")
     return jaccard_pairs(
         _t(spark, sf_dir, "documents"),
         threshold=0.5,
         n=3,
-        max_df=int(max_df) if max_df else None,
         top_k_per_doc=int(top_k) if top_k else None,
     )
 
@@ -139,23 +129,19 @@ def q_dedup_containment(spark, sf_dir):
     """Near-containment pairs (max direction ≥ 0.6): the asymmetric
     |A∩B|/|A| ratio that catches doc-inside-doc duplication Jaccard
     misses (operators/dedup.py:containment_pairs — same shingle-join
-    skeleton and skew levers as jaccard_pairs, including the
-    ``SPARK_GRAFT_PAIRS_MAX_DF`` stop-shingle lever and the
-    ``SPARK_GRAFT_PAIRS_TOP_K`` kNN-subgraph output bound — both
-    unset by default so driver/oracle runs stay exact; containment is
-    a lower bound for pairs sharing dropped shingles when max_df is
-    set, and the top-k truncation ranks by max_containment)."""
+    skeleton as jaccard_pairs, including the
+    ``SPARK_GRAFT_PAIRS_TOP_K`` kNN-subgraph output bound — unset by
+    default so driver/oracle runs stay exact; the top-k truncation
+    ranks by max_containment)."""
     import os
 
     from ..operators.dedup import containment_pairs
 
-    max_df = os.environ.get("SPARK_GRAFT_PAIRS_MAX_DF")
     top_k = os.environ.get("SPARK_GRAFT_PAIRS_TOP_K")
     return containment_pairs(
         _t(spark, sf_dir, "documents"),
         threshold=0.6,
         n=3,
-        max_df=int(max_df) if max_df else None,
         top_k_per_doc=int(top_k) if top_k else None,
     )
 
