@@ -346,6 +346,129 @@ def test_compaction_reduces_file_count(spark, tmp_path):
     assert spark.read.parquet(out).count() == li.count()
 
 
+def _flat_parquet_bytes(path: str) -> int:
+    import glob
+    import os
+
+    return sum(os.path.getsize(f) for f in glob.glob(f"{path}/*.parquet"))
+
+
+def _files_per_dir(path: str) -> dict[str, int]:
+    import glob
+    import os
+
+    return {
+        os.path.basename(d): len(glob.glob(f"{d}/*.parquet"))
+        for d in sorted(glob.glob(f"{path}/*=*"))
+    }
+
+
+@contextlib.contextmanager
+def _confs(spark, confs: dict[str, str]):
+    """Set session confs for the block and restore the previous values
+    afterwards."""
+    old = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+def test_partitioned_write_one_file_per_partition_split_under_skew(spark, tmp_path):
+    """write_parquet(partition_by=...) clusters each hive partition into
+    one write task: one file per l_returnflag directory from an 8-file
+    input (a plain partitionBy writes one file per input task). When a
+    partition outgrows advisoryPartitionSizeInBytes, AQE splits it over
+    several tasks instead of funnelling it through one."""
+    from trading212_etl_spark.sources import load_table
+    from trading212_etl_spark.sources.writers import write_parquet
+
+    src = str(tmp_path / "src")
+    load_table(spark, "/root/testdata/sf0.1", "lineitem").repartition(8).write.parquet(src)
+    lineitem = spark.read.parquet(src)
+
+    out = str(tmp_path / "default")
+    write_parquet(lineitem, out, partition_by=["l_returnflag"])
+    per_dir = _files_per_dir(out)
+    assert len(per_dir) == 3 and set(per_dir.values()) == {1}, per_dir
+
+    # 1 MB scan splits give every input file its own map task, so the
+    # split is not capped by how many tasks the host's cores pack.
+    out = str(tmp_path / "skewed")
+    with _confs(
+        spark,
+        {
+            "spark.sql.adaptive.advisoryPartitionSizeInBytes": "1m",
+            "spark.sql.files.maxPartitionBytes": "1m",
+        },
+    ):
+        write_parquet(lineitem, out, partition_by=["l_returnflag"])
+    per_dir = _files_per_dir(out)
+    assert len(per_dir) == 3 and min(per_dir.values()) > 1, per_dir
+    assert spark.read.parquet(out).count() == lineitem.count()
+
+
+def test_compaction_is_shuffle_free_and_does_not_inflate(spark, tmp_path):
+    """Compaction coalesces whole input files into each output file:
+    the executed write plan has no Exchange, and a sorted input keeps
+    its runs, so the output is no larger than the input."""
+    from trading212_etl_spark.sources import load_table
+    from trading212_etl_spark.sources.writers import compact_parquet
+
+    li = load_table(spark, "/root/testdata/sf0.01", "lineitem")
+    src, out = str(tmp_path / "sorted"), str(tmp_path / "out")
+    li.repartitionByRange(16, "l_orderkey").sortWithinPartitions("l_orderkey").write.parquet(src)
+    in_bytes = _flat_parquet_bytes(src)
+
+    def executed_plans() -> dict[int, str]:
+        # the SQL status store is fed by the listener bus; drain it
+        # first. It keeps only the latest executions, so key by id.
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+        runs = spark._jsparkSession.sharedState().statusStore().executionsList()
+        return {
+            runs.apply(i).executionId(): runs.apply(i).physicalPlanDescription()
+            for i in range(runs.size())
+        }
+
+    seen = max(executed_plans(), default=-1)
+    # one scan task per input file, whatever the host's core count
+    with _confs(spark, {"spark.sql.files.maxPartitionBytes": "1m"}):
+        n_out = compact_parquet(spark, src, out, target_file_bytes=in_bytes // 3)
+    plans = [p for i, p in executed_plans().items() if i > seen]
+    assert any("InsertIntoHadoopFsRelationCommand" in p for p in plans)
+    assert not any("Exchange" in p for p in plans), plans
+
+    assert n_out >= 2
+    assert _flat_parquet_bytes(out) <= in_bytes
+    assert spark.read.parquet(out).count() == li.count()
+
+
+def test_compaction_keeps_hive_partitions(spark, tmp_path):
+    """A hive-partitioned source keeps its layout through compaction:
+    the same l_returnflag directories, one file each, the same
+    columns, no rows lost."""
+    from trading212_etl_spark.sources import load_table
+    from trading212_etl_spark.sources.writers import compact_parquet
+
+    li = load_table(spark, SF, "lineitem")
+    src, out = str(tmp_path / "src"), str(tmp_path / "out")
+    li.repartition(4).write.partitionBy("l_returnflag").parquet(src)
+    n_out = compact_parquet(spark, src, out)
+    per_dir = _files_per_dir(out)
+    assert per_dir.keys() == _files_per_dir(src).keys()
+    assert set(per_dir.values()) == {1}
+    assert n_out == sum(per_dir.values())
+    back = spark.read.parquet(out)
+    assert back.columns == spark.read.parquet(src).columns
+    assert back.count() == li.count()
+
+
 def test_dynamic_partition_pruning_fires(spark):
     """The partitioned-fact x selective-dim join must carry a runtime
     dynamicpruningexpression in the scan's PartitionFilters — the

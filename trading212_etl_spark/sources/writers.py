@@ -9,6 +9,9 @@ splittable, predicate-pushdown-capable — the format that makes the
 
 from __future__ import annotations
 
+import math
+import os
+
 from pyspark.sql import DataFrame
 
 
@@ -26,15 +29,24 @@ def write_parquet(
     manual 365-day window chunking (trading212.py:86-97, SURVEY §2.9
     T1): writing ``partitionBy("dt")`` gives every later reader
     partition pruning for free instead of hand-scheduled date loops.
+    The frame is first clustered on the partition columns with a
+    rebalance hint, so each hive partition's rows reach one write task
+    and land in one file instead of one file per input task. AQE
+    splits a partition larger than ``advisoryPartitionSizeInBytes``
+    across several tasks (``optimizeSkewsInRebalancePartitions``), so
+    a hot partition never funnels through a single task the way a
+    plain ``repartition(col)`` would.
 
     ``bucket_by=(n, keys)`` pre-shuffles on the join key at write time
     so repeated large joins on ``keys`` skip their shuffle entirely —
     the 100 TB lever for fact-fact joins. Bucketing requires a
     metastore table, hence ``table_name``.
     """
-    writer = df.write.mode(mode)
     if partition_by:
-        writer = writer.partitionBy(*partition_by)
+        df = df.hint("rebalance", *partition_by)
+        writer = df.write.mode(mode).partitionBy(*partition_by)
+    else:
+        writer = df.write.mode(mode)
     if bucket_by is not None:
         n, keys = bucket_by
         if not table_name:
@@ -51,36 +63,53 @@ def compact_parquet(
     target_file_bytes: int = 128 * 1024 * 1024,
 ) -> int:
     """Small-file compaction: rewrite a fragmented parquet directory
-    into ~``target_file_bytes`` files and return the output file
-    count. The operational pass every long-lived table needs —
+    into ~``target_file_bytes`` files and return the number of files
+    written. The operational pass every long-lived table needs —
     streaming ingest and over-parallel writes leave thousands of tiny
     files, and at 100 TB the scan cost becomes footer-fetch-bound
     (one metadata round-trip per file) while the NameNode/listing
     layer degrades long before the data does.
 
-    Sizing comes from the SOURCE bytes (driver-side directory listing
-    — a metadata operation, not a data read): output file count =
-    ceil(total_bytes / target). The rewrite is one round-robin
-    repartition — no key assumptions; use zorder_write instead when
-    the table has hot filter columns, the two compose (compaction
-    chooses file count, Z-order chooses row placement).
+    Sizing comes from the SOURCE bytes (a recursive driver-side
+    listing — a metadata operation, not a data read): output file
+    count = ceil(total_bytes / target). The rewrite coalesces the
+    scan's partitions without a shuffle, so every output file is a
+    concatenation of whole input files and keeps their sorted runs
+    (and with them Parquet's dictionary/RLE compression). A
+    hive-partitioned source keeps its layout: it is rewritten through
+    :func:`write_parquet` on the discovered partition columns, one
+    file per partition unless AQE splits an oversized one. Use
+    zorder_write instead when the table has hot filter columns.
     """
-    import math
-    import os
+    total, partition_cols = _parquet_layout(src_path)
+    df = spark.read.parquet(src_path)
+    if partition_cols:
+        write_parquet(df, dst_path, partition_by=partition_cols)
+    else:
+        n_files = max(1, math.ceil(total / target_file_bytes))
+        df.coalesce(n_files).write.mode("overwrite").parquet(dst_path)
+    return len(_parquet_files(dst_path))
 
-    total = sum(
-        os.path.getsize(os.path.join(src_path, f))
-        for f in os.listdir(src_path)
+
+def _parquet_files(path: str) -> list[str]:
+    return [
+        os.path.join(root, f)
+        for root, _dirs, files in os.walk(path)
+        for f in files
         if f.endswith(".parquet")
-    )
-    n_files = max(1, math.ceil(total / target_file_bytes))
-    (
-        spark.read.parquet(src_path)
-        .repartition(n_files)
-        .write.mode("overwrite")
-        .parquet(dst_path)
-    )
-    return n_files
+    ]
+
+
+def _parquet_layout(path: str) -> tuple[int, list[str]]:
+    """Total bytes of the parquet files under ``path`` (recursively)
+    and the hive partition columns their ``col=value`` directories
+    name, outermost first (empty for a flat directory)."""
+    files = _parquet_files(path)
+    cols: list[str] = []
+    if files:
+        rel = os.path.relpath(os.path.dirname(files[0]), path)
+        cols = [d.split("=", 1)[0] for d in rel.split(os.sep) if "=" in d]
+    return sum(os.path.getsize(f) for f in files), cols
 
 
 def zvalue16_expr(x: str, y: str) -> str:
