@@ -191,3 +191,18 @@ def test_oversized_basket_fails_loudly(spark):
         Exception, match=f"order 9 has more than {MAX_BASKET_PARTS} distinct parts"
     ):
         _basket_pairs(spark.createDataFrame(big, schema)).collect()
+
+
+def test_pairs_top_k_rejects_bad_values(spark, sf_dir, monkeypatch):
+    """SPARK_GRAFT_PAIRS_TOP_K bounds each document's partners by rank
+    ≤ k, so k = 0 or a negative k would silently return no pairs: a
+    pair entry must refuse to build, naming the variable, for anything
+    but an integer ≥ 1."""
+    import pytest
+
+    from trading212_etl_spark import registry
+
+    for bad in ("0", "-3", "abc", "2.5"):
+        monkeypatch.setenv("SPARK_GRAFT_PAIRS_TOP_K", bad)
+        with pytest.raises(ValueError, match="SPARK_GRAFT_PAIRS_TOP_K"):
+            registry.QUERIES["dedup_jaccard_pairs"](spark, sf_dir)

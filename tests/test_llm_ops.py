@@ -1112,64 +1112,6 @@ def test_guarded_ops_oracle_corpora_under_caps(spark):
     )
 
 
-def test_write_ivf_cells_salts_hot_cell(spark, tmp_path):
-    """The IVF cell sink must not write a hot cell from ONE task
-    (VERDICT r9 item 2: a 25%-hot cell measured 2.37x — at 100 TB one
-    task writes 25 TB). With rows_per_task=256, a 900-row cell salts
-    into ceil(900/256)=4 writer sub-groups -> multiple part files,
-    while the 50-row cell stays single-salt. Layout-only: the
-    read-back row set and schema are identical and the salt column
-    never reaches the files."""
-    import glob
-    import os
-
-    from trading212_etl_spark.operators.similarity import write_ivf_cells
-
-    assigned = spark.range(950).selectExpr(
-        "id AS vec_id",
-        "array(cast(id AS double)) AS c_emb",
-        "CASE WHEN id < 900 THEN 1 ELSE 2 END AS cell",
-    )
-    path = str(tmp_path / "cells")
-    write_ivf_cells(assigned, path, rows_per_task=256)
-    hot_files = glob.glob(os.path.join(path, "cell=1", "*.parquet"))
-    assert len(hot_files) >= 2, (
-        f"hot cell written as {len(hot_files)} file(s) — the salted "
-        "repartition did not spread the write across tasks"
-    )
-    back = spark.read.parquet(path)
-    assert sorted(back.columns) == ["c_emb", "cell", "vec_id"]
-    assert back.count() == 950
-    assert back.filter("cell = 1").count() == 900
-    # identical row set, not just counts
-    assert back.select("vec_id").exceptAll(
-        assigned.select("vec_id")
-    ).count() == 0
-
-
-def test_write_ivf_cells_keeps_null_cell_rows(spark, tmp_path):
-    """ADVICE r10: rows with a NULL cell never equi-match the
-    cell-counts side, so the old inner join silently DROPPED them —
-    contradicting the operator's 'row set written is identical'
-    contract. They must survive the salted write (landing under the
-    default Hive partition, reading back with cell IS NULL)."""
-    from trading212_etl_spark.operators.similarity import write_ivf_cells
-
-    assigned = spark.range(100).selectExpr(
-        "id AS vec_id",
-        "array(cast(id AS double)) AS c_emb",
-        "CASE WHEN id % 10 = 0 THEN NULL ELSE id % 3 END AS cell",
-    )
-    path = str(tmp_path / "cells_null")
-    write_ivf_cells(assigned, path, rows_per_task=16)
-    back = spark.read.parquet(path)
-    assert back.count() == 100
-    assert back.filter("cell IS NULL").count() == 10
-    assert back.select("vec_id").exceptAll(
-        assigned.select("vec_id")
-    ).count() == 0
-
-
 def test_jaccard_pairs_stop_shingle_cap_drops_boilerplate_only(spark):
     """The ``max_df`` stop-shingle lever (VERDICT r9 item 5): shingles
     shared by more than max_df documents are dropped BEFORE the
@@ -1554,6 +1496,7 @@ def test_sink_absorb_compact_expire(spark, sf_dir, tmp_path):
     incremental join result, (c) version-tag expiry removes exactly
     the superseded sink directories."""
     import os
+    import shutil
 
     from trading212_etl_spark.operators.dedup import (
         absorb_batch_into_sink,
@@ -1562,6 +1505,8 @@ def test_sink_absorb_compact_expire(spark, sf_dir, tmp_path):
         incremental_minhash_pairs,
         write_signature_sink,
     )
+
+    from .test_plans import _confs
 
     docs = load_table(spark, sf_dir, "documents")
     snapshot = docs.filter(F.col("doc_id") % 10 > 2)
@@ -1575,11 +1520,11 @@ def test_sink_absorb_compact_expire(spark, sf_dir, tmp_path):
     absorb_batch_into_sink(b0, path)
     absorb_batch_into_sink(b1, path)
 
-    def run() -> set:
+    def run(sink: str = path) -> set:
         return {
             tuple(r)
             for r in incremental_minhash_pairs(
-                probe, path, threshold=0.5
+                probe, sink, threshold=0.5
             ).collect()
         }
 
@@ -1595,6 +1540,9 @@ def test_sink_absorb_compact_expire(spark, sf_dir, tmp_path):
         ).collect()
     }
     assert before, "corpus plants cross-split near-dups"
+    # a copy of the fragmented sink, for (b2)
+    split = str(root / "split_v1")
+    shutil.copytree(path, split)
 
     # (b) compaction: strictly fewer files, identical join result
     stats = compact_signature_sink(spark, path)
@@ -1606,13 +1554,19 @@ def test_sink_absorb_compact_expire(spark, sf_dir, tmp_path):
         d.startswith("band_idx=") for d in os.listdir(os.path.join(path, "bands"))
     )
 
-    # (b2) the compaction salt actually splits an oversized band
-    # across multiple files (ADVICE r12: hash-partitioning on
-    # band_idx alone could never split one band): recompact with a
-    # tiny per-file row target and check a band dir holds >1 file,
-    # with the join result still unchanged
-    stats2 = compact_signature_sink(spark, path, target_rows_per_file=50)
-    bands_dir = os.path.join(path, "bands")
+    # (b2) compaction splits an oversized band across multiple files:
+    # compact the fragmented copy with every input file its own scan
+    # task and a tiny advisory size, and check a band dir holds >1
+    # file, with the join result still unchanged
+    with _confs(
+        spark,
+        {
+            "spark.sql.adaptive.advisoryPartitionSizeInBytes": "1k",
+            "spark.sql.files.maxPartitionBytes": "1m",
+        },
+    ):
+        stats2 = compact_signature_sink(spark, split)
+    bands_dir = os.path.join(split, "bands")
     max_files_one_band = max(
         len(
             [
@@ -1625,7 +1579,7 @@ def test_sink_absorb_compact_expire(spark, sf_dir, tmp_path):
         if d.startswith("band_idx=")
     )
     assert max_files_one_band > 1, stats2
-    assert run() == before
+    assert run(split) == before
 
     # (c) expiry drops only the superseded version of the same family
     # — and only directories that ARE sinks (ADVICE r12: a bare

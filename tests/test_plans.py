@@ -385,7 +385,10 @@ def test_partitioned_write_one_file_per_partition_split_under_skew(spark, tmp_pa
     one write task: one file per l_returnflag directory from an 8-file
     input (a plain partitionBy writes one file per input task). When a
     partition outgrows advisoryPartitionSizeInBytes, AQE splits it over
-    several tasks instead of funnelling it through one."""
+    several tasks instead of funnelling it through one. The split is
+    layout-only: the same columns and the same rows read back, and
+    rows with a NULL partition value land in the default partition and
+    read back IS NULL."""
     from trading212_etl_spark.sources import load_table
     from trading212_etl_spark.sources.writers import write_parquet
 
@@ -411,7 +414,20 @@ def test_partitioned_write_one_file_per_partition_split_under_skew(spark, tmp_pa
         write_parquet(lineitem, out, partition_by=["l_returnflag"])
     per_dir = _files_per_dir(out)
     assert len(per_dir) == 3 and min(per_dir.values()) > 1, per_dir
-    assert spark.read.parquet(out).count() == lineitem.count()
+    back = spark.read.parquet(out)
+    assert sorted(back.columns) == sorted(lineitem.columns)
+    assert back.count() == lineitem.count()
+    assert back.select(*lineitem.columns).exceptAll(lineitem).count() == 0
+
+    cells = spark.range(100).selectExpr(
+        "id", "CASE WHEN id % 10 = 0 THEN NULL ELSE id % 3 END AS cell"
+    )
+    out = str(tmp_path / "null_cells")
+    write_parquet(cells, out, partition_by=["cell"])
+    back = spark.read.parquet(out)
+    assert back.count() == 100
+    assert back.filter("cell IS NULL").count() == 10
+    assert back.select("id").exceptAll(cells.select("id")).count() == 0
 
 
 def test_compaction_is_shuffle_free_and_does_not_inflate(spark, tmp_path):

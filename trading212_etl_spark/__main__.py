@@ -10,8 +10,7 @@ against any corpus directory, with the same session defaults the
 benchmark uses (AQE on, UTC, local[cores] with shuffle partitions
 from the corpus bytes and core count — session.shuffle_partitions_for).
 `--explain` prints the formatted physical plan instead of rows, which
-is the first thing to read before running anything at scale
-(PLANS.md documents what to look for)."""
+is the first thing to read before running anything at scale."""
 
 from __future__ import annotations
 

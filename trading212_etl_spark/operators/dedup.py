@@ -23,6 +23,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..partitioning import fan_out, freeze_partitions, materialize
+from ..sources.writers import _parquet_files, compact_parquet, write_parquet
 from .textual import explode_nonempty, tokens
 
 
@@ -1244,9 +1245,11 @@ def write_signature_sink(
     sig.write.mode("overwrite").parquet(f"{path}/signatures")
     spark = docs.sparkSession
     sig_back = spark.read.parquet(f"{path}/signatures")
-    _band_frame(sig_back, num_hashes, bands, hash_fn).write.mode(
-        "overwrite"
-    ).partitionBy("band_idx").parquet(f"{path}/bands")
+    write_parquet(
+        _band_frame(sig_back, num_hashes, bands, hash_fn),
+        f"{path}/bands",
+        partition_by=["band_idx"],
+    )
 
 
 def absorb_batch_into_sink(
@@ -1273,14 +1276,15 @@ def absorb_batch_into_sink(
     sh = freeze_partitions(_shingle_sets(new_docs, shingle_n, id_col))
     sig = materialize(_signature_frame(sh, num_hashes, hash_fn))
     sig.write.mode("append").parquet(f"{path}/signatures")
-    _band_frame(sig, num_hashes, bands, hash_fn).write.mode(
-        "append"
-    ).partitionBy("band_idx").parquet(f"{path}/bands")
+    write_parquet(
+        _band_frame(sig, num_hashes, bands, hash_fn),
+        f"{path}/bands",
+        mode="append",
+        partition_by=["band_idx"],
+    )
 
 
-def compact_signature_sink(
-    spark, path: str, target_rows_per_file: int = 4_000_000
-) -> dict:
+def compact_signature_sink(spark, path: str) -> dict:
     """Merge a signature sink's accumulated per-absorb small files
     into right-sized ones, preserving content and the bands table's
     ``band_idx`` partitioning — the maintenance pass a long-lived
@@ -1301,55 +1305,26 @@ def compact_signature_sink(
     Returns ``{"signatures_files_before"/"_after",
     "bands_files_before"/"_after"}``.
 
-    File sizing is row-count based (signatures are fixed-width rows):
-    roughly one output file per ``target_rows_per_file`` rows per
-    table — signatures via shuffle-free coalesce; bands via ONE
-    shuffle keyed by (band_idx, salt), because the table must stay
-    hive-partitioned by band_idx and a coalesce can neither preserve
-    that layout nor split an oversized band into multiple files."""
-    import math
+    Both rewrites are the engine's one compaction
+    (sources/writers.py:compact_parquet), so file layout follows the
+    engine's one writer policy: the flat signatures table coalesces
+    into byte-sized files without a shuffle, and the bands table keeps
+    its ``band_idx`` directories with one file per band, which AQE
+    splits over several files when a band outgrows
+    ``advisoryPartitionSizeInBytes``."""
     import os
     import shutil
-
-    def _nfiles(d: str) -> int:
-        return sum(
-            1
-            for root, _, files in os.walk(d)
-            for f in files
-            if f.endswith(".parquet")
-        )
 
     tmp = os.path.join(path, ".compact")
     shutil.rmtree(tmp, ignore_errors=True)
     stats = {}
-    sig = spark.read.parquet(f"{path}/signatures")
-    n_sig = sig.count()
-    stats["signatures_files_before"] = _nfiles(f"{path}/signatures")
-    sig.coalesce(max(1, math.ceil(n_sig / target_rows_per_file))).write.parquet(
-        f"{tmp}/signatures"
-    )
-    bands_df = spark.read.parquet(f"{path}/bands")
-    stats["bands_files_before"] = _nfiles(f"{path}/bands")
-    n_band_parts = bands_df.select("band_idx").distinct().count()
-    n_bands_rows = bands_df.count()
-    files_per_part = max(
-        1, math.ceil(n_bands_rows / n_band_parts / target_rows_per_file)
-    )
-    # one shuffle keyed by (band_idx, salt): hashing band_idx alone
-    # sends a band's every row to ONE partition however many
-    # partitions exist (ADVICE r12) — the salt actually splits an
-    # oversized band across files_per_part writer tasks, so each
-    # band_idx directory lands as files_per_part files instead of one
-    # file per historical absorb
-    (
-        bands_df.withColumn(
-            "__salt", F.pmod(F.hash("id"), F.lit(files_per_part))
+    for table in ("signatures", "bands"):
+        stats[f"{table}_files_before"] = len(
+            _parquet_files(os.path.join(path, table))
         )
-        .repartition(n_band_parts * files_per_part, "band_idx", "__salt")
-        .drop("__salt")
-        .write.partitionBy("band_idx")
-        .parquet(f"{tmp}/bands")
-    )
+        stats[f"{table}_files_after"] = compact_parquet(
+            spark, os.path.join(path, table), os.path.join(tmp, table)
+        )
     for table in ("signatures", "bands"):
         old = os.path.join(path, f".old_{table}")
         live = os.path.join(path, table)
@@ -1364,8 +1339,6 @@ def compact_signature_sink(
             raise
         shutil.rmtree(old)
     shutil.rmtree(tmp, ignore_errors=True)
-    stats["signatures_files_after"] = _nfiles(f"{path}/signatures")
-    stats["bands_files_after"] = _nfiles(f"{path}/bands")
     return stats
 
 

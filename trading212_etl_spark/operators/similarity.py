@@ -45,82 +45,6 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
-def write_ivf_cells(
-    assigned: DataFrame, path: str, rows_per_task: int = 512
-) -> None:
-    """Write a cell-assigned corpus ``partitionBy("cell")`` with the
-    hot cells SALTED across writer tasks (VERDICT r9 item 2): without
-    the salt, one task owns each post-repartition cell and a
-    natural-skew cell holding 25% of the corpus is one straggler
-    writer — at 100 TB, one task writing 25 TB. Every cell's rows are
-    split into ``ceil(cell_rows / rows_per_task)`` sub-groups (cell
-    counts from a tiny broadcast aggregate; salt =
-    pmod(xxhash64(vec_id))), and ``repartition(cell, salt)`` fans the
-    hot cell's write across that many tasks. The salt column is
-    dropped before the write, so the directory layout — and therefore
-    probe-side ``cell=`` partition pruning — is unchanged; the hot
-    cell simply lands as several files, which also splits the
-    probe-side scan. Layout-only: the row set written is identical.
-    """
-    cell_counts = (
-        assigned.groupBy("cell")
-        .agg(F.count(F.lit(1)).alias("__cnt"))
-        .persist()
-    )
-    # explicit partition count: a bare repartition(cols) is an AQE
-    # coalescing target, and at sub-advisory-size corpora AQE merges
-    # the salted groups back into one writer task — exactly the
-    # straggler the salt exists to break. The count must ALSO be at
-    # least the total number of salted sub-groups (ADVICE r10): with
-    # fewer hash-partition slots than groups, a hot cell's salt groups
-    # collide into one partition and the write is a straggler again
-    # (deterministically so on low-parallelism hosts). cell_counts is
-    # one row per IVF cell — bounded by the quantizer, so the scalar
-    # .first() is ML-init-sized, not data-plane.
-    n_groups = int(
-        cell_counts.agg(
-            F.coalesce(
-                F.sum(
-                    F.greatest(
-                        F.lit(1).cast("long"),
-                        F.ceil(
-                            F.col("__cnt") / F.lit(rows_per_task)
-                        ).cast("long"),
-                    )
-                ),
-                F.lit(1).cast("long"),
-            ).alias("g")
-        ).first()["g"]
-    )
-    num_parts = max(
-        assigned.sparkSession.sparkContext.defaultParallelism, n_groups
-    )
-    # left join + coalesce(__cnt, 1): rows with a NULL cell never
-    # equi-match the counts side — an inner join would silently DROP
-    # them (ADVICE r10), breaking the 'row set written is identical'
-    # contract (they belong under the null-partition directory).
-    salted = (
-        assigned.join(F.broadcast(cell_counts), on="cell", how="left")
-        .withColumn(
-            "__salt",
-            F.pmod(
-                F.xxhash64("vec_id"),
-                F.greatest(
-                    F.lit(1).cast("long"),
-                    F.ceil(
-                        F.coalesce(F.col("__cnt"), F.lit(1))
-                        / F.lit(rows_per_task)
-                    ).cast("long"),
-                ),
-            ),
-        )
-        .repartition(num_parts, F.col("cell"), F.col("__salt"))
-        .drop("__cnt", "__salt")
-    )
-    salted.write.mode("overwrite").partitionBy("cell").parquet(path)
-    cell_counts.unpersist()
-
-
 def cosine_topk_bruteforce(
     corpus: DataFrame, queries: DataFrame, k: int, round_dp: int = 4
 ) -> DataFrame:
@@ -595,8 +519,7 @@ def embedding_near_dup_pairs_lsh(
     # ACCEPTED RESIDUAL (VERDICT r13 item 6, final): vs the guard-free
     # r9 shape (no window, one gram task per bucket) this costs ~1.2×
     # at sf0.1 — two interleaved A/Bs agree (r13: 1.658 vs 1.385 s;
-    # r14: 1.87 vs 1.545 s min-of-4, tools/probe_near_dup_ab.py, which
-    # also pins row-identity). The residual is the window's
+    # r14: 1.87 vs 1.545 s min-of-4, identical rows). The residual is the window's
     # partition-key sort plus the tile bookkeeping columns; there is
     # no further shuffle to piggyback (the window's exchange IS the
     # only (tbl, bkt) shuffle and the groupBy reuses it), and every

@@ -408,9 +408,8 @@ def ordered_prefix(
     # (per-call-site OPT-IN) caches the input so the second execution
     # is a cache read. It must stay opt-in because the win is decided
     # by compute-per-output-byte, which no Catalyst size estimate
-    # sees: measured at 125× (tools/probe_ordered_prefix.py +
-    # probe_isolated A/B vs the pre-change tree, min-of-2) the pin is
-    # 1.87× FASTER on sample_curriculum_order (expensive tokenize
+    # sees: measured at 125× (isolated A/B vs the pre-change tree,
+    # min-of-2) the pin is 1.87× FASTER on sample_curriculum_order (expensive tokenize
     # chain, 625k-row output: 90.4 → 48.3 s) but 1.8-2.3× SLOWER on
     # the cheap fact-aggregate inputs whose Catalyst estimate is just
     # as "heavy" (orders_pareto_8020 5.3 → 9.4, drift_value_ks 2.2 →

@@ -152,6 +152,27 @@ def _scratch(sf_dir: str, name: str) -> str:
     return os.path.join(repo_root, ".scratch", f"{name}_{base}")
 
 
+def pairs_top_k() -> int | None:
+    """The pair entries' per-document partner bound from
+    ``SPARK_GRAFT_PAIRS_TOP_K`` (unset or empty: None, the complete
+    pair set). Anything but an integer ≥ 1 raises: k = 0 would keep no
+    pairs at all, since the bound keeps ranks ≤ k."""
+    import os
+
+    raw = os.environ.get("SPARK_GRAFT_PAIRS_TOP_K")
+    if not raw:
+        return None
+    try:
+        k = int(raw)
+    except ValueError:
+        k = 0
+    if k < 1:
+        raise ValueError(
+            f"SPARK_GRAFT_PAIRS_TOP_K must be an integer >= 1, got {raw!r}"
+        )
+    return k
+
+
 
 # BPE-ish tokenizer regex, shared verbatim with the DuckDB side
 _TOKS = r"regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9\s]')"

@@ -20,6 +20,7 @@ from ._core import (  # noqa: F401
     _scratch,
     _t,
     bounded_bucket,
+    pairs_top_k,
     pin_oracle_confs,
     register,
 )
@@ -89,16 +90,13 @@ def q_dedup_jaccard(spark, sf_dir):
     O(n·k)-class; kept pairs carry exact Jaccard and the kept set is
     exact on equal-similarity cliques. UNSET by default —
     driver/oracle runs emit the complete pair set."""
-    import os
-
     from ..operators.dedup import jaccard_pairs
 
-    top_k = os.environ.get("SPARK_GRAFT_PAIRS_TOP_K")
     return jaccard_pairs(
         _t(spark, sf_dir, "documents"),
         threshold=0.5,
         n=3,
-        top_k_per_doc=int(top_k) if top_k else None,
+        top_k_per_doc=pairs_top_k(),
     )
 
 
@@ -133,16 +131,13 @@ def q_dedup_containment(spark, sf_dir):
     ``SPARK_GRAFT_PAIRS_TOP_K`` kNN-subgraph output bound — unset by
     default so driver/oracle runs stay exact; the top-k truncation
     ranks by max_containment)."""
-    import os
-
     from ..operators.dedup import containment_pairs
 
-    top_k = os.environ.get("SPARK_GRAFT_PAIRS_TOP_K")
     return containment_pairs(
         _t(spark, sf_dir, "documents"),
         threshold=0.6,
         n=3,
-        top_k_per_doc=int(top_k) if top_k else None,
+        top_k_per_doc=pairs_top_k(),
     )
 
 
@@ -283,16 +278,13 @@ def q_dedup_connected_components(spark, sf_dir):
     labels of replicated-corpus cliques are unchanged while both the
     edge mass AND the candidate enumeration drop from quadratic to
     O(n·k)-class (operators/dedup._hub_candidate_pairs)."""
-    import os
-
     from ..operators.dedup import connected_components, jaccard_pairs
 
-    top_k = os.environ.get("SPARK_GRAFT_PAIRS_TOP_K")
     pairs = jaccard_pairs(
         _t(spark, sf_dir, "documents"),
         threshold=0.5,
         n=3,
-        top_k_per_doc=int(top_k) if top_k else None,
+        top_k_per_doc=pairs_top_k(),
     )
     return connected_components(pairs)
 
@@ -756,7 +748,7 @@ ORACLES["similarity_topk_lsh"] = f"""
 def q_similarity_ivf(spark, sf_dir):
     """IVF (inverted-file) approximate top-k: corpus partitioned into
     centroid cells, queries probe their 3 nearest of 8 cells. At scale
-    the corpus is written partitionBy(cell) so a probe prunes to
+    the corpus is hive-partitioned by cell so a probe prunes to
     n_probe partitions. Centroids are deterministic (first 8 corpus
     vectors), so unlike the seeded-hyperplane LSH variants this op is
     fully oracle-checkable; recall vs brute force additionally
@@ -1207,14 +1199,11 @@ def q_pipeline_curate(spark, sf_dir):
     replicated corpus is never enumerated (see
     plans/curate.py:curate_corpus); the LSH twin remains the
     production form."""
-    import os
-
     from ..plans.curate import curate_corpus
 
-    top_k = os.environ.get("SPARK_GRAFT_PAIRS_TOP_K")
     return curate_corpus(
         _t(spark, sf_dir, "documents"),
-        pairs_top_k=int(top_k) if top_k else None,
+        pairs_top_k=pairs_top_k(),
     )
 
 
@@ -1534,7 +1523,7 @@ def q_text_bpe_merges(spark, sf_dir):
 def q_sink_ivf_partitioned_ann(spark, sf_dir):
     """The IVF storage layout made physical (the 100 TB design the
     similarity_topk_ivf docstring promises): the corpus is WRITTEN
-    ``partitionBy(cell)`` to Parquet, and each probe then reads only
+    hive-partitioned by cell to Parquet, and each probe then reads only
     its ``n_probe`` cell partitions — the `cell IN (...)` predicate is
     a PARTITION FILTER, so the scan lists 3 of 8 directories and
     never opens the rest (plan-pinned in tests/test_plans.py). Same
@@ -1543,24 +1532,19 @@ def q_sink_ivf_partitioned_ann(spark, sf_dir):
     100 TB the ANN index IS the directory structure, rebuilt by one
     partitioned write per centroid refresh.
 
-    Hot-cell salted writer (r10, VERDICT r9 item 2): a natural-skew
-    cell owning 25% of the corpus was previously written by ONE task
-    (measured 2.37x under bucket skew — at 100 TB that task writes
-    25 TB). Each cell's rows are salted into
-    ``ceil(cell_rows / 512)`` sub-groups (per-cell counts from a tiny
-    broadcast aggregate, salt = pmod(xxhash64(vec_id))), then
-    ``repartition(cell, salt)`` spreads the hot cell's write across
-    that many tasks. The salt never reaches the files or the
-    directory layout — probes still prune on the ``cell=`` prefix
-    alone, and the hot cell's multiple files also split the probe-side
-    scan across tasks. Result set is byte-identical (layout-only
-    change), so the oracle is untouched."""
+    The write is the engine's one partitioned writer
+    (sources/writers.py:write_parquet): one file per cell, and AQE
+    splits a hot cell larger than ``advisoryPartitionSizeInBytes``
+    across several writer tasks, so a natural-skew cell owning 25% of
+    the corpus is never one straggler writer. Layout-only, so the
+    oracle is untouched."""
     import os
 
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     from ..operators.similarity import _cent_dots_expr, _data_centroids
+    from ..sources.writers import write_parquet
 
     emb = _t(spark, sf_dir, "embeddings")
     cents = _data_centroids(emb, 8)
@@ -1581,9 +1565,7 @@ def q_sink_ivf_partitioned_ann(spark, sf_dir):
             )
             .drop("__dots")
         )
-        from ..operators.similarity import write_ivf_cells
-
-        write_ivf_cells(assigned, path, rows_per_task=512)
+        write_parquet(assigned, path, partition_by=["cell"])
     corpus = spark.read.parquet(path)
     q = (
         emb.filter(F.col("vec_id") < 8)
@@ -1735,8 +1717,8 @@ def q_sample_preference_pairs(spark, sf_dir):
     # pair-index groupBy, not a rank self-join (r14, guide §2.1/§2.3):
     # the former a/b self-join on (source, rn_b = rn + n DIV 2) made r
     # two plan consumers, so the tokenize + quality + double-window
-    # chain executed once per side (plans/r14/sample_preference_pairs
-    # audit: documents scanned 2x). Rank rn pairs with rank rn + n/2,
+    # chain executed once per side (the r14 plan scanned documents
+    # twice). Rank rn pairs with rank rn + n/2,
     # so both members of a pair share the index pid = rn when chosen
     # (rn <= n/2), rn - n/2 when rejected — each rank maps to at most
     # one pid per role, so a (source, pid) group holds at most one
@@ -2036,8 +2018,8 @@ def q_sample_curriculum_order(spark, sf_dir):
     )
     # pin_input (r15): the range sampler re-executes the tokenize+
     # quality chain for its bounds pass — caching the 2-column score
-    # frame halves the entry at scale (125×: 90.4 → 48.3 s, tools/
-    # probe_ordered_prefix.py); the freeze_when_heavy threshold skips
+    # frame halves the entry at scale (125×: 90.4 → 48.3 s,
+    # isolated min-of-2); the freeze_when_heavy threshold skips
     # the pin at bench SF so the sf0.1 plan is unchanged.
     ranked = ordered_prefix(
         q,
@@ -2449,8 +2431,8 @@ def q_similarity_matryoshka_recall(spark, sf_dir):
     # ONE cross-join pass scores BOTH resolutions (r14, guide §2.1/§3):
     # the former per-resolution topk ran the N x |q| cross join (and the
     # 64-dim cosine kernel) TWICE and met again in a SortMergeJoin on
-    # (query_id, corpus_id) — plans/r14/similarity_matryoshka_recall
-    # showed 4 embeddings scans and 2 BroadcastNestedLoopJoins. Both
+    # (query_id, corpus_id) — the r14 plan held 4 embeddings scans
+    # and 2 BroadcastNestedLoopJoins. Both
     # rank windows share the query_id partition, so one exchange carries
     # them; a pair is in the prefix top-10 iff rn_p <= 10, so the rank
     # predicate replaces the join (LEFT-join-count ≡ count of fr rows

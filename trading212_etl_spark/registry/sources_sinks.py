@@ -174,7 +174,7 @@ def q_source_json(spark, sf_dir):
 )
 def q_sink_partitioned(spark, sf_dir):
     """S8 + §7 — hive-partitioned Parquet sink, then a pruned read:
-    orders written partitionBy(o_orderstatus) — the principled form of
+    orders hive-partitioned by o_orderstatus — the principled form of
     the reference's manual 365-day chunking (trading212.py:86-97) —
     and read back with a partition filter, so the scan touches only
     the o_orderstatus=F directory (PartitionFilters in the plan, 1/3

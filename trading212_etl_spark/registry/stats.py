@@ -467,9 +467,8 @@ def q_orders_anomalous_days(spark, sf_dir):
     # (~thousands of rows at ANY data scale) and a single-partition
     # window over it is safe — while the former fence aggregate was a
     # SECOND consumer of det that re-ran the full orders scan + day
-    # aggregate + two window passes (plans/r14/orders_anomalous_days:
-    # the identical 13-node chain under both BroadcastNestedLoopJoin
-    # branches). Same exact percentile over the same rows, same float
+    # aggregate + two window passes (the r14 plan held the identical
+    # 13-node chain under both BroadcastNestedLoopJoin branches). Same exact percentile over the same rows, same float
     # fence expression — oracle hash-identical. scalar_bucket keeps
     # the partition spec non-empty (one partition for every row at
     # every scale) so WindowExec's no-partition warning stays out of

@@ -21,6 +21,7 @@ from ._core import (  # noqa: F401
     _scratch,
     _t,
     bounded_bucket,
+    pairs_top_k,
     pin_oracle_confs,
     register,
 )
@@ -1050,7 +1051,7 @@ def q_events_funnel_windowed(spark, sf_dir):
 )
 def q_join_dpp(spark, sf_dir):
     """Dynamic partition pruning: the fact table is laid out
-    partitionBy(l_returnflag); joining it against a dim with a
+    hive-partitioned by l_returnflag; joining it against a dim with a
     selective predicate makes Catalyst inject
     ``dynamicpruningexpression(l_returnflag IN <dim subquery>)`` into
     the scan's PartitionFilters — at 100 TB the runtime subquery
@@ -1065,11 +1066,13 @@ def q_join_dpp(spark, sf_dir):
     row proves the pruned result stays exact."""
     from pyspark.sql import functions as F
 
+    from ..sources.writers import write_parquet
+
     path = _scratch(sf_dir, "dpp_lineitem")
     li = _t(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_extendedprice", "l_returnflag"
     )
-    li.write.mode("overwrite").partitionBy("l_returnflag").parquet(path)
+    write_parquet(li, path, partition_by=["l_returnflag"])
     fact = spark.read.parquet(path)
     dim = (
         _t(spark, sf_dir, "part")
@@ -1272,9 +1275,9 @@ def q_orders_basket_affinity(spark, sf_dir):
     exchange and both SMJ sorts — disappears: per-item frequencies
     explode off the same basket frame (identical rows to the items
     groupBy) and the order count is a plain count of baskets (one row
-    per order by construction). Measured at 125×
-    (tools/probe_basket_ab.py, interleaved min-of-2, rows proven
-    equal): 53.4 → 43.4 s = 0.81×; sf0.1 2.56 → 2.45 s. Item
+    per order by construction). Measured at 125× (interleaved
+    min-of-2, rows proven equal): 53.4 → 43.4 s = 0.81×; sf0.1
+    2.56 → 2.45 s. Item
     frequencies broadcast back onto the pair frame; the order count
     rides a 1-row broadcast; top-k is a heap. lift > 10000 bp means
     the pair co-occurs more than independence predicts — the affinity
@@ -1284,8 +1287,8 @@ def q_orders_basket_affinity(spark, sf_dir):
     measured SLOWER (1.37 -> 1.78s at sf0.1) because ReuseExchange
     already dedup'd the self-join sides; the basket form removes the
     join instead of caching its input. The three basket consumers
-    each re-run the cheap scan + basket aggregate (no shared exchange
-    in the plan — plans/r15/orders_basket_affinity_after.txt), which
+    each re-run the cheap scan + basket aggregate (the plan has no
+    shared exchange), which
     the interleaved A/B shows still beats the join shape; a pin here
     would repeat the r14 items-pin mistake."""
     from pyspark.sql import functions as F
@@ -1375,8 +1378,6 @@ def q_sample_leakage_safe_split(spark, sf_dir):
     corpus); the labels join back onto the corpus broadcast (near-dup
     clusters are a small fraction of any curated corpus), and the
     split itself stays a pure projection."""
-    import os
-
     from pyspark.sql import functions as F
 
     from ..operators.dedup import connected_components, jaccard_pairs
@@ -1389,9 +1390,8 @@ def q_sample_leakage_safe_split(spark, sf_dir):
     # truncation, so replicated-corpus clusters keep landing on one
     # side of the fence; the r12 hub-candidate route means the
     # quadratic pair mass is never even enumerated
-    top_k = os.environ.get("SPARK_GRAFT_PAIRS_TOP_K")
     comp = connected_components(
-        jaccard_pairs(docs, 0.5, top_k_per_doc=int(top_k) if top_k else None)
+        jaccard_pairs(docs, 0.5, top_k_per_doc=pairs_top_k())
     )
     grouped = (
         docs.select("doc_id")
