@@ -1112,6 +1112,66 @@ def test_guarded_ops_oracle_corpora_under_caps(spark):
     )
 
 
+def test_write_ivf_cells_salts_hot_cell(spark, tmp_path):
+    """The IVF cell sink (sink_ivf_partitioned_ann writes its cells
+    through write_parquet) must not write a hot cell from ONE task: a
+    25%-hot cell at 100 TB would be one 25 TB writer. With a 1 KB
+    advisory size, AQE splits the 900-row cell over several writer
+    tasks -> multiple part files. Layout-only: the read-back row set
+    and schema are identical."""
+    import glob
+    import os
+
+    from trading212_etl_spark.sources.writers import write_parquet
+
+    from .test_plans import _confs
+
+    # 8 map tasks whatever the host's core count, so the hot cell's
+    # shuffle blocks can be split across writer tasks
+    assigned = spark.range(0, 950, 1, 8).selectExpr(
+        "id AS vec_id",
+        "array(cast(id AS double)) AS c_emb",
+        "CASE WHEN id < 900 THEN 1 ELSE 2 END AS cell",
+    )
+    path = str(tmp_path / "cells")
+    with _confs(spark, {"spark.sql.adaptive.advisoryPartitionSizeInBytes": "1k"}):
+        write_parquet(assigned, path, partition_by=["cell"])
+    hot_files = glob.glob(os.path.join(path, "cell=1", "*.parquet"))
+    assert len(hot_files) >= 2, (
+        f"hot cell written as {len(hot_files)} file(s) — AQE did not "
+        "spread the write across tasks"
+    )
+    back = spark.read.parquet(path)
+    assert sorted(back.columns) == ["c_emb", "cell", "vec_id"]
+    assert back.count() == 950
+    assert back.filter("cell = 1").count() == 900
+    # identical row set, not just counts
+    assert back.select("vec_id").exceptAll(
+        assigned.select("vec_id")
+    ).count() == 0
+
+
+def test_write_ivf_cells_keeps_null_cell_rows(spark, tmp_path):
+    """Rows with a NULL cell must survive the IVF cell write (landing
+    under the default Hive partition, reading back with cell IS NULL):
+    the row set written is identical to the row set assigned."""
+    from trading212_etl_spark.sources.writers import write_parquet
+
+    assigned = spark.range(100).selectExpr(
+        "id AS vec_id",
+        "array(cast(id AS double)) AS c_emb",
+        "CASE WHEN id % 10 = 0 THEN NULL ELSE id % 3 END AS cell",
+    )
+    path = str(tmp_path / "cells_null")
+    write_parquet(assigned, path, partition_by=["cell"])
+    back = spark.read.parquet(path)
+    assert back.count() == 100
+    assert back.filter("cell IS NULL").count() == 10
+    assert back.select("vec_id").exceptAll(
+        assigned.select("vec_id")
+    ).count() == 0
+
+
 def test_jaccard_pairs_stop_shingle_cap_drops_boilerplate_only(spark):
     """The ``max_df`` stop-shingle lever (VERDICT r9 item 5): shingles
     shared by more than max_df documents are dropped BEFORE the
