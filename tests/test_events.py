@@ -562,25 +562,145 @@ def test_streaming_user_stats_ttl_non_utc_session_tz(spark, tmp_path):
         spark.conf.set("spark.sql.session.timeZone", prev_tz)
 
 
-def test_run_to_memory_guard_trips_on_stream_sized_result(spark, tmp_path):
-    """VERDICT r10 item 7: the memory-sink drive is documented as
-    bounded-cardinality-only (a stream-sized result is DRIVER-resident
-    and bursts maxResultSize at scale — the 125x probe measured it).
-    The row-count tripwire must raise loudly, pointing at the
-    foreachBatch parquet drive, instead of letting a corpus change
-    silently re-introduce a driver-resident stream."""
+def _file_batches_stream(spark, src, schema, batches):
+    """Write each row list in ``batches`` as one single-file parquet
+    directory under ``src`` and return a file-source stream that reads
+    them one file per micro-batch, in list order."""
+    import os
+
+    for i, rows in enumerate(batches):
+        d = os.path.join(src, f"b{i}")
+        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(d)
+        # the file source reads oldest first: pin the batch order
+        for f in os.listdir(d):
+            os.utime(os.path.join(d, f), (1_000_000 + i, 1_000_000 + i))
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .option("pathGlobFilter", "*.parquet")
+        .parquet(os.path.join(src, "b*"))
+    )
+
+
+def test_drive_raises_on_append_mode_late_drops(spark, tmp_path):
+    """The shared drive's late-drop audit: three single-file batches
+    (10:00 + 11:00, then 12:00, then 00:00) under a 2-hour watermark.
+    The 00:00 row arrives once the watermark has reached 10:00, so the
+    append-mode window aggregate drops it, and the drive must raise
+    instead of returning a result without it. Complete mode keeps all
+    state and drops nothing, so the audit is exercised in append."""
+    import datetime as dt
+    import json
+    import os
+
     import pytest
+    from pyspark.sql import types as T
+
+    from trading212_etl_spark.streaming.windows import (
+        _drive,
+        streaming_tumbling_agg,
+    )
+
+    schema = T.StructType(
+        [
+            T.StructField("ts", T.TimestampType()),
+            T.StructField("event_type", T.StringType()),
+            T.StructField("value", T.DoubleType()),
+        ]
+    )
+    day = dt.datetime(2024, 6, 1)
+    batches = [
+        [(day + dt.timedelta(hours=h), "view", 1.0) for h in hours]
+        for hours in ([10, 11], [12], [0])
+    ]
+    stream = _file_batches_stream(spark, str(tmp_path / "src"), schema, batches)
+    out_dir = str(tmp_path / "out")
+    with pytest.raises(RuntimeError, match="1 rows as late"):
+        _drive(streaming_tumbling_agg(stream, "1 hour"), out_dir, "append")
+    with open(os.path.join(out_dir, "_drive_diag.json")) as fh:
+        diag = json.load(fh)
+    assert diag["late_rows_dropped"] == 1, diag
+
+
+def test_streaming_cdc_apply_merges_across_batches(spark, tmp_path, monkeypatch):
+    """The CDC merge body over several micro-batches (one file per
+    trigger): a key updated in a later batch takes the new version, a
+    later batch carrying an OLDER version of a key does not win, and
+    only the newest table version is left for the re-read."""
+    import datetime as dt
+    import glob
+    import json
+    import os
 
     from pyspark.sql import types as T
 
-    from trading212_etl_spark.streaming.windows import _run_to_memory
+    from trading212_etl_spark.streaming import windows
 
-    schema = T.StructType([T.StructField("v", T.LongType())])
-    src = str(tmp_path / "src")
-    spark.range(100).selectExpr("id AS v").coalesce(1).write.parquet(src)
-    stream = spark.readStream.schema(schema).format("parquet").load(src)
-    with pytest.raises(RuntimeError, match="_run_to_parquet"):
-        _run_to_memory(spark, stream, "guard_trip", "append", max_rows=5)
-    # under the cap: same drive succeeds
-    out = _run_to_memory(spark, stream, "guard_ok", "append", max_rows=1000)
-    assert out.count() == 100
+    schema = T.StructType(
+        [
+            T.StructField("event_id", T.LongType()),
+            T.StructField("ts", T.TimestampType()),
+            T.StructField("user_id", T.LongType()),
+            T.StructField("value", T.DoubleType()),
+        ]
+    )
+    day = dt.datetime(2024, 6, 1)
+    batches = [
+        [(e, day + dt.timedelta(hours=h), u, v) for e, h, u, v in rows]
+        for rows in (
+            [(1, 10, 1, 1.0), (2, 10, 2, 2.0)],
+            [(3, 11, 1, 3.0)],
+            [(4, 9, 2, 4.0), (5, 12, 3, 5.0)],
+        )
+    ]
+    monkeypatch.setattr(
+        windows,
+        "_events_stream",
+        lambda spark_, src: _file_batches_stream(spark_, src, schema, batches),
+    )
+    out_dir = str(tmp_path / "cdc")
+    got = {
+        (r["key"], r["version"].hour, r["event_id"], r["value"])
+        for r in windows.run_streaming_cdc_apply(
+            spark, str(tmp_path / "src"), out_dir
+        ).collect()
+    }
+    assert got == {(1, 11, 3, 3.0), (2, 10, 2, 2.0), (3, 12, 5, 5.0)}, got
+    with open(os.path.join(out_dir, "_drive_diag.json")) as fh:
+        assert len(json.load(fh)["batches"]) == 3
+    assert glob.glob(f"{out_dir}/batch_id=*") == [f"{out_dir}/batch_id=2"]
+
+
+def test_write_stream_lives_in_one_drive():
+    """Every streaming entry drives through one function:
+    ``writeStream`` appears in streaming/windows.py:_drive and nowhere
+    else in the package, and no memory sink or processAllAvailable
+    drive survives."""
+    import ast
+    import pathlib
+
+    import trading212_etl_spark
+
+    root = pathlib.Path(trading212_etl_spark.__file__).parent
+    owners = set()
+
+    class Finder(ast.NodeVisitor):
+        def __init__(self, rel):
+            self.rel, self.stack = rel, ["<module>"]
+
+        def visit_FunctionDef(self, node):
+            self.stack.append(node.name)
+            self.generic_visit(node)
+            self.stack.pop()
+
+        def visit_Attribute(self, node):
+            if node.attr == "writeStream":
+                owners.add((self.rel, self.stack[-1]))
+            self.generic_visit(node)
+
+    for path in sorted(root.rglob("*.py")):
+        src = path.read_text()
+        assert 'format("memory")' not in src, path
+        assert "processAllAvailable" not in src, path
+        Finder(str(path.relative_to(root))).visit(ast.parse(src))
+    assert owners == {("streaming/windows.py", "_drive")}, owners

@@ -499,17 +499,6 @@ def containment_pairs(
 # MinHash + LSH
 # ---------------------------------------------------------------------------
 
-def minhash_signature(shingles: Column, num_hashes: int) -> Column:
-    """K-permutation MinHash signature: hash_k(s) = xxhash64(s, k);
-    sig[k] = min over the shingle set. xxhash64 is engine-specific, so
-    LSH outputs are verified by invariant tests + the exact Jaccard
-    verifier, not a DuckDB oracle (SURVEY §5.4)."""
-    return F.array(
-        *[F.array_min(F.transform(shingles, lambda s: F.xxhash64(s, F.lit(k))))
-          for k in range(num_hashes)]
-    )
-
-
 def _signature_frame(sh: DataFrame, num_hashes: int, hash_fn: str) -> DataFrame:
     """(id, h0..h{K-1}) MinHash signature frame over a materialized
     (id, shingles) frame — the shared construction behind

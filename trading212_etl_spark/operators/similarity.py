@@ -156,19 +156,6 @@ def _pair_cosine_arrow_udf():
     return pair_cos
 
 
-def lsh_bucket(emb: Column, planes: list[list[float]]) -> Column:
-    """Sign-bit bucket id: bit_i = 1 iff emb · plane_i > 0 (single
-    table, pure-Column form; see _bands_arrow_udf for the vectorized
-    multi-table path the LSH operators use)."""
-    bucket = F.lit(0).cast("long")
-    for i, p in enumerate(planes):
-        d = dot(emb, F.lit([float(x) for x in p]))
-        bucket = bucket + F.when(d > 0, F.lit(2 ** i).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-    return bucket
-
-
 def cosine_topk_lsh(
     corpus: DataFrame,
     queries: DataFrame,

@@ -8,7 +8,7 @@ Two distinct hazards at the two ends of the scale spectrum:
   plan to cluster parallelism (one round-robin shuffle, each row
   moved once).
 - **Skewed shuffle keys** (cluster): one hot key turns a shuffle stage
-  into a single straggler task. ``with_salt``/``unsalt_agg`` implement
+  into a single straggler task. ``with_salt``/``salted_agg`` implement
   two-phase salted aggregation; AQE's skew-join splitting (enabled in
   session.py) covers the join case.
 """
@@ -21,20 +21,19 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def fan_out(df: DataFrame, multiplier: int = 1) -> DataFrame:
+def fan_out(df: DataFrame) -> DataFrame:
     """Ensure ``df`` has at least cluster-parallelism partitions before
     CPU-bound per-row work.
 
     The round-robin repartition shuffle moves each row once — trivially
     amortized when downstream does regex/hash/codec work per row. It
     widens unconditionally: a width check
-    (``df.rdd.getNumPartitions() >= target``) would force a full
-    physical-plan translation on the driver on EVERY call — pure
+    (``df.rdd.getNumPartitions() >= defaultParallelism``) would force a
+    full physical-plan translation on the driver on EVERY call — pure
     driver-side overhead for the many operators that wrap their input
     in ``fan_out``.
     """
-    target = df.sparkSession.sparkContext.defaultParallelism * multiplier
-    return df.repartition(target)
+    return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 
 
 def _has_checkpoint_dir(df: DataFrame) -> bool:

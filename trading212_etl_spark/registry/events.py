@@ -177,9 +177,10 @@ def q_streaming_stream_static(spark, sf_dir):
     """§2.9 streaming — stream-static dimension join (the streaming
     form of the trading212.py:109 account enrichment): static side
     re-planned per micro-batch. The query genuinely executes as a
-    Structured Streaming job (memory sink, processAllAvailable); the
-    oracle is the batch-SQL twin of the materialized result — a full
-    value-hash check, stronger than the former rows-only row."""
+    Structured Streaming job (foreachBatch parquet sink, availableNow
+    trigger); the oracle is the batch-SQL twin of the materialized
+    result — a full value-hash check, stronger than the former
+    rows-only row."""
     from ..streaming.windows import run_stream_static_join
 
     return run_stream_static_join(spark, sf_dir)
@@ -354,10 +355,10 @@ def q_unpivot(spark, sf_dir):
 )
 def q_streaming_tumbling(spark, sf_dir):
     """§2.9 streaming — the T1 tumbling aggregate as a Structured
-    Streaming query over a file source, driven to completion with a
-    memory sink. The oracle is the batch tumbling-window SQL the
-    converged stream must equal (complete output mode over a finite
-    source is exactly the batch aggregate)."""
+    Streaming query over a file source, driven to completion into a
+    foreachBatch parquet sink. The oracle is the batch tumbling-window
+    SQL the converged stream must equal (complete output mode over a
+    finite source is exactly the batch aggregate)."""
     from ..streaming.windows import run_streaming_tumbling_agg
 
     return run_streaming_tumbling_agg(spark, sf_dir, "1 hour")

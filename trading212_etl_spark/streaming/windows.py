@@ -80,79 +80,117 @@ def _events_stream(spark: SparkSession, events_dir: str) -> DataFrame:
     return stream
 
 
-_MEMORY_SINK_MAX_ROWS = 2_000_000
+# The late-drop audit in :func:`_drive` reads q.recentProgress, which
+# retains only the last numRecentProgressUpdates entries (default 100):
+# a drive splitting into more micro-batches would silently under-count
+# drops and let the zero-late assertion pass wrongly. The drive raises
+# the per-query buffer to this cap and asserts the batch count stayed
+# under it, so a truncated audit fails loudly instead of lying.
+_PROGRESS_CAP = 10_000
 
 
-def _run_to_memory(
-    spark: SparkSession, df: DataFrame, name: str, mode: str,
-    max_rows: int = _MEMORY_SINK_MAX_ROWS,
+def _drive(
+    stream: DataFrame, out_dir: str, mode: str, write_batch=None
 ) -> DataFrame:
-    """Drive a streaming DataFrame to completion into a memory sink
-    and return the materialized table — the shared local-smoke drive
-    protocol (a production job swaps in a durable sink and keeps the
-    transformation graph). One definition so a protocol change
-    (trigger choice, stop/error handling) lands everywhere at once.
+    """Drive ``stream`` to completion into parquet under ``out_dir`` and
+    return the re-read — the package's one streaming drive (a
+    production job swaps the file source for Kafka and keeps the
+    transformation graph and this sink).
 
-    ONLY for results bounded by key/window cardinality (per-type
-    counts, per-window aggregates, per-user bitmaps): a memory sink is
-    DRIVER-resident, so a result that grows with the stream bursts
-    spark.driver.maxResultSize — the 125× probe measured exactly that
-    on the per-session and per-event outputs, which therefore drive
-    through :func:`_run_to_parquet` instead. ``max_rows`` is the
-    tripwire (VERDICT r10 item 7): a corpus change that turns a
-    bounded-cardinality result into a stream-sized one fails LOUDLY
-    at the first over-cap scale probe instead of silently creeping
-    toward the driver's memory ceiling."""
-    q = (
-        df.writeStream.outputMode(mode)
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    out = spark.table(name)
-    n = out.count()
-    if n > max_rows:
-        raise RuntimeError(
-            f"memory sink '{name}' materialized {n} rows "
-            f"(> {max_rows}): this result is stream-sized, not "
-            "key/window-bounded — drive it through _run_to_parquet "
-            "(foreachBatch parquet sink) instead"
-        )
-    return out
+    Each micro-batch lands through ``foreachBatch``: complete mode
+    overwrites ``table/`` (the last batch is the converged result);
+    append and update modes write idempotent per-batch-id
+    ``batch_id=N/`` directories, and the re-read drops ``batch_id``.
+    Rows never accumulate on the driver, so the result may grow with
+    the stream at any scale. ``write_batch(batch_df, batch_id)``
+    replaces the per-batch write for drives that reduce or merge each
+    batch first; it must keep the same layout.
 
-
-def _run_to_parquet(
-    spark: SparkSession, df: DataFrame, out_dir: str, mode: str
-) -> DataFrame:
-    """Scale-safe twin of :func:`_run_to_memory`: drive the stream via
-    ``foreachBatch`` into parquet under ``out_dir`` and return the
-    re-read — rows never accumulate on the driver, so stream-sized
-    results (every deduped event, every session) survive any SF.
-    complete mode overwrites one table per batch (last batch = the
-    converged result); append mode lands disjoint per-batch-id
-    directories (the exactly-once ingest layout)."""
+    Protocol: ``availableNow`` trigger + ``awaitTermination`` — the
+    QUERY decides when the bounded drive is drained (data batches plus
+    any trailing watermark-advance batch); stopping the query from
+    outside once the source looks drained could interrupt that
+    trailing batch mid-flight under host contention. The checkpoint
+    lives in ``out_dir/_checkpoint`` and is wiped with ``out_dir``, so
+    every drive starts fresh. After termination the drive ASSERTS no
+    input row was dropped as late by the watermark (a finite drive of
+    the corpus has no legitimately-late data; a nonzero drop is a
+    silent wrong answer) and writes a per-batch diagnostic
+    (``_drive_diag.json``) so any parity flake is attributable
+    post-hoc instead of vanishing on rerun. The underscore prefixes
+    keep the parquet re-read off both."""
+    import json
+    import os
     import shutil
 
+    spark = stream.sparkSession
     shutil.rmtree(out_dir, ignore_errors=True)
     table_dir = f"{out_dir}/table" if mode == "complete" else out_dir
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
+    def overwrite_batch(batch_df: DataFrame, batch_id: int) -> None:
         target = (
             table_dir if mode == "complete" else f"{out_dir}/batch_id={batch_id}"
         )
         batch_df.write.mode("overwrite").parquet(target)
 
-    q = df.writeStream.foreachBatch(write_batch).outputMode(mode).start()
+    prev_cap = spark.conf.get(
+        "spark.sql.streaming.numRecentProgressUpdates", None
+    )
+    spark.conf.set(
+        "spark.sql.streaming.numRecentProgressUpdates", str(_PROGRESS_CAP)
+    )
     try:
-        q.processAllAvailable()
+        q = (
+            stream.writeStream.foreachBatch(write_batch or overwrite_batch)
+            .outputMode(mode)
+            .option("checkpointLocation", f"{out_dir}/_checkpoint")
+            .trigger(availableNow=True)
+            .start()
+        )
+        try:
+            q.awaitTermination()
+        finally:
+            q.stop()
     finally:
-        q.stop()
+        if prev_cap is None:
+            spark.conf.unset("spark.sql.streaming.numRecentProgressUpdates")
+        else:
+            spark.conf.set(
+                "spark.sql.streaming.numRecentProgressUpdates", prev_cap
+            )
+    progress = list(q.recentProgress)
+    if len(progress) >= _PROGRESS_CAP:
+        raise RuntimeError(
+            f"streaming drive produced >= {_PROGRESS_CAP} progress "
+            "entries — the late-drop audit buffer truncated and the "
+            "zero-late assertion below would under-count; raise the cap"
+        )
+    diag = {"batches": [], "late_rows_dropped": 0}
+    for p in progress:
+        prog = p if isinstance(p, dict) else json.loads(p.json)
+        dropped = sum(
+            op.get("numRowsDroppedByWatermark", 0)
+            for op in prog.get("stateOperators", [])
+        )
+        diag["late_rows_dropped"] += dropped
+        diag["batches"].append(
+            {
+                "batch_id": prog.get("batchId"),
+                "input_rows": prog.get("numInputRows"),
+                "dropped_by_watermark": dropped,
+            }
+        )
+    os.makedirs(out_dir, exist_ok=True)
+    with open(os.path.join(out_dir, "_drive_diag.json"), "w") as fh:
+        json.dump(diag, fh, indent=1)
+    if diag["late_rows_dropped"]:
+        raise RuntimeError(
+            "streaming drive dropped "
+            f"{diag['late_rows_dropped']} rows as late — a finite "
+            f"drive must drop none; diag={diag}"
+        )
     out = spark.read.parquet(table_dir)
-    return out.drop("batch_id") if mode == "append" else out
+    return out if mode == "complete" else out.drop("batch_id")
 
 
 def streaming_dedup(stream: DataFrame, horizon: str = "2 hours") -> DataFrame:
@@ -180,16 +218,11 @@ def streaming_dedup(stream: DataFrame, horizon: str = "2 hours") -> DataFrame:
 def run_streaming_dedup(spark: SparkSession, events_dir: str) -> DataFrame:
     """Drive :func:`streaming_dedup` over the corpus events and return
     per-type counts of the deduplicated stream (equals batch distinct
-    counts — asserted in tests/test_events.py). The deduped stream is
-    EVERY surviving event, so it drives through the parquet sink —
-    the append-mode memory sink held the full stream on the driver
-    and burst maxResultSize at the 125× probe."""
+    counts — asserted in tests/test_events.py)."""
     from trading212_etl_spark.registry._core import _scratch
 
     dedup = streaming_dedup(_events_stream(spark, events_dir))
-    out = _run_to_parquet(
-        spark, dedup, _scratch(events_dir, "stream_dedup"), "append"
-    )
+    out = _drive(dedup, _scratch(events_dir, "stream_dedup"), "append")
     return out.groupBy("event_type").agg(F.count(F.lit(1)).alias("n_events"))
 
 
@@ -241,12 +274,14 @@ def run_streaming_user_stats(spark: SparkSession, events_dir: str) -> DataFrame:
             update, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
         )
     )
-    # one batch (availableNow-style full read) -> one row per user; a
+    # one batch (availableNow full read) -> one row per user; a
     # multi-batch run would emit one row per (user, batch) with the
     # running totals, so keep the last per user for generality
     from pyspark.sql import Window
 
-    t = _run_to_memory(spark, stats, "stream_user_stats_out", "update")
+    from trading212_etl_spark.registry._core import _scratch
+
+    t = _drive(stats, _scratch(events_dir, "stream_user_stats"), "update")
     w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
     return (
         t.withColumn("__rn", F.row_number().over(w))
@@ -358,24 +393,11 @@ def run_foreachbatch_ingest(
     the reference's full-table dedup crudely approximated.
 
     Returns the re-read of the ingested parquet, so downstream logic
-    (and the DuckDB oracle) can verify the ingest was lossless.
+    (and the DuckDB oracle) can verify the ingest was lossless. Each
+    batch-id directory is overwritten on a re-run of its batch, never
+    appended to, so a retried batch cannot duplicate rows.
     """
-    import shutil
-
-    shutil.rmtree(out_dir, ignore_errors=True)
-    stream = _events_stream(spark, events_dir)
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # idempotent per batch-id: re-running a failed batch overwrites
-        # its own directory, never duplicates rows
-        batch_df.write.mode("overwrite").parquet(f"{out_dir}/batch_id={batch_id}")
-
-    q = stream.writeStream.foreachBatch(write_batch).outputMode("append").start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.read.parquet(out_dir).drop("batch_id")
+    return _drive(_events_stream(spark, events_dir), out_dir, "append")
 
 
 def run_stream_static_join(spark: SparkSession, events_dir: str) -> DataFrame:
@@ -403,7 +425,9 @@ def run_stream_static_join(spark: SparkSession, events_dir: str) -> DataFrame:
     agg = joined.groupBy("event_type", "has_orders").agg(
         F.count(F.lit(1)).alias("n_events")
     )
-    return _run_to_memory(spark, agg, "stream_static_join_out", "complete")
+    from trading212_etl_spark.registry._core import _scratch
+
+    return _drive(agg, _scratch(events_dir, "stream_static_join"), "complete")
 
 
 def stream_stream_attribution_join(
@@ -473,68 +497,31 @@ def stream_stream_attribution_join(
     ).select("user_id", "click_id", "purchase_id", "click_ts", "purchase_ts", "purchase_value")
 
 
-def run_stream_stream_join(
-    spark: SparkSession, events_dir: str, out_dir: str | None = None
-) -> DataFrame:
+def run_stream_stream_join(spark: SparkSession, events_dir: str) -> DataFrame:
     """Drive the attribution join over the corpus events (clicks ⋈
     purchases within 1 hour per user) and return per-user attributed
     purchase counts. Batch equivalence asserted in tests/test_events.py.
 
-    The raw pair stream is never materialized on the driver: each
-    micro-batch reduces to per-user PARTIAL aggregates (count +
-    unrounded value sum) written as idempotent per-batch-id parquet —
-    the foreachBatch ingest pattern — and the return value merges the
-    partials. The earlier memory-sink-on-pairs drive held the full
-    attribution fan-out in driver memory, which is quadratic in a hot
-    user's hourly rate BY SEMANTICS (every click pairs with every
-    purchase in its following hour): the 30%-hot-key skew corpus blew
-    spark.driver.maxResultSize with >1 GiB of serialized pairs.
-    Append-mode join output emits each match exactly once, so the
-    per-batch partials are disjoint and their merge is exact.
-
-    Drive protocol (r13, VERDICT r12 item 1): ``availableNow`` trigger
-    + ``awaitTermination`` — the QUERY decides when the bounded drive
-    is drained (data batches plus any trailing watermark-advance
-    batch), instead of the old processAllAvailable-then-stop pair,
-    which under host contention could interrupt the trailing batch
-    mid-flight. After termination the drive ASSERTS no input row was
-    dropped as late by the watermark (a finite single-directory drive
-    has no legitimately-late data; a nonzero drop is exactly the
-    silent-wrong-answer mechanism the r12 judge hypothesized) and
-    writes a per-batch diagnostic (``_drive_diag.json``, underscore
-    prefix so the parquet reader ignores it) so any future parity
-    flake is attributable post-hoc instead of vanishing on rerun.
+    The raw pair stream is never materialized: each micro-batch
+    reduces to per-user PARTIAL aggregates (count + unrounded value
+    sum) written as its per-batch-id parquet, and the return value
+    merges the partials. The pair fan-out is quadratic in a hot user's
+    hourly rate BY SEMANTICS (every click pairs with every purchase in
+    its following hour): on the 30%-hot-key skew corpus the pairs
+    exceeded 1 GiB serialized. Append-mode join output emits each
+    match exactly once, so the per-batch partials are disjoint and
+    their merge is exact.
     """
-    import json
-    import os
-    import shutil
+    from trading212_etl_spark.registry._core import _scratch
 
-    if out_dir is None:
-        from trading212_etl_spark.registry._core import _scratch
-
-        out_dir = _scratch(events_dir, "stream_stream_pairs")
-    shutil.rmtree(out_dir, ignore_errors=True)
-    # the late-drop audit below reads q.recentProgress, which retains
-    # only the last numRecentProgressUpdates entries (default 100) — a
-    # drive splitting into more micro-batches would silently
-    # under-count drops and let the zero-late assertion pass wrongly
-    # (ADVICE r13). Raise the per-query buffer for this drive and
-    # assert the batch count stayed under it, so a truncated audit
-    # fails loudly instead of lying.
-    _progress_cap = 10_000
-    _prev_cap = spark.conf.get(
-        "spark.sql.streaming.numRecentProgressUpdates", None
-    )
-    spark.conf.set(
-        "spark.sql.streaming.numRecentProgressUpdates", str(_progress_cap)
-    )
+    out_dir = _scratch(events_dir, "stream_stream_pairs")
     ev = _events_stream(spark, events_dir)
     joined = stream_stream_attribution_join(
         ev.filter(F.col("event_type") == "click"),
         ev.filter(F.col("event_type") == "purchase"),
     )
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
+    def write_partials(batch_df: DataFrame, batch_id: int) -> None:
         (
             batch_df.groupBy("user_id")
             .agg(
@@ -545,55 +532,8 @@ def run_stream_stream_join(
             .parquet(f"{out_dir}/batch_id={batch_id}")
         )
 
-    q = (
-        joined.writeStream.foreachBatch(write_batch)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
-        if _prev_cap is None:
-            spark.conf.unset("spark.sql.streaming.numRecentProgressUpdates")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.numRecentProgressUpdates", _prev_cap
-            )
-    progress = list(q.recentProgress)
-    if len(progress) >= _progress_cap:
-        raise RuntimeError(
-            f"stream-stream drive produced >= {_progress_cap} progress "
-            "entries — the late-drop audit buffer truncated and the "
-            "zero-late assertion below would under-count; raise the cap"
-        )
-    diag = {"batches": [], "late_rows_dropped": 0}
-    for p in progress:
-        prog = p if isinstance(p, dict) else json.loads(p.json)
-        dropped = sum(
-            op.get("numRowsDroppedByWatermark", 0)
-            for op in prog.get("stateOperators", [])
-        )
-        diag["late_rows_dropped"] += dropped
-        diag["batches"].append(
-            {
-                "batch_id": prog.get("batchId"),
-                "input_rows": prog.get("numInputRows"),
-                "dropped_by_watermark": dropped,
-            }
-        )
-    os.makedirs(out_dir, exist_ok=True)
-    with open(os.path.join(out_dir, "_drive_diag.json"), "w") as fh:
-        json.dump(diag, fh, indent=1)
-    if diag["late_rows_dropped"]:
-        raise RuntimeError(
-            "stream-stream drive dropped "
-            f"{diag['late_rows_dropped']} rows as late — a finite "
-            f"single-directory drive must drop none; diag={diag}"
-        )
     return (
-        spark.read.parquet(out_dir)
+        _drive(joined, out_dir, "append", write_partials)
         .groupBy("user_id")
         .agg(
             F.sum("n_part").cast("bigint").alias("n_attributed"),
@@ -606,18 +546,20 @@ def run_streaming_tumbling_agg(
     spark: SparkSession, events_dir: str, duration: str = "1 hour"
 ) -> DataFrame:
     """Drive the streaming aggregate to completion over a static
-    directory of event parquet (trigger availableNow semantics via
-    processAllAvailable) and return the materialized result.
+    directory of event parquet (:func:`_drive`) and return the
+    converged result.
 
     This is the local-smoke harness; a production deployment swaps the
-    file source for Kafka and the memory sink for a Parquet/foreachBatch
-    sink — the transformation graph is identical.
+    file source for Kafka — the transformation graph and the sink are
+    identical.
     """
+    from trading212_etl_spark.registry._core import _scratch
+
     # the file source requires a directory; the corpus keeps one
     # parquet per table in the sf dir, so _events_stream glob-filters
     # to events only and normalizes ts to TimestampType
     agg = streaming_tumbling_agg(_events_stream(spark, events_dir), duration)
-    return _run_to_memory(spark, agg, "stream_tumbling_out", "complete")
+    return _drive(agg, _scratch(events_dir, "stream_tumbling"), "complete")
 
 
 def run_streaming_sliding_agg(
@@ -630,10 +572,12 @@ def run_streaming_sliding_agg(
     each event lands in duration/slide overlapping windows; the
     converged complete-mode output equals the batch sliding aggregate
     (``events_sliding_2h_1h``)."""
+    from trading212_etl_spark.registry._core import _scratch
+
     agg = streaming_tumbling_agg(
         _events_stream(spark, events_dir), duration, slide=slide
     )
-    return _run_to_memory(spark, agg, "stream_sliding_out", "complete")
+    return _drive(agg, _scratch(events_dir, "stream_sliding"), "complete")
 
 
 def run_streaming_session_window(
@@ -654,11 +598,6 @@ def run_streaming_session_window(
     production choice (emit each session once, when the watermark
     passes its gap) but holds back the final sessions of a finite
     local run — the wrong smoke-harness semantics.
-
-    The result is one row per SESSION — it grows with the stream, so
-    it drives through the parquet sink (the complete-mode memory sink
-    held every session on the driver and burst maxResultSize at the
-    125× probe).
     """
     from trading212_etl_spark.registry._core import _scratch
 
@@ -678,9 +617,7 @@ def run_streaming_session_window(
             "session_value",
         )
     )
-    return _run_to_parquet(
-        spark, agg, _scratch(events_dir, "stream_session"), "complete"
-    )
+    return _drive(agg, _scratch(events_dir, "stream_session"), "complete")
 
 
 def run_streaming_cdc_apply(
@@ -688,25 +625,28 @@ def run_streaming_cdc_apply(
 ) -> DataFrame:
     """CDC apply via ``foreachBatch``: a stream of keyed change rows
     is MERGEd into a base table — each micro-batch upserts by key,
-    keeping the highest (version, then value) per key. The pattern
+    keeping the highest (version, then event_id) per key. The pattern
     every warehouse ingestion runs; on a lakehouse table the batch
     body becomes ``MERGE INTO`` (Delta/Iceberg), here it is
-    read-union-keep-latest-overwrite on plain parquet, which is the
-    same logical plan without the transactional commit.
+    read-union-keep-latest on plain parquet, which is the same logical
+    plan without the transactional commit.
 
-    Restart safety: the rewrite is idempotent per batch (re-applying a
-    batch reproduces the same table), and the checkpoint guarantees
-    each batch applies once in order. State lives in the TABLE, not
-    the stream — memory is O(batch), unlike stateful operators.
+    Batch N writes the merged table as its own ``batch_id=N``
+    directory and only then deletes the older versions, so the drive's
+    re-read is the latest table, and a batch that fails mid-write
+    leaves the previous version intact for its re-run (keep-latest is
+    idempotent, and the checkpoint applies each batch once, in order).
+    State lives in the TABLE, not the stream — memory is O(batch),
+    unlike stateful operators.
 
     Returns the final applied table (one row per key, latest change
     wins) for the oracle diff.
     """
+    import glob
     import shutil
 
     from pyspark.sql import Window
 
-    shutil.rmtree(out_dir, ignore_errors=True)
     changes = (
         _events_stream(spark, sf_dir)
         .select(
@@ -716,43 +656,31 @@ def run_streaming_cdc_apply(
             F.col("value"),
         )
     )
-    base_path = f"{out_dir}/table"
+    w = Window.partitionBy("key").orderBy(
+        F.col("version").desc(), F.col("event_id").desc()
+    )
 
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        import os
-
-        spark_l = batch_df.sparkSession
-        if os.path.isdir(base_path):
-            current = spark_l.read.parquet(base_path)
-            merged = current.unionByName(batch_df)
-        else:
-            merged = batch_df
-        w = Window.partitionBy("key").orderBy(
-            F.col("version").desc(), F.col("event_id").desc()
-        )
-        latest = (
+    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
+        target = f"{out_dir}/batch_id={batch_id}"
+        older = [d for d in glob.glob(f"{out_dir}/batch_id=*") if d != target]
+        merged = batch_df
+        if older:
+            merged = batch_df.sparkSession.read.parquet(*older).unionByName(
+                batch_df
+            )
+        (
             merged.withColumn("__rn", F.row_number().over(w))
             .filter(F.col("__rn") == 1)
             .drop("__rn")
+            .write.mode("overwrite")
+            .parquet(target)
         )
-        # write-then-swap: materialize to a staging dir, then replace
-        # the base atomically enough for a local demo (a lakehouse
-        # MERGE gives the real transactional swap)
-        staging = f"{out_dir}/staging_{batch_id}"
-        latest.write.mode("overwrite").parquet(staging)
-        shutil.rmtree(base_path, ignore_errors=True)
-        os.rename(staging, base_path)
+        # write-then-swap, atomically enough for a local demo (a
+        # lakehouse MERGE gives the real transactional swap)
+        for d in older:
+            shutil.rmtree(d)
 
-    q = (
-        changes.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", f"{out_dir}/ckpt")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.read.parquet(base_path)
+    return _drive(changes, out_dir, "append", merge_batch)
 
 
 def streaming_vwap_agg(stream: DataFrame, duration: str = "1 hour") -> DataFrame:
@@ -804,8 +732,10 @@ def run_streaming_vwap(
     """Drive :func:`streaming_vwap_agg` to completion over the static
     events parquet; the converged complete-mode output must equal the
     batch VWAP rollup exactly (integer micro-prices on both paths)."""
+    from trading212_etl_spark.registry._core import _scratch
+
     agg = streaming_vwap_agg(_events_stream(spark, events_dir), duration)
-    return _run_to_memory(spark, agg, "stream_vwap_out", "complete")
+    return _drive(agg, _scratch(events_dir, "stream_vwap"), "complete")
 
 
 def streaming_presence_bitmap(stream: DataFrame) -> DataFrame:
@@ -848,8 +778,10 @@ def run_streaming_presence_bitmap(
     """Drive :func:`streaming_presence_bitmap` to completion over the
     static events parquet; converged complete-mode output must equal
     the batch bitmap exactly."""
+    from trading212_etl_spark.registry._core import _scratch
+
     agg = streaming_presence_bitmap(_events_stream(spark, events_dir))
-    return _run_to_memory(spark, agg, "stream_presence_out", "complete")
+    return _drive(agg, _scratch(events_dir, "stream_presence"), "complete")
 
 
 def streaming_error_sli_agg(stream: DataFrame, duration: str = "1 hour") -> DataFrame:
@@ -885,5 +817,7 @@ def run_streaming_error_sli(
     """Drive :func:`streaming_error_sli_agg` to completion over the
     static events parquet; converged output must equal the batch SLI
     bit-for-bit."""
+    from trading212_etl_spark.registry._core import _scratch
+
     agg = streaming_error_sli_agg(_events_stream(spark, events_dir), duration)
-    return _run_to_memory(spark, agg, "stream_sli_out", "complete")
+    return _drive(agg, _scratch(events_dir, "stream_sli"), "complete")
