@@ -1,15 +1,32 @@
 """The engine's one sizing policy (session.shuffle_partitions_for):
 a pure function of (cores, input bytes), applied both by get_session
-and by every registry call."""
+and by every registry call; the core count it starts from; and the
+generated-class cache that lets a long-lived session repeat a round
+without compiling again."""
 
 from __future__ import annotations
+
+import os
+
+import pytest
 
 from trading212_etl_spark.registry import QUERIES
 from trading212_etl_spark.session import (
     SHUFFLE_CAP,
     SHUFFLE_TARGET_BYTES,
+    host_cores,
     input_bytes,
     shuffle_partitions_for,
+)
+
+# perfbench's llm_curate workload: one round of these is larger than
+# Spark's default 100-class codegen cache
+LLM_CURATE = (
+    "pipeline_curate_corpus",
+    "dedup_exact",
+    "similarity_topk_lsh",
+    "text_quality_score",
+    "multimodal_image_meta",
 )
 
 
@@ -50,3 +67,42 @@ def test_registry_call_keeps_policy_width(spark, sf_dir):
     assert int(spark.conf.get("spark.sql.shuffle.partitions")) == want
     QUERIES["dedup_exact"](spark, sf_dir).count()
     assert int(spark.conf.get("spark.sql.shuffle.partitions")) == want
+
+
+def test_host_cores_rejects_bad_values(monkeypatch):
+    """SPARK_GRAFT_CPUS sizes local[n] and the shuffle floor: anything
+    but an integer >= 1 raises, naming the variable; unset or empty
+    falls back to the CPUs this process may run on."""
+    for bad in ("0", "-2", "abc", "2.5"):
+        monkeypatch.setenv("SPARK_GRAFT_CPUS", bad)
+        with pytest.raises(ValueError, match="SPARK_GRAFT_CPUS"):
+            host_cores()
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert host_cores() == 3
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "")
+    assert host_cores() == len(os.sched_getaffinity(0))
+    monkeypatch.delenv("SPARK_GRAFT_CPUS")
+    assert host_cores() == len(os.sched_getaffinity(0))
+
+
+def _compiled_classes(spark) -> int:
+    """Janino compiles so far in this JVM: every generated class the
+    codegen cache did not hold."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def test_repeated_round_compiles_nothing(spark, sf_dir):
+    """A second llm_curate round in the same session finds every
+    generated class in the cache. With Spark's default 100 entries the
+    round's working set does not fit, the LRU evicts classes before
+    they come round again, and the second round recompiles them."""
+
+    def one_round():
+        for name in LLM_CURATE:
+            QUERIES[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+
+    one_round()
+    before = _compiled_classes(spark)
+    one_round()
+    assert _compiled_classes(spark) - before == 0

@@ -18,7 +18,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from ..partitioning import bounded_bucket, serial_pins
-from ..session import input_bytes, shuffle_partitions_for
+from ..session import input_bytes, positive_int_env, shuffle_partitions_for
 from ..sources import load_table
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -162,15 +162,7 @@ def pairs_top_k() -> int | None:
     raw = os.environ.get("SPARK_GRAFT_PAIRS_TOP_K")
     if not raw:
         return None
-    try:
-        k = int(raw)
-    except ValueError:
-        k = 0
-    if k < 1:
-        raise ValueError(
-            f"SPARK_GRAFT_PAIRS_TOP_K must be an integer >= 1, got {raw!r}"
-        )
-    return k
+    return positive_int_env("SPARK_GRAFT_PAIRS_TOP_K", raw)
 
 
 

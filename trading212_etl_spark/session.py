@@ -19,6 +19,21 @@ half the host's RAM, and ``spark.sql.shuffle.partitions`` from
 :func:`shuffle_partitions_for` — the single rule that both this builder
 and the registry wrapper (``registry.pin_oracle_confs``) apply, so a
 registry call never changes a session's shuffle width behind its back.
+
+The session also keeps :data:`CODEGEN_CACHE_ENTRIES` generated classes
+(``spark.sql.codegen.cache.maxEntries``) instead of Spark's 100. The
+engine runs the same plans again and again in one session (perfbench
+rounds, the ``bench.py`` loop, the CLI, notebooks), and the cache is
+least-recently-used: when one round needs more classes than it holds,
+every class is evicted before it comes round again, and Janino
+compiles it anew. Measured on 4 cores, a first round compiles 121
+classes for perfbench ``llm_curate``, 240 for ``analytics_interactive``,
+41 for ``etl_parquet`` and 1925 for one ``bench.py`` HEADLINE pass. At
+100 entries every later perfbench round recompiles 53, 213 and 0 of
+them, and at 1000 a later HEADLINE pass still recompiles 1798. The
+conf is static: a session the caller built itself (a caller of
+``__spark_entry__.py`` brings its own) keeps its own cache size, which
+changes its timings but never its results.
 """
 
 from __future__ import annotations
@@ -36,6 +51,17 @@ from pyspark.sql import SparkSession
 # partitions but cannot SPLIT non-skewed oversize ones).
 SHUFFLE_TARGET_BYTES = 8 << 20
 SHUFFLE_CAP = 4096
+
+# Generated classes the session keeps (spark.sql.codegen.cache.maxEntries;
+# Spark's default is 100). The cache is least-recently-used, so it must
+# hold a whole round of the plans a session repeats. Working sets on
+# 4 cores, classes compiled in a first round (recompiled in every later
+# round at 100): perfbench llm_curate 121 (53), analytics_interactive
+# 240 (213), etl_parquet 41 (0), and one bench.py HEADLINE pass 1925
+# (1798 at 1000). At 2048 a repeated round recompiles only the classes
+# whose generated source differs from run to run: 16-35 per HEADLINE
+# pass, as many as with no bound at all.
+CODEGEN_CACHE_ENTRIES = 2048
 
 
 def shuffle_partitions_for(cores: int, input_bytes: int = 0) -> int:
@@ -75,13 +101,28 @@ def input_bytes(path: str) -> int:
     return _INPUT_BYTES[path]
 
 
+def positive_int_env(name: str, raw: str) -> int:
+    """``raw``, the value of the variable ``name``, as an integer ≥ 1.
+    Anything else raises a ``ValueError`` that names the variable."""
+    try:
+        value = int(raw)
+    except ValueError:
+        value = 0
+    if value < 1:
+        raise ValueError(f"{name} must be an integer >= 1, got {raw!r}")
+    return value
+
+
 def host_cores() -> int:
     """CPUs for ``local[n]``: ``$SPARK_GRAFT_CPUS`` if set, else the
     CPUs this process may be scheduled on (``sched_getaffinity``
     honours taskset and cgroup cpusets, which ``os.cpu_count`` does
-    not)."""
-    env = os.environ.get("SPARK_GRAFT_CPUS")
-    return int(env) if env else len(os.sched_getaffinity(0))
+    not). A set value must be an integer ≥ 1: 0 or a negative count
+    would reach ``local[n]`` and the shuffle-partition floor."""
+    raw = os.environ.get("SPARK_GRAFT_CPUS")
+    if not raw:
+        return len(os.sched_getaffinity(0))
+    return positive_int_env("SPARK_GRAFT_CPUS", raw)
 
 
 def driver_memory() -> str:
@@ -152,6 +193,8 @@ def get_session(
         .config("spark.ui.retainedJobs", "100")
         .config("spark.ui.retainedStages", "200")
         .config("spark.ui.retainedTasks", "10000")
+        # -- generated-class cache -----------------------------------
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.driver.memory", driver_memory())
     )
     for k, v in (extra_conf or {}).items():
