@@ -3,8 +3,8 @@ from __future__ import annotations
 import os
 
 import pytest
+from pyspark.sql import SparkSession
 
-from trading212_etl_spark.partitioning import release_pins
 from trading212_etl_spark.session import get_session
 
 SF_SMOKE = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
@@ -19,9 +19,11 @@ def spark():
 @pytest.fixture(autouse=True)
 def _release_test_pins():
     """A registry build frees only the pins earlier registry builds
-    took, so the pins a test takes itself die with the test."""
+    took, so whatever a test caches itself is dropped after it."""
     yield
-    release_pins()
+    active = SparkSession.getActiveSession()
+    if active is not None:
+        active.catalog.clearCache()
 
 
 @pytest.fixture(scope="session")

@@ -6,8 +6,20 @@ empty input fails the whole job."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F  # noqa: F401
+import numpy as np
+import pytest
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from trading212_etl_spark.operators.dedup import minhash_lsh_pairs, simhash
+from trading212_etl_spark.operators.multimodal import (
+    _avi_encode,
+    _avi_parse,
+    _bmp_decode,
+    _bmp_encode,
+)
+from trading212_etl_spark.operators.sampling import hash_split
+from trading212_etl_spark.partitioning import ordered_prefix
 
 
 def _empty_events(spark):
@@ -206,3 +218,62 @@ def test_pairs_top_k_rejects_bad_values(spark, sf_dir, monkeypatch):
         monkeypatch.setenv("SPARK_GRAFT_PAIRS_TOP_K", bad)
         with pytest.raises(ValueError, match="SPARK_GRAFT_PAIRS_TOP_K"):
             registry.QUERIES["dedup_jaccard_pairs"](spark, sf_dir)
+
+
+def _one_doc(spark):
+    return spark.createDataFrame([(1, "alpha beta gamma delta")], "doc_id long, text string")
+
+
+def _bmp_with_bpp(bpp: int) -> bytes:
+    payload = bytearray(_bmp_encode(np.zeros((2, 3), dtype=np.uint8)))
+    payload[28:30] = bpp.to_bytes(2, "little")
+    return bytes(payload)
+
+
+def _avi_with_width(width: int) -> bytes:
+    payload = bytearray(_avi_encode([np.zeros((2, 3), dtype=np.uint8)] * 2))
+    avih = payload.index(b"avih") + 8
+    payload[avih + 32 : avih + 36] = width.to_bytes(4, "little")
+    return bytes(payload)
+
+
+# (call, message) per input check; each raises before any Spark job
+_INPUT_CHECKS = {
+    "ordered_prefix_rn_name": (
+        lambda s: ordered_prefix(s.range(10), [F.col("id")], rn_name="__pid"),
+        "shadows",
+    ),
+    "ordered_prefix_clash": (
+        lambda s: ordered_prefix(
+            s.range(10).withColumn("total_n", F.lit(0)), [F.col("id")]
+        ),
+        "collide",
+    ),
+    "ordered_prefix_parts": (
+        lambda s: ordered_prefix(s.range(10), [F.col("id")], num_parts=1_000_001),
+        "1,000,000 range partitions",
+    ),
+    "hash_split_weights": (
+        lambda s: hash_split(s.range(4), "id", {"a": 0.5, "b": 0.4}), "sum to 1"
+    ),
+    "minhash_hash_fn": (
+        lambda s: minhash_lsh_pairs(_one_doc(s), hash_fn="sha1"), "hash_fn"
+    ),
+    "simhash_hash_fn": (lambda s: simhash(_one_doc(s), hash_fn="sha1"), "hash_fn"),
+    "simhash_n_bits": (lambda s: simhash(_one_doc(s), n_bits=30), "4-lane"),
+    "bmp_magic": (lambda s: _bmp_decode(b"PK" + bytes(60)), "not a BMP"),
+    "bmp_depth": (lambda s: _bmp_decode(_bmp_with_bpp(8)), "24-bit"),
+    "avi_magic": (lambda s: _avi_parse(b"RIFX" + bytes(4) + b"AVI "), "not an AVI"),
+    "avi_frame_size": (lambda s: _avi_parse(_avi_with_width(7)), "frame chunk"),
+}
+
+
+@pytest.mark.parametrize("check", sorted(_INPUT_CHECKS))
+def test_input_checks_raise_value_error(spark, check):
+    """Input checks raise ValueError, so they still run under
+    ``python -O`` (which strips asserts): the ordered_prefix partition
+    cap is all that stops silently wrong ranks, and the codec checks
+    read bytes that come from outside the program."""
+    call, message = _INPUT_CHECKS[check]
+    with pytest.raises(ValueError, match=message):
+        call(spark)

@@ -409,159 +409,6 @@ def test_streaming_dedup_horizon_semantics(spark, tmp_path):
     assert out.count((2, "b-resend")) == 1, out
 
 
-def test_streaming_user_stats_ttl_expires_and_restarts(spark, tmp_path):
-    """Hostile probe of the stateful user-stats TTL (VERDICT r9
-    item 7): once the watermark passes a user's last event + TTL, the
-    timeout callback must emit that user's FINAL row and REMOVE the
-    state — and a later event for the same user must start a FRESH
-    count (1, not cumulative), the observable proof the state store
-    is bounded by the TTL rather than holding every user forever."""
-    import datetime as dt
-
-    from pyspark.sql import types as T
-
-    from trading212_etl_spark.streaming.windows import streaming_user_stats_ttl
-
-    schema = T.StructType(
-        [
-            T.StructField("user_id", T.LongType()),
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("value", T.DoubleType()),
-        ]
-    )
-    src = str(tmp_path / "src")
-    base = dt.datetime(2024, 6, 1, 10, 0)
-
-    def wb(rows):
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-
-    # batch 1: user 7 twice (last 10:30, TTL 1h -> expires at 11:30),
-    # user 8 advances event time
-    wb(
-        [
-            (7, base, 1.0),
-            (7, base.replace(minute=30), 3.0),
-            (8, base.replace(hour=12), 1.0),
-        ]
-    )
-    stats = streaming_user_stats_ttl(
-        spark.readStream.schema(schema)
-        .format("parquet")
-        .load(src)
-        .withWatermark("ts", "2 hours"),
-        ttl_minutes=60,
-    )
-    q = (
-        stats.writeStream.outputMode("update")
-        .format("memory")
-        .queryName("user_stats_ttl")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        # watermark -> 12:00 >= 11:30: user 7 times out on this batch
-        wb([(8, base.replace(hour=14), 1.0)])
-        q.processAllAvailable()
-        wb([(8, base.replace(hour=16), 1.0)])  # safety advance
-        q.processAllAvailable()
-        # user 7 re-appears (ts above watermark): FRESH state
-        wb([(7, base.replace(hour=15), 9.0)])
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    u7 = sorted(
-        (r.n_events, r.max_value, r.final)
-        for r in spark.table("user_stats_ttl")
-        .filter("user_id = 7")
-        .collect()
-    )
-    # running row, then the timeout's FINAL row, then the restart at 1
-    assert (2, 3.0, False) in u7, u7
-    assert (2, 3.0, True) in u7, u7
-    assert (1, 9.0, False) in u7, u7
-
-
-def test_streaming_user_stats_ttl_non_utc_session_tz(spark, tmp_path):
-    """ADVICE r10 (medium): under a non-UTC session time zone, Spark
-    hands the Pandas state function tz-NAIVE timestamps rendered in
-    the session zone; ``Timestamp.timestamp()`` treats naive values
-    as UTC, so computing the timeout clock from it offsets expiry by
-    the tz delta (under America/New_York the armed timeout lands
-    hours BEFORE the watermark and the query throws). The fix reads
-    JVM-computed ``unix_millis(ts)`` instead — this probe re-runs the
-    expiry scenario under America/New_York and must see the same
-    expire-then-restart behavior as the UTC test."""
-    import datetime as dt
-
-    from pyspark.sql import types as T
-
-    from trading212_etl_spark.streaming.windows import streaming_user_stats_ttl
-
-    schema = T.StructType(
-        [
-            T.StructField("user_id", T.LongType()),
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("value", T.DoubleType()),
-        ]
-    )
-    src = str(tmp_path / "src")
-    base = dt.datetime(2024, 6, 1, 10, 0)
-
-    def wb(rows):
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-
-    prev_tz = spark.conf.get("spark.sql.session.timeZone")
-    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
-    try:
-        wb(
-            [
-                (7, base, 1.0),
-                (7, base.replace(minute=30), 3.0),
-                (8, base.replace(hour=12), 1.0),
-            ]
-        )
-        stats = streaming_user_stats_ttl(
-            spark.readStream.schema(schema)
-            .format("parquet")
-            .load(src)
-            .withWatermark("ts", "2 hours"),
-            ttl_minutes=60,
-        )
-        q = (
-            stats.writeStream.outputMode("update")
-            .format("memory")
-            .queryName("user_stats_ttl_nyc")
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            wb([(8, base.replace(hour=14), 1.0)])
-            q.processAllAvailable()
-            wb([(8, base.replace(hour=16), 1.0)])
-            q.processAllAvailable()
-            wb([(7, base.replace(hour=15), 9.0)])
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        u7 = sorted(
-            (r.n_events, r.max_value, r.final)
-            for r in spark.table("user_stats_ttl_nyc")
-            .filter("user_id = 7")
-            .collect()
-        )
-        assert (2, 3.0, False) in u7, u7
-        assert (2, 3.0, True) in u7, u7
-        assert (1, 9.0, False) in u7, u7
-    finally:
-        spark.conf.set("spark.sql.session.timeZone", prev_tz)
-
-
 def _file_batches_stream(spark, src, schema, batches):
     """Write each row list in ``batches`` as one single-file parquet
     directory under ``src`` and return a file-source stream that reads

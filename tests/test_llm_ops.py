@@ -375,19 +375,6 @@ def test_domain_mixture_plan_realizes_weights(spark, sf_dir):
         assert plan[d]["tokens_take"] <= plan[d]["tokens_avail"]
 
 
-def test_jaccard_max_df_is_lower_bound(spark, sf_dir):
-    """Capped stop-shingle runs must emit a subset of the exact pairs
-    (J under-counted, never over-counted), and a generous cap must
-    change nothing."""
-    docs = load_table(spark, sf_dir, "documents")
-    exact = jaccard_pairs(docs, 0.5).select("doc_a", "doc_b")
-    capped = jaccard_pairs(docs, 0.5, max_df=10).select("doc_a", "doc_b")
-    assert capped.exceptAll(exact).count() == 0
-    huge_cap = jaccard_pairs(docs, 0.5, max_df=10**9).select("doc_a", "doc_b")
-    assert huge_cap.exceptAll(exact).count() == 0
-    assert exact.exceptAll(huge_cap).count() == 0
-
-
 def test_hll_rollup_matches_exact_within_bound(spark, sf_dir):
     """The hourly-sketch union must estimate the exact daily distinct
     user count within HLL error bounds (lgK=12 → ~1.6% rsd; assert a
@@ -1172,46 +1159,6 @@ def test_write_ivf_cells_keeps_null_cell_rows(spark, tmp_path):
     ).count() == 0
 
 
-def test_jaccard_pairs_stop_shingle_cap_drops_boilerplate_only(spark):
-    """The ``max_df`` stop-shingle lever (VERDICT r9 item 5): shingles
-    shared by more than max_df documents are dropped BEFORE the
-    self-join (a df-k shingle contributes k² join rows — the hot-key
-    blowup), making J a LOWER BOUND: pairs whose evidence is only
-    boilerplate vanish, pairs with rare-shingle evidence survive with
-    understated J. Default None keeps exact oracle semantics."""
-    from trading212_etl_spark.operators.dedup import (
-        containment_pairs,
-        jaccard_pairs,
-    )
-
-    twin = "alpha beta gamma delta epsilon zeta common tail one two"
-    rows = [(0, twin), (1, twin)] + [
-        (
-            i,
-            f"q{chr(97 + i)}a r{chr(97 + i)}b s{chr(97 + i)}c "
-            f"t{chr(97 + i)}d u{chr(97 + i)}e v{chr(97 + i)}f "
-            "common tail one two",
-        )
-        for i in range(2, 12)
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    exact = jaccard_pairs(docs, threshold=0.1).collect()
-    # every doc shares the boilerplate tail -> all C(12,2) pairs meet
-    assert len(exact) == 66
-    exact_j = {(r.doc_a, r.doc_b): r.jaccard for r in exact}
-    capped = jaccard_pairs(docs, threshold=0.1, max_df=2).collect()
-    # boilerplate shingles (df=12) dropped: only the true twin pair
-    # keeps rare-shingle evidence; its J is a lower bound of the truth
-    assert {(r.doc_a, r.doc_b) for r in capped} == {(0, 1)}
-    assert capped[0].jaccard <= exact_j[(0, 1)] == 1.0
-    # twin docs: 8 shingles, 2 boilerplate-only -> capped J = 6/10
-    assert abs(capped[0].jaccard - 0.6) < 1e-9
-    # containment shares the lever through the same skeleton
-    c_capped = containment_pairs(docs, threshold=0.5, max_df=2).collect()
-    assert {(r.doc_a, r.doc_b) for r in c_capped} == {(0, 1)}
-    assert c_capped[0].max_containment <= 1.0
-
-
 def test_pairs_top_k_bound_keeps_clique_connectivity(spark):
     """VERDICT r10 item 5: the exact-pair family's opt-in output bound.
     ``top_k_per_doc`` must (a) truncate a clique's quadratic listing
@@ -1461,46 +1408,6 @@ def test_incremental_minhash_sink_estimator(spark, sf_dir, tmp_path):
     ]
     assert errs and max(errs) <= 0.45, (max(errs), len(errs))
     assert sum(errs) / len(errs) <= 0.15, sum(errs) / len(errs)
-
-
-def test_pairs_both_levers_warns(spark):
-    """ADVICE r12: setting ``max_df`` alongside ``top_k_per_doc``
-    silently dropped the max_df lever on the bounded route — both env
-    levers can legitimately be exported together, so the drop must be
-    visible at runtime, not only in the docstring."""
-    import pytest as _pt
-
-    from trading212_etl_spark.operators.dedup import jaccard_pairs
-
-    docs = spark.createDataFrame(
-        [(1, "alpha beta gamma delta"), (2, "alpha beta gamma delta"),
-         (3, "something else entirely here")],
-        "doc_id long, text string",
-    )
-    with _pt.warns(UserWarning, match="max_df=5 is ignored"):
-        jaccard_pairs(docs, 0.5, top_k_per_doc=2, max_df=5).collect()
-
-
-def test_pairs_hubs_without_bound_warns(spark):
-    """ADVICE r13: ``hubs`` only shapes the bounded hub-subgraph
-    candidate route; passing it without ``top_k_per_doc`` silently did
-    nothing. Must warn loudly, mirroring the max_df-with-top_k case."""
-    import pytest as _pt
-
-    from trading212_etl_spark.operators.dedup import (
-        containment_pairs,
-        jaccard_pairs,
-    )
-
-    docs = spark.createDataFrame(
-        [(1, "alpha beta gamma delta"), (2, "alpha beta gamma delta"),
-         (3, "something else entirely here")],
-        "doc_id long, text string",
-    )
-    with _pt.warns(UserWarning, match="hubs=9 is ignored"):
-        jaccard_pairs(docs, 0.5, hubs=9).collect()
-    with _pt.warns(UserWarning, match="hubs=9 is ignored"):
-        containment_pairs(docs, 0.5, hubs=9).collect()
 
 
 def test_decontamination_sink_expiry(tmp_path):

@@ -1,8 +1,9 @@
-"""Pin lifecycle: the lazy persists taken by freeze_partitions must
-be releasable — a long-lived session composing many operators must not
-accumulate CacheManager entries (VERDICT r5 item 5: every cached entry
-taxes every later query's canonicalized-plan lookup, ~1.3-1.5x at ~100
-pins) — and a release must never free a pin its owner still uses."""
+"""Pin lifecycle: the lazy persists freeze_partitions takes inside a
+registry build must be released by the next build — a long-lived
+session must not accumulate CacheManager entries (VERDICT r5 item 5:
+every cached entry taxes every later query's canonicalized-plan
+lookup, ~1.3-1.5x at ~100 pins) — and a release must never free a pin
+its owner still uses."""
 
 from __future__ import annotations
 
@@ -10,14 +11,11 @@ from pyspark.sql import functions as F
 
 from trading212_etl_spark import partitioning, registry
 from trading212_etl_spark.partitioning import (
-    _LIVE_PINS,
     freeze_partitions,
     freeze_when_heavy,
     is_heavy,
     materialize,
     ordered_prefix,
-    pinned_scope,
-    release_pins,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -29,40 +27,52 @@ def _cache_empty(spark) -> bool:
     )
 
 
-def test_registry_invocation_releases_prior_pins(spark):
+def _record_pins(monkeypatch) -> list:
+    """Every frame freeze_partitions pins from here on, in order —
+    handles for reading each pin's CacheManager state."""
+    taken = []
+    real = partitioning.freeze_partitions
+
+    def freeze(df):
+        taken.append(real(df))
+        return taken[-1]
+
+    monkeypatch.setattr(partitioning, "freeze_partitions", freeze)
+    return taken
+
+
+def test_registry_invocation_releases_prior_pins(spark, monkeypatch):
     """Invoking any registry entry releases the pins of the previous
-    one: after a build->action->build cycle the CacheManager holds
-    only the in-flight query's pins, and an explicit release_pins()
-    empties it entirely."""
+    one: after a build->action->build cycle the CacheManager is empty
+    again."""
     spark.catalog.clearCache()
-    release_pins()
+    taken = _record_pins(monkeypatch)
     # orders_rfm_segments pins via ordered_prefix -> freeze_partitions
     df = registry.QUERIES["orders_rfm_segments"](spark, SF)
     df.write.format("noop").mode("overwrite").save()
-    assert len(_LIVE_PINS) > 0, "entry under test no longer pins"
+    assert taken, "entry under test no longer pins"
+    assert all(p.storageLevel.useMemory for p in taken)
     assert not _cache_empty(spark)
     # building the NEXT entry releases the previous entry's pins;
-    # flagship_pipeline takes none of its own
+    # projection_reorder takes none of its own
     registry.QUERIES["projection_reorder"](spark, SF)
     assert _cache_empty(spark)
-    assert len(_LIVE_PINS) == 0
 
 
-def test_pinned_scope_releases_only_inner_pins(spark):
+def test_registry_releases_corrupt_record_pin(spark):
+    """The corrupt-record audit entries pin their parse through
+    freeze_partitions, so the next registry build frees it like any
+    other entry's pin."""
     spark.catalog.clearCache()
-    release_pins()
-    outer = freeze_partitions(spark.range(10).repartition(2))
-    outer.count()
-    with pinned_scope():
-        inner = freeze_partitions(spark.range(5).repartition(2))
-        inner.count()
-        assert len(_LIVE_PINS) == 2
-    assert len(_LIVE_PINS) == 1 and _LIVE_PINS[0] is outer
-    assert release_pins(blocking=True) == 1
-    assert _cache_empty(spark)
+    for name in ("source_csv_malformed", "source_json_malformed"):
+        (row,) = registry.QUERIES[name](spark, SF).collect()
+        assert row["n_corrupt"] == 4, (name, row)
+        assert not _cache_empty(spark), name
+        registry.QUERIES["projection_reorder"](spark, SF)
+        assert _cache_empty(spark), name
 
 
-def test_registry_build_keeps_caller_pins(spark):
+def test_registry_build_keeps_caller_pins(spark, monkeypatch):
     """A registry build releases only the pins earlier registry builds
     took. A caller's own live ordered_prefix pin stays cached across
     it, so actioning the caller's frame again reads the same
@@ -70,23 +80,24 @@ def test_registry_build_keeps_caller_pins(spark):
     would let the offsets branch resample the range exchange and
     mis-join)."""
     spark.catalog.clearCache()
-    release_pins()
+    taken = _record_pins(monkeypatch)
     df = spark.range(3000).selectExpr("id", "(id * 7919) % 101 AS k")
     ranked = ordered_prefix(
         df, [F.col("k"), F.col("id")], rn_name="rn", sum_cols=["k"]
     )
     first = sorted(ranked.collect())
-    (mine,) = _LIVE_PINS
+    (mine,) = taken
     # a registry build that pins, then one whose build frees those
     registry.QUERIES["orders_rfm_segments"](spark, SF).write.format(
         "noop"
     ).mode("overwrite").save()
-    assert len(_LIVE_PINS) > 1
+    assert len(taken) > 1
+    assert all(p.storageLevel.useMemory for p in taken)
     registry.QUERIES["projection_reorder"](spark, SF)
-    assert len(_LIVE_PINS) == 1 and _LIVE_PINS[0] is mine
-    assert mine.storageLevel.useMemory, "caller's pin was unpersisted"
+    live = [p for p in taken if p.storageLevel.useMemory]
+    assert len(live) == 1 and live[0] is mine, "caller's pin was unpersisted"
     assert sorted(ranked.collect()) == first
-    assert release_pins(blocking=True) == 1
+    mine.unpersist(blocking=True)
     assert _cache_empty(spark)
 
 
@@ -97,14 +108,14 @@ def test_checkpoint_dir_makes_pins_reliable(spark, tmp_path):
     directory is restored afterwards."""
     sc = spark.sparkContext
     assert sc.getCheckpointDir() is None
-    release_pins()
+    spark.catalog.clearCache()
     sc.setCheckpointDir(str(tmp_path))
     try:
         agg = spark.range(64).selectExpr("id % 7 AS k").groupBy("k").count()
         for pin in (materialize, freeze_partitions):
             p = pin(agg)._jdf.queryExecution().optimizedPlan().toString()
             assert "Aggregate" not in p and "Range" not in p, (pin, p)
-        assert len(_LIVE_PINS) == 0
+        assert _cache_empty(spark)
         assert any(tmp_path.rglob("rdd-*"))
     finally:
         getattr(sc._jsc.sc(), "checkpointDir_$eq")(sc._jvm.scala.Option.empty())
@@ -118,18 +129,15 @@ def test_freeze_when_heavy_is_scale_adaptive(spark, monkeypatch):
     above it — forced here by lowering the threshold — it pins
     exactly like freeze_partitions."""
     spark.catalog.clearCache()
-    release_pins()
     tiny = spark.range(10).repartition(2)
-    try:
-        assert not is_heavy(tiny)
-        out = freeze_when_heavy(tiny)
-        assert not out.storageLevel.useMemory and len(_LIVE_PINS) == 0
-        monkeypatch.setattr(partitioning, "_FREEZE_AUTO_BYTES", 0)
-        assert is_heavy(tiny)
-        pinned = freeze_when_heavy(tiny)
-        assert pinned.storageLevel.useMemory and len(_LIVE_PINS) == 1
-        pinned.count()
-        assert not _cache_empty(spark)
-    finally:
-        release_pins(blocking=True)
-        assert _cache_empty(spark)
+    assert not is_heavy(tiny)
+    out = freeze_when_heavy(tiny)
+    assert not out.storageLevel.useMemory and _cache_empty(spark)
+    monkeypatch.setattr(partitioning, "_FREEZE_AUTO_BYTES", 0)
+    assert is_heavy(tiny)
+    pinned = freeze_when_heavy(tiny)
+    assert pinned.storageLevel.useMemory
+    pinned.count()
+    assert not _cache_empty(spark)
+    pinned.unpersist(blocking=True)
+    assert _cache_empty(spark)

@@ -60,6 +60,13 @@ def word_shingles(toks: Column, n: int = 3) -> Column:
     )
 
 
+def _check_hash_fn(hash_fn: str) -> None:
+    """Reject a signature hash family other than the two the sketches
+    and their DuckDB twins are written for."""
+    if hash_fn not in ("xxhash64", "md5"):
+        raise ValueError(f"hash_fn must be 'xxhash64' or 'md5', got {hash_fn!r}")
+
+
 def _shingle_sets(
     docs: DataFrame, n: int, id_col: str, tokens_col: str | None = None
 ) -> DataFrame:
@@ -109,13 +116,7 @@ def _top_k_per_doc(pairs: DataFrame, k: int, order_col: str) -> DataFrame:
     )
 
 
-def _hub_candidate_pairs(
-    sh: DataFrame,
-    hubs: int,
-    num_hashes: int = 32,
-    bands: int = 16,
-    hash_fn: str = "xxhash64",
-) -> DataFrame:
+def _hub_candidate_pairs(sh: DataFrame, hubs: int) -> DataFrame:
     """Bounded near-dup CANDIDATE pairs (doc_a < doc_b) over a
     materialized ``(id, shingles)`` frame: MinHash/LSH banding with a
     per-bucket MULTI-HUB cap — the candidate generator behind the
@@ -161,8 +162,8 @@ def _hub_candidate_pairs(
     warning and MEASURED on hostile corpora in BENCH_SCALING.json
     (bounded_pair_recall).
     """
-    sig = _signature_frame(sh, num_hashes, hash_fn)
-    banded = _band_frame(sig, num_hashes, bands, hash_fn)
+    sig = _signature_frame(sh, 32, "xxhash64")
+    banded = _band_frame(sig, 32, 16, "xxhash64")
     from pyspark.sql import Window
 
     wb = Window.partitionBy("band_idx", "band_hash").orderBy("id")
@@ -210,7 +211,6 @@ def _candidate_common_counts(
     id_col: str,
     tokens_col: str | None,
     top_k: int,
-    hubs: int | None = None,
 ) -> DataFrame:
     """(doc_a, doc_b, size_a, size_b, n_common) — the same pair
     skeleton as :func:`_common_shingle_counts`, but enumerated over
@@ -221,11 +221,10 @@ def _candidate_common_counts(
     pair's value). Compute is O(candidates · shingles/doc); the full
     self-join's O(Σ df²) shingle-co-occurrence blowup never happens.
 
-    Hub count defaults to max(top_k + 1, 8): k+1 is the
-    clique-exactness floor (see :func:`_hub_candidate_pairs`); the
-    margin costs O(n·h·bands) candidate rows and buys recall on
-    mixed-similarity buckets. ``hubs`` overrides it — the recall/cost
-    dial measured in BENCH_SCALING.json (bounded_pair_recall)."""
+    Hub count is max(top_k + 1, 8): k+1 is the clique-exactness floor
+    (see :func:`_hub_candidate_pairs`); the margin costs O(n·h·bands)
+    candidate rows and buys recall on mixed-similarity buckets
+    (measured in BENCH_SCALING.json, bounded_pair_recall)."""
     import warnings
 
     # __hsh: hashed shingle sets for the verify payload — same lever
@@ -241,8 +240,7 @@ def _candidate_common_counts(
             "__hsh", F.transform("shingles", lambda s: F.xxhash64(s))
         )
     )
-    if hubs is None:
-        hubs = max(top_k + 1, 8)
+    hubs = max(top_k + 1, 8)
     warnings.warn(
         f"exact-pair top_k_per_doc={top_k} set: candidate generation is "
         f"BOUNDED to the LSH hub subgraph (hubs={hubs}/bucket) — kept "
@@ -286,9 +284,7 @@ def jaccard_pairs(
     n: int = 3,
     id_col: str = "doc_id",
     tokens_col: str | None = None,
-    max_df: int | None = None,
     top_k_per_doc: int | None = None,
-    hubs: int | None = None,
 ) -> DataFrame:
     """Exact n-gram Jaccard similar pairs (doc_a < doc_b, J ≥ threshold).
 
@@ -298,15 +294,6 @@ def jaccard_pairs(
     ever meet — no cross product. Stop-shingle skew (a shingle shared
     by millions of docs) is the scale hazard; LSH (minhash_lsh_pairs)
     is the production path, with this as its verifier.
-
-    ``max_df`` (opt-in) drops shingles appearing in more than that
-    many documents before the self-join — the direct cure for
-    stop-shingle skew: a shingle in k docs contributes k² join rows,
-    so one boilerplate shingle across 1M docs is a 10¹²-row straggler
-    key. Capped runs under-count |∩| for pairs sharing dropped
-    shingles, so J is a lower bound — pairs already ≥ threshold on
-    rare shingles still surface. Default None keeps exact (oracle)
-    semantics.
 
     ``top_k_per_doc`` (opt-in) bounds the result to each document's k
     strongest partners (see :func:`_top_k_per_doc`): the full listing
@@ -324,10 +311,8 @@ def jaccard_pairs(
     (identical signatures share every band bucket — the proof in
     tests/test_llm_ops.py; an equal-J<1 clique may miss band
     collisions) and approximate above the hub cap on
-    mixed-similarity buckets. ``max_df`` applies to the exact route
-    only (the hub route's candidate mass is already banding-bounded)
-    and is IGNORED — with a runtime warning — when both are set.
-    Default None keeps the complete pair set — the oracle path.
+    mixed-similarity buckets. Default None keeps the complete pair
+    set — the oracle path.
 
     Hash collisions: shingles are compared as xxhash64 longs, not
     strings — the self-join keys on them, and the ``top_k_per_doc``
@@ -342,21 +327,11 @@ def jaccard_pairs(
     corpus shows as an oracle mismatch, not as silent drift.
     """
     if top_k_per_doc is not None:
-        if max_df is not None:
-            import warnings
-
-            warnings.warn(
-                f"max_df={max_df} is ignored when top_k_per_doc bounds "
-                "candidate generation (the hub route is already "
-                "banding-bounded) — unset one lever to silence this",
-                stacklevel=2,
-            )
         common = _candidate_common_counts(
-            docs, n, id_col, tokens_col, top_k_per_doc, hubs=hubs
+            docs, n, id_col, tokens_col, top_k_per_doc
         )
     else:
-        _warn_hubs_without_bound(hubs)
-        common = _common_shingle_counts(docs, n, id_col, tokens_col, max_df)
+        common = _common_shingle_counts(docs, n, id_col, tokens_col)
     jac = F.col("n_common") / (F.col("size_a") + F.col("size_b") - F.col("n_common"))
     out = (
         common.withColumn("jaccard", F.round(jac, 4))
@@ -368,28 +343,11 @@ def jaccard_pairs(
     return out
 
 
-def _warn_hubs_without_bound(hubs: int | None) -> None:
-    """``hubs`` only shapes the bounded hub-subgraph candidate route;
-    the exact route enumerates every shingle co-occurrence and has no
-    hub cap to widen. Stay loud about the ignored lever, mirroring the
-    max_df-with-top_k warning (ADVICE r13)."""
-    if hubs is not None:
-        import warnings
-
-        warnings.warn(
-            f"hubs={hubs} is ignored without top_k_per_doc — only the "
-            "bounded candidate route consumes it; set top_k_per_doc or "
-            "unset hubs to silence this",
-            stacklevel=3,
-        )
-
-
 def _common_shingle_counts(
     docs: DataFrame,
     n: int,
     id_col: str,
     tokens_col: str | None = None,
-    max_df: int | None = None,
 ) -> DataFrame:
     """(doc_a, doc_b, size_a, size_b, n_common) for every pair of
     documents sharing at least one n-gram shingle — the shared
@@ -406,24 +364,6 @@ def _common_shingle_counts(
     exploded = explode_nonempty(sh, ["id", "set_size"], "shingles", "__s").select(
         "id", "set_size", F.xxhash64("__s").alias("shingle")
     )
-    if max_df is not None:
-        # df via a WINDOW over the exploded frame, not a separate
-        # aggregate + left_semi join: the aggregate subtree re-executes
-        # the whole tokenize/shingle pipeline a third time (the two
-        # self-join sides share one exchange via ReusedExchange, the
-        # aggregate's partial-agg exchange does not match it) —
-        # measured +9% instead of a win at sf0.5_bskew. The window's
-        # (shingle) exchange IS the join's partitioning, so the guard
-        # costs no extra pass (same lesson as minhash_lsh_pairs r5).
-        from pyspark.sql import Window
-
-        exploded = (
-            exploded.withColumn(
-                "__df", F.count(F.lit(1)).over(Window.partitionBy("shingle"))
-            )
-            .filter(F.col("__df") <= max_df)
-            .drop("__df")
-        )
     a, b = exploded.alias("a"), exploded.alias("b")
     return (
         a.join(b, "shingle")
@@ -444,9 +384,7 @@ def containment_pairs(
     n: int = 3,
     id_col: str = "doc_id",
     tokens_col: str | None = None,
-    max_df: int | None = None,
     top_k_per_doc: int | None = None,
-    hubs: int | None = None,
 ) -> DataFrame:
     """Near-containment pairs: C(X→Y) = |X∩Y| / |X| — the fraction of
     X's shingles that also appear in Y. Catches doc-inside-doc
@@ -456,29 +394,18 @@ def containment_pairs(
     J ≈ 0.01 but C = 1.0. The Broder resemblance/containment pairing;
     emits both directions plus max_containment for thresholding.
 
-    Same plan shape, shuffle profile, and ``max_df`` skew lever as
-    jaccard_pairs (shared _common_shingle_counts skeleton, including
+    Same plan shape and shuffle profile as jaccard_pairs (shared _common_shingle_counts skeleton, including
     the opt-in ``top_k_per_doc`` bound ranked on max_containment —
     which since r12 also routes candidate generation through the
     bounded LSH hub subgraph, see jaccard_pairs) — only the final
     ratio differs, so the 100 TB analysis carries over unchanged.
     """
     if top_k_per_doc is not None:
-        if max_df is not None:
-            import warnings
-
-            warnings.warn(
-                f"max_df={max_df} is ignored when top_k_per_doc bounds "
-                "candidate generation (the hub route is already "
-                "banding-bounded) — unset one lever to silence this",
-                stacklevel=2,
-            )
         common = _candidate_common_counts(
-            docs, n, id_col, tokens_col, top_k_per_doc, hubs=hubs
+            docs, n, id_col, tokens_col, top_k_per_doc
         )
     else:
-        _warn_hubs_without_bound(hubs)
-        common = _common_shingle_counts(docs, n, id_col, tokens_col, max_df)
+        common = _common_shingle_counts(docs, n, id_col, tokens_col)
     c_ab = F.round(F.col("n_common") / F.col("size_a"), 4)
     c_ba = F.round(F.col("n_common") / F.col("size_b"), 4)
     out = (
@@ -569,14 +496,13 @@ def minhash_lsh_pairs(
     bands: int = 16,
     shingle_n: int = 3,
     id_col: str = "doc_id",
-    verify: bool = True,
     tokens_col: str | None = None,
     max_bucket: int = 4096,
     audit: dict | None = None,
     hash_fn: str = "xxhash64",
 ) -> DataFrame:
     """Near-duplicate pairs via MinHash signatures + LSH banding,
-    optionally verified with exact Jaccard.
+    verified with exact Jaccard.
 
     Plan shape (the 100 TB path — no cross join, no O(n^2)):
       1. signature: linear scan, K mins per doc;
@@ -635,7 +561,7 @@ def minhash_lsh_pairs(
     for two 10^4-shingle documents. The md5 signatures and bands are
     exact strings, so candidate generation itself has no such class.
     """
-    assert hash_fn in ("xxhash64", "md5"), hash_fn
+    _check_hash_fn(hash_fn)
     # the shingle sets feed THREE consumers with different downstream
     # shuffle keys (the exploded signature scan + both verify-join
     # sides), so exchange reuse can't kick in — materialize once
@@ -718,8 +644,6 @@ def minhash_lsh_pairs(
         .select(F.col("__hub").alias("doc_a"), F.col("id").alias("doc_b"))
     )
     cand = small_pairs.unionByName(star_pairs).distinct()
-    if not verify:
-        return cand
     a = sh.select(F.col("id").alias("doc_a"), F.col("__hsh").alias("sh_a"))
     b = sh.select(F.col("id").alias("doc_b"), F.col("__hsh").alias("sh_b"))
     pairs = cand.join(a, "doc_a").join(b, "doc_b")
@@ -1224,7 +1148,7 @@ def write_signature_sink(
     prune to the probe's bands and keeps each partition's band_hash
     distribution uniform (band hashes are hashes), so the join side
     scales by adding band files, not by widening tasks."""
-    assert hash_fn in ("xxhash64", "md5"), hash_fn
+    _check_hash_fn(hash_fn)
     sh = freeze_partitions(_shingle_sets(docs, shingle_n, id_col))
     sig = _signature_frame(sh, num_hashes, hash_fn)
     # no materialize here: the parquet write IS the materialization,
@@ -1261,7 +1185,7 @@ def absorb_batch_into_sink(
     Each absorb adds one file set per write, so a long-lived sink
     accumulates small files; :func:`compact_signature_sink` merges
     them without changing the data."""
-    assert hash_fn in ("xxhash64", "md5"), hash_fn
+    _check_hash_fn(hash_fn)
     sh = freeze_partitions(_shingle_sets(new_docs, shingle_n, id_col))
     sig = materialize(_signature_frame(sh, num_hashes, hash_fn))
     sig.write.mode("append").parquet(f"{path}/signatures")
@@ -1423,7 +1347,7 @@ def incremental_minhash_pairs(
     signatures, not shingles — Var(est) = J(1-J)/K, tight enough at
     K=32 to rank (consumers needing exact J re-read only the matched
     old docs, a candidate-sized seek, not a corpus scan)."""
-    assert hash_fn in ("xxhash64", "md5"), hash_fn
+    _check_hash_fn(hash_fn)
     spark = new_docs.sparkSession
     sh = freeze_partitions(_shingle_sets(new_docs, shingle_n, id_col))
     nsig = materialize(_signature_frame(sh, num_hashes, hash_fn))
@@ -1566,8 +1490,9 @@ def simhash(
     DuckDB (``strpos`` nibble lookup), so the sketch and everything
     downstream of it become oracle-expressible; the default stays the
     faster engine-native hash."""
-    assert n_bits % 4 == 0, "n_bits must pack into 4-lane longs"
-    assert hash_fn in ("xxhash64", "md5"), hash_fn
+    if n_bits % 4:
+        raise ValueError(f"n_bits must pack into 4-lane longs, got {n_bits}")
+    _check_hash_fn(hash_fn)
     n_groups = n_bits // 4
     base = fan_out(docs).select(
         F.col(id_col).alias("id"), F.explode(tokens("text")).alias("tok")

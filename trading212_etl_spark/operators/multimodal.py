@@ -313,11 +313,13 @@ def _bmp_codec():
 
         import numpy as np
 
-        assert payload[:2] == b"BM", "not a BMP payload"
+        if payload[:2] != b"BM":
+            raise ValueError("not a BMP payload")
         off = struct.unpack_from("<I", payload, 10)[0]
         w, h = struct.unpack_from("<ii", payload, 18)
         bpp = struct.unpack_from("<H", payload, 28)[0]
-        assert bpp == 24, f"expected 24-bit BMP, got {bpp}"
+        if bpp != 24:
+            raise ValueError(f"expected 24-bit BMP, got {bpp}")
         row = ((w * 3 + 3) // 4) * 4
         px = np.frombuffer(payload, dtype=np.uint8, count=row * h, offset=off)
         px = px.reshape(h, row)[::-1]  # back to top-down
@@ -452,7 +454,8 @@ def _avi_codec():
                 pos += 8 + n + (n % 2)
 
         (fcc, kind, start, length), = list(walk(payload, 0, 12))
-        assert fcc == b"RIFF" and kind == b"AVI ", "not an AVI payload"
+        if fcc != b"RIFF" or kind != b"AVI ":
+            raise ValueError("not an AVI payload")
         meta = {}
         frames = []
         def visit(pos, end):
@@ -471,7 +474,8 @@ def _avi_codec():
         row = ((w * 3 + 3) // 4) * 4
         out = []
         for idx, (s, n) in enumerate(frames):
-            assert n == row * h, "frame chunk size mismatch"
+            if n != row * h:
+                raise ValueError("frame chunk size mismatch")
             px = np.frombuffer(payload, dtype=np.uint8, count=n, offset=s)
             px = px.reshape(h, row)[::-1]
             out.append((idx, px[:, : w * 3].reshape(h, w, 3)[:, :, 0]))

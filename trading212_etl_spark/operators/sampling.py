@@ -52,7 +52,8 @@ def hash_split(
     ``splits`` maps name -> weight; weights must sum to 1.
     """
     total = sum(splits.values())
-    assert abs(total - 1.0) < 1e-9, "split weights must sum to 1"
+    if not abs(total - 1.0) < 1e-9:  # also rejects NaN weights
+        raise ValueError(f"split weights must sum to 1, got {total}")
     frac = _hash_frac(F.col(key_col))
     expr: Column | None = None
     cum = 0.0

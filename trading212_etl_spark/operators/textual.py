@@ -181,7 +181,7 @@ def lang_id(docs: DataFrame) -> DataFrame:
     )
 
 
-def tfidf_top_terms(docs: DataFrame, k: int = 5, max_df: int | None = None) -> DataFrame:
+def tfidf_top_terms(docs: DataFrame, k: int = 5) -> DataFrame:
     """Top-``k`` characteristic terms per document by a tf·idf-style
     rarity score — the classic keyword-extraction / topic-tagging pass
     over a training corpus.
@@ -203,8 +203,7 @@ def tfidf_top_terms(docs: DataFrame, k: int = 5, max_df: int | None = None) -> D
     (3) the per-doc top-k window on doc_id. The df side joins back
     broadcast (a term dictionary fits executors at any corpus size
     worth ranking; spill to a sort-merge join by dropping the hint if
-    a tokenizer explodes the vocabulary). ``max_df`` optionally drops
-    ubiquitous terms (stopword suppression) before ranking.
+    a tokenizer explodes the vocabulary).
     """
     from pyspark.sql import Window
 
@@ -216,8 +215,6 @@ def tfidf_top_terms(docs: DataFrame, k: int = 5, max_df: int | None = None) -> D
         .agg(F.count("*").alias("tf"))
     )
     df_ = tf.groupBy("term").agg(F.count("*").alias("df"))
-    if max_df is not None:
-        df_ = df_.filter(F.col("df") <= max_df)
     w = Window.partitionBy("doc_id").orderBy(
         F.col("score_micro").desc(), F.col("tf").desc(), F.col("term")
     )

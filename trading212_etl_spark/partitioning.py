@@ -60,15 +60,18 @@ def materialize(df: DataFrame) -> DataFrame:
 
 
 # -- pin lifecycle ----------------------------------------------------------
-# Every lazy persist the package takes (freeze_partitions) is recorded
-# here so a long-lived session can RELEASE it: without a release hook,
-# each registry invocation leaves MEMORY_AND_DISK blocks in the
-# CacheManager forever, and the CacheManager's canonicalized-plan
-# lookup runs against every cached entry on every query (~1.3-1.5x tax
-# on untouched queries at ~100 accumulated pins, r5 measured). Eager
-# localCheckpoint/checkpoint blocks are NOT tracked: they live outside
-# the CacheManager and are reclaimed by the ContextCleaner when their
-# RDD is garbage-collected.
+# freeze_partitions takes a lazy persist, which is a CacheManager entry
+# until someone unpersists it. Left alone, every registry invocation
+# would add MEMORY_AND_DISK blocks for the life of the session, and the
+# CacheManager's canonicalized-plan lookup runs against every cached
+# entry on every query (~1.3-1.5x tax on untouched queries at ~100
+# pins, r5 measured). So while a registry build is open
+# (``serial_pins``), freeze_partitions records its pins in that build's
+# list, and the next build unpersists them. A pin taken outside a
+# registry build is not recorded: it belongs to its caller, like any
+# ``df.persist()``. Eager localCheckpoint/checkpoint blocks are never
+# recorded: they live outside the CacheManager and are reclaimed by the
+# ContextCleaner when their RDD is garbage-collected.
 #
 # Releasing a LIVE pin is NOT merely a lost cache hit — it can CORRUPT
 # results. After unpersist there is no InMemoryRelation; a later action
@@ -78,75 +81,30 @@ def materialize(df: DataFrame) -> DataFrame:
 # ``spark_partition_id`` diverges between the branches and the offset
 # join mis-assigns. While the pin lives, block EVICTION is still safe —
 # a recompute of cached partition *i* re-reads the same immutable
-# shuffle outputs. So every release below frees only pins whose owner
-# says they are dead.
+# shuffle outputs. So a build frees only the previous build's pins,
+# which are dead once the next build starts.
 
-_LIVE_PINS: list[DataFrame] = []
-
-
-def _track_pin(df: DataFrame) -> DataFrame:
-    _LIVE_PINS.append(df)
-    return df
-
-
-def _release(pins: list[DataFrame], blocking: bool) -> int:
-    """Unpersist those of ``pins`` still tracked (a pin already freed
-    by another release is not unpersisted twice); returns the count."""
-    ids = {id(df) for df in pins}
-    dead = [df for df in _LIVE_PINS if id(df) in ids]
-    _LIVE_PINS[:] = [df for df in _LIVE_PINS if id(df) not in ids]
-    for df in dead:
-        df.unpersist(blocking=blocking)
-    return len(dead)
-
-
-def _pins_since(before: list[DataFrame]) -> list[DataFrame]:
-    """The tracked pins not in ``before`` — a list the caller holds,
-    so no id in it can be reused by a newer frame."""
-    ids = {id(df) for df in before}
-    return [df for df in _LIVE_PINS if id(df) not in ids]
-
-
-def release_pins(blocking: bool = False) -> int:
-    """Unpersist every tracked pin; returns the count. Call ONLY at
-    points where every pinned frame in the session is DEAD — no
-    DataFrame built on one will be actioned again. Library callers
-    composing operators around their own actions scope with
-    ``pinned_scope()`` instead."""
-    return _release(list(_LIVE_PINS), blocking)
-
-
-@contextmanager
-def pinned_scope(blocking: bool = False):
-    """Scope pins to a block: frames pinned inside are released on
-    exit, frames pinned before are left alone — the composition-safe
-    form for library callers running many operators in one session:
-
-        with pinned_scope():
-            result = some_operator(df)
-            result.write.parquet(path)   # action INSIDE the scope
-    """
-    before = list(_LIVE_PINS)
-    try:
-        yield
-    finally:
-        _release(_pins_since(before), blocking)
+# the open build's pin list, or None outside a registry build
+_BUILD_PINS: list[DataFrame] | None = None
 
 
 @contextmanager
 def serial_pins(held: list[DataFrame]):
     """Pins for callers that run build -> action -> build -> action
-    serially (the registry): on entry, release the pins ``held`` took
-    in the previous block — dead by the time the next build starts —
-    then record into ``held`` the pins this block takes. Pins taken
-    outside such blocks are never touched."""
-    _release(held, blocking=False)
+    serially (the registry): on entry, unpersist the pins ``held``
+    took in the previous block — dead by the time the next build
+    starts — then record into ``held`` the pins this block takes.
+    Blocks do not nest: nothing builds a registry entry inside
+    another build."""
+    global _BUILD_PINS
+    for df in held:
+        df.unpersist(blocking=False)
     held.clear()
-    before = list(_LIVE_PINS)
+    _BUILD_PINS = held
     try:
         yield
     finally:
-        held.extend(_pins_since(before))
+        _BUILD_PINS = None
 
 
 def agg_parts(spark) -> int:
@@ -241,12 +199,19 @@ def freeze_partitions(df: DataFrame) -> DataFrame:
     With a checkpoint directory set, the pin is a fault-tolerant
     ``checkpoint()`` instead (an executor-loss recompute is then a
     checkpoint read, free of any shuffle-service dependency).
+
+    Inside a registry build the persist is recorded and the next build
+    unpersists it (``serial_pins``). A pin taken outside a registry
+    build is the caller's to unpersist, like any ``df.persist()``.
     """
     if _has_checkpoint_dir(df):
         return df.checkpoint()
     from pyspark import StorageLevel
 
-    return _track_pin(df.persist(StorageLevel.MEMORY_AND_DISK))
+    pinned = df.persist(StorageLevel.MEMORY_AND_DISK)
+    if _BUILD_PINS is not None:
+        _BUILD_PINS.append(pinned)
+    return pinned
 
 
 # Catalyst input estimate above which freeze_when_heavy pins. 16 MB
@@ -374,7 +339,8 @@ def ordered_prefix(
     reserved = {"__pid", "__rn", "__off_n"} | {
         p + c for c in sum_cols for p in ("__run_", "__off_", "__sum_")
     }
-    assert rn_name not in reserved, f"rn_name {rn_name!r} shadows an internal column"
+    if rn_name in reserved:
+        raise ValueError(f"rn_name {rn_name!r} shadows an internal column")
     existing = set(df.columns)
     # Public outputs must not silently overwrite caller columns
     # (withColumn replaces in place): the ranks/totals contract is
@@ -383,19 +349,21 @@ def ordered_prefix(
     outputs |= {f"run_{c}" for c in sum_cols}
     outputs |= {f"total_{c}" for c in sum_cols} | {"total_n"}
     clash = outputs & existing
-    assert not clash, (
-        f"ordered_prefix outputs {sorted(clash)} collide with input "
-        "columns — rename them upstream"
-    )
+    if clash:
+        raise ValueError(
+            f"ordered_prefix outputs {sorted(clash)} collide with input "
+            "columns — rename them upstream"
+        )
     spark = df.sparkSession
     n_parts = num_parts or int(spark.conf.get("spark.sql.shuffle.partitions"))
     # The offsets cascade below buckets by floor(__pid / 1M); beyond
     # 1M range partitions the buckets would not be chained and every
     # global rank/sum would be silently wrong — fail loudly instead.
-    assert n_parts <= 1_000_000, (
-        f"ordered_prefix supports at most 1,000,000 range partitions "
-        f"(got {n_parts}); widen the cascade bucketing first"
-    )
+    if n_parts > 1_000_000:
+        raise ValueError(
+            f"ordered_prefix supports at most 1,000,000 range partitions "
+            f"(got {n_parts}); widen the cascade bucketing first"
+        )
     from pyspark.sql import Window
 
     # r15 (VERDICT r14 item 9, measured): repartitionByRange SAMPLES

@@ -882,6 +882,24 @@ def q_events_hll_rollup(spark, sf_dir):
     )
 
 
+def _corrupt_record_audit(raw):
+    """(n_good, n_corrupt, total_good) over a PERMISSIVE parse with a
+    ``_corrupt_record`` column, as one lazy aggregate. The parse is
+    pinned over its full schema: without the pin, CSV column pruning
+    parses only the columns the aggregate reads, and which rows count
+    as corrupt depends on the columns parsed."""
+    from pyspark.sql import functions as F
+
+    from ..partitioning import freeze_partitions
+
+    ok = F.col("_corrupt_record").isNull()
+    return freeze_partitions(raw).agg(
+        F.count_if(ok).alias("n_good"),
+        F.count_if(~ok).alias("n_corrupt"),
+        F.round(F.sum(F.when(ok, F.col("total"))), 2).alias("total_good"),
+    )
+
+
 @register(
     "source_csv_malformed",
     oracle="""
@@ -942,18 +960,8 @@ def q_source_csv_malformed(spark, sf_dir):
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", "_corrupt_record")
         .csv(path)
-        # caching before splitting good/corrupt is the documented
-        # Spark requirement: the corrupt-record column is only
-        # populated on the same pass that parses the row
-        .cache()
     )
-    good = raw.filter(F.col("_corrupt_record").isNull())
-    bad = raw.filter(F.col("_corrupt_record").isNotNull())
-    return good.agg(
-        F.count(F.lit(1)).alias("n_good"),
-        F.lit(bad.count()).cast("long").alias("n_corrupt"),
-        F.round(F.sum("total"), 2).alias("total_good"),
-    )
+    return _corrupt_record_audit(raw)
 
 
 @register(
@@ -1759,14 +1767,5 @@ def q_source_json_malformed(spark, sf_dir):
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", "_corrupt_record")
         .json(path)
-        # same contract as the CSV twin: _corrupt_record is only
-        # populated on the parsing pass, so split after caching
-        .cache()
     )
-    good = raw.filter(F.col("_corrupt_record").isNull())
-    bad = raw.filter(F.col("_corrupt_record").isNotNull())
-    return good.agg(
-        F.count(F.lit(1)).alias("n_good"),
-        F.lit(bad.count()).cast("long").alias("n_corrupt"),
-        F.round(F.sum("total"), 2).alias("total_good"),
-    )
+    return _corrupt_record_audit(raw)

@@ -290,99 +290,6 @@ def run_streaming_user_stats(spark: SparkSession, events_dir: str) -> DataFrame:
     )
 
 
-def streaming_user_stats_ttl(
-    stream: DataFrame, ttl_minutes: int = 60
-) -> DataFrame:
-    """TTL variant of the stateful user-stats operator: per-user
-    running (count, max) under ``EventTimeTimeout`` — the
-    bounded-state production form of :func:`run_streaming_user_stats`.
-    When the watermark passes a user's last event time +
-    ``ttl_minutes``, the timeout callback emits the user's FINAL row
-    (``final = true``) and REMOVES the state, so idle keys cost
-    nothing: state is O(active users within the TTL), not O(all users
-    ever seen). A user re-appearing after expiry starts a FRESH
-    count — the restart is the observable proof the state was dropped
-    (pinned by tests/test_events.py::
-    test_streaming_user_stats_ttl_expires_and_restarts). ``stream``
-    must carry an event-time watermark for the timeout clock.
-
-    The update function is closure-local so it pickles by value
-    (workers cannot import this package); state carries the last
-    event-time millis so each update re-arms the timeout at
-    (last seen + TTL). The millis are computed JVM-side
-    (``unix_millis(ts)``) BEFORE the state function: Spark hands the
-    Pandas worker tz-naive timestamps rendered in the SESSION time
-    zone, and ``Timestamp.timestamp()`` treats naive values as UTC —
-    under a non-UTC session tz that offsets the timeout clock by the
-    tz delta (hours-early expiry, or 'timeout before watermark'
-    errors). Pinned by tests/test_events.py::
-    test_streaming_user_stats_ttl_non_utc_session_tz.
-    """
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    out_schema = T.StructType(
-        [
-            T.StructField("user_id", T.LongType()),
-            T.StructField("n_events", T.LongType()),
-            T.StructField("max_value", T.DoubleType()),
-            T.StructField("final", T.BooleanType()),
-        ]
-    )
-    state_schema = T.StructType(
-        [
-            T.StructField("n", T.LongType()),
-            T.StructField("mx", T.DoubleType()),
-            T.StructField("last_ms", T.LongType()),
-        ]
-    )
-    ttl_ms = ttl_minutes * 60 * 1000
-
-    def update(key, pdfs, state: GroupState):
-        import pandas as pd
-
-        if state.hasTimedOut:
-            n, mx, _ = state.get
-            state.remove()
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "max_value": [mx],
-                    "final": [True],
-                }
-            )
-            return
-        n, mx, last = state.get if state.exists else (0, None, 0)
-        for pdf in pdfs:
-            if len(pdf):
-                n += len(pdf)
-                batch_max = float(pdf["value"].max())
-                mx = batch_max if mx is None else max(mx, batch_max)
-                last = max(last, int(pdf["__ts_ms"].max()))
-        state.update((n, mx, last))
-        state.setTimeoutTimestamp(last + ttl_ms)
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]],
-                "n_events": [n],
-                "max_value": [mx],
-                "final": [False],
-            }
-        )
-
-    return (
-        stream.withColumn("__ts_ms", F.unix_millis("ts"))
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            update,
-            out_schema,
-            state_schema,
-            "update",
-            GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-
-
 def run_foreachbatch_ingest(
     spark: SparkSession, events_dir: str, out_dir: str
 ) -> DataFrame:
