@@ -24,6 +24,16 @@ into one Python worker per partition, amortizing serde. Partitioning
 stays whatever the upstream scan had (no shuffle); heavy decode is
 CPU-bound so ``spark.sql.files.maxPartitionBytes`` sizes the work
 units.
+
+What batching cannot amortize is the fixed cost of a task on a reused
+worker: its ``importlib.invalidate_caches()`` re-read the directories
+of ``pyspark.zip`` and the spark-core jar through 16 zipimporters,
+160-480 ms per task on 4 cores, more than most kernels' own work. So
+every kernel here starts with ``drop_zip_importers()``
+(``session._zip_importer_dropper``), which leaves the next task
+nothing to re-read. Measured on 4 cores (perfbench ``llm_curate``,
+median of 15 runs each), one ``multimodal_image_meta`` execution (8
+tasks, each through two chained kernels) went from 1.56 to 0.65 s.
 """
 
 from __future__ import annotations
@@ -35,6 +45,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..session import drop_zip_importers
 
 # metadata struct every decoded asset carries
 IMAGE_META_SCHEMA = T.StructType(
@@ -66,6 +78,8 @@ def decode_image_meta(binary_df: DataFrame) -> DataFrame:
     decode_bmp = _bmp_codec()[1]
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_importers()
+
         def decode_image_bytes(payload: bytes) -> tuple[int, int, int, int, float]:
             # REAL decode (r6): parse the BMP container — size, dims
             # from BITMAPINFOHEADER, channels from bpp — and the true
@@ -98,10 +112,12 @@ def _synth_parts(docs: DataFrame) -> int:
     CPU-bound Python (md5 keystream + container encode), so spreading
     it over reused Python workers pays immediately — measured at
     sf0.1: AVI synthesis 1.20→0.80 s and WAV 1.15→0.45 s at 8
-    partitions (16 was already worse: per-task overhead outruns the
-    win at this size). defaultParallelism/4 keeps the same scaling law
-    on a cluster; production pipelines read real binaries off object
-    storage and inherit the scan's own splits instead."""
+    partitions (16 measured worse; that run predates
+    ``drop_zip_importers``, so it does not say how much of the loss
+    was the per-task importer re-read). defaultParallelism/4 keeps the
+    same scaling law on a cluster; production pipelines read real
+    binaries off object storage and inherit the scan's own splits
+    instead."""
     return max(8, docs.sparkSession.sparkContext.defaultParallelism // 4)
 
 
@@ -124,6 +140,7 @@ def synth_wav_payload(docs: DataFrame, sample_rate: int = 8000) -> DataFrame:
     )
 
     def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_importers()
         import hashlib
         import io
         import wave
@@ -193,6 +210,7 @@ def audio_features(binary_df: DataFrame, n_bands: int = 4) -> DataFrame:
     )
 
     def featurize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_importers()
         import io
         import wave
 
@@ -251,6 +269,7 @@ def synth_bmp_payload(binary_docs: DataFrame) -> DataFrame:
     encode, _ = _bmp_codec()
 
     def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_importers()
         import hashlib
 
         import numpy as np
@@ -358,6 +377,7 @@ def resize_images(
     encode, decode = _bmp_codec()
 
     def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_importers()
         import numpy as np
 
         xs = (np.arange(target_w)[None, :], np.arange(target_h)[:, None])
@@ -503,6 +523,7 @@ def synth_avi_payload(docs: DataFrame) -> DataFrame:
     encode, _ = _avi_codec()
 
     def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_importers()
         import hashlib
 
         import numpy as np
@@ -558,6 +579,7 @@ def sample_frames(binary_df: DataFrame, every_n: int = 2) -> DataFrame:
     _, parse = _avi_codec()
 
     def sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_importers()
         import numpy as np
 
         for pdf in batches:
@@ -608,6 +630,7 @@ def synth_bmp_twin_corpus(
     encode, _ = _bmp_codec()
 
     def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_importers()
         import hashlib
 
         import numpy as np
@@ -662,6 +685,7 @@ def perceptual_dhash(binary_df: DataFrame) -> DataFrame:
     _, decode = _bmp_codec()
 
     def hash_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_importers()
         import numpy as np
 
         xs = np.arange(9)[None, :]

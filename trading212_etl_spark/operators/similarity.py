@@ -23,6 +23,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..partitioning import fan_out, freeze_partitions
+from ..session import drop_zip_importers
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -125,6 +126,7 @@ def _bands_arrow_udf(tables: list[list[list[float]]]):
 
     @pandas_udf("array<bigint>")
     def bands(emb: pd.Series) -> pd.Series:
+        drop_zip_importers()
         if len(emb) == 0:
             return pd.Series([], dtype=object)
         m = np.asarray(emb.tolist(), dtype=np.float64)  # (n, dim)
@@ -145,6 +147,7 @@ def _pair_cosine_arrow_udf():
 
     @pandas_udf("double")
     def pair_cos(ea: pd.Series, eb: pd.Series) -> pd.Series:
+        drop_zip_importers()
         if len(ea) == 0:
             return pd.Series([], dtype=np.float64)
         a = np.asarray(ea.tolist(), dtype=np.float64)
@@ -422,6 +425,7 @@ def embedding_near_dup_pairs_lsh(
     cutoff = threshold - 0.5 * 10 ** (-round_dp) - 1e-12
 
     def _score_tile(pdf):
+        drop_zip_importers()
         import pandas as _pd
 
         ci, cj = int(pdf["__ci"].iloc[0]), int(pdf["__cj"].iloc[0])
@@ -791,6 +795,7 @@ def pq_assign(
     books = [np.asarray(b, dtype=np.float64) for b in cbs]
 
     def encode(batches):
+        drop_zip_importers()
         import pandas as pd
 
         for pdf in batches:
@@ -1036,6 +1041,7 @@ def knn_outlier_scores(
     dsub = len(ref_mat[0])
 
     def score(batches):
+        drop_zip_importers()
         import numpy as np
         import pandas as pd
 

@@ -19,6 +19,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..partitioning import fan_out
+from ..session import drop_zip_importers
 
 # BPE-ish pre-tokenizer: letter runs | digit runs | single non-space
 # symbol — the regex shape GPT-2-style tokenizers use as their split
@@ -677,6 +678,7 @@ def wordpiece_encode_stats(docs: DataFrame) -> DataFrame:
     )
 
     def seg_stats(batches):
+        drop_zip_importers()
         import pandas as pd  # noqa: F811 (worker-side import by value)
 
         for pdf in batches:

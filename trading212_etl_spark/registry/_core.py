@@ -142,14 +142,20 @@ def _d38(c: str):
 def _scratch(sf_dir: str, name: str) -> str:
     """Scratch dir for engine-written intermediates, rooted at the
     repo checkout (derived from __file__, not hardcoded, so relocated
-    checkouts keep working)."""
+    checkouts keep working). Keyed on the corpus' resolved path (leaf
+    name plus a hash of the whole path): the build-once sinks trust
+    whatever they find there, so two corpora that share a leaf name
+    (``/a/sf0.1``, ``/b/sf0.1``) must not share a dir."""
+    import hashlib
     import os
 
     repo_root = os.path.dirname(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     )
-    base = os.path.basename(sf_dir.rstrip("/"))
-    return os.path.join(repo_root, ".scratch", f"{name}_{base}")
+    resolved = os.path.realpath(sf_dir)
+    digest = hashlib.sha1(resolved.encode()).hexdigest()[:10]
+    base = os.path.basename(resolved)
+    return os.path.join(repo_root, ".scratch", f"{name}_{base}_{digest}")
 
 
 def pairs_top_k() -> int | None:

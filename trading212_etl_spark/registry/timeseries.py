@@ -900,6 +900,50 @@ def _corrupt_record_audit(raw):
     )
 
 
+def _corrupt_fixture(spark, sf_dir, name, key_mod, fmt, bad_lines):
+    """The corrupt-record fixture ``name`` for ``sf_dir``, built once:
+    the orders with ``o_orderkey % 10 == key_mod`` as one ``fmt``
+    (csv/json) file plus ``bad_lines`` appended to it. Written and
+    patched in a temp dir, then renamed into place, so a fixture that
+    exists is whole and a later build runs no Spark job for it."""
+    import glob
+    import os
+    import shutil
+
+    from pyspark.sql import functions as F
+
+    path = _scratch(sf_dir, name)
+    if os.path.isdir(path):
+        return path
+    tmp = f"{path}.tmp{os.getpid()}"
+    writer = (
+        _t(spark, sf_dir, "orders")
+        .filter(F.col("o_orderkey") % 10 == key_mod)
+        .select("o_orderkey", F.round("o_totalprice", 2).alias("total"))
+        .coalesce(1)
+        .write.mode("overwrite")
+    )
+    if fmt == "csv":
+        writer.option("header", True).csv(tmp)
+    else:
+        writer.json(tmp)
+    (part,) = glob.glob(os.path.join(tmp, f"part-*.{fmt}"))
+    with open(part, "a") as fh:
+        fh.writelines(line + "\n" for line in bad_lines)
+    # the local-FS writer leaves .crc sidecars; the append invalidates
+    # them and Hadoop's ChecksumFileSystem would fail the re-read
+    for crc in glob.glob(os.path.join(tmp, ".*.crc")):
+        os.remove(crc)
+    try:
+        os.rename(tmp, path)
+    except OSError:
+        # a concurrent build renamed its own copy into place first
+        shutil.rmtree(tmp, ignore_errors=True)
+        if not os.path.isdir(path):
+            raise
+    return path
+
+
 @register(
     "source_csv_malformed",
     oracle="""
@@ -921,32 +965,16 @@ def q_source_csv_malformed(spark, sf_dir):
     (wrong arity / non-numeric key); the result row is the audit
     summary (good count, corrupt count, good-value checksum), so the
     oracle is the clean slice + the injection constant."""
-    import glob
-    import os
-
-    from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
-    path = _scratch(sf_dir, "csv_malformed")
-    (
-        _t(spark, sf_dir, "orders")
-        .filter(F.col("o_orderkey") % 10 == 0)
-        .select("o_orderkey", F.round("o_totalprice", 2).alias("total"))
-        .coalesce(1)
-        .write.mode("overwrite")
-        .option("header", True)
-        .csv(path)
+    path = _corrupt_fixture(
+        spark,
+        sf_dir,
+        "csv_malformed",
+        0,
+        "csv",
+        ["not_a_number,99.5", "12345", "7,8,9,10", "xyz,abc"],
     )
-    part = glob.glob(os.path.join(path, "part-*.csv"))[0]
-    with open(part, "a") as fh:
-        fh.write("not_a_number,99.5\n")
-        fh.write("12345\n")
-        fh.write("7,8,9,10\n")
-        fh.write("xyz,abc\n")
-    # the local-FS writer leaves .crc sidecars; the append invalidates
-    # them and Hadoop's ChecksumFileSystem would fail the re-read
-    for crc in glob.glob(os.path.join(path, ".*.crc")):
-        os.remove(crc)
     schema = T.StructType(
         [
             T.StructField("o_orderkey", T.LongType()),
@@ -1732,29 +1760,17 @@ def q_source_json_malformed(spark, sf_dir):
     injected broken lines; the audit row (good count, corrupt count,
     value checksum) is oracled against the clean slice + the
     injection constant."""
-    import glob
-    import os
-
-    from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
-    path = _scratch(sf_dir, "json_malformed")
-    (
-        _t(spark, sf_dir, "orders")
-        .filter(F.col("o_orderkey") % 10 == 3)
-        .select("o_orderkey", F.round("o_totalprice", 2).alias("total"))
-        .coalesce(1)
-        .write.mode("overwrite")
-        .json(path)
+    path = _corrupt_fixture(
+        spark,
+        sf_dir,
+        "json_malformed",
+        3,
+        "json",
+        ['{"o_orderkey": 1, "total":', "[1, 2", "not json at all",
+         '{"o_orderkey": 2, "total": 3.5'],
     )
-    part = glob.glob(os.path.join(path, "part-*.json"))[0]
-    with open(part, "a") as fh:
-        fh.write('{"o_orderkey": 1, "total":\n')
-        fh.write("[1, 2\n")
-        fh.write("not json at all\n")
-        fh.write('{"o_orderkey": 2, "total": 3.5\n')
-    for crc in glob.glob(os.path.join(path, ".*.crc")):
-        os.remove(crc)
     schema = T.StructType(
         [
             T.StructField("o_orderkey", T.LongType()),

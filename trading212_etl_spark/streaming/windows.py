@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import drop_zip_importers
 from ..sources.readers import SCHEMAS, events_nanos_schema, events_ts_is_nanos
 
 # Streams carry ts as TimestampType; _events_stream handles the legacy
@@ -254,6 +255,7 @@ def run_streaming_user_stats(spark: SparkSession, events_dir: str) -> DataFrame:
     )
 
     def update(key, pdfs, state: GroupState):
+        drop_zip_importers()
         import pandas as pd
 
         n, mx = state.get if state.exists else (0, None)
