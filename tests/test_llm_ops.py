@@ -1329,43 +1329,6 @@ def test_decontaminate_bloom_matches_exact_and_prunes(spark, sf_dir):
     assert audit["maybe_rows"] < 0.2 * audit["probe_rows"], audit
 
 
-def test_decontaminate_bloom_sink_roundtrip(spark, sf_dir, tmp_path):
-    """VERDICT r12 item 7: the persisted decontamination sink
-    (reference shingle set + Bloom summary + hash-parameter meta) must
-    reproduce the in-memory Bloom path BIT-IDENTICALLY — the reference
-    build is deterministic, and the from-sink path shares the
-    probe/confirm tail, so any divergence is a real bug. Also pins
-    that the loader takes its hash parameters from the sink's meta
-    (the sink here is built with non-default bits_log2/k)."""
-    from trading212_etl_spark.operators.dedup import (
-        decontaminate_bloom,
-        decontaminate_bloom_from_sink,
-        write_decontamination_sink,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    corpus = docs.filter(F.col("doc_id") % 101 != 0)
-    bench = docs.filter(F.col("doc_id") % 101 == 0)
-    path = str(tmp_path / "decon_sink_b16k2_v1")
-    write_decontamination_sink(bench, path, bits_log2=16, k=2)
-    want = {
-        tuple(r)
-        for r in decontaminate_bloom(
-            corpus, bench, bits_log2=16, k=2
-        ).collect()
-    }
-    audit: dict = {}
-    got = {
-        tuple(r)
-        for r in decontaminate_bloom_from_sink(
-            corpus, path, audit=audit
-        ).collect()
-    }
-    assert got == want and want
-    # the pre-filter still prunes when loaded from disk
-    assert audit["maybe_rows"] < 0.2 * audit["probe_rows"], audit
-
-
 def test_incremental_minhash_sink_estimator(spark, sf_dir, tmp_path):
     """Incremental-vs-snapshot dedup (xxhash64 production mode): the
     persisted-signature estimator must (a) find every strong bipartite
@@ -1408,156 +1371,3 @@ def test_incremental_minhash_sink_estimator(spark, sf_dir, tmp_path):
     ]
     assert errs and max(errs) <= 0.45, (max(errs), len(errs))
     assert sum(errs) / len(errs) <= 0.15, sum(errs) / len(errs)
-
-
-def test_decontamination_sink_expiry(tmp_path):
-    """VERDICT r13 item 5: expire_superseded_sinks must recognize the
-    decontamination layout (shingles/ + bloom/ + _meta.json) with the
-    same highest-version-wins rule, refuse non-sink directories, and
-    never let versions of DIFFERENT layouts compete within one name
-    family (pure-fs test — no Spark needed)."""
-    import os
-
-    from trading212_etl_spark.operators.dedup import expire_superseded_sinks
-
-    root = tmp_path / "sinks"
-    root.mkdir()
-
-    def mk_decon(name):
-        d = root / name
-        (d / "shingles").mkdir(parents=True)
-        (d / "bloom").mkdir()
-        (d / "_meta.json").write_text('{"n": 3, "bits_log2": 16, "k": 2}')
-        return d
-
-    def mk_sig(name):
-        d = root / name
-        (d / "signatures").mkdir(parents=True)
-        (d / "bands").mkdir()
-        return d
-
-    stale = mk_decon("decon_bench_b16k2_v1")
-    live = mk_decon("decon_bench_b16k2_v2")
-    # decoy: versioned name but NOT a recognized sink layout
-    decoy = root / "experiments_v1"
-    decoy.mkdir()
-    (decoy / "shingles").mkdir()  # partial layout — no bloom/_meta
-    # cross-layout family: a signature sink must not be superseded by
-    # a higher-versioned decontamination sink of the same prefix
-    sig_low = mk_sig("mixed_family_v1")
-    decon_high = mk_decon("mixed_family_v2")
-
-    removed = expire_superseded_sinks(str(root))
-    assert removed == [str(stale)]
-    assert live.is_dir() and decoy.is_dir()
-    assert sig_low.is_dir() and decon_high.is_dir()
-    # meta survives on the kept version
-    assert os.path.isfile(live / "_meta.json")
-
-
-def test_sink_absorb_compact_expire(spark, sf_dir, tmp_path):
-    """VERDICT r11 item 6 — the signature sink's maintenance story:
-    (a) absorbing ingest batches appends state equivalent to having
-    built the sink from the union corpus, (b) compaction merges the
-    accumulated per-absorb small files WITHOUT changing the
-    incremental join result, (c) version-tag expiry removes exactly
-    the superseded sink directories."""
-    import os
-    import shutil
-
-    from trading212_etl_spark.operators.dedup import (
-        absorb_batch_into_sink,
-        compact_signature_sink,
-        expire_superseded_sinks,
-        incremental_minhash_pairs,
-        write_signature_sink,
-    )
-
-    from .test_plans import _confs
-
-    docs = load_table(spark, sf_dir, "documents")
-    snapshot = docs.filter(F.col("doc_id") % 10 > 2)
-    b0 = docs.filter(F.col("doc_id") % 10 == 0)
-    b1 = docs.filter(F.col("doc_id") % 10 == 1)
-    probe = docs.filter(F.col("doc_id") % 10 == 2)
-    root = tmp_path / "sinks"
-    root.mkdir()
-    path = str(root / "minhash_sink_k32b16v2")
-    write_signature_sink(snapshot, path)
-    absorb_batch_into_sink(b0, path)
-    absorb_batch_into_sink(b1, path)
-
-    def run(sink: str = path) -> set:
-        return {
-            tuple(r)
-            for r in incremental_minhash_pairs(
-                probe, sink, threshold=0.5
-            ).collect()
-        }
-
-    before = run()
-    # (a) absorbed state ≡ a sink built from the union corpus in one
-    # shot: same signatures → same candidates → same estimator scores
-    oneshot = str(root / "oneshot_v1")
-    write_signature_sink(snapshot.unionByName(b0).unionByName(b1), oneshot)
-    assert before == {
-        tuple(r)
-        for r in incremental_minhash_pairs(
-            probe, oneshot, threshold=0.5
-        ).collect()
-    }
-    assert before, "corpus plants cross-split near-dups"
-    # a copy of the fragmented sink, for (b2)
-    split = str(root / "split_v1")
-    shutil.copytree(path, split)
-
-    # (b) compaction: strictly fewer files, identical join result
-    stats = compact_signature_sink(spark, path)
-    assert stats["signatures_files_after"] < stats["signatures_files_before"], stats
-    assert stats["bands_files_after"] < stats["bands_files_before"], stats
-    assert run() == before
-    # band_idx partitioning survives the rewrite (pruning still works)
-    assert any(
-        d.startswith("band_idx=") for d in os.listdir(os.path.join(path, "bands"))
-    )
-
-    # (b2) compaction splits an oversized band across multiple files:
-    # compact the fragmented copy with every input file its own scan
-    # task and a tiny advisory size, and check a band dir holds >1
-    # file, with the join result still unchanged
-    with _confs(
-        spark,
-        {
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes": "1k",
-            "spark.sql.files.maxPartitionBytes": "1m",
-        },
-    ):
-        stats2 = compact_signature_sink(spark, split)
-    bands_dir = os.path.join(split, "bands")
-    max_files_one_band = max(
-        len(
-            [
-                f
-                for f in os.listdir(os.path.join(bands_dir, d))
-                if f.endswith(".parquet")
-            ]
-        )
-        for d in os.listdir(bands_dir)
-        if d.startswith("band_idx=")
-    )
-    assert max_files_one_band > 1, stats2
-    assert run(split) == before
-
-    # (c) expiry drops only the superseded version of the same family
-    # — and only directories that ARE sinks (ADVICE r12: a bare
-    # name-pattern match would delete unrelated *_v1 dirs)
-    stale = root / "minhash_sink_k32b16v1"
-    (stale / "signatures").mkdir(parents=True)
-    (stale / "bands").mkdir()
-    decoy = root / "experiments_v1"
-    decoy.mkdir()
-    removed = expire_superseded_sinks(str(root))
-    assert removed == [str(stale)]
-    assert decoy.is_dir(), "non-sink directory must survive expiry"
-    assert os.path.isdir(path) and os.path.isdir(oneshot)
-    assert run() == before

@@ -468,21 +468,40 @@ def test_compaction_is_shuffle_free_and_does_not_inflate(spark, tmp_path):
 def test_compaction_keeps_hive_partitions(spark, tmp_path):
     """A hive-partitioned source keeps its layout through compaction:
     the same l_returnflag directories, one file each, the same
-    columns, no rows lost."""
+    columns, no rows lost. A partition larger than
+    advisoryPartitionSizeInBytes is split over several files, with
+    the rows unchanged."""
     from trading212_etl_spark.sources import load_table
     from trading212_etl_spark.sources.writers import compact_parquet
 
     li = load_table(spark, SF, "lineitem")
-    src, out = str(tmp_path / "src"), str(tmp_path / "out")
+    src = str(tmp_path / "src")
     li.repartition(4).write.partitionBy("l_returnflag").parquet(src)
-    n_out = compact_parquet(spark, src, out)
-    per_dir = _files_per_dir(out)
-    assert per_dir.keys() == _files_per_dir(src).keys()
-    assert set(per_dir.values()) == {1}
-    assert n_out == sum(per_dir.values())
-    back = spark.read.parquet(out)
-    assert back.columns == spark.read.parquet(src).columns
-    assert back.count() == li.count()
+    original = spark.read.parquet(src)
+
+    def compact(out: str) -> dict[str, int]:
+        n_out = compact_parquet(spark, src, out)
+        per_dir = _files_per_dir(out)
+        assert per_dir.keys() == _files_per_dir(src).keys()
+        assert n_out == sum(per_dir.values())
+        back = spark.read.parquet(out)
+        assert back.columns == original.columns
+        assert back.exceptAll(original).count() == 0
+        assert back.count() == li.count()
+        return per_dir
+
+    assert set(compact(str(tmp_path / "out")).values()) == {1}
+    # 1 MB scan splits give every input file its own map task, so the
+    # split is not capped by how many tasks the host's cores pack.
+    with _confs(
+        spark,
+        {
+            "spark.sql.adaptive.advisoryPartitionSizeInBytes": "1k",
+            "spark.sql.files.maxPartitionBytes": "1m",
+        },
+    ):
+        per_dir = compact(str(tmp_path / "split"))
+    assert max(per_dir.values()) > 1, per_dir
 
 
 def test_dynamic_partition_pruning_fires(spark):

@@ -7,14 +7,16 @@ it."""
 
 from __future__ import annotations
 
+import glob
 import itertools
 import os
 import shutil
+import threading
 
 import pytest
 
 from trading212_etl_spark import registry
-from trading212_etl_spark.registry._core import _scratch
+from trading212_etl_spark.registry._core import _build_once, _scratch
 
 from .oracle_harness import compare, duckdb_conn
 from .test_oracle_parity import SF_CORRECTNESS
@@ -40,6 +42,79 @@ def test_scratch_dirs_differ_for_corpora_sharing_a_leaf_name(tmp_path):
     assert os.path.basename(_scratch(str(a), "ivf_cells")).startswith(
         "ivf_cells_sf0.1_"
     )
+
+
+def _leftovers(path: str) -> list[str]:
+    return glob.glob(f"{path}.tmp*")
+
+
+def test_build_once_leaves_nothing_after_a_failed_write(tmp_path):
+    """A writer that dies midway leaves neither the dir nor its temp
+    dir; the next build writes it whole, and later builds reuse it
+    without writing."""
+    path = _scratch(str(tmp_path), "probe")
+    calls = []
+
+    def failing(tmp):
+        calls.append(tmp)
+        with open(os.path.join(tmp, "part-0"), "w") as fh:
+            fh.write("half")
+        raise RuntimeError("writer died")
+
+    def writing(tmp):
+        calls.append(tmp)
+        with open(os.path.join(tmp, "part-0"), "w") as fh:
+            fh.write("whole")
+
+    try:
+        with pytest.raises(RuntimeError, match="writer died"):
+            _build_once(str(tmp_path), "probe", failing)
+        assert not os.path.exists(path)
+        assert _leftovers(path) == []
+        assert _build_once(str(tmp_path), "probe", writing) == path
+        assert _build_once(str(tmp_path), "probe", failing) == path
+        assert len(calls) == 2
+        assert os.listdir(path) == ["part-0"]
+        with open(os.path.join(path, "part-0")) as fh:
+            assert fh.read() == "whole"
+        assert _leftovers(path) == []
+    finally:
+        shutil.rmtree(path, ignore_errors=True)
+
+
+def test_build_once_racing_builds_keep_one_whole_copy(tmp_path):
+    """Two threads building one dir at once write separate temp dirs:
+    both get the dir, it holds exactly one writer's files, and no temp
+    dir is left behind."""
+    path = _scratch(str(tmp_path), "race")
+    both_writing = threading.Barrier(2, timeout=30)
+    got, errors = [], []
+
+    def writer(tag):
+        def write(tmp):
+            with open(os.path.join(tmp, f"part-{tag}"), "w") as fh:
+                fh.write(tag)
+            # each thread holds its temp dir until the other has one
+            both_writing.wait()
+
+        try:
+            got.append(_build_once(str(tmp_path), "race", write))
+        except Exception as e:  # noqa: BLE001 - reported below
+            errors.append(e)
+
+    threads = [threading.Thread(target=writer, args=(t,)) for t in "ab"]
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(60)
+        assert not any(t.is_alive() for t in threads)
+        assert not errors, errors
+        assert got == [path, path]
+        assert os.listdir(path) in (["part-a"], ["part-b"])
+        assert _leftovers(path) == []
+    finally:
+        shutil.rmtree(path, ignore_errors=True)
 
 
 def _jobs_during(spark, fn) -> list[int]:

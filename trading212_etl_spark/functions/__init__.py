@@ -1,5 +1,5 @@
 from .strings import capitalize, regexp_strip_prefixes, replace_exact, strict_trim
-from .dates import date_str, to_ts, tumbling_365d_window
+from .dates import date_str
 
 __all__ = [
     "capitalize",
@@ -7,6 +7,4 @@ __all__ = [
     "replace_exact",
     "strict_trim",
     "date_str",
-    "to_ts",
-    "tumbling_365d_window",
 ]

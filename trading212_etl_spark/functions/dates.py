@@ -1,6 +1,6 @@
-"""Date/timestamp functions F5-F10 (SURVEY §2.8) and the tumbling
-365-day window that generalizes the reference's chunked extraction
-(trading212.py:86-97, SURVEY §2.9 T1)."""
+"""Date function F5 (SURVEY §2.8). The timestamp battery F6-F10 is
+the ``timestamp_funcs`` registry entry and the 365-day tumbling
+windows (SURVEY §2.9 T1) are ``F.window`` in ``operators/events.py``."""
 
 from __future__ import annotations
 
@@ -16,25 +16,3 @@ def date_str(col: Column | str) -> Column:
     """
     c = F.col(col) if isinstance(col, str) else col
     return F.date_format(c, "yyyy-MM-dd")
-
-
-def to_ts(col: Column | str, fmt: str = "yyyy-MM-dd HH:mm:ss") -> Column:
-    """F6 — timestamp parse with pinned format (trading212.py:129 uses
-    infer-format ``pd.to_datetime``; the engine pins the format for
-    determinism against the oracle, SURVEY §1.3)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.to_timestamp(c, fmt)
-
-
-def tumbling_365d_window(ts_col: Column | str) -> Column:
-    """T1 — 365-day tumbling event-time windows.
-
-    The reference hand-rolls these with a driver-side while-loop over
-    ``pd.Timedelta(days=365)`` steps (trading212.py:89-97), one remote
-    export per window. Declaratively this is ``F.window``: Catalyst
-    computes the bucket per row, fully parallel, no driver loop — and
-    on date-partitioned Parquet the per-window read is partition-pruned
-    instead of hand-scheduled.
-    """
-    c = F.col(ts_col) if isinstance(ts_col, str) else ts_col
-    return F.window(c, "365 days")

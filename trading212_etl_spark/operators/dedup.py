@@ -23,7 +23,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..partitioning import fan_out, freeze_partitions, materialize
-from ..sources.writers import _parquet_files, compact_parquet, write_parquet
+from ..sources.writers import write_parquet
 from .textual import explode_nonempty, tokens
 
 
@@ -992,28 +992,6 @@ def decontaminate_bloom(
     # the reference set (verified in the formatted plan: 3 duplicated
     # build subtrees). The frame is at most m/64 rows, trivially cached.
     bloom = freeze_partitions(bloom_build(bench, "shingle", bits_log2, k))
-    return _bloom_probe_confirm(
-        docs, bench, bloom, n, id_col, bits_log2, k, audit
-    )
-
-
-def _bloom_probe_confirm(
-    docs: DataFrame,
-    bench: DataFrame,
-    bloom: DataFrame,
-    n: int,
-    id_col: str,
-    bits_log2: int,
-    k: int,
-    audit: dict | None,
-) -> DataFrame:
-    """Shared probe/confirm tail of the Bloom decontamination paths:
-    shingle the corpus, discard scan-side via the broadcast summary,
-    exact-confirm survivors against the true shingle set. One body for
-    the build-in-memory (:func:`decontaminate_bloom`) and
-    load-from-sink (:func:`decontaminate_bloom_from_sink`) entries, so
-    the two CANNOT diverge — the sink path's bit-identity claim is
-    structural."""
     corpus = explode_nonempty(
         _shingle_sets(docs, n, id_col).withColumn(
             "set_size", F.size("shingles")
@@ -1038,91 +1016,6 @@ def _bloom_probe_confirm(
                 "contam_bp"
             ),
         )
-    )
-
-
-def write_decontamination_sink(
-    benchmark: DataFrame,
-    path: str,
-    n: int = 3,
-    id_col: str = "doc_id",
-    bits_log2: int = 18,
-    k: int = 3,
-) -> None:
-    """Persist a reference set's decontamination state — the Bloom
-    twin of :func:`write_signature_sink` (VERDICT r12 item 7): the
-    125× regime probe's wall is dominated by building the reference
-    summary (explode k positions over tens of millions of shingles +
-    bit_or), which is IDENTICAL across runs for a fixed reference.
-    Persisting it turns every later decontamination run's reference
-    cost into two parquet reads.
-
-    Layout: ``<path>/shingles`` (shingle BIGINT — the distinct
-    xxhash64 shingle set, what the exact-confirm join needs),
-    ``<path>/bloom`` (bucket, bits — the broadcastable summary), and
-    ``<path>/_meta.json`` pinning (n, bits_log2, k) so a loader can
-    never probe with mismatched hash parameters. Version the PATH
-    exactly like signature sinks (``..._v<N>``, bumped on any
-    reference or parameter change); :func:`expire_superseded_sinks`
-    recognizes this layout too (shingles/ + bloom/ + _meta.json
-    marker, VERDICT r13 item 5) and retires all but the highest
-    version under the same highest-version-wins rule."""
-    import json
-    import os
-
-    bench = (
-        explode_nonempty(
-            _shingle_sets(benchmark, n, id_col), [], "shingles", "__s"
-        )
-        .select(F.xxhash64("__s").alias("shingle"))
-        .distinct()
-    )
-    bench = freeze_partitions(bench)
-    bench.write.mode("overwrite").parquet(f"{path}/shingles")
-    # build the bloom from the just-written shingle parquet, not the
-    # logical subtree — otherwise the full reference shingle/distinct
-    # pipeline executes twice, the dominant cost this sink exists to
-    # amortize (ADVICE r13; same write-then-read-back pattern as
-    # write_signature_sink)
-    bench_back = benchmark.sparkSession.read.parquet(f"{path}/shingles")
-    bloom_build(bench_back, "shingle", bits_log2, k).write.mode(
-        "overwrite"
-    ).parquet(f"{path}/bloom")
-    with open(os.path.join(path, "_meta.json"), "w") as fh:
-        json.dump({"n": n, "bits_log2": bits_log2, "k": k}, fh)
-
-
-def decontaminate_bloom_from_sink(
-    docs: DataFrame,
-    path: str,
-    id_col: str = "doc_id",
-    audit: dict | None = None,
-) -> DataFrame:
-    """:func:`decontaminate_bloom` against a persisted reference sink
-    (:func:`write_decontamination_sink`): the summary and the exact
-    shingle set load from parquet instead of being rebuilt, and the
-    hash parameters come from the sink's ``_meta.json`` — so a probe
-    can never run with mismatched (n, bits_log2, k). Output is
-    bit-identical to the in-memory path by construction (shared
-    :func:`_bloom_probe_confirm` tail over the same deterministic
-    frames; pinned in tests/test_llm_ops.py)."""
-    import json
-    import os
-
-    spark = docs.sparkSession
-    with open(os.path.join(path, "_meta.json")) as fh:
-        meta = json.load(fh)
-    bench = spark.read.parquet(f"{path}/shingles")
-    bloom = freeze_partitions(spark.read.parquet(f"{path}/bloom"))
-    return _bloom_probe_confirm(
-        docs,
-        bench,
-        bloom,
-        meta["n"],
-        id_col,
-        meta["bits_log2"],
-        meta["k"],
-        audit,
     )
 
 
@@ -1163,156 +1056,6 @@ def write_signature_sink(
         f"{path}/bands",
         partition_by=["band_idx"],
     )
-
-
-def absorb_batch_into_sink(
-    new_docs: DataFrame,
-    path: str,
-    num_hashes: int = 32,
-    bands: int = 16,
-    shingle_n: int = 3,
-    id_col: str = "doc_id",
-    hash_fn: str = "xxhash64",
-) -> None:
-    """APPEND an ingest batch's MinHash state to a persisted signature
-    sink (:func:`write_signature_sink`), so the next batch dedups
-    against snapshot + every previously absorbed batch — the step that
-    closes the incremental loop (sign batch → join against sink →
-    absorb batch).
-
-    Parameters must match the sink's construction (K/bands/hash
-    family — the version tag in the sink path exists to pin them).
-    Each absorb adds one file set per write, so a long-lived sink
-    accumulates small files; :func:`compact_signature_sink` merges
-    them without changing the data."""
-    _check_hash_fn(hash_fn)
-    sh = freeze_partitions(_shingle_sets(new_docs, shingle_n, id_col))
-    sig = materialize(_signature_frame(sh, num_hashes, hash_fn))
-    sig.write.mode("append").parquet(f"{path}/signatures")
-    write_parquet(
-        _band_frame(sig, num_hashes, bands, hash_fn),
-        f"{path}/bands",
-        mode="append",
-        partition_by=["band_idx"],
-    )
-
-
-def compact_signature_sink(spark, path: str) -> dict:
-    """Merge a signature sink's accumulated per-absorb small files
-    into right-sized ones, preserving content and the bands table's
-    ``band_idx`` partitioning — the maintenance pass a long-lived
-    incremental sink needs (each :func:`absorb_batch_into_sink` call
-    appends a file set per band partition; after N batches the
-    incremental join opens O(N·bands) files).
-
-    Rewrite-and-swap: both tables are rewritten under ``<path>/.compact``
-    first and only then moved into place (never read-and-overwrite the
-    live path), so a crash during the REWRITE leaves the sink intact.
-    The swap itself is two directory renames per table (live →
-    ``.old_<table>``, compacted → live) with an automatic rename-back
-    on failure; a hard kill landing exactly between the two renames
-    can still leave a table absent, with its content intact under
-    ``.old_<table>`` for manual restore — directory swaps have no
-    atomic form on a plain filesystem (ADVICE r12). The local/test
-    form of the object-store rename a cluster deployment would use.
-    Returns ``{"signatures_files_before"/"_after",
-    "bands_files_before"/"_after"}``.
-
-    Both rewrites are the engine's one compaction
-    (sources/writers.py:compact_parquet), so file layout follows the
-    engine's one writer policy: the flat signatures table coalesces
-    into byte-sized files without a shuffle, and the bands table keeps
-    its ``band_idx`` directories with one file per band, which AQE
-    splits over several files when a band outgrows
-    ``advisoryPartitionSizeInBytes``."""
-    import os
-    import shutil
-
-    tmp = os.path.join(path, ".compact")
-    shutil.rmtree(tmp, ignore_errors=True)
-    stats = {}
-    for table in ("signatures", "bands"):
-        stats[f"{table}_files_before"] = len(
-            _parquet_files(os.path.join(path, table))
-        )
-        stats[f"{table}_files_after"] = compact_parquet(
-            spark, os.path.join(path, table), os.path.join(tmp, table)
-        )
-    for table in ("signatures", "bands"):
-        old = os.path.join(path, f".old_{table}")
-        live = os.path.join(path, table)
-        shutil.rmtree(old, ignore_errors=True)
-        os.rename(live, old)
-        try:
-            os.rename(os.path.join(tmp, table), live)
-        except BaseException:
-            # restore the live table before propagating — without
-            # this a failed second rename leaves the sink headless
-            os.rename(old, live)
-            raise
-        shutil.rmtree(old)
-    shutil.rmtree(tmp, ignore_errors=True)
-    return stats
-
-
-def expire_superseded_sinks(parent_dir: str) -> list[str]:
-    """Delete signature-sink directories superseded by a newer version
-    of the same construction — the retention pass for the version-tag
-    convention (sink paths end in ``v<N>``; the tag is bumped on any
-    signature-construction change, e.g. ``minhash_sink_md5_k32b16v1``
-    → ``...v2``, and a stale sink can then never satisfy a newer
-    entry's read, but its files linger forever without this).
-
-    Groups ``<parent_dir>``'s immediate subdirectories by their
-    ``v<N>``-stripped prefix and removes all but the highest version
-    in each group. Only directories that actually ARE sinks of a
-    recognized layout are considered — a name-pattern match alone
-    would irreversibly delete an unrelated ``experiments_v1``-style
-    directory (ADVICE r12). Two layouts qualify (VERDICT r13 item 5):
-    signature sinks (``signatures/`` + ``bands/`` subdirs,
-    :func:`write_signature_sink`) and decontamination sinks
-    (``shingles/`` + ``bloom/`` subdirs + ``_meta.json``,
-    :func:`write_decontamination_sink`). Versions compete only within
-    the same layout: a hypothetical ``foo_v1`` signature sink never
-    supersedes a ``foo_v2`` decontamination sink. Returns the removed
-    paths. Driver-side fs ops — the local/test form of the
-    object-store lifecycle rule a cluster deployment would use."""
-    import os
-    import re
-    import shutil
-
-    def _layout(d: str) -> str | None:
-        if os.path.isdir(os.path.join(d, "signatures")) and os.path.isdir(
-            os.path.join(d, "bands")
-        ):
-            return "signature"
-        if (
-            os.path.isdir(os.path.join(d, "shingles"))
-            and os.path.isdir(os.path.join(d, "bloom"))
-            and os.path.isfile(os.path.join(d, "_meta.json"))
-        ):
-            return "decontamination"
-        return None
-
-    groups: dict[tuple[str, str], list[tuple[int, str]]] = {}
-    for name in sorted(os.listdir(parent_dir)):
-        full = os.path.join(parent_dir, name)
-        if not os.path.isdir(full):
-            continue
-        layout = _layout(full)
-        if layout is None:
-            continue
-        m = re.fullmatch(r"(.+v)(\d+)", name)
-        if m:
-            groups.setdefault((layout, m.group(1)), []).append(
-                (int(m.group(2)), full)
-            )
-    removed = []
-    for versions in groups.values():
-        for _, stale in sorted(versions)[:-1]:
-            shutil.rmtree(stale)
-            removed.append(stale)
-    return removed
 
 
 def incremental_minhash_pairs(

@@ -158,6 +158,37 @@ def _scratch(sf_dir: str, name: str) -> str:
     return os.path.join(repo_root, ".scratch", f"{name}_{base}_{digest}")
 
 
+def _build_once(sf_dir: str, name: str, write: Callable[[str], None]) -> str:
+    """The scratch dir ``name`` for ``sf_dir``, built once. ``write``
+    fills a fresh temp dir beside it, which is then renamed into place,
+    so the dir only ever appears whole: an existing one is complete and
+    is returned without calling ``write``. A ``write`` that raises
+    leaves neither the dir nor its temp dir behind, and two builds
+    racing on one dir each write their own temp dir; the first rename
+    wins and the loser's copy is dropped."""
+    import os
+    import shutil
+    import tempfile
+
+    path = _scratch(sf_dir, name)
+    if os.path.isdir(path):
+        return path
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    tmp = tempfile.mkdtemp(
+        prefix=f"{os.path.basename(path)}.tmp", dir=os.path.dirname(path)
+    )
+    try:
+        write(tmp)
+        try:
+            os.rename(tmp, path)
+        except OSError:
+            if not os.path.isdir(path):
+                raise
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+    return path
+
+
 def pairs_top_k() -> int | None:
     """The pair entries' per-document partner bound from
     ``SPARK_GRAFT_PAIRS_TOP_K`` (unset or empty: None, the complete

@@ -161,10 +161,10 @@ def q_sink_bucketed_join(spark, sf_dir):
     bucketBy(8, join key) so the fact-fact join needs NO shuffle at
     read time (plan shows SortMergeJoin with zero Exchange below it —
     asserted in tests/test_plans.py). At 100 TB this is THE lever for
-    repeated fact-fact joins: pay the shuffle once at write time."""
+    repeated fact-fact joins: pay the shuffle once at write time.
+    Bucketing requires a metastore table, so each side is written
+    with ``bucketBy(...).sortBy(...).saveAsTable(...)``."""
     from pyspark.sql import functions as F
-
-    from ..sources.writers import write_parquet
 
     import os
     import shutil
@@ -179,18 +179,13 @@ def q_sink_bucketed_join(spark, sf_dir):
     for t in (t_orders, t_lineitem):
         spark.sql(f"DROP TABLE IF EXISTS {t}")
         shutil.rmtree(os.path.join(warehouse, t), ignore_errors=True)
-    write_parquet(
-        _t(spark, sf_dir, "orders"),
-        "",
-        bucket_by=(8, ["o_orderkey"]),
-        table_name=t_orders,
-    )
-    write_parquet(
-        _t(spark, sf_dir, "lineitem"),
-        "",
-        bucket_by=(8, ["l_orderkey"]),
-        table_name=t_lineitem,
-    )
+    for table, key, name in (
+        ("orders", "o_orderkey", t_orders),
+        ("lineitem", "l_orderkey", t_lineitem),
+    ):
+        _t(spark, sf_dir, table).write.mode("overwrite").bucketBy(
+            8, key
+        ).sortBy(key).format("parquet").saveAsTable(name)
     o = spark.table(t_orders)
     li = spark.table(t_lineitem)
     return (

@@ -13,11 +13,11 @@ from ._core import (  # noqa: F401
     QUERIES,
     _SHINGLES,
     _TOKS,
+    _build_once,
     _d38,
     _dsum,
     _dsum_sql,
     _lsh_oracle_banded,
-    _scratch,
     _t,
     bounded_bucket,
     pairs_top_k,
@@ -1538,8 +1538,6 @@ def q_sink_ivf_partitioned_ann(spark, sf_dir):
     across several writer tasks, so a natural-skew cell owning 25% of
     the corpus is never one straggler writer. Layout-only, so the
     oracle is untouched."""
-    import os
-
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
@@ -1549,23 +1547,23 @@ def q_sink_ivf_partitioned_ann(spark, sf_dir):
     emb = _t(spark, sf_dir, "embeddings")
     cents = _data_centroids(emb, 8)
     cent_dots = lambda col: _cent_dots_expr(col, cents)  # noqa: E731
-    path = _scratch(sf_dir, "ivf_cells")
-    if not os.path.isdir(os.path.join(path, "cell=1")):
-        assigned = (
-            emb.select(
-                "vec_id",
-                F.col("embedding").cast("array<double>").alias("c_emb"),
-            )
-            .withColumn("__dots", cent_dots("c_emb"))
-            .withColumn(
-                "cell",
-                F.array_position(
-                    F.col("__dots"), F.array_max("__dots")
-                ).cast("int"),
-            )
-            .drop("__dots")
+    assigned = (
+        emb.select(
+            "vec_id",
+            F.col("embedding").cast("array<double>").alias("c_emb"),
         )
-        write_parquet(assigned, path, partition_by=["cell"])
+        .withColumn("__dots", cent_dots("c_emb"))
+        .withColumn(
+            "cell",
+            F.array_position(F.col("__dots"), F.array_max("__dots")).cast("int"),
+        )
+        .drop("__dots")
+    )
+    path = _build_once(
+        sf_dir,
+        "ivf_cells",
+        lambda tmp: write_parquet(assigned, tmp, partition_by=["cell"]),
+    )
     corpus = spark.read.parquet(path)
     q = (
         emb.filter(F.col("vec_id") < 8)
@@ -2701,10 +2699,9 @@ def q_dedup_incremental_snapshot(spark, sf_dir):
     ENTIRE pipeline — signatures, banding, candidates, estimator — is
     replicated in the DuckDB oracle; the xxhash64 production mode and
     the estimator-vs-exact calibration carry invariant tests in
-    tests/test_llm_ops.py. The sink write is cached across runs (same
-    sf_dir), mirroring the sink_ivf_partitioned_ann convention."""
-    import os
-
+    tests/test_llm_ops.py. The sink is built once per sf_dir
+    (registry/_core._build_once), like sink_ivf_partitioned_ann's
+    cells."""
     from pyspark.sql import functions as F
 
     from ..operators.dedup import (
@@ -2716,11 +2713,13 @@ def q_dedup_incremental_snapshot(spark, sf_dir):
     # the format tag (K/bands/hash family, bump on any signature-
     # construction change) keys the cache: a stale sink from an older
     # construction can never satisfy a newer entry's read
-    path = _scratch(sf_dir, "minhash_sink_md5_k32b16v1")
-    if not os.path.exists(os.path.join(path, "bands", "_SUCCESS")):
-        write_signature_sink(
-            docs.filter(F.col("doc_id") % 10 != 0), path, hash_fn="md5"
-        )
+    path = _build_once(
+        sf_dir,
+        "minhash_sink_md5_k32b16v1",
+        lambda tmp: write_signature_sink(
+            docs.filter(F.col("doc_id") % 10 != 0), tmp, hash_fn="md5"
+        ),
+    )
     return incremental_minhash_pairs(
         docs.filter(F.col("doc_id") % 10 == 0),
         path,

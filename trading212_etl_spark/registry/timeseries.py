@@ -14,6 +14,7 @@ from ._core import (  # noqa: F401
     _SHINGLES,
     _TOKS,
     _basket_pairs,
+    _build_once,
     _d38,
     _dsum,
     _dsum_sql,
@@ -901,47 +902,38 @@ def _corrupt_record_audit(raw):
 
 
 def _corrupt_fixture(spark, sf_dir, name, key_mod, fmt, bad_lines):
-    """The corrupt-record fixture ``name`` for ``sf_dir``, built once:
-    the orders with ``o_orderkey % 10 == key_mod`` as one ``fmt``
-    (csv/json) file plus ``bad_lines`` appended to it. Written and
-    patched in a temp dir, then renamed into place, so a fixture that
-    exists is whole and a later build runs no Spark job for it."""
+    """The corrupt-record fixture ``name`` for ``sf_dir``, built once
+    (registry/_core._build_once): the orders with
+    ``o_orderkey % 10 == key_mod`` as one ``fmt`` (csv/json) file plus
+    ``bad_lines`` appended to it, so a later build runs no Spark job
+    for it."""
     import glob
     import os
-    import shutil
 
     from pyspark.sql import functions as F
 
-    path = _scratch(sf_dir, name)
-    if os.path.isdir(path):
-        return path
-    tmp = f"{path}.tmp{os.getpid()}"
-    writer = (
-        _t(spark, sf_dir, "orders")
-        .filter(F.col("o_orderkey") % 10 == key_mod)
-        .select("o_orderkey", F.round("o_totalprice", 2).alias("total"))
-        .coalesce(1)
-        .write.mode("overwrite")
-    )
-    if fmt == "csv":
-        writer.option("header", True).csv(tmp)
-    else:
-        writer.json(tmp)
-    (part,) = glob.glob(os.path.join(tmp, f"part-*.{fmt}"))
-    with open(part, "a") as fh:
-        fh.writelines(line + "\n" for line in bad_lines)
-    # the local-FS writer leaves .crc sidecars; the append invalidates
-    # them and Hadoop's ChecksumFileSystem would fail the re-read
-    for crc in glob.glob(os.path.join(tmp, ".*.crc")):
-        os.remove(crc)
-    try:
-        os.rename(tmp, path)
-    except OSError:
-        # a concurrent build renamed its own copy into place first
-        shutil.rmtree(tmp, ignore_errors=True)
-        if not os.path.isdir(path):
-            raise
-    return path
+    def write(tmp):
+        writer = (
+            _t(spark, sf_dir, "orders")
+            .filter(F.col("o_orderkey") % 10 == key_mod)
+            .select("o_orderkey", F.round("o_totalprice", 2).alias("total"))
+            .coalesce(1)
+            .write.mode("overwrite")
+        )
+        if fmt == "csv":
+            writer.option("header", True).csv(tmp)
+        else:
+            writer.json(tmp)
+        (part,) = glob.glob(os.path.join(tmp, f"part-*.{fmt}"))
+        with open(part, "a") as fh:
+            fh.writelines(line + "\n" for line in bad_lines)
+        # the local-FS writer leaves .crc sidecars; the append
+        # invalidates them and Hadoop's ChecksumFileSystem would fail
+        # the re-read
+        for crc in glob.glob(os.path.join(tmp, ".*.crc")):
+            os.remove(crc)
+
+    return _build_once(sf_dir, name, write)
 
 
 @register(

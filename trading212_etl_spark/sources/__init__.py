@@ -3,7 +3,6 @@ from .readers import (
     TABLES,
     flatten_struct,
     load_table,
-    load_tables,
     read_csv_pinned,
     read_json_records,
 )
@@ -14,7 +13,6 @@ __all__ = [
     "TABLES",
     "flatten_struct",
     "load_table",
-    "load_tables",
     "read_csv_pinned",
     "read_json_records",
     "write_parquet",

@@ -197,11 +197,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.schema(SCHEMAS[name]).parquet(path)
 
 
-def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:
-    names = names or TABLES
-    return {n: load_table(spark, sf_dir, n) for n in names}
-
-
 def read_csv_pinned(
     spark: SparkSession, paths: str | list[str], schema: T.StructType
 ) -> DataFrame:

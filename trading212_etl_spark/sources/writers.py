@@ -16,12 +16,7 @@ from pyspark.sql import DataFrame
 
 
 def write_parquet(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    partition_by: list[str] | None = None,
-    bucket_by: tuple[int, list[str]] | None = None,
-    table_name: str | None = None,
+    df: DataFrame, path: str, partition_by: list[str] | None = None
 ) -> None:
     """Overwrite-write Parquet, optionally hive-partitioned.
 
@@ -36,24 +31,12 @@ def write_parquet(
     across several tasks (``optimizeSkewsInRebalancePartitions``), so
     a hot partition never funnels through a single task the way a
     plain ``repartition(col)`` would.
-
-    ``bucket_by=(n, keys)`` pre-shuffles on the join key at write time
-    so repeated large joins on ``keys`` skip their shuffle entirely —
-    the 100 TB lever for fact-fact joins. Bucketing requires a
-    metastore table, hence ``table_name``.
     """
     if partition_by:
         df = df.hint("rebalance", *partition_by)
-        writer = df.write.mode(mode).partitionBy(*partition_by)
+        df.write.mode("overwrite").partitionBy(*partition_by).parquet(path)
     else:
-        writer = df.write.mode(mode)
-    if bucket_by is not None:
-        n, keys = bucket_by
-        if not table_name:
-            raise ValueError("bucketBy requires table_name (saveAsTable)")
-        writer.bucketBy(n, *keys).sortBy(*keys).format("parquet").saveAsTable(table_name)
-        return
-    writer.parquet(path)
+        df.write.mode("overwrite").parquet(path)
 
 
 def compact_parquet(
