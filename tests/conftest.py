@@ -12,7 +12,7 @@ SF_SMOKE = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_session(app_name="tests", shuffle_partitions=8)
+    s = get_session(app_name="tests")
     yield s
 
 

@@ -11,6 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from trading212_etl_spark.operators import dedup
 from trading212_etl_spark.operators.dedup import minhash_lsh_pairs, simhash
 from trading212_etl_spark.operators.multimodal import (
     _avi_encode,
@@ -120,7 +121,7 @@ def test_asof_and_pagerank_on_empty(spark):
         assert out.count() == 0
         assert set(out.columns) == {"key", "ts", "x", "v"}
     edges = spark.createDataFrame([], "src long, dst long, weight long")
-    assert pagerank_micro(edges, iterations=1).count() == 0
+    assert pagerank_micro(edges).count() == 0
 
 
 def test_curate_on_empty(spark):
@@ -237,6 +238,12 @@ def _avi_with_width(width: int) -> bytes:
     return bytes(payload)
 
 
+def _simhash_with_bits(spark, bits: int):
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(dedup, "SIMHASH_BITS", bits)
+        return simhash(_one_doc(spark))
+
+
 # (call, message) per input check; each raises before any Spark job
 _INPUT_CHECKS = {
     "ordered_prefix_rn_name": (
@@ -259,8 +266,7 @@ _INPUT_CHECKS = {
     "minhash_hash_fn": (
         lambda s: minhash_lsh_pairs(_one_doc(s), hash_fn="sha1"), "hash_fn"
     ),
-    "simhash_hash_fn": (lambda s: simhash(_one_doc(s), hash_fn="sha1"), "hash_fn"),
-    "simhash_n_bits": (lambda s: simhash(_one_doc(s), n_bits=30), "4-lane"),
+    "simhash_n_bits": (lambda s: _simhash_with_bits(s, 30), "4-lane"),
     "bmp_magic": (lambda s: _bmp_decode(b"PK" + bytes(60)), "not a BMP"),
     "bmp_depth": (lambda s: _bmp_decode(_bmp_with_bpp(8)), "24-bit"),
     "avi_magic": (lambda s: _avi_parse(b"RIFX" + bytes(4) + b"AVI "), "not an AVI"),

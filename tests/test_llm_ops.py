@@ -5,6 +5,7 @@ brute force, multimodal decode shape (SURVEY §5.4)."""
 
 from pyspark.sql import functions as F
 
+from trading212_etl_spark.operators import dedup, similarity
 from trading212_etl_spark.operators.dedup import (
     exact_dedup,
     jaccard_pairs,
@@ -31,6 +32,18 @@ from trading212_etl_spark.operators.similarity import (
 from trading212_etl_spark.sources import load_table
 
 
+def _band_bucket_sizes(docs, hash_fn):
+    """(over-cap buckets, largest bucket) of the band table
+    minhash_lsh_pairs groups, against dedup.HOT_BUCKET_CAP."""
+    sig = dedup._signature_frame(dedup._shingle_sets(docs), hash_fn)
+    sizes = dedup._band_frame(sig, hash_fn).groupBy("band_idx", "band_hash").count()
+    row = sizes.agg(
+        F.count_if(F.col("count") > dedup.HOT_BUCKET_CAP).alias("over"),
+        F.max("count").alias("largest"),
+    ).first()
+    return int(row.over or 0), int(row.largest or 0)
+
+
 def test_minhash_lsh_recall_and_precision(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     exact = {
@@ -38,7 +51,7 @@ def test_minhash_lsh_recall_and_precision(spark, sf_dir):
     }
     lsh = {
         (r.doc_a, r.doc_b)
-        for r in minhash_lsh_pairs(docs, threshold=0.5, num_hashes=32, bands=16).collect()
+        for r in minhash_lsh_pairs(docs).collect()
     }
     assert exact, "corpus should contain planted near-dups"
     # verified LSH output must be a subset of the exact pairs (precision 1.0)
@@ -48,32 +61,28 @@ def test_minhash_lsh_recall_and_precision(spark, sf_dir):
     assert recall >= 0.8, f"LSH recall too low: {recall} ({len(lsh)}/{len(exact)})"
 
 
-def test_minhash_lsh_hot_bucket_guard(spark, sf_dir):
+def test_minhash_lsh_hot_bucket_guard(spark, sf_dir, monkeypatch):
     """Degenerate corpus: many identical documents put EVERY doc into
     the same (band, hash) bucket in every band. Unguarded, that is an
     unbounded collect_set buffer and an O(n²) pair explosion in one
-    task (VERDICT r4 item 5). With max_bucket below the bucket size,
-    the op must (a) report the over-cap buckets via the audit hook,
-    (b) never collect an id list, and (c) still connect the whole
-    clique through the hub star so downstream connected-components
+    task (VERDICT r4 item 5). With the bucket cap below the bucket
+    size, (a) every band's bucket is over the cap, (b) the op never
+    collects an id list, and (c) it still connects the whole clique
+    through the hub star so downstream connected-components
     clustering is unchanged."""
     from trading212_etl_spark.operators.dedup import connected_components
 
+    monkeypatch.setattr(dedup, "HOT_BUCKET_CAP", 50)
     n = 200
     docs = spark.range(n).selectExpr(
         "id AS doc_id",
         "'the same boilerplate line repeated verbatim in every document"
         " of this degenerate corpus slice' AS text",
     )
-    audit = {}
-    pairs = minhash_lsh_pairs(
-        docs, threshold=0.5, num_hashes=32, bands=16,
-        max_bucket=50, audit=audit,
-    )
+    pairs = minhash_lsh_pairs(docs)
     got = pairs.collect()
     # every band bucket holds all n docs -> all over cap
-    assert audit["over_cap_buckets"] == 16
-    assert audit["max_bucket_size"] == n
+    assert _band_bucket_sizes(docs, "xxhash64") == (16, n)
     # star output: hub (min id = 0) linked to every other doc, NOT the
     # quadratic clique
     assert {(r.doc_a, r.doc_b) for r in got} == {(0, i) for i in range(1, n)}
@@ -85,9 +94,7 @@ def test_minhash_lsh_hot_bucket_guard(spark, sf_dir):
 
     # same corpus UNDER the cap: exact all-pairs path still exact
     few = docs.limit(5)
-    exact_pairs = minhash_lsh_pairs(
-        few, threshold=0.5, num_hashes=32, bands=16, max_bucket=50
-    )
+    exact_pairs = minhash_lsh_pairs(few)
     assert exact_pairs.count() == 10  # C(5,2)
 
 
@@ -95,23 +102,19 @@ def test_minhash_lsh_oracle_corpus_under_cap(spark):
     """The dedup_minhash_lsh DuckDB oracle expands full per-bucket
     all-pairs while the engine star-links buckets over max_bucket;
     parity therefore REQUIRES no band bucket at the correctness SF
-    exceeding the default cap. Assert that precondition explicitly
-    (via the audit hook, at the driver's sf0.01) so a future corpus /
+    exceeding the cap. Assert that precondition explicitly (over the
+    op's band table, at the driver's sf0.01) so a future corpus /
     testdata change fails HERE with a clear cap message instead of as
     a confusing value diff in the driver's CORRECTNESS row
     (ADVICE r5)."""
     docs = load_table(spark, "/root/testdata/sf0.01", "documents")
-    audit = {}
-    minhash_lsh_pairs(
-        docs, threshold=0.5, num_hashes=32, bands=16,
-        hash_fn="md5", audit=audit,
-    )
-    assert audit["over_cap_buckets"] == 0, (
-        f"documents corpus grew a band bucket over the 4096 cap "
-        f"(max seen {audit['max_bucket_size']}): the dedup_minhash_lsh "
-        f"oracle's all-pairs expansion no longer matches the engine's "
-        f"star fallback — raise max_bucket in the registry entry or "
-        f"re-derive the oracle"
+    over, largest = _band_bucket_sizes(docs, "md5")
+    assert over == 0, (
+        f"documents corpus grew a band bucket over the "
+        f"{dedup.HOT_BUCKET_CAP} cap (max seen {largest}): the "
+        f"dedup_minhash_lsh oracle's all-pairs expansion no longer "
+        f"matches the engine's star fallback — raise "
+        f"dedup.HOT_BUCKET_CAP or re-derive the oracle"
     )
 
 
@@ -119,7 +122,7 @@ def test_simhash_near_pairs_sane(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     sk = simhash(docs)
     assert sk.count() == docs.count()
-    pairs = simhash_near_pairs(docs, max_hamming=3)
+    pairs = simhash_near_pairs(docs)
     pdf = pairs.toPandas()
     # hamming bounds respected, ordered pairs only
     assert (pdf["hamming"] <= 3).all()
@@ -134,7 +137,7 @@ def test_similarity_lsh_recall(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 8)
     brute = cosine_topk_bruteforce(emb, queries, k=10).toPandas()
-    approx = cosine_topk_lsh(emb, queries, k=10, n_planes=4).toPandas()
+    approx = cosine_topk_lsh(emb, queries, k=10).toPandas()
     # every query answered
     assert set(approx["query_id"]) == set(brute["query_id"])
     # approx scores can never exceed the exact best
@@ -151,15 +154,15 @@ def test_similarity_lsh_recall(spark, sf_dir):
     assert recall >= 0.5, f"multi-table LSH recall too low: {recall}"
 
 
-def test_embedding_near_dup_lsh_subset_and_recall(spark, sf_dir):
+def test_embedding_near_dup_lsh_subset_and_recall(spark, sf_dir, monkeypatch):
     emb = load_table(spark, sf_dir, "embeddings")
+    # the exact form over the whole corpus, not its verification slice
+    monkeypatch.setattr(similarity, "NEAR_DUP_MAX_ID", 1 << 62)
     exact = {
-        (r.vec_a, r.vec_b)
-        for r in embedding_near_dup_pairs(emb, threshold=0.4).collect()
+        (r.vec_a, r.vec_b) for r in embedding_near_dup_pairs(emb).collect()
     }
     lsh = {
-        (r.vec_a, r.vec_b)
-        for r in embedding_near_dup_pairs_lsh(emb, threshold=0.4).collect()
+        (r.vec_a, r.vec_b) for r in embedding_near_dup_pairs_lsh(emb).collect()
     }
     assert exact, "corpus should contain near-dup embeddings at 0.4"
     assert lsh <= exact, "every LSH pair is exactly scored -> subset"
@@ -171,7 +174,7 @@ def test_similarity_ivf_recall(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 8)
     brute = cosine_topk_bruteforce(emb, queries, k=10).toPandas()
-    approx = cosine_topk_ivf(emb, queries, k=10, n_centroids=8, n_probe=3).toPandas()
+    approx = cosine_topk_ivf(emb, queries, k=10).toPandas()
     assert set(approx["query_id"]) == set(brute["query_id"])
     for qid in set(brute["query_id"]):
         assert (
@@ -460,22 +463,22 @@ def test_pq_assign_codes_and_error(spark, sf_dir):
     subvectors (self-quantization of a codebook row is ~0)."""
     from trading212_etl_spark.operators.similarity import (
         pq_assign,
-        pq_codebooks,
+        pq_codebooks_from_data,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    out = pq_assign(emb).toPandas()
+    cbs = pq_codebooks_from_data(emb)
+    out = pq_assign(emb, cbs).toPandas()
     assert len(out) == emb.count()
     for code in out["pq_code"]:
         parts = [int(p) for p in code.split("-")]
         assert len(parts) == 8 and all(0 <= p < 16 for p in parts)
     assert (out["err_q"] >= 0).all()
-    again = pq_assign(emb).toPandas().sort_values("vec_id").reset_index(drop=True)
+    again = pq_assign(emb, cbs).toPandas().sort_values("vec_id").reset_index(drop=True)
     assert again.equals(out.sort_values("vec_id").reset_index(drop=True))
 
     # a vector equal to centroid 3 of every subspace encodes as all-3s
     # with zero error
-    cbs = pq_codebooks()
     flat = [v for book in cbs for v in book[3]]
     probe = spark.createDataFrame(
         [(0, [float(x) for x in flat])], "vec_id long, embedding array<float>"
@@ -500,9 +503,7 @@ def test_pq_adc_approximates_exact_neighbors(spark, sf_dir):
 
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 8)
-    adc = pq_adc_topk(
-        emb, queries, k=10, codebooks=pq_codebooks_from_data(emb)
-    ).toPandas()
+    adc = pq_adc_topk(emb, queries, pq_codebooks_from_data(emb)).toPandas()
     assert set(adc.groupby("query_id")["rank"].count()) == {10}
     for _, g in adc.groupby("query_id"):
         g = g.sort_values("rank")
@@ -550,9 +551,7 @@ def test_substring_spans_ground_truth(spark):
     )
     out = {
         (r.doc_a, r.doc_b): (r.max_span_tokens, r.n_spans)
-        for r in substring_span_pairs(
-            docs, n=5, min_span_tokens=10
-        ).collect()
+        for r in substring_span_pairs(docs).collect()
     }
     assert out[(1, 2)] == (12, 1)
     assert out[(2, 4)] == (12, 1)
@@ -689,7 +688,7 @@ def test_perceptual_dhash_twin_collision_and_tone_invariance(spark):
     assert 0 <= out[0][0] < 2**32 and 0 <= out[0][1] < 2**32  # sign-safe
 
 
-def test_simhash_hot_bucket_guard(spark):
+def test_simhash_hot_bucket_guard(spark, monkeypatch):
     """Degenerate corpus: identical documents share every band's bits,
     so the unguarded per-band self-join emits the O(n²) clique inside
     one bucket (the bucket-skew corpus measured the blowup in r9).
@@ -698,13 +697,14 @@ def test_simhash_hot_bucket_guard(spark):
     exact for sub-cap corpora."""
     from trading212_etl_spark.operators.dedup import connected_components
 
+    monkeypatch.setattr(dedup, "HOT_BUCKET_CAP", 50)
     n = 120
     docs = spark.range(n).selectExpr(
         "id AS doc_id",
         "'the same boilerplate line repeated verbatim in every document"
         " of this degenerate corpus slice' AS text",
     )
-    got = simhash_near_pairs(docs, max_bucket=50).collect()
+    got = simhash_near_pairs(docs).collect()
     assert {(r.doc_a, r.doc_b) for r in got} == {(0, i) for i in range(1, n)}
     assert all(r.hamming == 0 for r in got)
     comp = connected_components(
@@ -715,33 +715,32 @@ def test_simhash_hot_bucket_guard(spark):
     assert comp.select("component").distinct().count() == 1
     # under the cap: exact clique
     few = docs.limit(6)
-    assert simhash_near_pairs(few, max_bucket=50).count() == 15  # C(6,2)
+    assert simhash_near_pairs(few).count() == 15  # C(6,2)
 
 
-def test_embedding_near_dup_lsh_hot_bucket_guard(spark):
+def test_embedding_near_dup_lsh_hot_bucket_guard(spark, monkeypatch):
     """Degenerate corpus: identical embeddings land in one bucket of
     every hyperplane table; the unguarded gram matmul is O(bucket²)
     FLOPs in a single applyInPandas task. Over the cap the scorer
     must emit the hub star (cos 1.0 to every member); under it, the
     exact clique."""
     n, dim = 96, 8
+    monkeypatch.setattr(similarity, "NEAR_DUP_COS", 0.9)
+    monkeypatch.setattr(similarity, "DIM", dim)
+    monkeypatch.setattr(dedup, "HOT_BUCKET_CAP", 40)
     vec = ", ".join(["0.5"] * dim)
     emb = spark.range(n).selectExpr(
         "id AS vec_id", f"array({vec}) AS embedding"
     )
-    got = embedding_near_dup_pairs_lsh(
-        emb, threshold=0.9, dim=dim, max_bucket=40
-    ).collect()
+    got = embedding_near_dup_pairs_lsh(emb).collect()
     assert {(r.vec_a, r.vec_b) for r in got} == {(0, i) for i in range(1, n)}
     assert all(abs(r.cos_sim - 1.0) < 1e-9 for r in got)
     few = emb.limit(5)
-    exact = embedding_near_dup_pairs_lsh(
-        few, threshold=0.9, dim=dim, max_bucket=40
-    )
+    exact = embedding_near_dup_pairs_lsh(few)
     assert exact.count() == 10  # C(5,2)
 
 
-def test_simhash_star_keeps_member_pairs_reachable_above_cap(spark):
+def test_simhash_star_keeps_member_pairs_reachable_above_cap(spark, monkeypatch):
     """VERDICT r10 item 2 (the star-guard recall hole): members of an
     over-cap bucket whose hamming to the HUB exceeds ``max_hamming``
     used to lose ALL their pairs — including member↔member clone
@@ -750,7 +749,8 @@ def test_simhash_star_keeps_member_pairs_reachable_above_cap(spark):
     connects those members through the hub; strict consumers filter
     ``hamming <= max_hamming`` themselves.
 
-    Construction: n_bands = n_bits gives single-bit bands, and 16
+    Construction: n_bands = n_bits (SIMHASH_BANDS monkeypatched to
+    SIMHASH_BITS) gives single-bit bands, and 16
     LOW-id far-sketch docs guarantee (w.h.p. under the fixed hash;
     asserted, not assumed) that EVERY bucket holding the 60
     identical high-id clones also holds a far doc with a smaller id
@@ -763,10 +763,10 @@ def test_simhash_star_keeps_member_pairs_reachable_above_cap(spark):
         simhash_near_pairs,
     )
 
-    # 16 frozen random-word texts, searched offline so that under the
-    # fixed xxhash64 sketch (a) every one of the 48 single-bit clone
-    # buckets contains >= 1 far doc, (b) min hamming(far, clone) = 19
-    # and min hamming(far, far) = 16 — all safely above max_hamming
+    # 16 frozen random-word texts: under the md5 sketch (a) every one
+    # of the 48 single-bit clone buckets contains >= 1 far doc, (b)
+    # min hamming(far, clone) = 17 and min hamming(far, far) = 16 —
+    # all safely above max_hamming
     far_texts = [
         "ynbiqpmz plsgqej ydtzir jdxcvk rdlnktug oqibzrac wzvuatpk xkwcgs hzezro",
         "szycid yopumzgd amntyyaw ixzhsdka auram nxaqhy prhlhvhy janrudfu dxkxwqn",
@@ -792,9 +792,9 @@ def test_simhash_star_keeps_member_pairs_reachable_above_cap(spark):
         for j in range(60)
     ]
     docs = spark.createDataFrame(far + clones, "doc_id long, text string")
-    got = simhash_near_pairs(
-        docs, max_hamming=3, n_bits=48, n_bands=48, max_bucket=50
-    ).collect()
+    monkeypatch.setattr(dedup, "SIMHASH_BANDS", dedup.SIMHASH_BITS)
+    monkeypatch.setattr(dedup, "HOT_BUCKET_CAP", 50)
+    got = simhash_near_pairs(docs).collect()
     pairs = {(r.doc_a, r.doc_b): r.hamming for r in got}
     member_edges = {
         p: h for p, h in pairs.items() if p[0] >= 100 or p[1] >= 100
@@ -817,7 +817,7 @@ def test_simhash_star_keeps_member_pairs_reachable_above_cap(spark):
     assert len(clone_comps) == 1, clone_comps
 
 
-def test_embedding_star_keeps_member_pairs_reachable_above_cap(spark):
+def test_embedding_star_keeps_member_pairs_reachable_above_cap(spark, monkeypatch):
     """Embedding twin of the simhash star-recall probe (VERDICT r10
     item 2): an over-cap bucket whose hub is nearly ORTHOGONAL to the
     clone members used to emit zero edges (every hub↔member cosine
@@ -830,10 +830,15 @@ def test_embedding_star_keeps_member_pairs_reachable_above_cap(spark):
     import numpy as np
 
     from trading212_etl_spark.operators.dedup import connected_components
-    from trading212_etl_spark.operators.similarity import _hyperplanes
+    from trading212_etl_spark.operators.similarity import _lsh_tables
 
     dim, n = 8, 60
-    h = np.asarray(_hyperplanes(dim, 1, seed=42)[0])
+    monkeypatch.setattr(similarity, "NEAR_DUP_COS", 0.9)
+    monkeypatch.setattr(similarity, "LSH_PLANES", 1)
+    monkeypatch.setattr(similarity, "LSH_TABLES", 1)
+    monkeypatch.setattr(similarity, "DIM", dim)
+    monkeypatch.setattr(dedup, "HOT_BUCKET_CAP", 40)
+    h = np.asarray(_lsh_tables()[0][0])
     clone = h / np.linalg.norm(h)  # dot(clone, h) > 0
     # hub: orthogonal direction + 1% along h -> same sign bucket,
     # cos(hub, clone) ~ 0.01
@@ -846,9 +851,7 @@ def test_embedding_star_keeps_member_pairs_reachable_above_cap(spark):
         (i, [float(x) for x in clone]) for i in range(1, n + 1)
     ]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    got = embedding_near_dup_pairs_lsh(
-        emb, threshold=0.9, n_planes=1, n_tables=1, dim=dim, max_bucket=40
-    ).collect()
+    got = embedding_near_dup_pairs_lsh(emb).collect()
     pairs = {(r.vec_a, r.vec_b): r.cos_sim for r in got}
     assert set(pairs) == {(0, i) for i in range(1, n + 1)}, sorted(pairs)[:5]
     # true cosines are FAR below threshold — and still emitted
@@ -861,7 +864,7 @@ def test_embedding_star_keeps_member_pairs_reachable_above_cap(spark):
     assert comp.select("component").distinct().count() == 1
 
 
-def test_embedding_near_dup_lsh_under_cap_chunked_gram_is_exact(spark):
+def test_embedding_near_dup_lsh_under_cap_chunked_gram_is_exact(spark, monkeypatch):
     """The r10 under-cap guard (VERDICT r9 item 3): a bucket below
     ``max_bucket`` but above ``gram_cap`` is scored as chunk-pair
     TILES across tasks instead of one O(bucket²) gram task. The tile
@@ -875,16 +878,17 @@ def test_embedding_near_dup_lsh_under_cap_chunked_gram_is_exact(spark):
     )
 
     n, dim = 90, 8
+    monkeypatch.setattr(similarity, "NEAR_DUP_COS", 0.9)
+    monkeypatch.setattr(similarity, "DIM", dim)
+    monkeypatch.setattr(similarity, "GRAM_CAP", 16)
     # distinct nonnegative vectors -> one bucket per table, varied cos
     emb = spark.range(n).selectExpr(
         "id AS vec_id",
         f"transform(sequence(0, {dim - 1}),"
         " d -> 0.2 + pmod(cast(id AS double) * (d + 3), 7.0)) AS embedding",
     )
-    chunked = embedding_near_dup_pairs_lsh(
-        emb, threshold=0.9, dim=dim, max_bucket=4096, gram_cap=16
-    ).collect()
-    exact = embedding_near_dup_pairs(emb, threshold=0.9).collect()
+    chunked = embedding_near_dup_pairs_lsh(emb).collect()
+    exact = embedding_near_dup_pairs(emb).collect()
     got = {(r.vec_a, r.vec_b): r.cos_sim for r in chunked}
     want = {(r.vec_a, r.vec_b): r.cos_sim for r in exact}
     # every vector shares the all-positive-sign bucket in every table,
@@ -892,7 +896,7 @@ def test_embedding_near_dup_lsh_under_cap_chunked_gram_is_exact(spark):
     assert got == want and len(want) > 50
 
 
-def test_substring_spans_hot_window_guard(spark):
+def test_substring_spans_hot_window_guard(spark, monkeypatch):
     """Degenerate corpus: one boilerplate 12-token span shared by all
     n docs makes every positional 5-gram window's df = n, so the
     unguarded h-equi-join emits O(n²) matches (12.5× measured on the
@@ -903,6 +907,7 @@ def test_substring_spans_hot_window_guard(spark):
     exact all-pairs output is unchanged."""
     from trading212_etl_spark.operators.dedup import substring_span_pairs
 
+    monkeypatch.setattr(dedup, "HOT_BUCKET_CAP", 30)
     n = 60
     # alpha-only span tokens: the corpus tokenizer splits digit-bearing
     # words, which would stretch the expected span length
@@ -914,14 +919,12 @@ def test_substring_spans_hot_window_guard(spark):
         f"concat('doc ', CAST(id AS STRING), ' prefix {span} suffix ',"
         " CAST(id AS STRING)) AS text",
     )
-    got = substring_span_pairs(
-        docs, min_span_tokens=10, max_window_df=30
-    ).collect()
+    got = substring_span_pairs(docs).collect()
     assert {(r.doc_a, r.doc_b) for r in got} == {(0, i) for i in range(1, n)}
     assert all(r.max_span_tokens == 14 for r in got)
     # under the cap: the full C(4,2) clique at the same span length
     few = docs.limit(4)
-    exact = substring_span_pairs(few, min_span_tokens=10, max_window_df=30)
+    exact = substring_span_pairs(few)
     rows = exact.collect()
     assert len(rows) == 6
     assert all(r.max_span_tokens == 14 for r in rows)
@@ -1028,13 +1031,16 @@ def test_guarded_ops_oracle_corpora_under_caps(spark):
 
     from trading212_etl_spark.operators.similarity import (
         _bands_arrow_udf,
-        _hyperplanes,
+        _lsh_tables,
     )
 
+    cap = dedup.HOT_BUCKET_CAP
     docs = load_table(spark, "/root/testdata/sf0.01", "documents")
-    # simhash: per-(band_idx, band_bits) bucket sizes, md5 oracle mode
-    sk = simhash(docs, hash_fn="md5")
-    width, mask = 48 // 4, (1 << 12) - 1
+    # simhash: per-(band_idx, band_bits) bucket sizes
+    sk = simhash(docs)
+    n_bands = dedup.SIMHASH_BANDS
+    width = dedup.SIMHASH_BITS // n_bands
+    mask = (1 << width) - 1
     banded = sk.select(
         F.explode(
             F.array(
@@ -1045,7 +1051,7 @@ def test_guarded_ops_oracle_corpora_under_caps(spark):
                         .bitwiseAND(F.lit(mask))
                         .alias("band_bits"),
                     )
-                    for i in range(4)
+                    for i in range(n_bands)
                 ]
             )
         ).alias("b")
@@ -1056,8 +1062,8 @@ def test_guarded_ops_oracle_corpora_under_caps(spark):
         .agg(F.max("count"))
         .first()[0]
     )
-    assert max_bucket <= 4096, (
-        f"simhash band bucket grew to {max_bucket} > 4096: the "
+    assert max_bucket <= cap, (
+        f"simhash band bucket grew to {max_bucket} > {cap}: the "
         f"dedup_simhash oracle's all-pairs expansion no longer matches "
         f"the engine's star fallback"
     )
@@ -1075,15 +1081,15 @@ def test_guarded_ops_oracle_corpora_under_caps(spark):
         ).alias("h")
     )
     max_df = win.groupBy("h").count().agg(F.max("count")).first()[0]
-    assert max_df <= 4096, (
-        f"5-gram window df grew to {max_df} > 4096: the "
+    assert max_df <= cap, (
+        f"5-gram window df grew to {max_df} > {cap}: the "
         f"dedup_substring_spans oracle no longer matches the engine's "
         f"hot-window star"
     )
-    # embedding near-dup LSH: per-(tbl, bkt) bucket sizes with the
-    # entry's default 8 tables x 4 planes over dim 64
+    # embedding near-dup LSH: per-(tbl, bkt) bucket sizes under the
+    # entry's hyperplane tables
     emb = load_table(spark, "/root/testdata/sf0.01", "embeddings")
-    tables = [_hyperplanes(64, 4, seed=42 + t) for t in range(8)]
+    tables = _lsh_tables()
     b = emb.select(
         F.posexplode(
             _bands_arrow_udf(tables)(
@@ -1092,8 +1098,8 @@ def test_guarded_ops_oracle_corpora_under_caps(spark):
         ).alias("tbl", "bkt")
     )
     max_eb = b.groupBy("tbl", "bkt").count().agg(F.max("count")).first()[0]
-    assert max_eb <= 4096, (
-        f"embedding LSH bucket grew to {max_eb} > 4096: the "
+    assert max_eb <= cap, (
+        f"embedding LSH bucket grew to {max_eb} > {cap}: the "
         f"embedding_near_dup_lsh oracle no longer matches the engine's "
         f"star fallback"
     )
@@ -1183,8 +1189,8 @@ def test_pairs_top_k_bound_keeps_clique_connectivity(spark):
             "doc_id long, text string",
         )
     )
-    full = jaccard_pairs(docs, threshold=0.5, n=3).collect()
-    bounded = jaccard_pairs(docs, threshold=0.5, n=3, top_k_per_doc=1).collect()
+    full = jaccard_pairs(docs, threshold=0.5).collect()
+    bounded = jaccard_pairs(docs, threshold=0.5, top_k_per_doc=1).collect()
     full_set = {(r.doc_a, r.doc_b): r.jaccard for r in full}
     b_set = {(r.doc_a, r.doc_b): r.jaccard for r in bounded}
     assert len(full_set) == n * (n - 1) // 2  # the quadratic clique
@@ -1241,7 +1247,7 @@ def test_pairs_top_k_bounds_candidate_generation(spark):
 
     # (a) pruning bites: hub candidates are a strict, linear subset of
     # the quadratic pair listing (C(40,2)+C(25,2) = 1080 true pairs)
-    sh = _shingle_sets(docs, 3, "doc_id")
+    sh = _shingle_sets(docs)
     n_cand = _hub_candidate_pairs(sh, hubs=8).count()
     assert n_cand < 1080, n_cand
     # hub edges + successor edges: ≤ 2·h per member — O(h·n), not O(n²)
@@ -1250,14 +1256,14 @@ def test_pairs_top_k_bounds_candidate_generation(spark):
     # (b) kept top-k pairs unchanged vs the unbounded path + output
     # truncation, values included
     k = 2
-    full = jaccard_pairs(docs, threshold=0.5, n=3)
+    full = jaccard_pairs(docs, threshold=0.5)
     expect = {
         (r.doc_a, r.doc_b): r.jaccard
         for r in _top_k_per_doc(full, k, "jaccard").collect()
     }
     with _w.catch_warnings(record=True) as caught:
         _w.simplefilter("always")
-        got_df = jaccard_pairs(docs, threshold=0.5, n=3, top_k_per_doc=k)
+        got_df = jaccard_pairs(docs, threshold=0.5, top_k_per_doc=k)
         got = {(r.doc_a, r.doc_b): r.jaccard for r in got_df.collect()}
     assert got == expect
     # (c) the truncation is LOUD: a warning names the bound
@@ -1267,16 +1273,14 @@ def test_pairs_top_k_bounds_candidate_generation(spark):
     c_expect = {
         (r.doc_a, r.doc_b): r.max_containment
         for r in _top_k_per_doc(
-            containment_pairs(docs, threshold=0.5, n=3),
+            containment_pairs(docs, threshold=0.5, top_k_per_doc=None),
             k,
             "max_containment",
         ).collect()
     }
     c_got = {
         (r.doc_a, r.doc_b): r.max_containment
-        for r in containment_pairs(
-            docs, threshold=0.5, n=3, top_k_per_doc=k
-        ).collect()
+        for r in containment_pairs(docs, threshold=0.5, top_k_per_doc=k).collect()
     }
     assert c_got == c_expect
 
@@ -1294,12 +1298,12 @@ def test_bloom_no_false_negatives_and_bounded_fp(spark):
     members = spark.range(0, 1000).select(
         F.xxhash64(F.col("id"), F.lit("member")).alias("key")
     )
-    bloom = bloom_build(members, "key", bits_log2=18, k=3)
-    assert bloom_maybe_contains(members, bloom, "key", 18, 3).count() == 1000
+    bloom = bloom_build(members, "key")
+    assert bloom_maybe_contains(members, bloom, "key").count() == 1000
     outsiders = spark.range(0, 20000).select(
         F.xxhash64(F.col("id"), F.lit("outsider")).alias("key")
     )
-    fp = bloom_maybe_contains(outsiders, bloom, "key", 18, 3).count()
+    fp = bloom_maybe_contains(outsiders, bloom, "key").count()
     # analytic FP at m=2^18, n=1000, k=3 is ~2e-6; 1% is a loose roof
     assert fp <= 200, f"false-positive rate {fp/20000} way above bound"
 
@@ -1309,6 +1313,10 @@ def test_decontaminate_bloom_matches_exact_and_prunes(spark, sf_dir):
     BIT-IDENTICAL to the plain exact pass, and the pre-filter must
     actually discard most of the corpus-side probe rows."""
     from trading212_etl_spark.operators.dedup import (
+        _distinct_shingle_hashes,
+        _shingle_hashes,
+        bloom_build,
+        bloom_maybe_contains,
         decontaminate,
         decontaminate_bloom,
     )
@@ -1317,20 +1325,20 @@ def test_decontaminate_bloom_matches_exact_and_prunes(spark, sf_dir):
     corpus = docs.filter(F.col("doc_id") % 101 != 0)
     bench = docs.filter(F.col("doc_id") % 101 == 0)
     exact = {tuple(r) for r in decontaminate(corpus, bench).collect()}
-    audit: dict = {}
-    got = {
-        tuple(r)
-        for r in decontaminate_bloom(corpus, bench, audit=audit).collect()
-    }
+    got = {tuple(r) for r in decontaminate_bloom(corpus, bench).collect()}
     assert got == exact
     assert exact, "split should plant some contamination"
     # the probe side is the whole corpus's shingle instances; the
     # maybe-set should be a small fraction (true hits + ~0 Bloom FPs)
-    assert audit["maybe_rows"] < 0.2 * audit["probe_rows"], audit
+    probe = _shingle_hashes(corpus)
+    bloom = bloom_build(_distinct_shingle_hashes(bench), "shingle")
+    probe_rows = probe.count()
+    maybe_rows = bloom_maybe_contains(probe, bloom, "shingle").count()
+    assert maybe_rows < 0.2 * probe_rows, (maybe_rows, probe_rows)
 
 
 def test_incremental_minhash_sink_estimator(spark, sf_dir, tmp_path):
-    """Incremental-vs-snapshot dedup (xxhash64 production mode): the
+    """Incremental-vs-snapshot dedup (md5 signatures): the
     persisted-signature estimator must (a) find every strong bipartite
     near-dup (exact J >= 0.8 — banding and the estimator are both
     near-certain there), (b) stay calibrated against exact Jaccard on
@@ -1346,7 +1354,7 @@ def test_incremental_minhash_sink_estimator(spark, sf_dir, tmp_path):
     new = docs.filter(F.col("doc_id") % 10 == 0)
     path = str(tmp_path / "sink")
     write_signature_sink(snapshot, path)
-    inc = incremental_minhash_pairs(new, path, threshold=0.5).collect()
+    inc = incremental_minhash_pairs(new, path).collect()
     assert inc, "corpus plants cross-split near-dups"
     new_ids = {r.doc_id for r in new.select("doc_id").collect()}
     old_ids = {r.doc_id for r in snapshot.select("doc_id").collect()}

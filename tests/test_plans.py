@@ -768,10 +768,11 @@ def test_connected_components_frontier_both_broadcast_arms(spark, monkeypatch):
     shrinking frontier — the labels must still converge to the exact
     closure in BOTH regimes (-1 forces the shuffle-join arm, the
     default forces the broadcast arm at this size), and exhausting
-    max_iter must stay a loud failure."""
+    the round budget must stay a loud failure."""
     import pytest
     from pyspark.sql import functions as F
 
+    from trading212_etl_spark.operators import dedup
     from trading212_etl_spark.operators.dedup import connected_components
 
     hinted = []
@@ -796,8 +797,10 @@ def test_connected_components_frontier_both_broadcast_arms(spark, monkeypatch):
             }
             assert got == want, threshold
             assert bool(hinted) == (arm == "broadcast"), threshold
-            with pytest.raises(RuntimeError, match="did not converge"):
-                connected_components(pairs, max_iter=1)
+            with monkeypatch.context() as mp:
+                mp.setattr(dedup, "CC_MAX_ROUNDS", 1)
+                with pytest.raises(RuntimeError, match="did not converge"):
+                    connected_components(pairs)
         finally:
             spark.conf.set(key, old)
 

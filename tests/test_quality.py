@@ -136,9 +136,7 @@ def test_entity_pairs_blocked_pairs_and_blocks(spark):
     )
     pairs = {
         (r["doc_a"], r["doc_b"])
-        for r in entity_pairs_blocked(
-            ents, "id", "name", ["country"], max_edit=2
-        ).collect()
+        for r in entity_pairs_blocked(ents, "id", "name", ["country"]).collect()
     }
     # (1,2), (1,5) and (2,5) ("Crop"→"Co" = delete r, p) are all
     # within 2 edits; 3 is blocked apart despite the identical name;
@@ -161,7 +159,7 @@ def test_entity_resolution_clusters_are_transitive(spark):
         ],
         "id INT, name STRING, country STRING",
     )
-    pairs = entity_pairs_blocked(ents, "id", "name", ["country"], max_edit=2)
+    pairs = entity_pairs_blocked(ents, "id", "name", ["country"])
     got = {
         (r["doc_id"], r["component"])
         for r in connected_components(pairs).collect()
@@ -257,18 +255,20 @@ def test_bm25_degenerate_uniform_corpus(spark):
     assert out["score_ppm"].nunique() == 1
 
 
-def test_pq_adc_duplicate_vectors_tie_deterministically(spark):
+def test_pq_adc_duplicate_vectors_tie_deterministically(spark, monkeypatch):
     """Duplicate embeddings produce identical codes and identical ADC
     distances; the top-k must break those ties by corpus_id — run
     twice and require byte-identical output (the determinism contract
     every registry entry carries)."""
     from pyspark.sql import functions as F
 
+    from trading212_etl_spark.operators import similarity
     from trading212_etl_spark.operators.similarity import (
         pq_adc_topk,
         pq_codebooks_from_data,
     )
 
+    monkeypatch.setattr(similarity, "PQ_TOPK", 5)
     base = spark.range(40).selectExpr(
         "id AS vec_id",
         # only 4 distinct vectors, each repeated 10x
@@ -277,12 +277,12 @@ def test_pq_adc_duplicate_vectors_tie_deterministically(spark):
     )
     cbs = pq_codebooks_from_data(base)
     a = (
-        pq_adc_topk(base, base.filter(F.col("vec_id") < 2), k=5, codebooks=cbs)
+        pq_adc_topk(base, base.filter(F.col("vec_id") < 2), cbs)
         .orderBy("query_id", "rank")
         .toPandas()
     )
     b = (
-        pq_adc_topk(base, base.filter(F.col("vec_id") < 2), k=5, codebooks=cbs)
+        pq_adc_topk(base, base.filter(F.col("vec_id") < 2), cbs)
         .orderBy("query_id", "rank")
         .toPandas()
     )
@@ -293,7 +293,7 @@ def test_pq_adc_duplicate_vectors_tie_deterministically(spark):
         assert list(same["corpus_id"]) == sorted(same["corpus_id"])
 
 
-def test_entity_pairs_blocked_hot_block_guard(spark):
+def test_entity_pairs_blocked_hot_block_guard(spark, monkeypatch):
     """A block of n near-identical records emits C(n,2) edges on the
     exact path — the 125x probe OOM'd connected-components on exactly
     that clique mass (VERDICT-r10 finding). Over ``max_block`` the op
@@ -304,9 +304,11 @@ def test_entity_pairs_blocked_hot_block_guard(spark):
     join semantics)."""
     from pyspark.sql import functions as F
 
+    from trading212_etl_spark.operators import dedup
     from trading212_etl_spark.operators.dedup import connected_components
     from trading212_etl_spark.operators.quality import entity_pairs_blocked
 
+    monkeypatch.setattr(dedup, "HOT_BUCKET_CAP", 40)
     n = 60
     ents = spark.range(n).selectExpr(
         "id",
@@ -319,9 +321,7 @@ def test_entity_pairs_blocked_hot_block_guard(spark):
             "id", "'Null#Key' AS name", "CAST(NULL AS INT) AS country"
         )
     )
-    got = entity_pairs_blocked(
-        ents, "id", "name", ["country"], max_edit=2, max_block=40
-    ).collect()
+    got = entity_pairs_blocked(ents, "id", "name", ["country"]).collect()
     pairs = {(r.doc_a, r.doc_b) for r in got}
     # star: hub (id 0) to every member within edit 2 - everyone except
     # the far name; null-key rows never pair
@@ -339,13 +339,11 @@ def test_entity_pairs_blocked_hot_block_guard(spark):
         "id", "concat('Acme#00', CAST(id AS STRING)) AS name",
         "CAST(1 AS INT) AS country",
     )
-    exact = entity_pairs_blocked(
-        few, "id", "name", ["country"], max_edit=2, max_block=40
-    )
+    exact = entity_pairs_blocked(few, "id", "name", ["country"])
     assert exact.count() == 10  # C(5,2)
 
 
-def test_entity_pairs_blocked_null_name_hub(spark):
+def test_entity_pairs_blocked_null_name_hub(spark, monkeypatch):
     """ADVICE r10: if the over-cap block's min-id record has a NULL
     name, levenshtein(NULL, x) is NULL and the star filter drops
     EVERY row — the whole block silently emits zero edges. The hub
@@ -353,8 +351,10 @@ def test_entity_pairs_blocked_null_name_hub(spark):
     still yields its star; a block whose names are all null emits
     nothing (matching exact-path semantics, where null names never
     satisfy the edit filter)."""
+    from trading212_etl_spark.operators import dedup
     from trading212_etl_spark.operators.quality import entity_pairs_blocked
 
+    monkeypatch.setattr(dedup, "HOT_BUCKET_CAP", 40)
     n = 50
     ents = spark.range(n).selectExpr(
         "id",
@@ -362,9 +362,7 @@ def test_entity_pairs_blocked_null_name_hub(spark):
         "CASE WHEN id = 0 THEN NULL ELSE concat('Acme#00', CAST(id % 2 AS STRING)) END AS name",
         "CAST(1 AS INT) AS country",
     )
-    got = entity_pairs_blocked(
-        ents, "id", "name", ["country"], max_edit=2, max_block=40
-    ).collect()
+    got = entity_pairs_blocked(ents, "id", "name", ["country"]).collect()
     pairs = {(r.doc_a, r.doc_b) for r in got}
     # hub must skip the null-name id 0 and be id 1; the null-name row
     # itself never pairs (levenshtein NULL), everything else stars to 1
@@ -375,8 +373,6 @@ def test_entity_pairs_blocked_null_name_hub(spark):
         "id", "CAST(NULL AS STRING) AS name", "CAST(1 AS INT) AS country"
     )
     assert (
-        entity_pairs_blocked(
-            all_null, "id", "name", ["country"], max_edit=2, max_block=40
-        ).count()
+        entity_pairs_blocked(all_null, "id", "name", ["country"]).count()
         == 0
     )

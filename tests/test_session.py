@@ -57,9 +57,9 @@ def test_input_bytes_counts_parquet_only(tmp_path):
 
 
 def test_registry_call_keeps_policy_width(spark, sf_dir):
-    """A get_session(shuffle_partitions=n) session, then a registry
-    call: the conf ends at the policy value for the session's cores
-    and the corpus, and another call does not move it."""
+    """A get_session session, then a registry call: the conf ends at
+    the policy value for the session's cores and the corpus, and
+    another call does not move it."""
     want = shuffle_partitions_for(
         spark.sparkContext.defaultParallelism, input_bytes(sf_dir)
     )

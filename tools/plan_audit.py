@@ -33,7 +33,7 @@ def main() -> int:
     sys.path.insert(0, os.path.join(REPO, "tests"))
     from test_plans import NESTED_LOOP_BY_DESIGN, window_frame_flags
 
-    spark = get_session(app_name="plan_audit", shuffle_partitions=8)
+    spark = get_session(app_name="plan_audit")
     pin_oracle_confs(spark)
     sf = "/root/testdata/sf0.001"
 

@@ -21,17 +21,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..partitioning import freeze_partitions, materialize
+from ..partitioning import freeze_partitions
 
 
-def pagerank_micro(
-    edges: DataFrame,
-    iterations: int = 3,
-    damping_bp: int = 8500,
-    init_micro: int = 1_000_000,
-) -> DataFrame:
+def pagerank_micro(edges: DataFrame) -> DataFrame:
     """Weighted PageRank in exact integer micro-units over an edge
-    list ``(src, dst, weight)``.
+    list ``(src, dst, weight)``: 3 rounds at damping 0.85
+    (``damping_bp`` 8500), ranks starting at ``init_micro`` = 10^6.
 
     Per iteration: every node sends ``floor(rank * w / out_weight)``
     micro-units down each out-edge; a node's next rank is
@@ -45,12 +41,12 @@ def pagerank_micro(
     Scale shape (100 TB of edges): the per-round cost is one shuffle —
     ``groupBy(dst)`` over the contribution stream; the rank frame is
     |V|-sized (domains, not documents) and joins onto the edge list
-    broadcast when it fits, hash otherwise. ``iterations`` is a small
-    constant (rank stabilizes in ~10 rounds at damping 0.85), and the
-    rank lineage is cut per round by the conf-driven materialization
-    policy (same lever as connected components) so the plan doesn't
-    deepen geometrically.
+    broadcast when it fits, hash otherwise. The round count is a
+    small constant (rank stabilizes in ~10 rounds at damping 0.85),
+    and each round's ranks are pinned lazily so no round's work
+    repeats.
     """
+    iterations, damping_bp, init_micro = 3, 8500, 1_000_000
     # Pin the edge list FIRST: four derivations read it (out-weights,
     # both node-set halves, the annotated send list), and without the
     # pin each one re-executes the caller's edge-build plan — measured
@@ -73,7 +69,7 @@ def pagerank_micro(
     teleport = (10_000 - damping_bp) * init_micro // 10_000
 
     ranks = nodes.select("node", F.lit(init_micro).alias("rank_micro"))
-    for it in range(iterations):
+    for _ in range(iterations):
         contrib = (
             sendable.join(
                 # no explicit broadcast hint: letting AQE choose the
@@ -105,11 +101,7 @@ def pagerank_micro(
         )
         # Lazy pin per round: each round's broadcast evaluates the
         # previous round's CACHED frame, so no work repeats and no
-        # eager checkpoint job runs. The logical plan still nests one
-        # level per round — cut it with a real truncating materialize
-        # every 5 rounds so long convergence runs (10+) don't grow
-        # driver-side planning cost unboundedly.
-        ranks = (
-            materialize(nxt) if (it + 1) % 5 == 0 else freeze_partitions(nxt)
-        )
+        # eager checkpoint job runs. The logical plan nests one level
+        # per round, which three rounds keep shallow.
+        ranks = freeze_partitions(nxt)
     return ranks

@@ -189,11 +189,9 @@ def entity_pairs_blocked(
     id_col: str,
     name_col: str,
     block_cols: list[str],
-    max_edit: int = 2,
-    max_block: int = 4096,
 ) -> DataFrame:
     """Entity-resolution candidate pairs: blocked self-join +
-    edit-distance filter.
+    edit-distance filter (Levenshtein ≤ ``max_edit`` = 2).
 
     The classic ER quadratic trap is the all-pairs name comparison;
     blocking turns it into an equi-self-join on cheap deterministic
@@ -209,7 +207,8 @@ def entity_pairs_blocked(
     (a 125-copy name block → ~70k edges per original entity →
     1B-edge graph). Block size + hub (min id) come from ONE window
     over the keyed frame, whose (block) exchange the self-join
-    reuses; blocks ≤ ``max_block`` take the exact all-pairs path,
+    reuses; blocks ≤ ``max_block`` (dedup.HOT_BUCKET_CAP) take the
+    exact all-pairs path,
     larger blocks emit a STAR to the block's min-id record with true
     hub↔member levenshtein — O(block) edges. Above the cap recall is
     HUB-REACHABLE only (a member within ``max_edit`` of another
@@ -223,6 +222,9 @@ def entity_pairs_blocked(
     """
     from pyspark.sql import Window
 
+    from . import dedup
+
+    max_edit, max_block = 2, dedup.HOT_BUCKET_CAP
     bcols = [f"__b_{c}" for c in block_cols]
     keyed = entities.select(
         F.col(id_col).alias("__id"),

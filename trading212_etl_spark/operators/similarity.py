@@ -24,6 +24,39 @@ from pyspark.sql import functions as F
 
 from ..partitioning import fan_out, freeze_partitions
 from ..session import drop_zip_importers
+from . import dedup
+
+# Every value below is shared with the DuckDB oracles (registry/) or
+# with tests, which monkeypatch it; functions read them at call time,
+# and Python kernels capture them as locals, never as package globals.
+
+# Embedding width: the LSH hyperplanes and the PQ / kNN oracles' column
+# lists are built for it
+DIM = 64
+# Random-hyperplane LSH: LSH_TABLES tables of LSH_PLANES sign bits;
+# table t's planes come from seed LSH_SEED + t
+LSH_PLANES = 4
+LSH_TABLES = 8
+LSH_SEED = 42
+# Decimal places of every emitted similarity and distance
+ROUND_DP = 4
+# IVF coarse quantizer: cells, and the cells each query probes
+IVF_CELLS = 8
+IVF_PROBES = 3
+# Embedding near-dup cosine cut; the exact all-pairs form scores only
+# vectors with vec_id < NEAR_DUP_MAX_ID
+NEAR_DUP_COS = 0.4
+NEAR_DUP_MAX_ID = 256
+# Largest exact gram tile (rows) one embedding_near_dup_pairs_lsh task
+# scores
+GRAM_CAP = 512
+# Product quantization: subspaces, centroids per subspace, ADC top-k
+PQ_SUBSPACES = 8
+PQ_CENTROIDS = 16
+PQ_TOPK = 10
+# kNN outliers: reference vectors, and which nearest one is scored
+KNN_REFS = 32
+KNN_K = 4
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -47,7 +80,7 @@ def cosine(a: Column, b: Column) -> Column:
 
 
 def cosine_topk_bruteforce(
-    corpus: DataFrame, queries: DataFrame, k: int, round_dp: int = 4
+    corpus: DataFrame, queries: DataFrame, k: int
 ) -> DataFrame:
     """Exact cosine top-k for each query vector against the corpus.
 
@@ -74,7 +107,7 @@ def cosine_topk_bruteforce(
         .select(
             "query_id",
             "corpus_id",
-            F.round(cosine(F.col("q_emb"), F.col("c_emb")), round_dp).alias("cos_sim"),
+            F.round(cosine(F.col("q_emb"), F.col("c_emb")), ROUND_DP).alias("cos_sim"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(
@@ -87,13 +120,17 @@ def cosine_topk_bruteforce(
     )
 
 
-def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
-    """Deterministic pseudo-random unit-free hyperplanes (fixed seed →
-    reproducible buckets across runs and engines)."""
-    import numpy as np
-
-    rng = np.random.default_rng(seed)
-    return rng.standard_normal((n_planes, dim)).tolist()
+def _lsh_tables() -> list[list[list[float]]]:
+    """The LSH_TABLES sets of LSH_PLANES pseudo-random hyperplanes over
+    DIM dims: table t draws from seed LSH_SEED + t, so buckets are
+    reproducible across runs and engines (the DuckDB oracles inline
+    the same planes)."""
+    return [
+        np.random.default_rng(LSH_SEED + t)
+        .standard_normal((LSH_PLANES, DIM))
+        .tolist()
+        for t in range(LSH_TABLES)
+    ]
 
 
 def _bands_arrow_udf(tables: list[list[list[float]]]):
@@ -159,16 +196,9 @@ def _pair_cosine_arrow_udf():
     return pair_cos
 
 
-def cosine_topk_lsh(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int,
-    n_planes: int = 4,
-    n_tables: int = 8,
-    dim: int = 64,
-    round_dp: int = 4,
-) -> DataFrame:
-    """Approximate cosine top-k: multi-table random-hyperplane LSH.
+def cosine_topk_lsh(corpus: DataFrame, queries: DataFrame, k: int) -> DataFrame:
+    """Approximate cosine top-k: multi-table random-hyperplane LSH
+    (``n_planes`` = LSH_PLANES, ``n_tables`` = LSH_TABLES).
 
     Per table, same-bucket probability for angle θ is (1-θ/π)^n_planes
     — a single table's recall collapses on near-orthogonal corpora, so
@@ -190,7 +220,7 @@ def cosine_topk_lsh(
     """
     from pyspark.sql import Window
 
-    tables = [_hyperplanes(dim, n_planes, seed=42 + t) for t in range(n_tables)]
+    tables = _lsh_tables()
     # materialized once: three consumers (banding + candidate-side
     # embedding lookup)
     v = freeze_partitions(fan_out(corpus).select(
@@ -221,7 +251,7 @@ def cosine_topk_lsh(
         .select(
             "query_id",
             "corpus_id",
-            F.round(pair_cos(F.col("q_emb"), F.col("emb")), round_dp).alias("cos_sim"),
+            F.round(pair_cos(F.col("q_emb"), F.col("emb")), ROUND_DP).alias("cos_sim"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(
@@ -251,9 +281,9 @@ def _cent_dots_expr(emb_sql: str, cents: list[list[float]]) -> Column:
     return F.expr(f"array({dots})")
 
 
-def _data_centroids(corpus: DataFrame, n_centroids: int) -> list[list[float]]:
-    """Coarse-quantizer centroids = the first ``n_centroids`` corpus
-    vectors (by vec_id). Data-derived cells follow the embedding
+def _data_centroids(corpus: DataFrame) -> list[list[float]]:
+    """Coarse-quantizer centroids = the first IVF_CELLS corpus vectors
+    (by vec_id). Data-derived cells follow the embedding
     distribution — measured 0.93 recall at n_probe=3/8 on the test
     corpus vs 0.45 for fixed random Gaussians, which land near-
     orthogonal to every data vector in high dim. A production build
@@ -262,25 +292,19 @@ def _data_centroids(corpus: DataFrame, n_centroids: int) -> list[list[float]]:
     rows = (
         corpus.select("vec_id", F.col("embedding").cast("array<double>").alias("e"))
         .orderBy("vec_id")
-        .limit(n_centroids)
+        .limit(IVF_CELLS)
         .collect()
     )
     return [r.e for r in rows]
 
 
-def cosine_topk_ivf(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int,
-    n_centroids: int = 8,
-    n_probe: int = 3,
-    round_dp: int = 4,
-) -> DataFrame:
+def cosine_topk_ivf(corpus: DataFrame, queries: DataFrame, k: int) -> DataFrame:
     """Approximate cosine top-k via IVF (inverted-file) partitioning.
 
-    Corpus vectors are assigned to their nearest centroid cell (argmax
-    centroid dot product — one linear pass); each query probes only
-    its ``n_probe`` nearest cells. The candidate set is the union of
+    Corpus vectors are assigned to their nearest of ``n_centroids`` =
+    IVF_CELLS centroid cells (argmax centroid dot product — one linear
+    pass); each query probes only its ``n_probe`` = IVF_PROBES nearest
+    cells. The candidate set is the union of
     probed cells (~n_probe/n_centroids of the corpus), scored exactly.
 
     Plan shape: cell assignment is a pure projection; the probe is an
@@ -290,7 +314,7 @@ def cosine_topk_ivf(
     tests (rows-only op — cells are seed-dependent)."""
     from pyspark.sql import Window
 
-    cents = _data_centroids(corpus, n_centroids)
+    cents = _data_centroids(corpus)
 
     # dots[i] per centroid, materialized once per row (projection
     # boundary — same CSE rule as the tokenizer, see operators/textual).
@@ -335,7 +359,7 @@ def cosine_topk_ivf(
                         lambda s: s["idx"],
                     ),
                     1,
-                    n_probe,
+                    IVF_PROBES,
                 )
             ),
         )
@@ -344,14 +368,14 @@ def cosine_topk_ivf(
     )
     # no distinct needed: each corpus vector is assigned to exactly ONE
     # cell (argmax), so a (query, corpus) pair meets at most once even
-    # though a query probes n_probe cells — unlike multi-table LSH.
+    # though a query probes IVF_PROBES cells — unlike multi-table LSH.
     scored = (
         c.join(F.broadcast(q), "cell")
         .filter(F.col("corpus_id") != F.col("query_id"))
         .select(
             "query_id",
             "corpus_id",
-            F.round(cosine(F.col("q_emb"), F.col("c_emb")), round_dp).alias("cos_sim"),
+            F.round(cosine(F.col("q_emb"), F.col("c_emb")), ROUND_DP).alias("cos_sim"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(
@@ -364,17 +388,9 @@ def cosine_topk_ivf(
     )
 
 
-def embedding_near_dup_pairs_lsh(
-    corpus: DataFrame,
-    threshold: float = 0.4,
-    n_planes: int = 4,
-    n_tables: int = 8,
-    dim: int = 64,
-    round_dp: int = 4,
-    max_bucket: int = 4096,
-    gram_cap: int = 512,
-) -> DataFrame:
-    """Embedding near-dup pairs, LSH-bucketed — the 100 TB path for
+def embedding_near_dup_pairs_lsh(corpus: DataFrame) -> DataFrame:
+    """Embedding near-dup pairs (cosine ≥ ``threshold`` =
+    NEAR_DUP_COS), LSH-bucketed — the 100 TB path for
     :func:`embedding_near_dup_pairs`: candidate pairs must co-bucket
     in at least one hyperplane table (one (tbl, bkt) groupBy shuffle),
     then exact cosine verifies inside each bucket. Never a cross join;
@@ -383,7 +399,9 @@ def embedding_near_dup_pairs_lsh(
     floor)."""
     import numpy as _np
 
-    tables = [_hyperplanes(dim, n_planes, seed=42 + t) for t in range(n_tables)]
+    tables = _lsh_tables()
+    threshold, round_dp = NEAR_DUP_COS, ROUND_DP
+    max_bucket, gram_cap = dedup.HOT_BUCKET_CAP, GRAM_CAP
     # Within-bucket verification: the banded rows KEEP their embedding
     # through the (tbl, bkt) shuffle — n_tables copies of the corpus —
     # and each bucket is scored by numpy gram matmuls; only survivors
@@ -398,7 +416,8 @@ def embedding_near_dup_pairs_lsh(
     # query-side candidates ARE selective.
     #
     # Two-level scale guard:
-    # - a bucket over ``max_bucket`` rows falls back to a STAR against
+    # - a bucket over ``max_bucket`` (dedup.HOT_BUCKET_CAP) rows falls
+    #   back to a STAR against
     #   the bucket's min-id vector — O(bucket·dim) FLOPs instead of
     #   the O(bucket²·dim) gram. Star edges are emitted UNFILTERED
     #   (VERDICT r10 item 2): every hub↔member row carries its true
@@ -410,7 +429,8 @@ def embedding_near_dup_pairs_lsh(
     #   by construction an over-cap star edge. The full pairwise
     #   clique is still traded for boundedness, as on the MinHash
     #   side.
-    # - a bucket under the cap but over ``gram_cap`` rows previously
+    # - a bucket under the cap but over ``gram_cap`` (GRAM_CAP) rows
+    #   previously
     #   ran its exact gram — all O(bucket²) pair construction — in ONE
     #   task (r9 bucket-skew sweep: 4.49× at a 2 470-vector bucket).
     #   Such buckets are now CHUNKED: rows round-robin into
@@ -572,13 +592,13 @@ def embedding_near_dup_pairs_lsh(
     )
 
 
-def embedding_near_dup_pairs(
-    corpus: DataFrame, threshold: float = 0.95, round_dp: int = 4, max_id: int | None = None
-) -> DataFrame:
+def embedding_near_dup_pairs(corpus: DataFrame) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (vec_a < vec_b,
-    cos ≥ threshold) — exact form; the LSH bucketing above is the
-    scale path (bucket first, verify within buckets)."""
-    base = corpus if max_id is None else corpus.filter(F.col("vec_id") < max_id)
+    cos ≥ NEAR_DUP_COS) among the vectors with vec_id <
+    NEAR_DUP_MAX_ID — exact form, a bounded O(n²) verification slice;
+    the LSH bucketing above is the scale path (bucket first, verify
+    within buckets)."""
+    base = corpus.filter(F.col("vec_id") < NEAR_DUP_MAX_ID)
     v = base.select(
         F.col("vec_id"), F.col("embedding").cast("array<double>").alias("emb")
     )
@@ -589,20 +609,16 @@ def embedding_near_dup_pairs(
         pairs.select(
             "vec_a",
             "vec_b",
-            F.round(cosine(F.col("emb_a"), F.col("emb_b")), round_dp).alias("cos_sim"),
+            F.round(cosine(F.col("emb_a"), F.col("emb_b")), ROUND_DP).alias("cos_sim"),
         )
-        .filter(F.col("cos_sim") >= threshold)
+        .filter(F.col("cos_sim") >= NEAR_DUP_COS)
     )
 
 
-def kmeans_lloyd_step(
-    corpus: DataFrame,
-    n_centroids: int = 8,
-    emb_col: str = "embedding",
-) -> DataFrame:
+def kmeans_lloyd_step(corpus: DataFrame) -> DataFrame:
     """One distributed Lloyd iteration of spherical k-means over an
     embedding column: assign every vector to its highest-dot-product
-    centroid (the IVF cell-assignment rule — ties break to the lowest
+    of IVF_CELLS centroids (the IVF cell-assignment rule — ties break to the lowest
     centroid index), then recompute each centroid as the per-dimension
     mean of its members. Output: one row per (cell, dim) —
     ``(cell, dim, n_members, centroid_val)``; callers re-normalize and
@@ -625,12 +641,12 @@ def kmeans_lloyd_step(
     the shuffle carries (cell, dim, partial decimal sum, partial
     count), a few thousand rows per executor. One Lloyd round = one
     shuffle; the driver never sees a vector (the next round's
-    centroids are n_centroids·d rows, ML-init scale).
+    centroids are IVF_CELLS·d rows, ML-init scale).
     """
-    cents = _data_centroids(corpus, n_centroids)
+    cents = _data_centroids(corpus)
     assigned = (
         fan_out(corpus)
-        .select(F.col(emb_col).cast("array<double>").alias("emb"))
+        .select(F.col("embedding").cast("array<double>").alias("emb"))
         .withColumn("__dots", _cent_dots_expr("emb", cents))
         .withColumn(
             "cell",
@@ -651,7 +667,7 @@ def kmeans_lloyd_step(
     )
 
 
-def quantize_int8(corpus: DataFrame, round_dp: int = 6) -> DataFrame:
+def quantize_int8(corpus: DataFrame) -> DataFrame:
     """Per-vector symmetric int8 quantization of the embedding column:
     scale = max(|x|)/127, q_i = round(x_i·127/max(|x|)) — the standard
     storage/bandwidth reduction for a 100 TB embedding store (4×
@@ -659,7 +675,7 @@ def quantize_int8(corpus: DataFrame, round_dp: int = 6) -> DataFrame:
 
     Pure projection (two higher-order passes over a 64-wide array per
     row, no shuffle, no Python); emitted scale is rounded for oracle
-    parity, the int codes are exact. All-zero vectors quantize to zero
+    parity (6 dp), the int codes are exact. All-zero vectors quantize to zero
     codes with scale 0 rather than dividing by zero.
     """
     # __mx is materialized as its own projection BEFORE the quantize
@@ -685,13 +701,13 @@ def quantize_int8(corpus: DataFrame, round_dp: int = 6) -> DataFrame:
         .select(
             "vec_id",
             "label",
-            F.round(m / 127, round_dp).alias("scale"),
+            F.round(m / 127, 6).alias("scale"),
             q.alias("qvec"),
         )
     )
 
 
-def pca_power_iteration(emb: DataFrame, vec_col: str = "embedding") -> DataFrame:
+def pca_power_iteration(emb: DataFrame) -> DataFrame:
     """One power-iteration step toward the corpus's top principal
     direction: v1 = X^T (X v0), with the deterministic alternating
     start vector v0 = (+1, -1, +1, ...) — the distributed kernel
@@ -718,7 +734,7 @@ def pca_power_iteration(emb: DataFrame, vec_col: str = "embedding") -> DataFrame
     dot (the explode happens after the per-row scalar is computed).
     """
     xq = F.transform(
-        F.col(vec_col), lambda v: F.floor(v.cast("double") * 1_000_000).cast("long")
+        F.col("embedding"), lambda v: F.floor(v.cast("double") * 1_000_000).cast("long")
     )
     signed = F.transform(
         xq, lambda v, i: F.when(i % 2 == 0, v).otherwise(-v)
@@ -738,29 +754,7 @@ def pca_power_iteration(emb: DataFrame, vec_col: str = "embedding") -> DataFrame
     )
 
 
-def pq_codebooks(
-    dim: int = 64, m: int = 8, k: int = 16, seed: int = 7
-) -> list[list[list[float]]]:
-    """Deterministic product-quantization codebooks: ``m`` subspaces ×
-    ``k`` centroids × ``dim/m`` dims, seeded per subspace (fixed seed →
-    identical codebooks across runs and engines, the _hyperplanes
-    convention). Production swaps these for per-subspace k-means
-    centroids (kmeans_step is the update); assignment below is
-    codebook-agnostic."""
-    import numpy as np
-
-    dsub = dim // m
-    return [
-        np.random.default_rng(seed + i).standard_normal((k, dsub)).tolist()
-        for i in range(m)
-    ]
-
-
-def pq_assign(
-    corpus: DataFrame,
-    codebooks: list[list[list[float]]] | None = None,
-    round_dp: int = 4,
-) -> DataFrame:
+def pq_assign(corpus: DataFrame, codebooks: list[list[list[float]]]) -> DataFrame:
     """Product-quantization encoding: split each vector into ``m``
     subvectors and store only the index of the nearest codebook
     centroid per subspace — the compression half of FAISS-style
@@ -786,10 +780,10 @@ def pq_assign(
     order, vectorized across rows) — exactly the left-fold chain the
     DuckDB oracle evaluates, so the doubles match bit-for-bit and the
     4-dp round (applied JVM-side, HALF_UP == DuckDB for positives)
-    never sits on an engine-dependent boundary."""
-    import numpy as np
-
-    cbs = codebooks if codebooks is not None else pq_codebooks()
+    never sits on an engine-dependent boundary. ``codebooks`` come
+    from :func:`pq_codebooks_from_data` (``m`` subspaces × ``k``
+    centroids × ``dim/m`` dims); assignment is codebook-agnostic."""
+    cbs = codebooks
     m = len(cbs)
     dsub = len(cbs[0][0])
     books = [np.asarray(b, dtype=np.float64) for b in cbs]
@@ -845,19 +839,15 @@ def pq_assign(
     )
     raw = corpus.select("vec_id", "embedding").mapInPandas(encode, out_schema)
     return raw.select(
-        "vec_id", "pq_code", F.round("err_q", round_dp).alias("err_q")
+        "vec_id", "pq_code", F.round("err_q", ROUND_DP).alias("err_q")
     )
 
 
 def pq_adc_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    codebooks: list[list[list[float]]] | None = None,
-    round_dp: int = 4,
+    corpus: DataFrame, queries: DataFrame, codebooks: list[list[list[float]]]
 ) -> DataFrame:
-    """Approximate top-k by Asymmetric Distance Computation over PQ
-    codes — the search half of FAISS-style IVF-PQ (pq_assign is the
+    """Approximate top-``k`` (PQ_TOPK) by Asymmetric Distance
+    Computation over PQ codes — the search half of FAISS-style IVF-PQ (pq_assign is the
     encode half). Per query, a lookup table of ``m × k_cb`` partial
     distances ``||q_m − centroid||²`` is built ONCE; every corpus
     vector's approximate distance is then just ``m`` table lookups on
@@ -878,7 +868,8 @@ def pq_adc_topk(
 
     from pyspark.sql import Window
 
-    cbs = codebooks if codebooks is not None else pq_codebooks()
+    cbs = codebooks
+    k = PQ_TOPK
     m = len(cbs)
     dsub = len(cbs[0][0])
     k_cb = len(cbs[0])
@@ -962,17 +953,16 @@ def pq_adc_topk(
         .select(
             "query_id",
             "corpus_id",
-            F.round("adc_dist", round_dp).alias("adc_dist"),
+            F.round("adc_dist", ROUND_DP).alias("adc_dist"),
             F.col("rank").cast("long").alias("rank"),
         )
     )
 
 
-def pq_codebooks_from_data(
-    corpus: DataFrame, m: int = 8, k_cb: int = 16
-) -> list[list[list[float]]]:
-    """Data-derived PQ codebooks: subvector ``mi`` of the first
-    ``k_cb`` corpus vectors (by vec_id) becomes subspace ``mi``'s
+def pq_codebooks_from_data(corpus: DataFrame) -> list[list[list[float]]]:
+    """Data-derived PQ codebooks over ``m`` = PQ_SUBSPACES subspaces:
+    subvector ``mi`` of the first ``k_cb`` = PQ_CENTROIDS corpus
+    vectors (by vec_id) becomes subspace ``mi``'s
     codebook — the same take-first ML init as _data_centroids, and for
     the same measured reason: seeded Gaussian codebooks land
     near-orthogonal to every unit-normalized data vector (ADC
@@ -981,6 +971,7 @@ def pq_codebooks_from_data(
     overfetch + exact re-rank on the test corpus. A production build
     k-means a sample per subspace (kmeans_step is the update); the
     collect is k_cb rows, driver-side, one-off."""
+    m, k_cb = PQ_SUBSPACES, PQ_CENTROIDS
     rows = (
         corpus.select(
             "vec_id", F.col("embedding").cast("array<double>").alias("e")
@@ -997,14 +988,10 @@ def pq_codebooks_from_data(
     ]
 
 
-def knn_outlier_scores(
-    corpus: DataFrame,
-    n_refs: int = 32,
-    k: int = 4,
-    round_dp: int = 4,
-) -> DataFrame:
+def knn_outlier_scores(corpus: DataFrame) -> DataFrame:
     """kNN-distance outlier scoring for embedding-space cleaning: each
-    vector's distance to its ``k``-th nearest of ``n_refs`` reference
+    vector's distance to its ``k``-th (KNN_K) nearest of ``n_refs``
+    (KNN_REFS) reference
     vectors (the first ``n_refs`` by vec_id — the _data_centroids
     take-first init; production uses a uniform sample). A large
     k-NN-to-reference distance flags out-of-distribution embeddings —
@@ -1021,13 +1008,14 @@ def knn_outlier_scores(
     including exact ties — no ulp argument needed anywhere."""
     import pyspark.sql.types as T
 
+    k = KNN_K
     refs = [
         (int(r.vec_id), list(r.e))
         for r in corpus.select(
             "vec_id", F.col("embedding").cast("array<double>").alias("e")
         )
         .orderBy("vec_id")
-        .limit(n_refs)
+        .limit(KNN_REFS)
         .collect()
     ]
 
@@ -1066,5 +1054,5 @@ def knn_outlier_scores(
 
     raw = corpus.select("vec_id", "embedding").mapInPandas(score, out_schema)
     return raw.select(
-        "vec_id", F.round("knn_dist", round_dp).alias("knn_dist")
+        "vec_id", F.round("knn_dist", ROUND_DP).alias("knn_dist")
     )

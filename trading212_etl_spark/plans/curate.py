@@ -31,17 +31,13 @@ from ..partitioning import fan_out, freeze_partitions
 
 def curate_corpus(
     docs: DataFrame,
-    min_quality_bp: int = 5200,
-    langs: tuple[str, ...] = ("en",),
-    jaccard_threshold: float = 0.5,
-    shingle_n: int = 3,
     use_lsh: bool = False,
     pairs_top_k: int | None = None,
     lsh_hash_fn: str = "xxhash64",
 ) -> DataFrame:
-    """Return the curated corpus: docs scoring ≥ ``min_quality_bp``,
-    predicted in ``langs``, exact-deduped (min doc_id per content
-    digest wins), with near-duplicates (Jaccard ≥ threshold) removed
+    """Return the curated corpus: docs scoring ≥ 5200 quality basis
+    points, predicted English, exact-deduped (min doc_id per content
+    digest wins), with near-duplicates (Jaccard ≥ 0.5) removed
     keeping each connected component's minimum doc id (exact closure
     via connected_components — see operators/dedup.remove_near_dups).
 
@@ -93,8 +89,8 @@ def curate_corpus(
         # over its passing docs.
         .filter(
             (F.col("__rn") == 1)
-            & (F.col("quality_bp") >= min_quality_bp)
-            & F.col("lang_pred").isin(*langs)
+            & (F.col("quality_bp") >= 5200)
+            & F.col("lang_pred").isin("en")
         )
         # text is only needed up to the digest — shingling reads the
         # token arrays; dropping it shrinks the materialized survivors
@@ -116,19 +112,11 @@ def curate_corpus(
     # survivor set is a superset — asserted in tests/test_llm_ops.py).
     if use_lsh:
         pairs = minhash_lsh_pairs(
-            canonical,
-            threshold=jaccard_threshold,
-            shingle_n=shingle_n,
-            tokens_col="__toks",
-            hash_fn=lsh_hash_fn,
+            canonical, tokens_col="__toks", hash_fn=lsh_hash_fn
         )
     else:
         pairs = jaccard_pairs(
-            canonical,
-            jaccard_threshold,
-            shingle_n,
-            tokens_col="__toks",
-            top_k_per_doc=pairs_top_k,
+            canonical, 0.5, tokens_col="__toks", top_k_per_doc=pairs_top_k
         )
     return remove_near_dups(canonical, pairs).select(
         "doc_id", "lang", "lang_pred", "quality_bp", "n_tokens"

@@ -225,18 +225,18 @@ def _dsum_sql(expr: str) -> str:
     return f"CAST(round(sum(CAST({expr} AS DECIMAL(18,6))), 2) AS DOUBLE)"
 
 
-def _lsh_oracle_banded(n_planes: int = 4, n_tables: int = 8, dim: int = 64) -> str:
+def _lsh_oracle_banded() -> str:
     """DuckDB SQL fragment: (vec_id, tbl, bkt) banding of view ``v``
-    (vec_id, emb) under the engine's exact seeded hyperplanes, inlined
+    (vec_id, emb) under the engine's exact seeded hyperplanes
+    (operators/similarity._lsh_tables), inlined
     as double literals — the planes are deterministic (fixed numpy
     seed per table), so the sketch is oracle-reproducible; only the
     float sign test at a dot product of exactly ~0 could diverge, and
     gaussian-plane dots sit O(1) away from 0."""
-    from ..operators.similarity import _hyperplanes
+    from ..operators.similarity import _lsh_tables
 
     branches = []
-    for t in range(n_tables):
-        planes = _hyperplanes(dim, n_planes, seed=42 + t)
+    for t, planes in enumerate(_lsh_tables()):
         bucket = " + ".join(
             "(CASE WHEN list_dot_product(emb, [{lits}]) > 0 THEN {w} ELSE 0 END)".format(
                 lits=", ".join(repr(float(x)) for x in p), w=2 ** i

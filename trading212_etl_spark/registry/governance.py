@@ -8,20 +8,9 @@ unchanged."""
 
 from __future__ import annotations
 
-from ._core import (  # noqa: F401
-    ORACLES,
-    QUERIES,
-    _SHINGLES,
-    _TOKS,
+from ._core import (
     _basket_pairs,
-    _d38,
-    _dsum,
-    _dsum_sql,
-    _lsh_oracle_banded,
-    _scratch,
     _t,
-    bounded_bucket,
-    pin_oracle_confs,
     register,
 )
 
@@ -773,9 +762,7 @@ def q_entity_resolution_customers(spark, sf_dir):
     keyed = ents.withColumn(
         "bkey", F.regexp_extract("name", "([0-9]+)$", 1)
     )
-    pairs = entity_pairs_blocked(
-        keyed, "ent_id", "name", ["nation", "bkey"], max_edit=2
-    )
+    pairs = entity_pairs_blocked(keyed, "ent_id", "name", ["nation", "bkey"])
     comp = connected_components(pairs)
     return (
         ents.join(

@@ -8,20 +8,14 @@ unchanged."""
 
 from __future__ import annotations
 
-from ._core import (  # noqa: F401
+from ._core import (
     ORACLES,
-    QUERIES,
     _SHINGLES,
     _TOKS,
     _build_once,
-    _d38,
-    _dsum,
-    _dsum_sql,
     _lsh_oracle_banded,
     _t,
-    bounded_bucket,
     pairs_top_k,
-    pin_oracle_confs,
     register,
 )
 
@@ -95,7 +89,6 @@ def q_dedup_jaccard(spark, sf_dir):
     return jaccard_pairs(
         _t(spark, sf_dir, "documents"),
         threshold=0.5,
-        n=3,
         top_k_per_doc=pairs_top_k(),
     )
 
@@ -136,7 +129,6 @@ def q_dedup_containment(spark, sf_dir):
     return containment_pairs(
         _t(spark, sf_dir, "documents"),
         threshold=0.6,
-        n=3,
         top_k_per_doc=pairs_top_k(),
     )
 
@@ -177,7 +169,7 @@ def q_dedup_decontaminate(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
     corpus = docs.filter(F.col("doc_id") % 97 != 0)
     bench = docs.filter(F.col("doc_id") % 97 == 0)
-    return decontaminate(corpus, bench, n=3).withColumn(
+    return decontaminate(corpus, bench).withColumn(
         "set_size", F.col("set_size").cast("long")
     )
 
@@ -230,9 +222,7 @@ def q_dedup_boilerplate_lines(spark, sf_dir):
     n = F.size("__toks")
     idx = F.sequence(F.lit(1), F.greatest(n, F.lit(1)), F.lit(8))
     lines = F.transform(idx, lambda i: F.array_join(F.slice("__toks", i, 8), " "))
-    return dedup_lines(
-        base.select("doc_id", lines.alias("lines")), max_df=1
-    )
+    return dedup_lines(base.select("doc_id", lines.alias("lines")))
 
 
 @register(
@@ -283,15 +273,12 @@ def q_dedup_connected_components(spark, sf_dir):
     pairs = jaccard_pairs(
         _t(spark, sf_dir, "documents"),
         threshold=0.5,
-        n=3,
         top_k_per_doc=pairs_top_k(),
     )
     return connected_components(pairs)
 
 
-def _minhash_md5_cand_ctes(
-    source: str, num_hashes: int = 32, bands: int = 16
-) -> str:
+def _minhash_md5_cand_ctes(source: str) -> str:
     """CTE chain ``e → sig → banded → cand`` producing md5-mode
     MinHash+LSH candidate pairs (``doc_a < doc_b``) from a CTE
     ``source(id, shingles)`` — the signature/banding SQL shared by the
@@ -299,25 +286,13 @@ def _minhash_md5_cand_ctes(
     (registry/timeseries.py, VERDICT r12 item 2). Splicing this after
     a prefix that FILTERS the corpus oracles the banding over exactly
     the surviving documents, not the raw table."""
-    rows = num_hashes // bands
-    mins = ",\n    ".join(
-        f"min(substring(md5('{k // 4}:' || s), {8 * (k % 4) + 1}, 8)) AS h{k}"
-        for k in range(num_hashes)
-    )
-    banded = "\n    UNION ALL ".join(
-        "SELECT id, {i} AS band_idx, {key} AS band_hash FROM sig".format(
-            i=i,
-            key=" || ".join(f"h{i * rows + r}" for r in range(rows)),
-        )
-        for i in range(bands)
-    )
     return f"""e AS (SELECT id, unnest(shingles) AS s FROM {source}),
     sig AS (
-      SELECT id, {mins}
+      SELECT id, {_md5_mins_sql()}
       FROM e GROUP BY id
     ),
     banded AS (
-    {banded}
+    {_md5_bands_sql("sig")}
     ),
     cand AS (
       SELECT DISTINCT a.id AS doc_a, b.id AS doc_b
@@ -326,7 +301,34 @@ def _minhash_md5_cand_ctes(
     )"""
 
 
-def _minhash_md5_oracle(num_hashes: int = 32, bands: int = 16) -> str:
+def _md5_mins_sql() -> str:
+    """The NUM_HASHES seeded md5 mins of a MinHash signature, as DuckDB
+    select items ``h0 .. h{K-1}`` over shingle column ``s``."""
+    from ..operators.dedup import NUM_HASHES
+
+    return ",\n    ".join(
+        f"min(substring(md5('{k // 4}:' || s), {8 * (k % 4) + 1}, 8)) AS h{k}"
+        for k in range(NUM_HASHES)
+    )
+
+
+def _md5_bands_sql(src: str) -> str:
+    """(id, band_idx, band_hash) rows of signature relation ``src``: the
+    BANDS band keys, each the concat of its row mins."""
+    from ..operators.dedup import BANDS, NUM_HASHES
+
+    rows = NUM_HASHES // BANDS
+    return "\n    UNION ALL ".join(
+        "SELECT id, {i} AS band_idx, {key} AS band_hash FROM {src}".format(
+            i=i,
+            key=" || ".join(f"h{i * rows + r}" for r in range(rows)),
+            src=src,
+        )
+        for i in range(BANDS)
+    )
+
+
+def _minhash_md5_oracle() -> str:
     """Full MinHash+LSH pipeline in DuckDB SQL, hash-exact against the
     engine's ``hash_fn="md5"`` mode: seeded mins are
     ``min`` over 8-hex-char slices of ``md5(j || ':' || shingle)``
@@ -336,12 +338,14 @@ def _minhash_md5_oracle(num_hashes: int = 32, bands: int = 16) -> str:
     band's row mins. This oracles the CANDIDATE GENERATION, not just
     the verified output — the r3/r4 verdicts' open item 'LSH never
     driver-verifiable'."""
+    from ..operators.dedup import JACCARD_THRESHOLD
+
     return f"""
     WITH t AS (
       SELECT doc_id AS id, {_SHINGLES} AS shingles
       FROM (SELECT doc_id, {_TOKS} AS toks FROM documents)
     ),
-    {_minhash_md5_cand_ctes("t", num_hashes, bands)},
+    {_minhash_md5_cand_ctes("t")},
     v AS (
       SELECT c.doc_a, c.doc_b,
              len(list_intersect(ta.shingles, tb.shingles)) AS n_common,
@@ -355,7 +359,7 @@ def _minhash_md5_oracle(num_hashes: int = 32, bands: int = 16) -> str:
                  / (size_a + size_b - n_common), 4) AS jaccard
     FROM v
     WHERE round(CAST(n_common AS DOUBLE)
-                / (size_a + size_b - n_common), 4) >= 0.5
+                / (size_a + size_b - n_common), 4) >= {JACCARD_THRESHOLD}
     """
 
 
@@ -372,22 +376,18 @@ def q_dedup_minhash(spark, sf_dir):
     pipeline_curate_corpus_lsh."""
     from ..operators.dedup import minhash_lsh_pairs
 
-    return minhash_lsh_pairs(
-        _t(spark, sf_dir, "documents"),
-        threshold=0.5,
-        num_hashes=32,
-        bands=16,
-        hash_fn="md5",
-    )
+    return minhash_lsh_pairs(_t(spark, sf_dir, "documents"), hash_fn="md5")
 
 
-def _simhash_md5_oracle(
-    n_bits: int = 48, n_bands: int = 4, max_hamming: int = 3
-) -> str:
+def _simhash_md5_oracle() -> str:
     """SimHash pipeline in DuckDB SQL, hash-exact against the engine's
-    ``hash_fn="md5"`` mode: bit ``4g+j`` of a token's contribution is
-    bit ``j`` of hex nibble ``g`` of ``md5(token)`` (strpos nibble
-    lookup here, conv() on the Spark side)."""
+    md5 sketch: bit ``4g+j`` of a token's contribution is bit ``j`` of
+    hex nibble ``g`` of ``md5(token)`` (strpos nibble lookup here,
+    conv() on the Spark side)."""
+    from ..operators import dedup
+
+    n_bits, n_bands = dedup.SIMHASH_BITS, dedup.SIMHASH_BANDS
+    max_hamming = dedup.SIMHASH_MAX_HAMMING
     nib = "strpos('0123456789abcdef', substr(hx, {g}, 1)) - 1"
     cnts = ",\n    ".join(
         "sum((({nib}) >> {j}) & 1) AS c{b}".format(
@@ -441,15 +441,12 @@ def _simhash_md5_oracle(
 def q_dedup_simhash(spark, sf_dir):
     """SimHash(48-bit) near-dup pairs at Hamming ≤ 3 via pigeonhole
     banding (4 bands of 12 bits): one hash-aggregate for sketches,
-    one equi-join on band bits for candidates. Runs the
-    ``hash_fn="md5"`` mode so sketch bits are engine-identical and the
-    whole pipeline is oracled (VERDICT r4 item 4); the xxhash64
-    production default keeps its invariant test."""
+    one equi-join on band bits for candidates. The sketch draws its
+    bits from md5, so they are engine-identical and the whole
+    pipeline is oracled (VERDICT r4 item 4)."""
     from ..operators.dedup import simhash_near_pairs
 
-    return simhash_near_pairs(
-        _t(spark, sf_dir, "documents"), max_hamming=3, hash_fn="md5"
-    )
+    return simhash_near_pairs(_t(spark, sf_dir, "documents"))
 
 
 @register(
@@ -684,7 +681,7 @@ def q_similarity_lsh(spark, sf_dir):
     from ..operators.similarity import cosine_topk_lsh
 
     emb = _t(spark, sf_dir, "embeddings")
-    return cosine_topk_lsh(emb, emb.filter(F.col("vec_id") < 8), k=10, n_planes=4)
+    return cosine_topk_lsh(emb, emb.filter(F.col("vec_id") < 8), k=10)
 
 
 ORACLES["similarity_topk_lsh"] = f"""
@@ -758,9 +755,7 @@ def q_similarity_ivf(spark, sf_dir):
     from ..operators.similarity import cosine_topk_ivf
 
     emb = _t(spark, sf_dir, "embeddings")
-    return cosine_topk_ivf(
-        emb, emb.filter(F.col("vec_id") < 8), k=10, n_centroids=8, n_probe=3
-    )
+    return cosine_topk_ivf(emb, emb.filter(F.col("vec_id") < 8), k=10)
 
 
 @register(
@@ -800,7 +795,7 @@ def q_embedding_kmeans_step(spark, sf_dir):
     100 TB analysis)."""
     from ..operators.similarity import kmeans_lloyd_step
 
-    return kmeans_lloyd_step(_t(spark, sf_dir, "embeddings"), n_centroids=8)
+    return kmeans_lloyd_step(_t(spark, sf_dir, "embeddings"))
 
 
 @register(
@@ -824,9 +819,7 @@ def q_embedding_near_dup(spark, sf_dir):
     100 TB operator."""
     from ..operators.similarity import embedding_near_dup_pairs
 
-    return embedding_near_dup_pairs(
-        _t(spark, sf_dir, "embeddings"), threshold=0.4, max_id=256
-    )
+    return embedding_near_dup_pairs(_t(spark, sf_dir, "embeddings"))
 
 
 @register(
@@ -840,9 +833,7 @@ def q_embedding_near_dup_lsh(spark, sf_dir):
     floor additionally asserted in tests/test_llm_ops.py."""
     from ..operators.similarity import embedding_near_dup_pairs_lsh
 
-    return embedding_near_dup_pairs_lsh(
-        _t(spark, sf_dir, "embeddings"), threshold=0.4
-    )
+    return embedding_near_dup_pairs_lsh(_t(spark, sf_dir, "embeddings"))
 
 
 ORACLES["embedding_near_dup_lsh"] = f"""
@@ -1269,7 +1260,7 @@ def q_text_bm25_topk(spark, sf_dir):
     return bm25_topk(_t(spark, sf_dir, "documents"), _BM25_QUERIES, k=10)
 
 
-def _pq_oracle(round_dp: int = 4, m: int = 8, dsub: int = 8, k_cb: int = 16) -> str:
+def _pq_oracle() -> str:
     """DuckDB twin of pq_assign over DATA-DERIVED codebooks: the
     codebook (subvectors of the first k_cb corpus vectors, the
     _data_centroids init) is rebuilt IN SQL, scores use the same
@@ -1278,7 +1269,11 @@ def _pq_oracle(round_dp: int = 4, m: int = 8, dsub: int = 8, k_cb: int = 16) -> 
     centroids sit O(1) apart; duplicate centroids tie exactly and
     both engines break ties to the lowest index), err doubles match
     bit-for-bit before the single 4-dp round."""
-    dim = m * dsub
+    from ..operators import similarity as sim
+
+    m, k_cb, round_dp = sim.PQ_SUBSPACES, sim.PQ_CENTROIDS, sim.ROUND_DP
+    dim = sim.DIM
+    dsub = dim // m
     xs = ", ".join(
         f"CAST(embedding[{i + 1}] AS DOUBLE) AS x{i}" for i in range(dim)
     )
@@ -1336,14 +1331,17 @@ def q_embedding_pq_assign(spark, sf_dir):
     return pq_assign(emb, pq_codebooks_from_data(emb))
 
 
-def _pq_adc_oracle(
-    k: int = 10, round_dp: int = 4, m: int = 8, dsub: int = 8, k_cb: int = 16
-) -> str:
+def _pq_adc_oracle() -> str:
     """DuckDB twin of pq_adc_topk over the same SQL-derived data
     codebooks as _pq_oracle: partial-distance chains and the final
     8-lookup sum replicate the engine's fixed left-fold order — raw
     distances bit-identical, ranks tolerance-free."""
-    dim = m * dsub
+    from ..operators import similarity as sim
+
+    m, k_cb, round_dp = sim.PQ_SUBSPACES, sim.PQ_CENTROIDS, sim.ROUND_DP
+    k = sim.PQ_TOPK
+    dim = sim.DIM
+    dsub = dim // m
     xs = ", ".join(
         f"CAST(embedding[{i + 1}] AS DOUBLE) AS x{i}" for i in range(dim)
     )
@@ -1434,7 +1432,7 @@ def q_similarity_pq_adc(spark, sf_dir):
 
     emb = _t(spark, sf_dir, "embeddings")
     cbs = pq_codebooks_from_data(emb)
-    return pq_adc_topk(emb, emb.filter(F.col("vec_id") < 8), k=10, codebooks=cbs)
+    return pq_adc_topk(emb, emb.filter(F.col("vec_id") < 8), cbs)
 
 
 @register(
@@ -1541,11 +1539,11 @@ def q_sink_ivf_partitioned_ann(spark, sf_dir):
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    from ..operators.similarity import _cent_dots_expr, _data_centroids
+    from ..operators.similarity import IVF_PROBES, _cent_dots_expr, _data_centroids
     from ..sources.writers import write_parquet
 
     emb = _t(spark, sf_dir, "embeddings")
-    cents = _data_centroids(emb, 8)
+    cents = _data_centroids(emb)
     cent_dots = lambda col: _cent_dots_expr(col, cents)  # noqa: E731
     assigned = (
         emb.select(
@@ -1590,7 +1588,7 @@ def q_sink_ivf_partitioned_ann(spark, sf_dir):
                         lambda s: s["idx"],
                     ),
                     1,
-                    3,
+                    IVF_PROBES,
                 )
             ),
         )
@@ -1896,12 +1894,15 @@ def q_text_bigram_coherence(spark, sf_dir):
     )
 
 
-def _knn_outlier_oracle(n_refs: int = 32, k: int = 4, round_dp: int = 4) -> str:
+def _knn_outlier_oracle() -> str:
     """DuckDB twin of knn_outlier_scores: the reference block rebuilt
     in SQL (first n_refs by vec_id), every distance the same
     fixed-order chain, k-th pick via (distance, ref rank) ordering —
     bit-identical doubles, tie handling included."""
-    dim = 64
+    from ..operators import similarity as sim
+
+    n_refs, k, round_dp = sim.KNN_REFS, sim.KNN_K, sim.ROUND_DP
+    dim = sim.DIM
     xs = ", ".join(
         f"CAST(embedding[{i + 1}] AS DOUBLE) AS x{i}" for i in range(dim)
     )
@@ -2226,7 +2227,7 @@ def q_dedup_substring_spans(spark, sf_dir):
     from ..operators.dedup import substring_span_pairs
 
     docs = _t(spark, sf_dir, "documents")
-    return substring_span_pairs(docs, n=5, min_span_tokens=10)
+    return substring_span_pairs(docs)
 
 
 @register(
@@ -2611,14 +2612,12 @@ def q_dedup_decontaminate_bloom(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
     corpus = docs.filter(F.col("doc_id") % 101 != 0)
     bench = docs.filter(F.col("doc_id") % 101 == 0)
-    return decontaminate_bloom(corpus, bench, n=3).withColumn(
+    return decontaminate_bloom(corpus, bench).withColumn(
         "set_size", F.col("set_size").cast("long")
     )
 
 
-def _incremental_md5_oracle(
-    num_hashes: int = 32, bands: int = 16, min_match: int = 16
-) -> str:
+def _incremental_md5_oracle() -> str:
     """Bipartite (new-batch x snapshot) MinHash LSH in DuckDB SQL,
     hash-exact against the engine's ``hash_fn="md5"`` mode — the same
     seeded-md5 signature construction as ``_minhash_md5_oracle``, but
@@ -2626,24 +2625,10 @@ def _incremental_md5_oracle(
     signature-match ESTIMATOR (n_match / K, a dyadic rational at
     K=32 — exact in binary on both engines, no rounding), because the
     incremental path never materializes old shingle sets."""
-    rows = num_hashes // bands
-    mins = ",\n    ".join(
-        f"min(substring(md5('{k // 4}:' || s), {8 * (k % 4) + 1}, 8)) AS h{k}"
-        for k in range(num_hashes)
-    )
-
-    def banded(src: str) -> str:
-        return "\n    UNION ALL ".join(
-            "SELECT id, {i} AS band_idx, {key} AS band_hash FROM {src}".format(
-                i=i,
-                key=" || ".join(f"h{i * rows + r}" for r in range(rows)),
-                src=src,
-            )
-            for i in range(bands)
-        )
+    from ..operators.dedup import NUM_HASHES, _min_match
 
     matches = "\n           + ".join(
-        f"CAST(a.h{k} = b.h{k} AS INTEGER)" for k in range(num_hashes)
+        f"CAST(a.h{k} = b.h{k} AS INTEGER)" for k in range(NUM_HASHES)
     )
     return f"""
     WITH t AS (
@@ -2652,16 +2637,16 @@ def _incremental_md5_oracle(
     ),
     e AS (SELECT id, unnest(shingles) AS s FROM t),
     sig AS (
-      SELECT id, {mins}
+      SELECT id, {_md5_mins_sql()}
       FROM e GROUP BY id
     ),
     osig AS (SELECT * FROM sig WHERE id % 10 <> 0),
     nsig AS (SELECT * FROM sig WHERE id % 10 = 0),
     ob AS (
-    {banded('osig')}
+    {_md5_bands_sql('osig')}
     ),
     nb AS (
-    {banded('nsig')}
+    {_md5_bands_sql('nsig')}
     ),
     cand AS (
       SELECT DISTINCT n.id AS doc_new, o.id AS doc_old
@@ -2675,8 +2660,8 @@ def _incremental_md5_oracle(
       JOIN sig b ON b.id = c.doc_old
     )
     SELECT doc_new, doc_old, n_match,
-           n_match / {num_hashes}.0 AS est_jaccard
-    FROM m WHERE n_match >= {min_match}
+           n_match / {NUM_HASHES}.0 AS est_jaccard
+    FROM m WHERE n_match >= {_min_match()}
     """
 
 
@@ -2697,14 +2682,16 @@ def q_dedup_incremental_snapshot(spark, sf_dir):
     100 TB this turns per-batch dedup cost from O(corpus) to
     O(batch + matches): the sink is the index. md5 hash mode, so the
     ENTIRE pipeline — signatures, banding, candidates, estimator — is
-    replicated in the DuckDB oracle; the xxhash64 production mode and
-    the estimator-vs-exact calibration carry invariant tests in
-    tests/test_llm_ops.py. The sink is built once per sf_dir
+    replicated in the DuckDB oracle; the estimator-vs-exact
+    calibration carries an invariant test in tests/test_llm_ops.py.
+    The sink is built once per sf_dir
     (registry/_core._build_once), like sink_ivf_partitioned_ann's
     cells."""
     from pyspark.sql import functions as F
 
     from ..operators.dedup import (
+        BANDS,
+        NUM_HASHES,
         incremental_minhash_pairs,
         write_signature_sink,
     )
@@ -2715,14 +2702,9 @@ def q_dedup_incremental_snapshot(spark, sf_dir):
     # construction can never satisfy a newer entry's read
     path = _build_once(
         sf_dir,
-        "minhash_sink_md5_k32b16v1",
+        f"minhash_sink_md5_k{NUM_HASHES}b{BANDS}v1",
         lambda tmp: write_signature_sink(
-            docs.filter(F.col("doc_id") % 10 != 0), tmp, hash_fn="md5"
+            docs.filter(F.col("doc_id") % 10 != 0), tmp
         ),
     )
-    return incremental_minhash_pairs(
-        docs.filter(F.col("doc_id") % 10 == 0),
-        path,
-        threshold=0.5,
-        hash_fn="md5",
-    )
+    return incremental_minhash_pairs(docs.filter(F.col("doc_id") % 10 == 0), path)

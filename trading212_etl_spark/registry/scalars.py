@@ -8,19 +8,8 @@ unchanged."""
 
 from __future__ import annotations
 
-from ._core import (  # noqa: F401
-    ORACLES,
-    QUERIES,
-    _SHINGLES,
-    _TOKS,
-    _d38,
-    _dsum,
-    _dsum_sql,
-    _lsh_oracle_banded,
-    _scratch,
+from ._core import (
     _t,
-    bounded_bucket,
-    pin_oracle_confs,
     register,
 )
 

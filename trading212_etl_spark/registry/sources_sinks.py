@@ -8,19 +8,9 @@ unchanged."""
 
 from __future__ import annotations
 
-from ._core import (  # noqa: F401
-    ORACLES,
-    QUERIES,
-    _SHINGLES,
-    _TOKS,
-    _d38,
-    _dsum,
-    _dsum_sql,
-    _lsh_oracle_banded,
+from ._core import (
     _scratch,
     _t,
-    bounded_bucket,
-    pin_oracle_confs,
     register,
 )
 

@@ -8,22 +8,18 @@ unchanged."""
 
 from __future__ import annotations
 
-from ._core import (  # noqa: F401
+from ._core import (
     ORACLES,
-    QUERIES,
     _SHINGLES,
     _TOKS,
     _basket_pairs,
     _build_once,
-    _d38,
     _dsum,
     _dsum_sql,
     _lsh_oracle_banded,
     _scratch,
     _t,
-    bounded_bucket,
     pairs_top_k,
-    pin_oracle_confs,
     register,
 )
 
@@ -583,7 +579,7 @@ def q_graph_pagerank(spark, sf_dir):
         )
         .agg(F.count("*").alias("weight"))
     )
-    return pagerank_micro(edges, iterations=3, damping_bp=8500)
+    return pagerank_micro(edges)
 
 
 @register(
@@ -1681,7 +1677,7 @@ def q_dedup_semantic_clusters(spark, sf_dir):
     from ..operators.similarity import embedding_near_dup_pairs_lsh
 
     emb = _t(spark, sf_dir, "embeddings")
-    pairs = embedding_near_dup_pairs_lsh(emb, threshold=0.4).select(
+    pairs = embedding_near_dup_pairs_lsh(emb).select(
         F.col("vec_a").alias("doc_a"), F.col("vec_b").alias("doc_b")
     )
     comp = connected_components(pairs).withColumnRenamed("doc_id", "vec_id")

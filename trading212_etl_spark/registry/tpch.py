@@ -8,19 +8,10 @@ unchanged."""
 
 from __future__ import annotations
 
-from ._core import (  # noqa: F401
-    ORACLES,
-    QUERIES,
-    _SHINGLES,
-    _TOKS,
-    _d38,
+from ._core import (
     _dsum,
     _dsum_sql,
-    _lsh_oracle_banded,
-    _scratch,
     _t,
-    bounded_bucket,
-    pin_oracle_confs,
     register,
 )
 

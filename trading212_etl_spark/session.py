@@ -60,7 +60,12 @@ SHUFFLE_CAP = 4096
 # 240 (213), etl_parquet 41 (0), and one bench.py HEADLINE pass 1925
 # (1798 at 1000). At 2048 a repeated round recompiles only the classes
 # whose generated source differs from run to run: 16-35 per HEADLINE
-# pass, as many as with no bound at all.
+# pass, as many as with no bound at all. The cache is keyed on the
+# generated source, so get_session also drops the whole-stage codegen
+# stage id from class names (spark.sql.codegen.useIdInClassName): a
+# re-planned query can number its stages differently, and with the id
+# in the name those otherwise identical classes compile again (4 per
+# repeated llm_curate round in about two of three sessions, 0 without).
 CODEGEN_CACHE_ENTRIES = 2048
 
 
@@ -195,6 +200,7 @@ def get_session(
         .config("spark.ui.retainedTasks", "10000")
         # -- generated-class cache -----------------------------------
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        .config("spark.sql.codegen.useIdInClassName", "false")
         .config("spark.driver.memory", driver_memory())
     )
     for k, v in (extra_conf or {}).items():
