@@ -26,7 +26,7 @@ def test_event_time_is_absolute_batch(spark, sf_dir):
 def test_event_time_is_absolute_streaming(spark, sf_dir):
     """Same absolute-2024 anchor on the STREAMING reader (via the
     materialized tumbling windows, which carry event-time bounds)."""
-    stream = run_streaming_tumbling_agg(spark, sf_dir, "1 hour")
+    stream = run_streaming_tumbling_agg(spark, sf_dir)
     lo, hi = stream.agg(
         F.min("window_start"), F.max("window_end")
     ).first()
@@ -37,7 +37,7 @@ def test_event_time_is_absolute_streaming(spark, sf_dir):
 def test_streaming_matches_batch_tumbling(spark, sf_dir):
     events = load_table(spark, sf_dir, "events")
     batch = tumbling_agg(events, "1 hour")
-    stream = run_streaming_tumbling_agg(spark, sf_dir, "1 hour")
+    stream = run_streaming_tumbling_agg(spark, sf_dir)
     b = {tuple(r) for r in batch.collect()}
     s = {tuple(r) for r in stream.collect()}
     assert b == s
@@ -184,7 +184,6 @@ def test_watermark_drops_late_events(spark, tmp_path):
     agg = streaming_tumbling_agg(
         spark.readStream.schema(schema).format("parquet").load(src),
         "1 hour",
-        watermark="2 hours",
     )
     q = (
         agg.writeStream.outputMode("append")

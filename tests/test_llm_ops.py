@@ -207,7 +207,7 @@ def test_multimodal_decode_and_frame_sample_real(spark, sf_dir):
         assert r["n_bytes"] == 54 + sh * (((sw * 3 + 3) // 4) * 4)
         assert 0 <= r["mean_intensity"] <= 255
 
-    frames = sample_frames(synth_avi_payload(docs), every_n=2).toPandas()
+    frames = sample_frames(synth_avi_payload(docs)).toPandas()
     for _, r in frames.iterrows():
         d = int(r["doc_id"])
         assert r["n_frames"] == 6 + d % 5
@@ -238,7 +238,7 @@ def test_multimodal_resize_real_bmp_roundtrip(spark, sf_dir):
     from trading212_etl_spark.operators.multimodal import _bmp_decode
 
     docs = load_table(spark, sf_dir, "documents").limit(6)
-    resized = resize_images(synth_bmp_payload(docs), 16, 12).toPandas()
+    resized = resize_images(synth_bmp_payload(docs)).toPandas()
     assert len(resized) == 6
     assert (resized["width"] == 16).all() and (resized["height"] == 12).all()
     assert (resized["n_bytes"] == 54 + 12 * 48).all()
@@ -570,7 +570,9 @@ def test_dsir_weights_favor_target_tokens(spark):
     rows = [(i, "aaa bbb ccc ddd", 1) for i in range(20)]
     rows += [(i, "xxx yyy zzz www", 0) for i in range(20, 40)]
     rows += [(100, "aaa bbb ccc ddd", 0), (101, "xxx yyy zzz www", 0)]
-    docs = spark.createDataFrame(rows, "doc_id long, text string, is_t int")
+    docs = spark.createDataFrame(
+        rows, "doc_id long, text string, is_t int"
+    ).withColumn("source", F.lit("s"))
     w = {
         r.doc_id: r.weight_milli
         for r in dsir_importance_weights(

@@ -1,10 +1,16 @@
-"""Every option has two values in use: in the near-dup and vector
-operators and their oracle builders, a parameter with a default stays
-only if code that is not a test passes at least two different values
-to it. A call that omits the argument passes the default. A literal
-argument is its value; any other argument counts as a value of its own
-at every call site. A value only tests vary is a module constant the
-test monkeypatches, not a parameter."""
+"""Every option has two values in use: in every module of the package,
+a parameter with a default stays only if code that is not a test
+passes at least two different values to it. A call that omits the
+argument passes the default. A literal argument is its value; any
+other argument counts as a value of its own at every call site. A
+value only tests vary is a module constant the test monkeypatches,
+not a parameter.
+
+Calls are matched to definitions by name: a bare-name call, or an
+attribute call whose base is a name the calling file imports (a
+module alias such as ``textual.tokens``). A method call on any other
+value (``"x".encode()``, ``df.select(...)``) is not a call of a
+package function that happens to share its name."""
 
 from __future__ import annotations
 
@@ -16,23 +22,18 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parent.parent
 PACKAGE = REPO / "trading212_etl_spark"
 
-# module -> the functions in scope (None: every function in it)
-SCOPE: dict[str, set[str] | None] = {
-    "operators/dedup.py": None,
-    "operators/similarity.py": None,
-    "operators/graph.py": None,
-    "operators/quality.py": {"entity_pairs_blocked"},
-    "plans/curate.py": {"curate_corpus"},
-    "registry/_core.py": {"_lsh_oracle_banded"},
-    "registry/llm.py": {
-        "_minhash_md5_cand_ctes",
-        "_minhash_md5_oracle",
-        "_simhash_md5_oracle",
-        "_pq_oracle",
-        "_pq_adc_oracle",
-        "_knn_outlier_oracle",
-        "_incremental_md5_oracle",
-    },
+# every module of the package, nested functions included
+SCOPE = sorted(p.relative_to(PACKAGE).as_posix() for p in PACKAGE.rglob("*.py"))
+
+# ``module function(param)`` -> why the parameter stays settable with
+# fewer than two values in use. An entry whose parameter gains a
+# second value, or disappears, is stale and fails the guard.
+EXEMPT: dict[str, str] = {
+    "session.py get_session(master)": (
+        "deployment address: the cluster a session runs on is the "
+        "deployer's choice, not the code's"
+    ),
+    "__main__.py main(argv)": "the command line",
 }
 
 
@@ -47,20 +48,13 @@ def _caller_files() -> Iterator[Path]:
 
 
 def _scoped_functions() -> list[tuple[str, ast.FunctionDef]]:
-    """(``file:line``, def) of every function in SCOPE, nested ones
-    included where a whole module is in scope."""
+    """(module, def) of every function in SCOPE, nested ones
+    included."""
     found = []
-    for rel, names in SCOPE.items():
-        tree = ast.parse((PACKAGE / rel).read_text())
-        nodes = ast.walk(tree) if names is None else tree.body
-        for node in nodes:
-            if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
-                continue
-            if names is None or node.name in names:
-                found.append((f"{rel}:{node.lineno}", node))
-    wanted = {n for names in SCOPE.values() if names for n in names}
-    missing = wanted - {fn.name for _, fn in found}
-    assert not missing, sorted(missing)
+    for rel in SCOPE:
+        for node in ast.walk(ast.parse((PACKAGE / rel).read_text())):
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                found.append((rel, node))
     return found
 
 
@@ -88,19 +82,39 @@ def _value(node: ast.expr, where: str) -> str:
         return f"<expression at {where}>"
 
 
+def _imported_names(tree: ast.Module) -> set[str]:
+    """Names an import binds anywhere in the file."""
+    names = set()
+    for node in ast.walk(tree):
+        if isinstance(node, (ast.Import, ast.ImportFrom)):
+            for alias in node.names:
+                names.add((alias.asname or alias.name).split(".")[0])
+    return names
+
+
 def _calls() -> dict[str, list[tuple[ast.Call, str]]]:
-    """Non-test call sites by called name (a bare name or an
-    attribute), with ``file:line``."""
+    """Non-test call sites by called name, with ``file:line``: bare-name
+    calls, and attribute calls on an imported name."""
     calls = defaultdict(list)
     for path in _caller_files():
         rel = path.relative_to(REPO)
-        for node in ast.walk(ast.parse(path.read_text())):
+        tree = ast.parse(path.read_text())
+        imported = _imported_names(tree)
+        for node in ast.walk(tree):
             if not isinstance(node, ast.Call):
                 continue
             f = node.func
-            name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
-            if name:
-                calls[name].append((node, f"{rel}:{node.lineno}:{node.col_offset}"))
+            if isinstance(f, ast.Name):
+                name = f.id
+            elif (
+                isinstance(f, ast.Attribute)
+                and isinstance(f.value, ast.Name)
+                and f.value.id in imported
+            ):
+                name = f.attr
+            else:
+                continue
+            calls[name].append((node, f"{rel}:{node.lineno}:{node.col_offset}"))
     return calls
 
 
@@ -129,20 +143,39 @@ def _values_in_use(
     return values
 
 
-def single_valued() -> list[str]:
-    """``file:line function(param)`` for each defaulted parameter in
-    scope that non-test code sets to fewer than two values."""
+def _scan() -> list[tuple[str, int, set[str]]]:
+    """(``module function(param)``, line of the def, the values
+    non-test code passes) for every defaulted parameter in scope."""
     calls = _calls()
-    out = []
-    for where, fn in _scoped_functions():
-        for name, vals in _values_in_use(fn, calls.get(fn.name, [])).items():
-            if len(vals) < 2:
-                out.append(f"{where} {fn.name}({name}) values={sorted(vals)}")
-    return out
+    return [
+        (f"{rel} {fn.name}({name})", fn.lineno, vals)
+        for rel, fn in _scoped_functions()
+        for name, vals in _values_in_use(fn, calls.get(fn.name, [])).items()
+    ]
+
+
+def single_valued() -> list[str]:
+    """Each defaulted parameter in scope, exemptions aside, that
+    non-test code sets to fewer than two values."""
+    return [
+        f"{key} line {line} values={sorted(vals)}"
+        for key, line, vals in _scan()
+        if len(vals) < 2 and key not in EXEMPT
+    ]
 
 
 def test_every_option_has_two_values_in_use():
-    # the scan must see the scoped modules, not pass on an empty walk
-    assert len(_scoped_functions()) > 40, len(_scoped_functions())
+    # the scan must see the package, not pass on an empty walk
+    assert len(_scoped_functions()) > 400, len(_scoped_functions())
     found = single_valued()
     assert not found, "\n".join(found)
+
+
+def test_exemptions_are_single_valued_parameters():
+    scan = _scan()
+    stale = [
+        key
+        for key in EXEMPT
+        if not any(k == key and len(vals) < 2 for k, _, vals in scan)
+    ]
+    assert not stale, stale

@@ -292,19 +292,19 @@ def test_markov_transitions_two_exchanges(spark):
     assert len(re.findall(r"\(\d+\) Scan parquet", p)) == 1
 
 
-def test_zorder_write_tightens_file_spans(spark, tmp_path):
+def test_zorder_write_tightens_file_spans(spark, tmp_path, monkeypatch):
     """The data-skipping claim, measured: after a Z-order write, the
     per-file (min, max) span of BOTH clustered columns must shrink far
     below a round-robin layout's (where every file spans ~the full key
     range and min-max skipping eliminates nothing)."""
     import pyarrow.parquet as pq
 
-    from trading212_etl_spark.sources import load_table
-    from trading212_etl_spark.sources.writers import zorder_write
+    from trading212_etl_spark.sources import load_table, writers
 
+    monkeypatch.setattr(writers, "ZORDER_FILES", 16)
     li = load_table(spark, SF, "lineitem").select("l_partkey", "l_suppkey")
     zpath, rpath = str(tmp_path / "zorder"), str(tmp_path / "rr")
-    zorder_write(li, "l_partkey", "l_suppkey", zpath, n_files=16)
+    writers.zorder_write(li, "l_partkey", "l_suppkey", zpath)
     li.repartition(16).write.mode("overwrite").parquet(rpath)
 
     def avg_span(path: str, col: str) -> float:

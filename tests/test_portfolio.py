@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 from trading212_etl_spark.operators.portfolio import fifo_realized_pnl
 
 SCHEMA = (
-    "account INT, fill_id INT, ts INT, side STRING, "
+    "user_id INT, event_id INT, ts INT, side STRING, "
     "qty BIGINT, price DECIMAL(18,2)"
 )
 
@@ -23,7 +23,7 @@ SCHEMA = (
 def _run(spark, rows):
     df = spark.createDataFrame(rows, SCHEMA)
     return {
-        r["account"]: (r["matched_qty"], round(r["realized_pnl"], 6))
+        r["user_id"]: (r["matched_qty"], round(r["realized_pnl"], 6))
         for r in fifo_realized_pnl(df).collect()
     }
 
@@ -242,7 +242,7 @@ def test_open_lots_fuzz_matches_simulator_when_no_oversell(spark):
                 bought += qty
     df = spark.createDataFrame(rows, SCHEMA)
     got = {
-        r["account"]: (r["open_qty"], round(r["open_cost"], 6))
+        r["user_id"]: (r["open_qty"], round(r["open_cost"], 6))
         for r in fifo_open_lots(df).collect()
     }
     assert got == _simulate_open(rows)
@@ -260,7 +260,7 @@ def test_equity_drawdown_hand_worked(spark):
         (1, 4, 4, Decimal("-7.00")),
     ]
     df = spark.createDataFrame(
-        rows, "account INT, fill_id INT, ts INT, amount DECIMAL(18,2)"
+        rows, "user_id INT, event_id INT, ts INT, amount DECIMAL(18,2)"
     )
     r = equity_drawdown(df).collect()[0]
     assert (r["max_drawdown"], r["final_equity"], r["peak_equity"]) == (

@@ -11,6 +11,8 @@ first example orders slower than the rest.
 
 from __future__ import annotations
 
+from unittest import mock
+
 import pandas as pd
 import pytest
 from hypothesis import HealthCheck, given, settings
@@ -178,12 +180,15 @@ def test_chunk_windows_coverage_and_reassembly(spark, docs, size, stride):
     stride below the token count, every chunk is the corresponding
     token slice (so the stride-aligned prefixes reassemble the
     document), and no chunk exceeds ``size`` tokens."""
-    from trading212_etl_spark.operators.textual import chunk_windows
+    from trading212_etl_spark.operators import textual
 
     stride = min(stride, size)
     rows = [(i, " ".join(toks)) for i, toks in enumerate(docs)]
     df = spark.createDataFrame(rows, schema="doc_id long, text string")
-    out = chunk_windows(df, size=size, stride=stride).toPandas()
+    with mock.patch.object(textual, "CHUNK_SIZE", size), mock.patch.object(
+        textual, "CHUNK_STRIDE", stride
+    ):
+        out = textual.chunk_windows(df).toPandas()
 
     for doc_id, text in rows:
         toks = text.split(" ")  # "" splits to [""] — same as the engine
@@ -219,7 +224,7 @@ def test_salted_agg_equals_plain_agg(spark, rows, n_buckets):
     """Two-phase salted aggregation must be value-identical to the
     plain groupBy for every associative aggregate, any bucket count,
     any key distribution (the salt only spreads rows)."""
-    from trading212_etl_spark.partitioning import salted_agg
+    from trading212_etl_spark import partitioning
 
     df = spark.createDataFrame(rows, schema="key long, v long")
     aggs = {
@@ -228,9 +233,11 @@ def test_salted_agg_equals_plain_agg(spark, rows, n_buckets):
         "mn": ("v", "min"),
         "mx": ("v", "max"),
     }
+    with mock.patch.object(partitioning, "SALT_BUCKETS", n_buckets):
+        salted = partitioning.salted_agg(df, ["key"], aggs)
     got = {
         r["key"]: (r["s"], r["c"], r["mn"], r["mx"])
-        for r in salted_agg(df, ["key"], aggs, n_buckets=n_buckets).collect()
+        for r in salted.collect()
     }
     expect = {
         r["key"]: (r["s"], r["c"], r["mn"], r["mx"])
@@ -271,7 +278,8 @@ def test_interval_range_join_matches_nested_loop(spark, intervals, points):
     """interval_range_join (equi-key hash join + residual range) must
     equal the brute-force nested loop for any interval/point shape,
     including empty intervals (width 0 matches nothing: lo <= x < lo)
-    and keys present on only one side."""
+    and keys present on only one side; a left row with no match
+    appears once with a null right side (rid -1 here)."""
     from trading212_etl_spark.operators.asof import interval_range_join
 
     ldf = pd.DataFrame(
@@ -288,7 +296,7 @@ def test_interval_range_join_matches_nested_loop(spark, intervals, points):
     else:
         right = spark.createDataFrame([], schema="key long, ts long, rid long").alias("r")
     got = sorted(
-        (r["lid"], r["rid"])
+        (r["lid"], -1 if r["rid"] is None else r["rid"])
         for r in interval_range_join(
             left,
             right,
@@ -299,13 +307,15 @@ def test_interval_range_join_matches_nested_loop(spark, intervals, points):
         .select("lid", "rid")
         .collect()
     )
-    expect = sorted(
-        (int(lrow.lid), int(rrow.rid))
-        for _, lrow in ldf.iterrows()
-        for _, rrow in rdf.iterrows()
-        if lrow.key == rrow.key and lrow.lo <= rrow.ts < lrow.hi
-    )
-    assert got == expect
+    expect = []
+    for _, lrow in ldf.iterrows():
+        hits = [
+            (int(lrow.lid), int(rrow.rid))
+            for _, rrow in rdf.iterrows()
+            if lrow.key == rrow.key and lrow.lo <= rrow.ts < lrow.hi
+        ]
+        expect += hits or [(int(lrow.lid), -1)]
+    assert got == sorted(expect)
 
 
 events_st = st.lists(
@@ -440,7 +450,9 @@ def test_asof_tolerance_matches_pandas(spark, quotes, trades, tol):
 def test_asof_nearest_matches_pandas_merge_asof(spark, quotes, trades):
     """asof_join_nearest == pandas merge_asof(direction='nearest'),
     including the equal-distance tie (both prefer the backward match)
-    and keys with no quotes (null join)."""
+    and keys with no quotes (null join). Quotes are unique per
+    (key, ts), so the o_orderkey tiebreak the operator reads never
+    decides; it carries the quote value."""
     from trading212_etl_spark.operators.asof import asof_join_nearest
 
     qdf = (
@@ -456,6 +468,7 @@ def test_asof_nearest_matches_pandas_merge_asof(spark, quotes, trades):
         right = spark.createDataFrame(qdf, schema="key long, ts long, qval long")
     else:
         right = spark.createDataFrame([], schema="key long, ts long, qval long")
+    right = right.withColumn("o_orderkey", F.col("qval"))
     got = (
         asof_join_nearest(
             left,

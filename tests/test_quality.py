@@ -53,7 +53,9 @@ def test_constraint_report_clean_data_passes(spark):
         [(1, "a"), (2, "b")], "id INT, tag STRING"
     )
     rep = _report_dict(
-        constraint_report(df, completeness=["tag"], unique=["id"])
+        constraint_report(
+            df, completeness=["tag"], unique=["id"], bounds={}, in_set={}
+        )
     )
     assert all(passed for _, passed in rep.values())
     assert all(metric == 1.0 for metric, _ in rep.values())
@@ -99,6 +101,7 @@ def test_constraint_report_single_scan_plan(spark):
         completeness=["bucket"],
         unique=["id"],
         bounds={"id": (0.0, None)},
+        in_set={},
     )
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
@@ -247,7 +250,7 @@ def test_bm25_degenerate_uniform_corpus(spark):
         "id AS doc_id", "'spark join window hash' AS text"
     )
     out = (
-        bm25_topk(docs, [("q", ["spark", "join"])], k=10)
+        bm25_topk(docs, [("q", ["spark", "join"])])
         .orderBy("rnk")
         .toPandas()
     )

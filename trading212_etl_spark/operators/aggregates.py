@@ -110,12 +110,16 @@ def pricing_summary(lineitem: DataFrame, ship_cutoff: str) -> DataFrame:
     )
 
 
-def key_skew_profile(df: DataFrame, key: str, top_k: int = 5) -> DataFrame:
+# hottest keys key_skew_profile reports
+SKEW_TOP_K = 5
+
+
+def key_skew_profile(df: DataFrame, key: str) -> DataFrame:
     """Key-distribution skew diagnostics: the measurement pass you run
     BEFORE choosing a shuffle strategy (plain hash vs salted vs AQE
     skew split) for a join or aggregation on ``key``.
 
-    Output: the ``top_k`` hottest keys, each row carrying its count,
+    Output: the ``SKEW_TOP_K`` hottest keys, each row carrying its count,
     its corpus share in basis points, and the global context columns —
     total rows, distinct keys, and ``skew_ratio_bp`` =
     floor(max_count * n_keys * 10000 / total) (10000 == perfectly
@@ -157,7 +161,7 @@ def key_skew_profile(df: DataFrame, key: str, top_k: int = 5) -> DataFrame:
             ),
         )
         .orderBy(F.col("n_rows").desc(), "key")
-        .limit(top_k)
+        .limit(SKEW_TOP_K)
     )
 
 

@@ -117,7 +117,6 @@ def asof_join_nearest(
     left_by: str,
     right_by: str,
     value_cols: list[str],
-    right_order: str | None = None,
 ) -> DataFrame:
     """Nearest-direction as-of join (pandas ``merge_asof(direction=
     'nearest')``): each left row gains the right row whose timestamp
@@ -132,9 +131,9 @@ def asof_join_nearest(
     shuffle + two sorts, never a range join. The carried struct
     includes the right timestamp so the pick is a pure projection.
 
-    ``right_order`` breaks ties among right rows sharing (key, ts):
-    both directions pick the max (matching an oracle that pre-dedupes
-    to the greatest tiebreak value).
+    ``right``'s ``o_orderkey`` breaks ties among right rows sharing
+    (key, ts): both directions pick the max (matching an oracle that
+    pre-dedupes to the greatest tiebreak value).
     """
     rv = F.struct(
         F.col(right_ts).alias("__rts"),
@@ -144,7 +143,7 @@ def asof_join_nearest(
         F.col(right_by).alias("__k"),
         F.col(right_ts).alias("__ts"),
         F.lit(0).alias("__tag"),
-        (F.col(right_order) if right_order else F.lit(0)).alias("__rord"),
+        F.col("o_orderkey").alias("__rord"),
         rv,
         *[F.lit(None).alias(f"__l_{c}") for c in left.columns],
     )
@@ -225,10 +224,10 @@ def interval_range_join(
     on: Column,
     lower: Column,
     upper: Column,
-    how: str = "inner",
 ) -> DataFrame:
-    """Join rows whose ``right`` timestamp falls in a per-``left``-row
-    interval, anchored by an equi-key conjunct.
+    """Left-join rows whose ``right`` timestamp falls in a
+    per-``left``-row interval, anchored by an equi-key conjunct; a
+    ``left`` row with no match keeps null ``right`` columns.
 
     ``on`` must be an equality (the hash-join key); ``lower <= x <
     upper`` is applied as the join's residual condition. Keeping the
@@ -238,4 +237,4 @@ def interval_range_join(
     equi-key) should bucket the time axis first and equi-join on the
     bucket (see streaming/windows.py tumbling logic).
     """
-    return left.join(right, on & lower & upper, how)
+    return left.join(right, on & lower & upper, "left")

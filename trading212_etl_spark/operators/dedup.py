@@ -48,6 +48,11 @@ SIMHASH_MAX_HAMMING = 3
 HOT_BUCKET_CAP = 4096
 # Round budget of the connected-components fixpoint
 CC_MAX_ROUNDS = 20
+# Word n-gram length of the Jaccard shingle sets (word_shingles)
+SHINGLE_N = 3
+# substring_span_pairs: token window length and the shortest span kept
+SPAN_WINDOW = 5
+SPAN_MIN_TOKENS = 10
 # Bloom pre-filter: 2**BLOOM_BITS_LOG2 bits, BLOOM_K hash positions
 BLOOM_BITS_LOG2 = 18
 BLOOM_K = 3
@@ -69,8 +74,8 @@ def exact_dedup(docs: DataFrame) -> DataFrame:
 
 
 def word_shingles(toks: Column) -> Column:
-    """Distinct word 3-gram shingle set over a **materialized** token
-    column.
+    """Distinct word ``SHINGLE_N``-gram shingle set over a
+    **materialized** token column.
 
     ``toks`` must be a plain column reference, never the tokenizer
     expression itself: Catalyst does not common-subexpression-eliminate
@@ -79,7 +84,7 @@ def word_shingles(toks: Column) -> Column:
     row (measured 17x slower at sf0.1). Callers materialize tokens
     behind a projection boundary first (see ``_shingle_sets``).
     """
-    n = 3
+    n = SHINGLE_N
     cnt = F.size(toks)
     idx = F.sequence(F.lit(1), F.greatest(cnt - n + 1, F.lit(1)))
     return F.array_distinct(
@@ -1347,7 +1352,7 @@ def substring_span_pairs(docs: DataFrame) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    n, min_span_tokens = 5, 10
+    n, min_span_tokens = SPAN_WINDOW, SPAN_MIN_TOKENS
     base = fan_out(docs).select(
         F.col("doc_id").alias("id"), tokens("text").alias("__toks")
     )

@@ -76,16 +76,26 @@ def sessionize(events: DataFrame, gap_minutes: int) -> DataFrame:
     )
 
 
-def session_window_agg(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
+# inactivity gap that closes a session (session_window_agg and its
+# streaming twin)
+SESSION_GAP_MIN = 30
+# retention_cohorts' activity bucket and its width in seconds
+RETENTION_BUCKET = "week"
+RETENTION_BUCKET_S = 7 * 86400
+
+
+def session_window_agg(events: DataFrame) -> DataFrame:
     """Session windows via the native ``F.session_window`` expression
     (the same operator Structured Streaming uses for stateful
     sessionization, here in its batch form).
 
-    Merge semantics: each event opens ``[ts, ts+gap)``; overlapping
-    windows merge, so a gap of *exactly* ``gap`` starts a new session
-    (strict ``<`` overlap). The oracle's lag-based rewrite must use
-    ``>=`` on the gap to match. Window end = last event + gap.
+    Merge semantics: each event opens ``[ts, ts+gap)`` with gap =
+    ``SESSION_GAP_MIN`` minutes; overlapping windows merge, so a gap
+    of *exactly* ``gap`` starts a new session (strict ``<`` overlap).
+    The oracle's lag-based rewrite must use ``>=`` on the gap to
+    match. Window end = last event + gap.
     """
+    gap = f"{SESSION_GAP_MIN} minutes"
     return (
         events.groupBy(F.session_window("ts", gap).alias("w"), "user_id")
         .agg(
@@ -182,10 +192,10 @@ def funnel(
     )
 
 
-def retention_cohorts(events: DataFrame, bucket: str = "week") -> DataFrame:
+def retention_cohorts(events: DataFrame) -> DataFrame:
     """Cohort retention: users grouped by first-activity bucket
-    (cohort), counted per subsequent activity bucket offset — the
-    standard growth-analytics triangle.
+    (``RETENTION_BUCKET``, the cohort), counted per subsequent activity
+    bucket offset — the standard growth-analytics triangle.
 
     One events pass, shuffling only (user, bucket)-level rows: the
     cohort is ``min(bucket) OVER (PARTITION BY user_id)`` on the
@@ -197,12 +207,12 @@ def retention_cohorts(events: DataFrame, bucket: str = "week") -> DataFrame:
     filters nothing (r14, guide §2.1/§2.3). Per-user window
     partitions hold at most one row per calendar bucket — bounded by
     the date range, never by volume."""
-    b = F.date_trunc(bucket, F.col("ts"))
+    b = F.date_trunc(RETENTION_BUCKET, F.col("ts"))
     active = events.select("user_id", b.alias("bucket")).distinct()
     cohort = F.min("bucket").over(Window.partitionBy("user_id"))
     offset = F.floor(
         (F.unix_timestamp("bucket") - F.unix_timestamp("cohort"))
-        / (7 * 86400 if bucket == "week" else 86400)
+        / RETENTION_BUCKET_S
     ).cast("int")
     return (
         active.withColumn("cohort", cohort)

@@ -48,6 +48,18 @@ from pyspark.sql import types as T
 
 from ..session import drop_zip_importers
 
+# Corpus and kernel settings the DuckDB oracles regenerate. Kernels
+# copy them into locals at call time: Python workers cannot import the
+# package, so a closure must carry values, not module globals.
+WAV_SAMPLE_RATE = 8000  # synth_wav_payload's frame rate
+AUDIO_BANDS = 4  # equal time buckets of audio_features' RMS
+RESIZE_W, RESIZE_H = 16, 12  # resize_images' output dims
+FRAME_EVERY = 2  # sample_frames keeps frames idx % FRAME_EVERY == 0
+# synth_bmp_twin_corpus: doc ids % TWIN_MOD == 0 get a twin at
+# doc_id + TWIN_OFFSET
+TWIN_MOD = 9
+TWIN_OFFSET = 5_000_000
+
 # metadata struct every decoded asset carries
 IMAGE_META_SCHEMA = T.StructType(
     [
@@ -121,7 +133,7 @@ def _synth_parts(docs: DataFrame) -> int:
     return max(8, docs.sparkSession.sparkContext.defaultParallelism // 4)
 
 
-def synth_wav_payload(docs: DataFrame, sample_rate: int = 8000) -> DataFrame:
+def synth_wav_payload(docs: DataFrame) -> DataFrame:
     """Deterministic synthetic PCM16 mono WAV corpus — REAL WAV
     encoding via the stdlib ``wave`` module (the only audio codec this
     container ships). Stands in for the object-storage audio scan of a
@@ -132,6 +144,7 @@ def synth_wav_payload(docs: DataFrame, sample_rate: int = 8000) -> DataFrame:
     fully DuckDB-oracle-able (the same construction as the md5-mode
     MinHash signatures). Runs distributed in ``mapInPandas``; one md5
     digest yields 8 samples, so synthesis is ~n/8 digests per doc."""
+    sample_rate = WAV_SAMPLE_RATE
     out_schema = T.StructType(
         [
             T.StructField("doc_id", T.LongType()),
@@ -180,11 +193,11 @@ def synth_wav_payload(docs: DataFrame, sample_rate: int = 8000) -> DataFrame:
     )
 
 
-def audio_features(binary_df: DataFrame, n_bands: int = 4) -> DataFrame:
+def audio_features(binary_df: DataFrame) -> DataFrame:
     """REAL audio feature extraction (no stub): parse the WAV
     container with the stdlib ``wave`` module — actual header +
     PCM16 frame decoding — then compute time-domain DSP features in
-    numpy: per-band RMS energy (``n_bands`` equal time buckets),
+    numpy: per-band RMS energy (``AUDIO_BANDS`` equal time buckets),
     zero-crossing count, and peak amplitude. The binary→feature
     mapInPandas shape — the template for any featurization kernel; a
     production deployment swaps the feature block for a log-mel
@@ -195,6 +208,7 @@ def audio_features(binary_df: DataFrame, n_bands: int = 4) -> DataFrame:
     int64 (|s| ≤ 2^15, n ≤ 384 ⇒ ss < 2^39 < 2^53) and IEEE divide +
     sqrt are bit-identical across engines, so callers round once at
     the comparison edge (registry rounds to 4 dp)."""
+    n_bands = AUDIO_BANDS
     band_fields = [
         T.StructField(f"rms_b{b}", T.DoubleType()) for b in range(n_bands)
     ]
@@ -351,9 +365,7 @@ def _bmp_codec():
 _bmp_encode, _bmp_decode = _bmp_codec()
 
 
-def resize_images(
-    binary_df: DataFrame, target_w: int = 16, target_h: int = 12
-) -> DataFrame:
+def resize_images(binary_df: DataFrame) -> DataFrame:
     """REAL image resize (no stub): decode the BMP container,
     nearest-neighbor resample in numpy (``src = (dst · src_dim) //
     dst_dim`` — pure integer index math, so the DuckDB oracle can
@@ -364,6 +376,7 @@ def resize_images(
     the container round-trip). The 1→1 binary-to-binary mapInPandas
     shape — the template for any re-encode kernel; swap the resample
     line for PIL/cv2 interpolation in a deployment with codecs."""
+    target_w, target_h = RESIZE_W, RESIZE_H
     out_schema = T.StructType(
         [
             T.StructField("doc_id", T.LongType()),
@@ -414,12 +427,14 @@ def _avi_codec():
     tree generically (no hardcoded offsets), so it reads any
     spec-shaped uncompressed AVI, not just its own output."""
 
-    def encode(frames, usec_per_frame: int = 100_000) -> bytes:
-        # frames: list of (h, w) uint8 grayscale arrays, equal dims
+    def encode(frames) -> bytes:
+        # frames: list of (h, w) uint8 grayscale arrays, equal dims,
+        # at 10 frames per second
         import struct
 
         import numpy as np
 
+        usec_per_frame = 100_000
         h, w = frames[0].shape
         row = ((w * 3 + 3) // 4) * 4
         fsize = row * h
@@ -557,9 +572,9 @@ def synth_avi_payload(docs: DataFrame) -> DataFrame:
     )
 
 
-def sample_frames(binary_df: DataFrame, every_n: int = 2) -> DataFrame:
+def sample_frames(binary_df: DataFrame) -> DataFrame:
     """REAL video frame sampling (no stub): walk the AVI's RIFF chunk
-    tree, decode every ``every_n``-th DIB frame, and emit one row per
+    tree, decode every ``FRAME_EVERY``-th DIB frame, and emit one row per
     sampled frame with its stats — the 1→N mapInPandas row-explosion
     shape of video ingestion. Emitted facts (dims from the avih
     header, per-frame integer pixel sums, frame count) pin the
@@ -577,6 +592,7 @@ def sample_frames(binary_df: DataFrame, every_n: int = 2) -> DataFrame:
         ]
     )
     _, parse = _avi_codec()
+    every_n = FRAME_EVERY
 
     def sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         drop_zip_importers()
@@ -605,13 +621,11 @@ def sample_frames(binary_df: DataFrame, every_n: int = 2) -> DataFrame:
     return binary_df.mapInPandas(sample, schema)
 
 
-def synth_bmp_twin_corpus(
-    binary_docs: DataFrame, twin_mod: int = 9, twin_offset: int = 5_000_000
-) -> DataFrame:
+def synth_bmp_twin_corpus(binary_docs: DataFrame) -> DataFrame:
     """Synthetic BMP corpus with perceptual-duplicate plants: every
     base document gets the synth_bmp_payload image; documents with
-    ``doc_id % twin_mod == 0`` additionally emit a TWIN row
-    (``doc_id + twin_offset``) holding the same image nearest-neighbor
+    ``doc_id % TWIN_MOD == 0`` additionally emit a TWIN row
+    (``doc_id + TWIN_OFFSET``) holding the same image nearest-neighbor
     UPSCALED 2x — byte-different payload, different dims, identical
     content at any NN downsample whose target divides the scale
     factor evenly into the index math (floor((floor(x*2s/t))/2) ==
@@ -628,6 +642,7 @@ def synth_bmp_twin_corpus(
         ]
     )
     encode, _ = _bmp_codec()
+    twin_mod, twin_offset = TWIN_MOD, TWIN_OFFSET
 
     def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         drop_zip_importers()

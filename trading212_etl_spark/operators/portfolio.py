@@ -47,24 +47,15 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def fifo_realized_pnl(
-    fills: DataFrame,
-    *,
-    account: str = "account",
-    side: str = "side",
-    ts: str = "ts",
-    tiebreak: str = "fill_id",
-    qty: str = "qty",
-    price: str = "price",
-) -> DataFrame:
+def fifo_realized_pnl(fills: DataFrame) -> DataFrame:
     """Realized P&L per account under FIFO lot matching.
 
-    ``fills`` needs (account, side in {'buy','sell'}, ts, tiebreak,
-    qty > 0, price as an exact DECIMAL). Sells beyond the total bought
-    quantity (shorts) stay unmatched and contribute nothing, matching
-    long-only FIFO semantics.
+    ``fills`` needs (user_id, side in {'buy','sell'}, ts, event_id as
+    the tiebreak at equal ts, qty > 0, price as an exact DECIMAL).
+    Sells beyond the total bought quantity (shorts) stay unmatched and
+    contribute nothing, matching long-only FIFO semantics.
 
-    Output: (account, matched_qty BIGINT, realized_pnl DOUBLE cast
+    Output: (user_id, matched_qty BIGINT, realized_pnl DOUBLE cast
     from an exact decimal sum, n_matches BIGINT).
     """
     # ONE window pass builds both sides' spine rows (r14): the
@@ -78,25 +69,25 @@ def fifo_realized_pnl(
     # the other side's struct null — identical rows to the union, half
     # the scans and window sorts.
     w_run = (
-        Window.partitionBy(account)
-        .orderBy(ts, tiebreak)
+        Window.partitionBy("user_id")
+        .orderBy("ts", "event_id")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    is_buy = F.col(side) == "buy"
-    is_sell = F.col(side) == "sell"
-    cum_b = F.sum(F.when(is_buy, F.col(qty))).over(w_run)
-    cum_s = F.sum(F.when(is_sell, F.col(qty))).over(w_run)
-    spine = fills.where(F.col(side).isin("buy", "sell")).select(
-        F.col(account).alias("__acct"),
-        (F.when(is_buy, cum_b).otherwise(cum_s) - F.col(qty)).alias("__pos"),
+    is_buy = F.col("side") == "buy"
+    is_sell = F.col("side") == "sell"
+    cum_b = F.sum(F.when(is_buy, F.col("qty"))).over(w_run)
+    cum_s = F.sum(F.when(is_sell, F.col("qty"))).over(w_run)
+    spine = fills.where(F.col("side").isin("buy", "sell")).select(
+        F.col("user_id").alias("__acct"),
+        (F.when(is_buy, cum_b).otherwise(cum_s) - F.col("qty")).alias("__pos"),
         F.when(is_buy, F.lit(0)).otherwise(F.lit(1)).alias("__side"),
         F.when(
             is_buy,
-            F.struct(cum_b.alias("b_hi"), F.col(price).alias("b_px")),
+            F.struct(cum_b.alias("b_hi"), F.col("price").alias("b_px")),
         ).alias("__b"),
         F.when(
             is_sell,
-            F.struct(cum_s.alias("s_hi"), F.col(price).alias("s_px")),
+            F.struct(cum_s.alias("s_hi"), F.col("price").alias("s_px")),
         ).alias("__s"),
     )
     # One ordered pass per account: at unit position p the active buy
@@ -126,13 +117,13 @@ def fifo_realized_pnl(
             & (matched > 0)
         )
         .select(
-            F.col("__acct").alias(account),
+            F.col("__acct").alias("user_id"),
             matched.alias("m_qty"),
             ((F.col("__sc.s_px") - F.col("__bc.b_px")) * matched).alias(
                 "m_pnl"
             ),
         )
-        .groupBy(account)
+        .groupBy("user_id")
         .agg(
             F.sum("m_qty").cast("long").alias("matched_qty"),
             F.sum("m_pnl").cast("double").alias("realized_pnl"),
@@ -141,16 +132,7 @@ def fifo_realized_pnl(
     )
 
 
-def fifo_open_lots(
-    fills: DataFrame,
-    *,
-    account: str = "account",
-    side: str = "side",
-    ts: str = "ts",
-    tiebreak: str = "fill_id",
-    qty: str = "qty",
-    price: str = "price",
-) -> DataFrame:
+def fifo_open_lots(fills: DataFrame) -> DataFrame:
     """Remaining FIFO inventory per account: open quantity and its
     exact cost basis after all fills.
 
@@ -163,7 +145,7 @@ def fifo_open_lots(
     totals (whole-partition frame) on a single exchange, then one
     aggregate.
 
-    Output: (account, open_qty BIGINT, open_cost DOUBLE — exact
+    Output: (user_id, open_qty BIGINT, open_cost DOUBLE — exact
     decimal cast, avg_cost_micro BIGINT = floor(cost/qty * 1e6)).
     Accounts with nothing open are omitted.
     """
@@ -175,28 +157,28 @@ def fifo_open_lots(
     # account totals — so one exchange carries everything and the
     # totals join disappears.
     w_run = (
-        Window.partitionBy(account)
-        .orderBy(ts, tiebreak)
+        Window.partitionBy("user_id")
+        .orderBy("ts", "event_id")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    w_all = Window.partitionBy(account)
-    is_buy = F.col(side) == "buy"
+    w_all = Window.partitionBy("user_id")
+    is_buy = F.col("side") == "buy"
     lots = (
         fills.withColumn(
-            "u_hi", F.sum(F.when(is_buy, F.col(qty))).over(w_run)
+            "u_hi", F.sum(F.when(is_buy, F.col("qty"))).over(w_run)
         )
         .withColumn(
             "_bought",
-            F.sum(F.when(is_buy, F.col(qty)).otherwise(0)).over(w_all),
+            F.sum(F.when(is_buy, F.col("qty")).otherwise(0)).over(w_all),
         )
         .withColumn(
             "_sold",
             F.sum(
-                F.when(F.col(side) == "sell", F.col(qty)).otherwise(0)
+                F.when(F.col("side") == "sell", F.col("qty")).otherwise(0)
             ).over(w_all),
         )
         .where(is_buy)
-        .withColumn("u_lo", F.col("u_hi") - F.col(qty))
+        .withColumn("u_lo", F.col("u_hi") - F.col("qty"))
     )
     cutoff = F.least("_bought", "_sold")
     open_qty = F.greatest(
@@ -205,11 +187,11 @@ def fifo_open_lots(
     agged = (
         lots
         .select(
-            F.col(account),
+            F.col("user_id"),
             open_qty.alias("_oq"),
-            (F.col(price) * open_qty).alias("_ocost"),
+            (F.col("price") * open_qty).alias("_ocost"),
         )
-        .groupBy(account)
+        .groupBy("user_id")
         .agg(
             F.sum("_oq").cast("long").alias("open_qty"),
             F.sum("_ocost").alias("_cost_dec"),
@@ -217,7 +199,7 @@ def fifo_open_lots(
         .where(F.col("open_qty") > 0)
     )
     return agged.select(
-        F.col(account),
+        F.col("user_id"),
         "open_qty",
         F.col("_cost_dec").cast("double").alias("open_cost"),
         F.expr("CAST(_cost_dec * 1000000 AS BIGINT) DIV open_qty").alias(
@@ -226,18 +208,12 @@ def fifo_open_lots(
     )
 
 
-def equity_drawdown(
-    flows: DataFrame,
-    *,
-    account: str = "account",
-    ts: str = "ts",
-    tiebreak: str = "fill_id",
-    amount: str = "amount",
-) -> DataFrame:
-    """Max drawdown per account over the cash-flow equity curve:
-    equity = running sum of signed ``amount`` in time order, peak =
-    running max of equity, drawdown = peak − equity; report each
-    account's worst drawdown plus its final and peak equity.
+def equity_drawdown(flows: DataFrame) -> DataFrame:
+    """Max drawdown per account (``user_id``) over the cash-flow
+    equity curve: equity = running sum of signed ``amount`` in
+    (ts, event_id) order, peak = running max of equity, drawdown =
+    peak − equity; report each account's worst drawdown plus its
+    final and peak equity.
 
     Two window functions over ONE keyed sort (same partition + order
     ⇒ one exchange, one sort) and a final tiny aggregate. Amounts
@@ -246,23 +222,23 @@ def equity_drawdown(
     of identical exact values on any engine.
     """
     w = (
-        Window.partitionBy(account)
-        .orderBy(ts, tiebreak)
+        Window.partitionBy("user_id")
+        .orderBy("ts", "event_id")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    curve = flows.withColumn("_equity", F.sum(amount).over(w)).withColumn(
+    curve = flows.withColumn("_equity", F.sum("amount").over(w)).withColumn(
         "_peak", F.max("_equity").over(w)
     )
     # final equity == total flow sum (the running sum's last value) and
     # peak == max equity — both expressible as order-independent
     # aggregates; F.last() in an agg would be partition-order-dependent.
     return (
-        curve.groupBy(account)
+        curve.groupBy("user_id")
         .agg(
             F.max(F.col("_peak") - F.col("_equity"))
             .cast("double")
             .alias("max_drawdown"),
-            F.sum(amount).cast("double").alias("final_equity"),
+            F.sum("amount").cast("double").alias("final_equity"),
             F.max("_equity").cast("double").alias("peak_equity"),
         )
     )

@@ -29,10 +29,10 @@ from pyspark.sql import functions as F
 def constraint_report(
     df: DataFrame,
     *,
-    completeness: list[str] = (),
-    unique: list[str] = (),
-    bounds: dict[str, tuple[float | None, float | None]] | None = None,
-    in_set: dict[str, list[str]] | None = None,
+    completeness: list[str],
+    unique: list[str],
+    bounds: dict[str, tuple[float | None, float | None]],
+    in_set: dict[str, list[str]],
 ) -> DataFrame:
     """Deequ-style constraint audit: one row per declared constraint
     with its measured metric in [0, 1] and a pass flag.
@@ -47,8 +47,6 @@ def constraint_report(
     Output: (check_name STRING, metric DOUBLE, passed BOOLEAN),
     ordered by check name for deterministic presentation.
     """
-    bounds = bounds or {}
-    in_set = in_set or {}
     total = F.count(F.lit(1)).cast("double")
     aggs = [total.alias("_total")]
     rows: list[tuple[str, str]] = []  # (constraint label, agg alias)

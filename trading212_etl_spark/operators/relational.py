@@ -45,37 +45,33 @@ def top_k(df: DataFrame, order: list[Column], k: int) -> DataFrame:
     return df.orderBy(*order).limit(k)
 
 
-def broadcast_join(
-    fact: DataFrame, dim: DataFrame, on, how: str = "inner"
-) -> DataFrame:
+def broadcast_join(fact: DataFrame, dim: DataFrame, on) -> DataFrame:
     """§2.3 — fact⋈dim with the dim side broadcast: the intended
     semantics of the reference's broken account-id enrichment
     (trading212.py:109). Broadcasting the small side removes the
     fact-side shuffle entirely — the single most important join lever
     at 100 TB (dims here are KBs-MBs; the fact table is the 100 TB)."""
-    return fact.join(F.broadcast(dim), on, how)
+    return fact.join(F.broadcast(dim), on, "inner")
 
 
-def salted_join(
-    big: DataFrame,
-    skewed: DataFrame,
-    key: str,
-    n_salts: int = 16,
-    how: str = "inner",
-) -> DataFrame:
-    """Skew-mitigated equi-join: explode the build side into
-    ``n_salts`` replicas and scatter the probe side's hot keys across
-    them, so one hot key becomes ``n_salts`` shuffle partitions
-    instead of one straggler task. AQE's skew-join handles moderate
-    skew automatically; this is the explicit lever for pathological
-    keys (SURVEY §7 scale hardening).
+def salted_join(big: DataFrame, skewed: DataFrame, key: str) -> DataFrame:
+    """Skew-mitigated inner equi-join: explode the build side into
+    ``partitioning.SALT_BUCKETS`` replicas and scatter the probe side's
+    hot keys across them, so one hot key becomes that many shuffle
+    partitions instead of one straggler task. AQE's skew-join handles
+    moderate skew automatically; this is the explicit lever for
+    pathological keys (SURVEY §7 scale hardening).
     """
-    salt = (F.crc32(F.col(key).cast("string")) + F.monotonically_increasing_id()) % n_salts
+    from ..partitioning import SALT_BUCKETS
+
+    salt = (
+        F.crc32(F.col(key).cast("string")) + F.monotonically_increasing_id()
+    ) % SALT_BUCKETS
     big_s = big.withColumn("__salt", salt.cast("int"))
     skewed_s = skewed.withColumn(
-        "__salt", F.explode(F.array([F.lit(i) for i in range(n_salts)]))
+        "__salt", F.explode(F.array([F.lit(i) for i in range(SALT_BUCKETS)]))
     )
-    out = big_s.join(skewed_s, [key, "__salt"], how)
+    out = big_s.join(skewed_s, [key, "__salt"], "inner")
     return out.drop("__salt")
 
 

@@ -22,30 +22,34 @@ from pyspark.sql import functions as F
 
 from .textual import tokens
 
-
-def _hash_frac(key: Column, chars: int = 4) -> Column:
-    """Uniform-ish [0, 1) fraction from the first ``chars`` hex chars
-    of md5(key) — 4 chars = 16-bit resolution, plenty for split/sample
-    rates. Lowercase hex on both Spark and DuckDB, so lexicographic
-    threshold comparisons agree across engines too."""
-    return F.substring(F.md5(key.cast("string")), 1, chars)
+# md5 hex chars behind every hash-fraction decision: 4 chars = 16-bit
+# resolution, plenty for split/sample rates
+HASH_CHARS = 4
+# hashed unigram feature buckets of dsir_importance_weights
+DSIR_BUCKETS = 512
 
 
-def _rate_threshold(rate: float, chars: int = 4) -> str:
+def _hash_frac(key: Column) -> Column:
+    """Uniform-ish [0, 1) fraction from the first ``HASH_CHARS`` hex
+    chars of md5(key). Lowercase hex on both Spark and DuckDB, so
+    lexicographic threshold comparisons agree across engines too."""
+    return F.substring(F.md5(key.cast("string")), 1, HASH_CHARS)
+
+
+def _rate_threshold(rate: float) -> str:
     """Hex threshold t such that P(md5-prefix < t) == rate (at
-    16-bit resolution)."""
-    return format(int(rate * (16 ** chars)), f"0{chars}x")
+    ``HASH_CHARS`` hex resolution)."""
+    return format(int(rate * (16**HASH_CHARS)), f"0{HASH_CHARS}x")
 
 
 def hash_split(
     df: DataFrame,
     key_col: str,
     splits: dict[str, float],
-    out_col: str = "split",
 ) -> DataFrame:
     """Deterministic train/val/test split: each row lands in exactly
-    one named split with probability ~= its weight, decided solely by
-    md5(key). Pure projection — zero shuffle at any scale, and a
+    one named split (column ``split``) with probability ~= its weight,
+    decided solely by md5(key). Pure projection — zero shuffle at any scale, and a
     document keeps its split across re-runs and dataset versions
     (critical: no eval-set leakage when the corpus is regenerated).
 
@@ -65,7 +69,7 @@ def hash_split(
     expr = (
         F.lit(names[-1]) if expr is None else expr.otherwise(names[-1])
     )
-    return df.withColumn(out_col, expr)
+    return df.withColumn("split", expr)
 
 
 def stratified_sample(
@@ -91,36 +95,30 @@ def stratified_sample(
     return df.filter(cond)
 
 
-def pack_sequences(
-    docs: DataFrame,
-    budget: int,
-    part_col: str = "source",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def pack_sequences(docs: DataFrame, budget: int) -> DataFrame:
     """Assign documents to fixed token-budget packs (context-window
-    filling): within each ``part_col`` shard, documents are laid out
-    in ``id_col`` order and a new pack starts whenever the running
-    token count crosses the budget. Returns (id, part, n_tokens,
+    filling): within each ``source`` shard, documents are laid out
+    in ``doc_id`` order and a new pack starts whenever the running
+    token count crosses the budget. Returns (doc_id, source, n_tokens,
     pack_id, pack_offset) where ``pack_offset`` is the token position
     at which the doc starts in its shard's layout.
 
-    Scale shape: the running sum windows over ``part_col`` — packing
+    Scale shape: the running sum windows over ``source`` — packing
     is per-shard by design (a global pack order would serialize the
     corpus through one partition; sharded packing is what training
     loaders do anyway, one pack stream per reader). One shuffle on the
     shard key, then a linear in-partition scan.
     """
     w = (
-        Window.partitionBy(part_col)
-        .orderBy(id_col)
+        Window.partitionBy("source")
+        .orderBy("doc_id")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
-    n_tok = F.size(tokens(F.col(text_col)))
+    n_tok = F.size(tokens(F.col("text")))
     return (
         docs.select(
-            F.col(id_col),
-            F.col(part_col),
+            F.col("doc_id"),
+            F.col("source"),
             n_tok.alias("n_tokens"),
         )
         .withColumn(
@@ -133,14 +131,11 @@ def pack_sequences(
 
 
 def domain_mixture_plan(
-    docs: DataFrame,
-    weights: dict[str, float],
-    domain_col: str = "lang",
-    text_col: str = "text",
+    docs: DataFrame, weights: dict[str, float]
 ) -> DataFrame:
-    """Compute the per-domain sampling plan that realizes a target
-    mixture (e.g. 70% en / 20% de / 10% fr by tokens) while using as
-    much data as possible: the binding domain (smallest
+    """Compute the per-domain (``lang``) sampling plan that realizes a
+    target mixture (e.g. 70% en / 20% de / 10% fr by tokens) while
+    using as much data as possible: the binding domain (smallest
     available/target ratio) is taken in full and every other domain is
     downsampled to match. Returns per domain: available tokens, target
     weight, sampling rate, and the token count the plan takes.
@@ -161,9 +156,9 @@ def domain_mixture_plan(
     # pinned: feeds the per-domain rows AND the 1-row binding-
     # constraint branch (unpinned, the corpus tokenize+agg runs twice)
     counts = freeze_partitions(
-        docs.filter(F.col(domain_col).isin(domains))
-        .groupBy(F.col(domain_col).alias("domain"))
-        .agg(F.sum(F.size(tokens(F.col(text_col)))).alias("tokens_avail"))
+        docs.filter(F.col("lang").isin(domains))
+        .groupBy(F.col("lang").alias("domain"))
+        .agg(F.sum(F.size(tokens(F.col("text")))).alias("tokens_avail"))
         .withColumn("weight", wmap[F.col("domain")])
     )
     # binding-constraint scale via 1-row broadcast cross join, not an
@@ -191,21 +186,18 @@ def domain_mixture_plan(
     )
 
 
-def temperature_mixture_weights(
-    docs: DataFrame,
-    alpha_pct: int = 50,
-    domain_col: str = "source",
-) -> DataFrame:
-    """Temperature-scaled domain sampling weights: p_domain ∝
-    n_docs^(alpha_pct/100) — the standard multilingual/multi-domain
-    rebalancing rule (alpha=1 keeps the natural distribution, alpha→0
-    approaches uniform; XLM-R-style pipelines use alpha≈0.3–0.7 to
-    up-sample small domains without flattening large ones).
+def temperature_mixture_weights(docs: DataFrame) -> DataFrame:
+    """Temperature-scaled domain (``source``) sampling weights at
+    alpha = 0.5: p_domain ∝ n_docs^alpha — the standard
+    multilingual/multi-domain rebalancing rule (alpha=1 keeps the
+    natural distribution, alpha→0 approaches uniform; XLM-R-style
+    pipelines use alpha≈0.3–0.7 to up-sample small domains without
+    flattening large ones).
 
     Cross-engine exactness: n^alpha for alpha=k/100 is exp/ln in
-    general (libm, engine-divergent) — EXCEPT alpha=50: sqrt is an
-    IEEE-754 correctly-rounded operation, identical everywhere. So
-    alpha_pct must be 50 here; the per-domain weight is quantized to
+    general (libm, engine-divergent) — EXCEPT alpha=0.5: sqrt is an
+    IEEE-754 correctly-rounded operation, identical everywhere, which
+    is why alpha is fixed; the per-domain weight is quantized to
     exact integer micro-units ``floor(sqrt(n_docs) * 1e6)`` and shares
     are integer basis points of the micro-weight sum (integer sums are
     order-independent; a double sum of raw sqrt values would be
@@ -216,16 +208,11 @@ def temperature_mixture_weights(
     on the |domains|-sized frame (single-partition window over a
     handful of rows).
     """
-    if alpha_pct != 50:
-        raise ValueError(
-            "alpha_pct=50 (sqrt) is the only cross-engine-exact "
-            "temperature; general n^alpha needs libm exp/ln"
-        )
     from pyspark.sql import Window
 
     from ..partitioning import scalar_bucket
 
-    counts = docs.groupBy(F.col(domain_col).alias("domain")).agg(
+    counts = docs.groupBy(F.col("source").alias("domain")).agg(
         F.count(F.lit(1)).alias("n_docs")
     )
     w_micro = F.floor(F.sqrt(F.col("n_docs")) * F.lit(1_000_000)).cast("long")
@@ -241,20 +228,13 @@ def temperature_mixture_weights(
     )
 
 
-def dsir_importance_weights(
-    docs: DataFrame,
-    target_pred: Column,
-    n_buckets: int = 512,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    keep: tuple[str, ...] = (),
-) -> DataFrame:
+def dsir_importance_weights(docs: DataFrame, target_pred: Column) -> DataFrame:
     """DSIR importance weights (Xie et al. 2023): per-document hashed
     n-gram log-likelihood ratio between a target domain
     (``target_pred`` rows) and the raw corpus, in integer milli-nats.
 
     Hashed unigram features (md5 — the cross-engine hash) bound state
-    at O(n_buckets) regardless of vocabulary. The per-bucket
+    at O(DSIR_BUCKETS) regardless of vocabulary. The per-bucket
     log-ratio (add-one smoothing both sides) is quantized to
     milli-nats ONCE per bucket, so document scores are integer-exact
     sums; bucket totals ride a scalar_bucket window over the bounded
@@ -262,20 +242,21 @@ def dsir_importance_weights(
     rollup. Plan: two token-explode aggregates + one broadcast join —
     no all-pairs work, no driver state.
 
-    Returns (id_col, *keep, weight_milli) for EVERY document with at
+    Returns (doc_id, source, weight_milli) for EVERY document with at
     least one token; selection policy (top-k, threshold, Gumbel
     resample) composes downstream.
     """
     from ..partitioning import scalar_bucket
 
+    n_buckets = DSIR_BUCKETS
     bt = docs.select(
-        F.col(id_col),
-        *[F.col(c) for c in keep],
+        F.col("doc_id"),
+        F.col("source"),
         target_pred.alias("__is_target"),
-        F.explode(tokens(text_col)).alias("__w"),
+        F.explode(tokens("text")).alias("__w"),
     ).select(
-        id_col,
-        *keep,
+        "doc_id",
+        "source",
         "__is_target",
         (
             F.conv(F.substring(F.md5("__w"), 1, 6), 16, 10).cast("bigint")
@@ -301,7 +282,7 @@ def dsir_importance_weights(
 
     if is_heavy(bt):
         dc = freeze_partitions(
-            bt.groupBy(id_col, *keep, "__is_target", "__b").agg(
+            bt.groupBy("doc_id", "source", "__is_target", "__b").agg(
                 F.count(F.lit(1)).alias("__cnt")
             )
         )
@@ -318,7 +299,7 @@ def dsir_importance_weights(
             .groupBy("__b")
             .agg(F.count(F.lit(1)).alias("__t_cnt"))
         )
-        dc = bt.groupBy(id_col, *keep, "__b").agg(
+        dc = bt.groupBy("doc_id", "source", "__b").agg(
             F.count(F.lit(1)).alias("__cnt")
         )
     wj = raw.join(tgt, "__b", "left").select(
@@ -348,7 +329,7 @@ def dsir_importance_weights(
     )
     return (
         dc.join(F.broadcast(wts), "__b")
-        .groupBy(id_col, *keep)
+        .groupBy("doc_id", "source")
         .agg(
             F.sum(F.col("__cnt") * F.col("__lw_milli"))
             .cast("bigint")

@@ -312,35 +312,43 @@ def cosine_topk_ivf(corpus: DataFrame, queries: DataFrame, k: int) -> DataFrame:
     partitioned by cell* so a probe reads n_probe partitions and the
     join does no shuffle at all. Recall vs brute force is asserted in
     tests (rows-only op — cells are seed-dependent)."""
-    from pyspark.sql import Window
-
     cents = _data_centroids(corpus)
-
-    # dots[i] per centroid, materialized once per row (projection
-    # boundary — same CSE rule as the tokenizer, see operators/textual).
-    cent_dots = lambda emb_sql: _cent_dots_expr(emb_sql, cents)  # noqa: E731
-
-    c = (
-        fan_out(corpus)
-        .select(
+    c = _assign_cells(
+        fan_out(corpus).select(
             F.col("vec_id").alias("corpus_id"),
             F.col("embedding").cast("array<double>").alias("c_emb"),
-        )
-        .withColumn("__dots", cent_dots("c_emb"))
+        ),
+        "c_emb",
+        cents,
+    )
+    return _rank_probed(c, _probe_cells(queries, cents), "corpus_id", k)
+
+
+def _assign_cells(vecs: DataFrame, emb_col: str, cents) -> DataFrame:
+    """``vecs`` plus ``cell``: the 1-based index of the centroid with
+    the largest dot product against ``emb_col`` (the first max wins).
+    The dots are materialized once per row (projection boundary —
+    same CSE rule as the tokenizer, see operators/textual)."""
+    return (
+        vecs.withColumn("__dots", _cent_dots_expr(emb_col, cents))
         .withColumn(
             "cell",
             F.array_position(F.col("__dots"), F.array_max("__dots")).cast("int"),
         )
         .drop("__dots")
     )
-    # per query: indices of the n_probe largest dots, via sorted
-    # (dot desc, idx) structs — JVM-side, no UDF
-    q = (
+
+
+def _probe_cells(queries: DataFrame, cents) -> DataFrame:
+    """(query_id, q_emb, cell), one row per cell each query probes:
+    the indices of its IVF_PROBES largest centroid dots, via sorted
+    (dot desc, idx) structs — JVM-side, no UDF."""
+    return (
         queries.select(
             F.col("vec_id").alias("query_id"),
             F.col("embedding").cast("array<double>").alias("q_emb"),
         )
-        .withColumn("__dots", cent_dots("q_emb"))
+        .withColumn("__dots", _cent_dots_expr("q_emb", cents))
         .withColumn(
             "__cell_l",
             F.explode(
@@ -366,15 +374,25 @@ def cosine_topk_ivf(corpus: DataFrame, queries: DataFrame, k: int) -> DataFrame:
         .withColumn("cell", F.col("__cell_l").cast("int"))
         .drop("__dots", "__cell_l")
     )
+
+
+def _rank_probed(
+    cells: DataFrame, probes: DataFrame, id_col: str, k: int
+) -> DataFrame:
+    """(query_id, corpus_id, cos_sim, rank): exact cosine top-``k`` per
+    query over the corpus rows (``id_col``, ``c_emb``, ``cell``) of
+    its probed cells (:func:`_probe_cells`, broadcast)."""
+    from pyspark.sql import Window
+
     # no distinct needed: each corpus vector is assigned to exactly ONE
     # cell (argmax), so a (query, corpus) pair meets at most once even
     # though a query probes IVF_PROBES cells — unlike multi-table LSH.
     scored = (
-        c.join(F.broadcast(q), "cell")
-        .filter(F.col("corpus_id") != F.col("query_id"))
+        cells.join(F.broadcast(probes), "cell")
+        .filter(F.col(id_col) != F.col("query_id"))
         .select(
             "query_id",
-            "corpus_id",
+            F.col(id_col).alias("corpus_id"),
             F.round(cosine(F.col("q_emb"), F.col("c_emb")), ROUND_DP).alias("cos_sim"),
         )
     )
@@ -644,15 +662,10 @@ def kmeans_lloyd_step(corpus: DataFrame) -> DataFrame:
     centroids are IVF_CELLS·d rows, ML-init scale).
     """
     cents = _data_centroids(corpus)
-    assigned = (
-        fan_out(corpus)
-        .select(F.col("embedding").cast("array<double>").alias("emb"))
-        .withColumn("__dots", _cent_dots_expr("emb", cents))
-        .withColumn(
-            "cell",
-            F.array_position(F.col("__dots"), F.array_max("__dots")).cast("int"),
-        )
-        .drop("__dots")
+    assigned = _assign_cells(
+        fan_out(corpus).select(F.col("embedding").cast("array<double>").alias("emb")),
+        "emb",
+        cents,
     )
     return (
         assigned.select("cell", F.posexplode("emb").alias("dim", "val"))

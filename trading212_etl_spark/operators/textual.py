@@ -26,6 +26,21 @@ from ..session import drop_zip_importers
 # pass. Identical regex runs on the DuckDB side.
 TOKEN_RE = "[a-z]+|[0-9]+|[^a-z0-9\\s]"
 
+# tokens per winnowing shingle (fingerprint)
+FINGERPRINT_SHINGLE = 5
+# characteristic terms kept per document (tfidf_top_terms)
+TFIDF_TOP_K = 5
+# word n-gram length and heavy-hitter count (top_ngrams)
+TOP_NGRAM_N = 3
+TOP_NGRAM_K = 20
+# keep threshold of model_quality_filter, milli-weight per token
+QUALITY_THRESHOLD_MILLI = -50
+# chunk_windows: tokens per chunk and chunk start step
+CHUNK_SIZE = 64
+CHUNK_STRIDE = 48
+# documents kept per query (bm25_topk)
+BM25_TOP_K = 10
+
 STOPWORDS = {
     "en": ["the", "a", "and", "of", "to", "in", "is"],
     "de": ["der", "die", "das", "und", "ist", "ein"],
@@ -34,9 +49,9 @@ STOPWORDS = {
 }
 
 
-def tokens(col: Column | str, pattern: str = TOKEN_RE) -> Column:
+def tokens(col: Column | str) -> Column:
     c = F.col(col) if isinstance(col, str) else col
-    return F.regexp_extract_all(F.lower(c), F.lit(pattern), 0)
+    return F.regexp_extract_all(F.lower(c), F.lit(TOKEN_RE), 0)
 
 
 def _with_tokens(docs: DataFrame, *keep: str) -> DataFrame:
@@ -182,8 +197,8 @@ def lang_id(docs: DataFrame) -> DataFrame:
     )
 
 
-def tfidf_top_terms(docs: DataFrame, k: int = 5) -> DataFrame:
-    """Top-``k`` characteristic terms per document by a tf·idf-style
+def tfidf_top_terms(docs: DataFrame) -> DataFrame:
+    """Top-``TFIDF_TOP_K`` characteristic terms per document by a tf·idf-style
     rarity score — the classic keyword-extraction / topic-tagging pass
     over a training corpus.
 
@@ -231,7 +246,7 @@ def tfidf_top_terms(docs: DataFrame, k: int = 5) -> DataFrame:
             ),
         )
         .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
+        .filter(F.col("rnk") <= TFIDF_TOP_K)
     )
 
 
@@ -283,15 +298,16 @@ def repetition_stats(docs: DataFrame) -> DataFrame:
     )
 
 
-def fingerprint(docs: DataFrame, shingle_len: int = 5) -> DataFrame:
+def fingerprint(docs: DataFrame) -> DataFrame:
     """Document fingerprinting: full-content sha256 + a winnowing-style
-    rolling fingerprint (min md5 over word ``shingle_len``-grams).
+    rolling fingerprint (min md5 over word ``FINGERPRINT_SHINGLE``-grams).
 
     The min-shingle-hash is a 1-permutation MinHash: equal texts get
     equal fingerprints, near-equal texts get equal fingerprints with
     probability = Jaccard similarity — the cheap first pass before
     pairwise dedup.
     """
+    shingle_len = FINGERPRINT_SHINGLE
     toks = F.col("__toks")
     n = F.size(toks)
     idx = F.sequence(F.lit(1), F.greatest(n - shingle_len + 1, F.lit(1)))
@@ -381,9 +397,10 @@ def unigram_lm_score(docs: DataFrame) -> DataFrame:
     )
 
 
-def top_ngrams(docs: DataFrame, n: int = 3, k: int = 20) -> DataFrame:
-    """Corpus-level heavy-hitter word ``n``-grams: total occurrences +
-    document frequency for the ``k`` most repeated n-grams — the
+def top_ngrams(docs: DataFrame) -> DataFrame:
+    """Corpus-level heavy-hitter word ``TOP_NGRAM_N``-grams: total
+    occurrences + document frequency for the ``TOP_NGRAM_K`` most
+    repeated n-grams — the
     mining pass behind boilerplate dictionaries (cookie banners,
     license headers, nav chrome repeat verbatim across a crawl and
     surface here first) and contamination screens.
@@ -399,6 +416,7 @@ def top_ngrams(docs: DataFrame, n: int = 3, k: int = 20) -> DataFrame:
     global sort. At a trillion grams, swap exact count for a
     count-min/approx pass first; the exact form stays the verifier.
     """
+    n = TOP_NGRAM_N
     toks = F.col("__toks")
     n_tok = F.size(toks)
     idx = F.sequence(F.lit(1), F.greatest(n_tok - n + 1, F.lit(1)))
@@ -417,7 +435,7 @@ def top_ngrams(docs: DataFrame, n: int = 3, k: int = 20) -> DataFrame:
             F.count_distinct("doc_id").alias("n_docs"),
         )
         .orderBy(F.col("n_occurrences").desc(), F.col("gram"))
-        .limit(k)
+        .limit(TOP_NGRAM_K)
     )
 
 
@@ -438,7 +456,7 @@ def _bucket_weight(tok: Column) -> Column:
     return (hi * 16 + lo - 128).cast("long")
 
 
-def model_quality_filter(docs: DataFrame, threshold_milli: int = -50) -> DataFrame:
+def model_quality_filter(docs: DataFrame) -> DataFrame:
     """Model-based quality filter: score each document with a linear
     classifier over hashing-trick token features and keep documents
     above a threshold — the fastText/logistic-regression quality-gate
@@ -450,7 +468,7 @@ def model_quality_filter(docs: DataFrame, threshold_milli: int = -50) -> DataFra
     real deployment broadcasts the trained weight array and indexes it
     inside the same lambda. Everything is integer arithmetic — the
     keep decision compares ``total_weight * 1000`` against
-    ``n_tokens * threshold_milli`` so no engine ever divides.
+    ``n_tokens * QUALITY_THRESHOLD_MILLI`` so no engine ever divides.
 
     Plan shape: tokenize once behind a projection boundary, transform
     tokens to weights, aggregate the weight array — a pure projection,
@@ -474,25 +492,23 @@ def model_quality_filter(docs: DataFrame, threshold_milli: int = -50) -> DataFra
         (F.col("n_tokens") > 0)
         & (
             F.col("total_weight") * 1000
-            >= F.col("n_tokens").cast("long") * threshold_milli
+            >= F.col("n_tokens").cast("long") * QUALITY_THRESHOLD_MILLI
         ),
     )
 
 
-def chunk_windows(
-    docs: DataFrame, size: int = 64, stride: int = 48
-) -> DataFrame:
+def chunk_windows(docs: DataFrame) -> DataFrame:
     """Split each document into fixed-size token windows with overlap
     — the context-window chunking step every LLM training/RAG pipeline
     runs between curation and tokenization (no analog in the reference,
     which never splits rows; north-star extension like the rest of this
     module).
 
-    Chunks start at every multiple of ``stride`` below the token count,
-    take up to ``size`` tokens, and are clipped at the document end, so
-    with stride ≤ size every token lands in at least one chunk and
-    consecutive chunks overlap by ``size - stride`` tokens (the overlap
-    that keeps boundary-spanning context learnable).
+    Chunks start at every multiple of ``CHUNK_STRIDE`` below the token
+    count, take up to ``CHUNK_SIZE`` tokens, and are clipped at the
+    document end, so with stride ≤ size every token lands in at least
+    one chunk and consecutive chunks overlap by ``size - stride`` tokens
+    (the overlap that keeps boundary-spanning context learnable).
 
     Plan shape: tokenize once, explode a per-row start sequence, slice
     the shared token array — projection + generate only, zero shuffles
@@ -501,6 +517,7 @@ def chunk_windows(
     its document's partition; downstream repartition is the consumer's
     choice, not a cost this operator imposes).
     """
+    size, stride = CHUNK_SIZE, CHUNK_STRIDE
     toks = F.col("__toks")
     n = F.size(toks)
     starts = F.sequence(F.lit(0), n - 1, F.lit(stride))
@@ -518,14 +535,13 @@ def chunk_windows(
 
 
 def bm25_topk(
-    docs: DataFrame,
-    queries: list[tuple[str, list[str]]],
-    k: int = 10,
+    docs: DataFrame, queries: list[tuple[str, list[str]]]
 ) -> DataFrame:
     """BM25-style lexical retrieval: score every document against each
-    query's term bag and keep the top-``k`` per query — the retrieval
-    pass of a RAG / data-curation pipeline (e.g. mining a corpus for
-    documents relevant to a benchmark topic before decontamination).
+    query's term bag and keep the top-``BM25_TOP_K`` per query — the
+    retrieval pass of a RAG / data-curation pipeline (e.g. mining a
+    corpus for documents relevant to a benchmark topic before
+    decontamination).
 
     Cross-engine exactness: textbook BM25 needs ``ln`` in the idf and
     libm differs across engines in the last ulp (the tf·idf
@@ -558,6 +574,7 @@ def bm25_topk(
 
     from ..partitioning import freeze_partitions
 
+    k = BM25_TOP_K
     spark = docs.sparkSession
     tok = explode_nonempty(
         _with_tokens(docs, "doc_id"), ["doc_id"], "__toks", "term"

@@ -128,7 +128,7 @@ def agg_parts(spark) -> int:
     return max(8, int(spark.conf.get("spark.sql.shuffle.partitions")) // 4)
 
 
-def bounded_bucket(col: str, cap: int = 1_000_000) -> Column:
+def bounded_bucket(col: str) -> Column:
     """Non-foldable pseudo-constant partition key for windows over
     DOMAIN-BOUNDED frames — day/month/hour/dimension-indexed
     aggregates whose cardinality grows with calendar time or model
@@ -137,11 +137,11 @@ def bounded_bucket(col: str, cap: int = 1_000_000) -> Column:
     ``Window.orderBy`` without a partition is correct on such frames
     but logs the scary ``WindowExec: No Partition Defined`` warning on
     every query, burying real warnings in the bench tail.
-    ``partitionBy(floor(col / cap))`` yields ONE partition for any
-    domain below ``cap`` (identical frames, identical results) while
+    ``partitionBy(floor(col / 1e6))`` yields ONE partition for any
+    domain below the 1M cap (identical frames, identical results) while
     surviving the optimizer — a literal key is constant-folded away
     and the warning returns. Same contract as the ordered_prefix
-    offsets cascade: pick ``cap`` safely above the domain's reachable
+    offsets cascade: the cap sits safely above the domain's reachable
     range (1M day indices = year 4707; 1M embedding dims), because a
     domain that outgrows it would SPLIT the window. The column passed
     here must be an integer index with a hard domain bound, never a
@@ -151,7 +151,7 @@ def bounded_bucket(col: str, cap: int = 1_000_000) -> Column:
     all unix_date/month/hour/dimension indices (>= 0 by construction);
     a future negative-capable epoch must be shifted non-negative
     first."""
-    return F.floor(F.col(col) / F.lit(cap))
+    return F.floor(F.col(col) / F.lit(1_000_000))
 
 
 def scalar_bucket(col: str) -> Column:
@@ -258,32 +258,35 @@ def is_heavy(df: DataFrame) -> bool:
     return size >= _FREEZE_AUTO_BYTES
 
 
-def with_salt(df: DataFrame, n_buckets: int, col_name: str = "__salt") -> DataFrame:
-    """Attach a uniform salt column in [0, n_buckets). Deterministic
-    per row is NOT required (salt only spreads rows); monotonically_
-    increasing_id avoids an RNG so re-runs of a stage stay stable."""
+# Salt width of the skew levers: a hot key spreads over this many
+# shuffle partitions (salted_agg here, relational.salted_join)
+SALT_BUCKETS = 16
+
+
+def with_salt(df: DataFrame, n_buckets: int) -> DataFrame:
+    """Attach a uniform salt column ``__salt`` in [0, n_buckets).
+    Deterministic per row is NOT required (salt only spreads rows);
+    monotonically_increasing_id avoids an RNG so re-runs of a stage
+    stay stable."""
     return df.withColumn(
-        col_name, (F.monotonically_increasing_id() % n_buckets).cast("int")
+        "__salt", (F.monotonically_increasing_id() % n_buckets).cast("int")
     )
 
 
 def salted_agg(
-    df: DataFrame,
-    keys: list[str],
-    aggs: dict[str, tuple[str, str]],
-    n_buckets: int = 16,
+    df: DataFrame, keys: list[str], aggs: dict[str, tuple[str, str]]
 ) -> DataFrame:
     """Two-phase aggregation for skewed group keys.
 
     ``aggs`` maps output column -> (input column, fn) with fn in
     {sum, count, min, max}. Phase 1 aggregates on (keys + salt) —
-    spreading a hot key over ``n_buckets`` tasks — phase 2 re-combines
+    spreading a hot key over ``SALT_BUCKETS`` tasks — phase 2 re-combines
     per key (sum/count combine via sum; min/max via themselves).
     Associative-only by construction; avg = sum/count downstream.
     """
     first = {"sum": F.sum, "count": F.count, "min": F.min, "max": F.max}
     recombine = {"sum": F.sum, "count": F.sum, "min": F.min, "max": F.max}
-    salted = with_salt(df, n_buckets)
+    salted = with_salt(df, SALT_BUCKETS)
     partial = salted.groupBy(*keys, "__salt").agg(
         *[first[fn](col).alias(out) for out, (col, fn) in aggs.items()]
     )

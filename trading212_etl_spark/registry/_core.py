@@ -17,6 +17,8 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..operators.dedup import SHINGLE_N
+from ..operators.textual import TOKEN_RE
 from ..partitioning import bounded_bucket, serial_pins
 from ..session import input_bytes, positive_int_env, shuffle_partitions_for
 from ..sources import load_table
@@ -204,11 +206,12 @@ def pairs_top_k() -> int | None:
 
 
 # BPE-ish tokenizer regex, shared verbatim with the DuckDB side
-_TOKS = r"regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9\s]')"
-# distinct word-3-gram shingle set (DuckDB list comprehension)
+_TOKS = f"regexp_extract_all(lower(text), '{TOKEN_RE}')"
+# distinct word-SHINGLE_N-gram shingle set (DuckDB list comprehension)
 _SHINGLES = (
-    "list_distinct([array_to_string(toks[CAST(i AS INTEGER):CAST(i AS INTEGER)+2], ' ') "
-    "for i in range(1, greatest(len(toks)-2, 1)+1)])"
+    "list_distinct([array_to_string(toks[CAST(i AS INTEGER):CAST(i AS INTEGER)"
+    f"+{SHINGLE_N - 1}], ' ') "
+    f"for i in range(1, greatest(len(toks)-{SHINGLE_N - 1}, 1)+1)])"
 )
 
 

@@ -8,6 +8,11 @@ unchanged."""
 
 from __future__ import annotations
 
+from ..operators.events import (
+    RETENTION_BUCKET,
+    RETENTION_BUCKET_S,
+    SESSION_GAP_MIN,
+)
 from ._core import (
     _t,
     register,
@@ -116,13 +121,13 @@ def q_events_json(spark, sf_dir):
 
 @register(
     "events_session_window",
-    oracle="""
+    oracle=f"""
     WITH e AS (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts, value
                FROM events),
     g AS (
       SELECT *,
              CASE WHEN lag(ts) OVER w IS NULL
-                       OR epoch_us(ts) - epoch_us(lag(ts) OVER w) >= 1800000000
+                       OR epoch_us(ts) - epoch_us(lag(ts) OVER w) >= {SESSION_GAP_MIN * 60_000_000}
                   THEN 1 ELSE 0 END AS is_new
       FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
     ),
@@ -133,7 +138,7 @@ def q_events_json(spark, sf_dir):
     )
     SELECT user_id,
            min(ts) AS session_start,
-           max(ts) + INTERVAL 30 MINUTE AS session_end,
+           max(ts) + INTERVAL {SESSION_GAP_MIN} MINUTE AS session_end,
            count(*) AS n_events,
            round(sum(value), 2) AS session_value
     FROM s GROUP BY user_id, session_seq
@@ -147,7 +152,7 @@ def q_events_session_window(spark, sf_dir):
     vs events_sessionize_30m whose lag-based rule uses >."""
     from ..operators.events import session_window_agg
 
-    return session_window_agg(_t(spark, sf_dir, "events"), "30 minutes")
+    return session_window_agg(_t(spark, sf_dir, "events"))
 
 
 @register(
@@ -276,13 +281,13 @@ def q_events_funnel(spark, sf_dir):
 
 @register(
     "events_retention_cohorts",
-    oracle="""
+    oracle=f"""
     WITH e AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts FROM events),
-    firsts AS (SELECT user_id, date_trunc('week', min(ts)) AS cohort
+    firsts AS (SELECT user_id, date_trunc('{RETENTION_BUCKET}', min(ts)) AS cohort
                FROM e GROUP BY user_id),
-    active AS (SELECT DISTINCT user_id, date_trunc('week', ts) AS bucket FROM e)
+    active AS (SELECT DISTINCT user_id, date_trunc('{RETENTION_BUCKET}', ts) AS bucket FROM e)
     SELECT f.cohort,
-           CAST(floor((epoch(a.bucket) - epoch(f.cohort)) / 604800.0) AS INTEGER)
+           CAST(floor((epoch(a.bucket) - epoch(f.cohort)) / {RETENTION_BUCKET_S}.0) AS INTEGER)
              AS offset,
            CAST(count(DISTINCT a.user_id) AS BIGINT) AS n_users
     FROM active a JOIN firsts f USING (user_id)
@@ -295,7 +300,7 @@ def q_events_retention(spark, sf_dir):
     active users. Two (user, bucket)-level shuffles total."""
     from ..operators.events import retention_cohorts
 
-    return retention_cohorts(_t(spark, sf_dir, "events"), "week")
+    return retention_cohorts(_t(spark, sf_dir, "events"))
 
 
 @register(
@@ -350,7 +355,7 @@ def q_streaming_tumbling(spark, sf_dir):
     finite source is exactly the batch aggregate)."""
     from ..streaming.windows import run_streaming_tumbling_agg
 
-    return run_streaming_tumbling_agg(spark, sf_dir, "1 hour")
+    return run_streaming_tumbling_agg(spark, sf_dir)
 
 
 @register(
@@ -379,7 +384,7 @@ def q_streaming_sliding(spark, sf_dir):
     must equal."""
     from ..streaming.windows import run_streaming_sliding_agg
 
-    return run_streaming_sliding_agg(spark, sf_dir, "2 hours", "1 hour")
+    return run_streaming_sliding_agg(spark, sf_dir)
 
 
 

@@ -431,15 +431,7 @@ def q_portfolio_fifo_pnl(spark, sf_dir):
         )
         .where(F.col("qty") > 0)
     )
-    return fifo_realized_pnl(
-        fills,
-        account="user_id",
-        side="side",
-        ts="ts",
-        tiebreak="event_id",
-        qty="qty",
-        price="price",
-    )
+    return fifo_realized_pnl(fills)
 
 
 @register(
@@ -518,15 +510,7 @@ def q_portfolio_open_lots(spark, sf_dir):
         )
         .where(F.col("qty") > 0)
     )
-    return fifo_open_lots(
-        fills,
-        account="user_id",
-        side="side",
-        ts="ts",
-        tiebreak="event_id",
-        qty="qty",
-        price="price",
-    )
+    return fifo_open_lots(fills)
 
 
 @register(
@@ -588,13 +572,7 @@ def q_portfolio_max_drawdown(spark, sf_dir):
             .alias("amount"),
         )
     )
-    return equity_drawdown(
-        flows,
-        account="user_id",
-        ts="ts",
-        tiebreak="event_id",
-        amount="amount",
-    )
+    return equity_drawdown(flows)
 
 
 @register(
@@ -659,7 +637,6 @@ def q_join_asof_nearest(spark, sf_dir):
     return asof_join_nearest(
         e, o, "ts", "o_orderdate", "user_id", "o_custkey",
         ["o_orderkey", "o_totalprice", "o_orderdate"],
-        right_order="o_orderkey",
     ).select(
         "event_id",
         "user_id",
@@ -967,7 +944,7 @@ def q_streaming_vwap(spark, sf_dir):
     local-only test."""
     from ..streaming.windows import run_streaming_vwap
 
-    return run_streaming_vwap(spark, sf_dir, "1 hour")
+    return run_streaming_vwap(spark, sf_dir)
 
 
 @register(
@@ -1871,4 +1848,4 @@ def q_streaming_error_sli(spark, sf_dir):
     VWAP/presence twins."""
     from ..streaming.windows import run_streaming_error_sli
 
-    return run_streaming_error_sli(spark, sf_dir, "1 hour")
+    return run_streaming_error_sli(spark, sf_dir)

@@ -278,7 +278,6 @@ def q_join_range_interval(spark, sf_dir):
         on=li.l_orderkey == o.o_orderkey,
         lower=li.l_shipdate >= o.o_orderdate,
         upper=li.l_shipdate < F.col("o_orderdate") + F.expr("INTERVAL 90 DAYS"),
-        how="left",
     )
     return joined.groupBy("o_orderkey").agg(
         F.count("l_orderkey").alias("n_shipped_90d"),

@@ -8,6 +8,24 @@ unchanged."""
 
 from __future__ import annotations
 
+from ..operators.dedup import SPAN_MIN_TOKENS, SPAN_WINDOW
+from ..operators.multimodal import (
+    AUDIO_BANDS,
+    FRAME_EVERY,
+    RESIZE_H,
+    RESIZE_W,
+    TWIN_MOD,
+    TWIN_OFFSET,
+    WAV_SAMPLE_RATE,
+)
+from ..operators.sampling import DSIR_BUCKETS
+from ..operators.similarity import (
+    IVF_CELLS,
+    IVF_PROBES,
+    NEAR_DUP_COS,
+    NEAR_DUP_MAX_ID,
+)
+from ..operators.textual import BM25_TOP_K, FINGERPRINT_SHINGLE, TFIDF_TOP_K
 from ._core import (
     ORACLES,
     _SHINGLES,
@@ -549,8 +567,8 @@ def q_text_lang_id(spark, sf_dir):
     WITH t AS (SELECT doc_id, text, {_TOKS} AS toks FROM documents),
     s AS (
       SELECT doc_id, text,
-             [array_to_string(toks[CAST(i AS INTEGER):CAST(i AS INTEGER)+4], ' ')
-              for i in range(1, greatest(len(toks)-4, 1)+1)] AS shingles
+             [array_to_string(toks[CAST(i AS INTEGER):CAST(i AS INTEGER)+{FINGERPRINT_SHINGLE - 1}], ' ')
+              for i in range(1, greatest(len(toks)-{FINGERPRINT_SHINGLE - 1}, 1)+1)] AS shingles
       FROM t
     )
     SELECT doc_id,
@@ -564,7 +582,7 @@ def q_text_fingerprint(spark, sf_dir):
     over word 5-grams = 1-permutation MinHash)."""
     from ..operators.textual import fingerprint
 
-    return fingerprint(_t(spark, sf_dir, "documents"), shingle_len=5)
+    return fingerprint(_t(spark, sf_dir, "documents"))
 
 
 @register(
@@ -583,7 +601,7 @@ def q_text_fingerprint(spark, sf_dir):
            CAST(row_number() OVER (PARTITION BY doc_id
                 ORDER BY score_micro DESC, tf DESC, term) AS BIGINT) AS rnk
     FROM s
-    QUALIFY rnk <= 5
+    QUALIFY rnk <= {TFIDF_TOP_K}
     """,
 )
 def q_text_tfidf_topk(spark, sf_dir):
@@ -595,7 +613,7 @@ def q_text_tfidf_topk(spark, sf_dir):
 
     from ..operators.textual import tfidf_top_terms
 
-    return tfidf_top_terms(_t(spark, sf_dir, "documents"), k=5).withColumn(
+    return tfidf_top_terms(_t(spark, sf_dir, "documents")).withColumn(
         "rnk", F.col("rnk").cast("long")
     )
 
@@ -709,10 +727,10 @@ ORACLES["similarity_topk_lsh"] = f"""
 
 @register(
     "similarity_topk_ivf",
-    oracle="""
+    oracle=f"""
     WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
     cents AS (SELECT row_number() OVER (ORDER BY vec_id) AS cid, emb AS cemb
-              FROM v ORDER BY vec_id LIMIT 8),
+              FROM v ORDER BY vec_id LIMIT {IVF_CELLS}),
     cd AS (SELECT v.vec_id, c.cid, list_dot_product(v.emb, c.cemb) AS d
            FROM v CROSS JOIN cents c),
     -- cell assignment: argmax dot, FIRST max wins (Spark array_position)
@@ -725,7 +743,7 @@ ORACLES["similarity_topk_lsh"] = f"""
     probes AS (SELECT vec_id AS query_id, cid AS cell FROM
                (SELECT *, row_number() OVER (PARTITION BY vec_id
                                              ORDER BY d DESC, cid DESC) AS rn
-                FROM cd WHERE vec_id < 8) WHERE rn <= 3),
+                FROM cd WHERE vec_id < 8) WHERE rn <= {IVF_PROBES}),
     scored AS (
       SELECT p.query_id, a.vec_id AS corpus_id,
              round(list_cosine_similarity(qv.emb, cv.emb), 4) AS cos_sim
@@ -760,10 +778,10 @@ def q_similarity_ivf(spark, sf_dir):
 
 @register(
     "embedding_kmeans_step",
-    oracle="""
+    oracle=f"""
     WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
     cents AS (SELECT row_number() OVER (ORDER BY vec_id) AS cid, emb AS cemb
-              FROM v ORDER BY vec_id LIMIT 8),
+              FROM v ORDER BY vec_id LIMIT {IVF_CELLS}),
     cd AS (SELECT v.vec_id, c.cid, list_dot_product(v.emb, c.cemb) AS d
            FROM v CROSS JOIN cents c),
     -- assignment: argmax dot, FIRST max wins (Spark array_position)
@@ -800,14 +818,14 @@ def q_embedding_kmeans_step(spark, sf_dir):
 
 @register(
     "embedding_near_dup",
-    oracle="""
+    oracle=f"""
     WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings
-               WHERE vec_id < 256)
+               WHERE vec_id < {NEAR_DUP_MAX_ID})
     SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
            round(list_cosine_similarity(a.emb, b.emb), 4) AS cos_sim
     FROM v a, v b
     WHERE a.vec_id < b.vec_id
-      AND round(list_cosine_similarity(a.emb, b.emb), 4) >= 0.4
+      AND round(list_cosine_similarity(a.emb, b.emb), 4) >= {NEAR_DUP_COS}
     """,
 )
 def q_embedding_near_dup(spark, sf_dir):
@@ -849,7 +867,7 @@ ORACLES["embedding_near_dup_lsh"] = f"""
     FROM cand
     JOIN v va ON va.vec_id = cand.vec_a
     JOIN v vb ON vb.vec_id = cand.vec_b
-    WHERE round(list_cosine_similarity(va.emb, vb.emb), 4) >= 0.4
+    WHERE round(list_cosine_similarity(va.emb, vb.emb), 4) >= {NEAR_DUP_COS}
     """
 
 
@@ -924,6 +942,8 @@ def q_multimodal_meta(spark, sf_dir):
 
 
 _NIB = "strpos('0123456789abcdef', substr(h, (i % 16) * 2 + {o}, 1)) - 1"
+# resized BMP size: 54-byte headers + rows of 3-byte pixels padded to 4
+_RESIZED_BYTES = 54 + RESIZE_H * ((RESIZE_W * 3 + 3) // 4 * 4)
 
 
 @register(
@@ -935,8 +955,8 @@ _NIB = "strpos('0123456789abcdef', substr(h, (i % 16) * 2 + {o}, 1)) - 1"
     ),
     px AS (
       SELECT doc_id,
-             ((ty.y * sh) // 12) * sw + ((tx.x * sw) // 16) AS i
-      FROM d CROSS JOIN range(0, 16) tx(x) CROSS JOIN range(0, 12) ty(y)
+             ((ty.y * sh) // {RESIZE_H}) * sw + ((tx.x * sw) // {RESIZE_W}) AS i
+      FROM d CROSS JOIN range(0, {RESIZE_W}) tx(x) CROSS JOIN range(0, {RESIZE_H}) ty(y)
     ),
     hx AS (
       SELECT doc_id, i,
@@ -949,7 +969,7 @@ _NIB = "strpos('0123456789abcdef', substr(h, (i % 16) * 2 + {o}, 1)) - 1"
              ({_NIB.format(o=1)}) * 16 + ({_NIB.format(o=2)}) AS val
       FROM hx
     )
-    SELECT doc_id, 16 AS width, 12 AS height, 630 AS n_bytes,
+    SELECT doc_id, {RESIZE_W} AS width, {RESIZE_H} AS height, {_RESIZED_BYTES} AS n_bytes,
            CAST(sum(val) AS BIGINT) AS pixel_sum
     FROM v GROUP BY doc_id
     """,
@@ -969,7 +989,7 @@ def q_multimodal_resize(spark, sf_dir):
     from ..operators.multimodal import resize_images, synth_bmp_payload
 
     docs = _t(spark, sf_dir, "documents")
-    out = resize_images(synth_bmp_payload(docs), target_w=16, target_h=12)
+    out = resize_images(synth_bmp_payload(docs))
     return out.select("doc_id", "width", "height", "n_bytes", "pixel_sum")
 
 
@@ -980,7 +1000,7 @@ _AUDIO_SAMPLE = " + ".join(
 _AUDIO_RMS = ",\n           ".join(
     f"round(sqrt(sum(CASE WHEN band = {b} THEN CAST(v AS DOUBLE) * v END)"
     f" / count(CASE WHEN band = {b} THEN 1 END)), 4) AS rms_b{b}"
-    for b in range(4)
+    for b in range(AUDIO_BANDS)
 )
 
 
@@ -1001,11 +1021,11 @@ _AUDIO_RMS = ",\n           ".join(
     z AS (
       SELECT doc_id, n, j, v,
              lag(v) OVER (PARTITION BY doc_id ORDER BY j) AS pv,
-             (j * 4) // n AS band
+             (j * {AUDIO_BANDS}) // n AS band
       FROM s
     )
     SELECT doc_id,
-           8000 AS sample_rate,
+           {WAV_SAMPLE_RATE} AS sample_rate,
            CAST(max(n) AS INTEGER) AS n_frames,
            CAST(max(abs(v)) AS INTEGER) AS peak,
            CAST(coalesce(sum(CASE WHEN pv * v < 0 THEN 1 END), 0)
@@ -1037,7 +1057,7 @@ def q_multimodal_audio(spark, sf_dir):
         "n_frames",
         "peak",
         "zero_crossings",
-        *[F.round(f"rms_b{b}", 4).alias(f"rms_b{b}") for b in range(4)],
+        *[F.round(f"rms_b{b}", 4).alias(f"rms_b{b}") for b in range(AUDIO_BANDS)],
     )
 
 
@@ -1055,7 +1075,7 @@ _VNIB = "strpos('0123456789abcdef', substr(hx, (i % 16) * 2 + {o}, 1)) - 1"
     fr AS (SELECT doc_id, w, h, nf, unnest(range(0, nf)) AS f FROM d),
     px AS (
       SELECT doc_id, w, h, nf, f, unnest(range(0, w * h)) AS i
-      FROM fr WHERE f % 2 = 0
+      FROM fr WHERE f % {FRAME_EVERY} = 0
     ),
     hxs AS (
       SELECT doc_id, w, h, nf, f, i,
@@ -1088,9 +1108,7 @@ def q_multimodal_frames(spark, sf_dir):
     verified."""
     from ..operators.multimodal import sample_frames, synth_avi_payload
 
-    return sample_frames(
-        synth_avi_payload(_t(spark, sf_dir, "documents")), every_n=2
-    )
+    return sample_frames(synth_avi_payload(_t(spark, sf_dir, "documents")))
 
 
 # Shared CTE text for the two curate-pipeline oracles (exact shingle
@@ -1245,7 +1263,7 @@ _BM25_VALUES = ", ".join(
                   ORDER BY score_ppm DESC, doc_id) AS INTEGER) AS rnk
       FROM sc
     )
-    SELECT query_id, doc_id, score_ppm, rnk FROM r WHERE rnk <= 10
+    SELECT query_id, doc_id, score_ppm, rnk FROM r WHERE rnk <= {BM25_TOP_K}
     """,
 )
 def q_text_bm25_topk(spark, sf_dir):
@@ -1257,7 +1275,7 @@ def q_text_bm25_topk(spark, sf_dir):
     trading212.py:1-143) — LLM-pipeline extension."""
     from ..operators.textual import bm25_topk
 
-    return bm25_topk(_t(spark, sf_dir, "documents"), _BM25_QUERIES, k=10)
+    return bm25_topk(_t(spark, sf_dir, "documents"), _BM25_QUERIES)
 
 
 def _pq_oracle() -> str:
@@ -1536,91 +1554,33 @@ def q_sink_ivf_partitioned_ann(spark, sf_dir):
     across several writer tasks, so a natural-skew cell owning 25% of
     the corpus is never one straggler writer. Layout-only, so the
     oracle is untouched."""
-    from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    from ..operators.similarity import IVF_PROBES, _cent_dots_expr, _data_centroids
+    from ..operators.similarity import (
+        _assign_cells,
+        _data_centroids,
+        _probe_cells,
+        _rank_probed,
+    )
     from ..sources.writers import write_parquet
 
     emb = _t(spark, sf_dir, "embeddings")
     cents = _data_centroids(emb)
-    cent_dots = lambda col: _cent_dots_expr(col, cents)  # noqa: E731
-    assigned = (
+    assigned = _assign_cells(
         emb.select(
             "vec_id",
             F.col("embedding").cast("array<double>").alias("c_emb"),
-        )
-        .withColumn("__dots", cent_dots("c_emb"))
-        .withColumn(
-            "cell",
-            F.array_position(F.col("__dots"), F.array_max("__dots")).cast("int"),
-        )
-        .drop("__dots")
+        ),
+        "c_emb",
+        cents,
     )
     path = _build_once(
         sf_dir,
         "ivf_cells",
         lambda tmp: write_parquet(assigned, tmp, partition_by=["cell"]),
     )
-    corpus = spark.read.parquet(path)
-    q = (
-        emb.filter(F.col("vec_id") < 8)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").cast("array<double>").alias("q_emb"),
-        )
-        .withColumn("__dots", cent_dots("q_emb"))
-        .withColumn(
-            "__cell_l",
-            F.explode(
-                F.slice(
-                    F.transform(
-                        F.reverse(
-                            F.array_sort(
-                                F.transform(
-                                    F.col("__dots"),
-                                    lambda d, i: F.struct(
-                                        d.alias("d"), (i + 1).alias("idx")
-                                    ),
-                                )
-                            )
-                        ),
-                        lambda s: s["idx"],
-                    ),
-                    1,
-                    IVF_PROBES,
-                )
-            ),
-        )
-        .withColumn("cell", F.col("__cell_l").cast("int"))
-        .drop("__dots", "__cell_l")
-    )
-    from ..operators.similarity import cosine
-
-    scored = (
-        corpus.join(F.broadcast(q), "cell")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("corpus_id"),
-            F.round(cosine(F.col("q_emb"), F.col("c_emb")), 4).alias(
-                "cos_sim"
-            ),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("corpus_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 10)
-        .select(
-            "query_id",
-            "corpus_id",
-            "cos_sim",
-            F.col("rank").cast("long").alias("rank"),
-        )
-    )
+    probes = _probe_cells(emb.filter(F.col("vec_id") < 8), cents)
+    return _rank_probed(spark.read.parquet(path), probes, "vec_id", 10)
 
 
 _QBP_SQL = """
@@ -2191,8 +2151,8 @@ def q_text_rake_keyphrases(spark, sf_dir):
     sh AS (
       SELECT doc_id, CAST(i AS BIGINT) AS pos,
              array_to_string(
-               toks[CAST(i AS INTEGER):CAST(i AS INTEGER) + 4], ' ') AS s
-      FROM toksrc, unnest(range(1, greatest(len(toks) - 4, 0) + 1)) u(i)
+               toks[CAST(i AS INTEGER):CAST(i AS INTEGER) + {SPAN_WINDOW - 1}], ' ') AS s
+      FROM toksrc, unnest(range(1, greatest(len(toks) - {SPAN_WINDOW - 1}, 0) + 1)) u(i)
     ),
     m AS (
       SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, a.pos AS pa, b.pos AS pb
@@ -2205,15 +2165,15 @@ def q_text_rake_keyphrases(spark, sf_dir):
       FROM m
     ),
     runs AS (
-      SELECT doc_a, doc_b, count(*) + 4 AS span_tokens
+      SELECT doc_a, doc_b, count(*) + {SPAN_WINDOW - 1} AS span_tokens
       FROM isl GROUP BY doc_a, doc_b, diag, grp
     )
     SELECT doc_a, doc_b,
            max(span_tokens) AS max_span_tokens,
-           CAST(sum(CASE WHEN span_tokens >= 10 THEN 1 ELSE 0 END)
+           CAST(sum(CASE WHEN span_tokens >= {SPAN_MIN_TOKENS} THEN 1 ELSE 0 END)
                 AS BIGINT) AS n_spans
     FROM runs GROUP BY doc_a, doc_b
-    HAVING max(span_tokens) >= 10
+    HAVING max(span_tokens) >= {SPAN_MIN_TOKENS}
     """,
 )
 def q_dedup_substring_spans(spark, sf_dir):
@@ -2238,7 +2198,7 @@ def q_dedup_substring_spans(spark, sf_dir):
     ),
     bt AS (
       SELECT doc_id, source,
-             CAST(concat('0x', substr(md5(w), 1, 6)) AS BIGINT) % 512 AS b
+             CAST(concat('0x', substr(md5(w), 1, 6)) AS BIGINT) % {DSIR_BUCKETS} AS b
       FROM tok
     ),
     raw AS (SELECT b, count(*) AS r_cnt FROM bt GROUP BY b),
@@ -2250,8 +2210,8 @@ def q_dedup_substring_spans(spark, sf_dir):
     ),
     w AS (
       SELECT b,
-             CAST(round((ln((t_cnt + 1) / (sum(t_cnt) OVER () + 512.0))
-                       - ln((r_cnt + 1) / (sum(r_cnt) OVER () + 512.0)))
+             CAST(round((ln((t_cnt + 1) / (sum(t_cnt) OVER () + {DSIR_BUCKETS}.0))
+                       - ln((r_cnt + 1) / (sum(r_cnt) OVER () + {DSIR_BUCKETS}.0)))
                         * 1000) AS BIGINT) AS lw_milli
       FROM wj
     ),
@@ -2289,9 +2249,7 @@ def q_sample_importance_dsir(spark, sf_dir):
     from ..operators.sampling import dsir_importance_weights
 
     docs = _t(spark, sf_dir, "documents")
-    score = dsir_importance_weights(
-        docs, F.col("source") == "src0", n_buckets=512, keep=("source",)
-    )
+    score = dsir_importance_weights(docs, F.col("source") == "src0")
     return (
         score.orderBy(F.col("weight_milli").desc(), "doc_id")
         .limit(100)
@@ -2482,7 +2440,7 @@ _DNIB = "strpos('0123456789abcdef', substr(h, (i % 16) * 2 + {o}, 1)) - 1"
     WITH corpus AS (
       SELECT doc_id AS out_id, doc_id AS src, 1 AS sc FROM documents
       UNION ALL
-      SELECT doc_id + 5000000, doc_id, 2 FROM documents WHERE doc_id % 9 = 0
+      SELECT doc_id + {TWIN_OFFSET}, doc_id, 2 FROM documents WHERE doc_id % {TWIN_MOD} = 0
     ),
     dims AS (
       SELECT out_id, src, sc,

@@ -8,6 +8,7 @@ unchanged."""
 
 from __future__ import annotations
 
+from ..operators.sampling import HASH_CHARS, _rate_threshold
 from ._core import (
     _TOKS,
     _scratch,
@@ -25,11 +26,11 @@ from ._core import (
 
 @register(
     "sample_hash_split",
-    oracle="""
+    oracle=f"""
     SELECT doc_id, lang, source,
-           CASE WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) < 'cccc'
+           CASE WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, {HASH_CHARS}) < '{_rate_threshold(0.8)}'
                 THEN 'train'
-                WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) < 'e666'
+                WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, {HASH_CHARS}) < '{_rate_threshold(0.9)}'
                 THEN 'val'
                 ELSE 'test' END AS split
     FROM documents
@@ -48,13 +49,13 @@ def q_sample_hash_split(spark, sf_dir):
 
 @register(
     "sample_stratified",
-    oracle="""
+    oracle=f"""
     SELECT doc_id, lang
     FROM documents
     WHERE (lang = 'en')
-       OR (lang = 'de' AND substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) < '8000')
-       OR (lang = 'es' AND substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) < '4000')
-       OR (lang = 'fr' AND substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) < '4000')
+       OR (lang = 'de' AND substr(md5(CAST(doc_id AS VARCHAR)), 1, {HASH_CHARS}) < '{_rate_threshold(0.5)}')
+       OR (lang = 'es' AND substr(md5(CAST(doc_id AS VARCHAR)), 1, {HASH_CHARS}) < '{_rate_threshold(0.25)}')
+       OR (lang = 'fr' AND substr(md5(CAST(doc_id AS VARCHAR)), 1, {HASH_CHARS}) < '{_rate_threshold(0.25)}')
     """,
 )
 def q_sample_stratified(spark, sf_dir):
@@ -431,7 +432,7 @@ def q_source_schema_evolution(spark, sf_dir):
 def q_join_salted(spark, sf_dir):
     """Skew-mitigated equi-join (operators/relational.py salted_join):
     the probe side's 8 pathologically hot keys (l_orderkey % 8 — each
-    ~12.5% of the table) are scattered across n_salts=16 sub-keys while
+    ~12.5% of the table) are scattered across SALT_BUCKETS=16 sub-keys while
     the build side explodes into 16 replicas, so each hot key becomes
     16 shuffle partitions instead of one straggler task. Join result is
     EXACT (each probe row matches exactly one replica); the aggregate
@@ -453,7 +454,7 @@ def q_join_salted(spark, sf_dir):
         .groupBy((F.col("o_orderkey") % 8).alias("skew_key"))
         .agg(F.count("*").alias("n_orders"))
     )
-    joined = salted_join(big, dim, "skew_key", n_salts=16)
+    joined = salted_join(big, dim, "skew_key")
     return joined.groupBy("skew_key").agg(
         F.count("*").alias("n_rows"),
         F.sum("price").cast("double").alias("total_price"),

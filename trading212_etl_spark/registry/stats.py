@@ -8,6 +8,8 @@ unchanged."""
 
 from __future__ import annotations
 
+from ..operators.sampling import HASH_CHARS, _hash_frac, _rate_threshold
+from ..operators.textual import FINGERPRINT_SHINGLE
 from ._core import (
     _TOKS,
     _d38,
@@ -487,8 +489,8 @@ def q_orders_anomalous_days(spark, sf_dir):
                FROM documents WHERE text IS NOT NULL),
     sh AS (
       SELECT source,
-             [array_to_string(toks[CAST(i AS INTEGER):CAST(i AS INTEGER)+4], ' ')
-              for i in range(1, greatest(len(toks)-4, 1)+1)] AS shingles
+             [array_to_string(toks[CAST(i AS INTEGER):CAST(i AS INTEGER)+{FINGERPRINT_SHINGLE - 1}], ' ')
+              for i in range(1, greatest(len(toks)-{FINGERPRINT_SHINGLE - 1}, 1)+1)] AS shingles
       FROM t
     ),
     sigs AS (
@@ -542,7 +544,7 @@ def q_documents_source_overlap(spark, sf_dir):
     from ..partitioning import freeze_partitions
 
     d = _t(spark, sf_dir, "documents").where(F.col("text").isNotNull())
-    fps = fingerprint(d, shingle_len=5).select("doc_id", "winnow_fp")
+    fps = fingerprint(d).select("doc_id", "winnow_fp")
     sigs = freeze_partitions(
         d.select("doc_id", "source")
         .join(fps, "doc_id")
@@ -1352,10 +1354,10 @@ def q_events_cuped(spark, sf_dir):
 
 @register(
     "events_srm_check",
-    oracle="""
+    oracle=f"""
     WITH assigned AS (
-      SELECT CASE WHEN substr(md5(CAST(user_id AS VARCHAR)), 1, 4)
-                       < '8000'
+      SELECT CASE WHEN substr(md5(CAST(user_id AS VARCHAR)), 1, {HASH_CHARS})
+                       < '{_rate_threshold(0.5)}'
                   THEN 'A' ELSE 'B' END AS arm,
              user_id
       FROM (SELECT DISTINCT user_id FROM events)
@@ -1392,9 +1394,7 @@ def q_events_srm_check(spark, sf_dir):
 
     users = _t(spark, sf_dir, "events").select("user_id").distinct()
     arm = F.when(
-        F.substring(F.md5(F.col("user_id").cast("string")), 1, 4)
-        < "8000",
-        "A",
+        _hash_frac(F.col("user_id")) < _rate_threshold(0.5), "A"
     ).otherwise("B")
     counts = users.select(arm.alias("arm")).agg(
         F.sum(F.when(F.col("arm") == "A", 1).otherwise(0))

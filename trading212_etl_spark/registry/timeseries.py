@@ -8,6 +8,17 @@ unchanged."""
 
 from __future__ import annotations
 
+from ..operators.aggregates import SKEW_TOP_K
+from ..operators.events import SESSION_GAP_MIN
+from ..operators.sampling import HASH_CHARS, _rate_threshold
+from ..operators.similarity import NEAR_DUP_COS
+from ..operators.textual import (
+    CHUNK_SIZE,
+    CHUNK_STRIDE,
+    QUALITY_THRESHOLD_MILLI,
+    TOP_NGRAM_K,
+    TOP_NGRAM_N,
+)
 from ._core import (
     ORACLES,
     _SHINGLES,
@@ -246,17 +257,17 @@ def q_source_binary_files(spark, sf_dir):
 
 @register(
     "text_chunk_windows",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
       SELECT doc_id, string_split(text, ' ') AS t FROM documents
     ),
     starts AS (
-      SELECT doc_id, t, unnest(range(0, len(t), 48)) AS start FROM toks
+      SELECT doc_id, t, unnest(range(0, len(t), {CHUNK_STRIDE})) AS start FROM toks
     )
     SELECT doc_id,
-           CAST(start / 48 AS BIGINT) AS chunk_id,
-           CAST(len(t[start + 1 : start + 64]) AS INTEGER) AS n_chunk_tokens,
-           array_to_string(t[start + 1 : start + 64], ' ') AS chunk_text
+           CAST(start / {CHUNK_STRIDE} AS BIGINT) AS chunk_id,
+           CAST(len(t[start + 1 : start + {CHUNK_SIZE}]) AS INTEGER) AS n_chunk_tokens,
+           array_to_string(t[start + 1 : start + {CHUNK_SIZE}], ' ') AS chunk_text
     FROM starts
     """,
 )
@@ -268,7 +279,7 @@ def q_text_chunk_windows(spark, sf_dir):
     operators/textual.chunk_windows for the coverage contract."""
     from ..operators.textual import chunk_windows
 
-    return chunk_windows(_t(spark, sf_dir, "documents"), size=64, stride=48)
+    return chunk_windows(_t(spark, sf_dir, "documents"))
 
 
 @register(
@@ -487,17 +498,17 @@ def q_text_unigram_lm(spark, sf_dir):
     WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
     g AS (
       SELECT doc_id,
-             unnest([array_to_string(toks[CAST(i AS INTEGER):CAST(i AS INTEGER)+2], ' ')
-                     for i in range(1, greatest(len(toks)-2, 1)+1)]) AS gram
+             unnest([array_to_string(toks[CAST(i AS INTEGER):CAST(i AS INTEGER)+{TOP_NGRAM_N - 1}], ' ')
+                     for i in range(1, greatest(len(toks)-{TOP_NGRAM_N - 1}, 1)+1)]) AS gram
       FROM t
     )
     SELECT gram, CAST(count(*) AS BIGINT) AS n_occurrences,
            CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs
     FROM g
-    WHERE len(string_split(gram, ' ')) >= 3
+    WHERE len(string_split(gram, ' ')) >= {TOP_NGRAM_N}
     GROUP BY gram
     ORDER BY n_occurrences DESC, gram
-    LIMIT 20
+    LIMIT {TOP_NGRAM_K}
     """,
 )
 def q_text_top_ngrams(spark, sf_dir):
@@ -508,7 +519,7 @@ def q_text_top_ngrams(spark, sf_dir):
     (operators/textual.py:top_ngrams)."""
     from ..operators.textual import top_ngrams
 
-    return top_ngrams(_t(spark, sf_dir, "documents"), n=3, k=20)
+    return top_ngrams(_t(spark, sf_dir, "documents"))
 
 
 @register(
@@ -584,7 +595,7 @@ def q_graph_pagerank(spark, sf_dir):
 
 @register(
     "profile_key_skew",
-    oracle="""
+    oracle=f"""
     WITH c AS (SELECT CAST(user_id AS VARCHAR) AS key,
                       CAST(count(*) AS BIGINT) AS n_rows
                FROM events GROUP BY user_id),
@@ -599,7 +610,7 @@ def q_graph_pagerank(spark, sf_dir):
              AS skew_ratio_bp
     FROM c CROSS JOIN t
     ORDER BY n_rows DESC, key
-    LIMIT 5
+    LIMIT {SKEW_TOP_K}
     """,
 )
 def q_profile_key_skew(spark, sf_dir):
@@ -609,7 +620,7 @@ def q_profile_key_skew(spark, sf_dir):
     1-row broadcast of the global stats, top-k heap)."""
     from ..operators.aggregates import key_skew_profile
 
-    return key_skew_profile(_t(spark, sf_dir, "events"), "user_id", top_k=5)
+    return key_skew_profile(_t(spark, sf_dir, "events"), "user_id")
 
 
 @register(
@@ -674,7 +685,7 @@ def q_sink_zorder(spark, sf_dir):
     li = _t(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey", "l_suppkey", "l_quantity"
     )
-    zorder_write(li, "l_partkey", "l_suppkey", path, n_files=8)
+    zorder_write(li, "l_partkey", "l_suppkey", path)
     back = spark.read.parquet(path)
     return back.agg(
         F.count(F.lit(1)).alias("n_rows"),
@@ -709,13 +720,13 @@ def q_events_rollup_hierarchy(spark, sf_dir):
 
 @register(
     "streaming_session_window",
-    oracle="""
+    oracle=f"""
     WITH e AS (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts, value
                FROM events),
     g AS (
       SELECT *,
              CASE WHEN lag(ts) OVER w IS NULL
-                       OR epoch_us(ts) - epoch_us(lag(ts) OVER w) >= 1800000000
+                       OR epoch_us(ts) - epoch_us(lag(ts) OVER w) >= {SESSION_GAP_MIN * 60_000_000}
                   THEN 1 ELSE 0 END AS is_new
       FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
     ),
@@ -726,7 +737,7 @@ def q_events_rollup_hierarchy(spark, sf_dir):
     )
     SELECT user_id,
            min(ts) AS session_start,
-           max(ts) + INTERVAL 30 MINUTE AS session_end,
+           max(ts) + INTERVAL {SESSION_GAP_MIN} MINUTE AS session_end,
            count(*) AS n_events,
            round(sum(value), 2) AS session_value
     FROM s GROUP BY user_id, session_seq
@@ -739,7 +750,7 @@ def q_streaming_session_window(spark, sf_dir):
     (streaming/windows.py:run_streaming_session_window)."""
     from ..streaming.windows import run_streaming_session_window
 
-    return run_streaming_session_window(spark, sf_dir, "30 minutes")
+    return run_streaming_session_window(spark, sf_dir)
 
 
 @register(
@@ -764,9 +775,7 @@ def q_sample_temperature(spark, sf_dir):
     math)."""
     from ..operators.sampling import temperature_mixture_weights
 
-    return temperature_mixture_weights(
-        _t(spark, sf_dir, "documents"), alpha_pct=50, domain_col="source"
-    )
+    return temperature_mixture_weights(_t(spark, sf_dir, "documents"))
 
 
 @register(
@@ -1379,10 +1388,10 @@ def q_orders_basket_affinity(spark, sf_dir):
     SELECT d.doc_id,
            coalesce(cp.component, d.doc_id) AS group_key,
            CASE WHEN substr(md5(CAST(coalesce(cp.component, d.doc_id)
-                                     AS VARCHAR)), 1, 4) < 'cccc'
+                                     AS VARCHAR)), 1, {HASH_CHARS}) < '{_rate_threshold(0.8)}'
                 THEN 'train'
                 WHEN substr(md5(CAST(coalesce(cp.component, d.doc_id)
-                                     AS VARCHAR)), 1, 4) < 'e666'
+                                     AS VARCHAR)), 1, {HASH_CHARS}) < '{_rate_threshold(0.9)}'
                 THEN 'val'
                 ELSE 'test' END AS split
     FROM documents d LEFT JOIN comp cp USING (doc_id)
@@ -1445,7 +1454,7 @@ def q_sample_leakage_safe_split(spark, sf_dir):
       FROM t
     )
     SELECT doc_id, n_tokens, total_weight,
-           n_tokens > 0 AND total_weight * 1000 >= n_tokens * -50 AS keep
+           n_tokens > 0 AND total_weight * 1000 >= n_tokens * {QUALITY_THRESHOLD_MILLI} AS keep
     FROM w
     """,
 )
@@ -1707,7 +1716,7 @@ ORACLES["dedup_semantic_clusters"] = f"""
       FROM cand
       JOIN v va ON va.vec_id = cand.vec_a
       JOIN v vb ON vb.vec_id = cand.vec_b
-      WHERE round(list_cosine_similarity(va.emb, vb.emb), 4) >= 0.4
+      WHERE round(list_cosine_similarity(va.emb, vb.emb), 4) >= {NEAR_DUP_COS}
     ),
     edges AS (SELECT vec_a AS src, vec_b AS dst FROM pairs
               UNION SELECT vec_b, vec_a FROM pairs),

@@ -170,7 +170,6 @@ def q_agg_salted(spark, sf_dir):
             "n": ("l_quantity", "count"),
             "max_price": ("l_extendedprice", "max"),
         },
-        n_buckets=16,
     )
     return out.select(
         "l_returnflag",

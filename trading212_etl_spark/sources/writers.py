@@ -112,13 +112,16 @@ def zvalue16_expr(x: str, y: str) -> str:
     return "(" + " + ".join(terms) + ")"
 
 
-def zorder_write(
-    df: DataFrame, x: str, y: str, path: str, n_files: int = 8
-) -> None:
+# files of a zorder_write: the range partitions of the Morton value
+ZORDER_FILES = 8
+
+
+def zorder_write(df: DataFrame, x: str, y: str, path: str) -> None:
     """Z-order-clustered Parquet write: range-partition on the Morton
-    value of (``x``, ``y``) and sort within each file, so parquet
-    row-group/file min-max stats become tight on BOTH columns at once
-    — a reader filtering on either dimension skips most files.
+    value of (``x``, ``y``) into ``ZORDER_FILES`` files and sort
+    within each file, so parquet row-group/file min-max stats become
+    tight on BOTH columns at once — a reader filtering on either
+    dimension skips most files.
 
     This is the layout lever for the 100 TB read side: unlike
     ``partitionBy`` (one hierarchy, directory explosion per extra
@@ -157,7 +160,7 @@ def zorder_write(
         .withColumn("__sx", scaled(x, "__xmin", "__xmax"))
         .withColumn("__sy", scaled(y, "__ymin", "__ymax"))
         .withColumn("__z", F.expr(zvalue16_expr("__sx", "__sy")))
-        .repartitionByRange(n_files, "__z")
+        .repartitionByRange(ZORDER_FILES, "__z")
         .sortWithinPartitions("__z")
         .drop("__sx", "__sy", "__z", "__xmin", "__xmax", "__ymin", "__ymax")
         .write.mode("overwrite")

@@ -23,18 +23,16 @@ EVENTS_STREAM_SCHEMA = SCHEMAS["events"]
 
 
 def streaming_tumbling_agg(
-    stream: DataFrame,
-    duration: str = "1 hour",
-    watermark: str = "2 hours",
-    slide: str | None = None,
+    stream: DataFrame, duration: str = "1 hour", slide: str | None = None
 ) -> DataFrame:
     """Watermarked tumbling — or, with ``slide``, sliding/hopping —
     window aggregate over an event stream.
 
     Expects ``ts`` already as TimestampType (the source's concern —
-    :func:`_events_stream`). The watermark bounds state: at 100 TB/day
-    of events the store only holds windows newer than (max event time -
-    watermark); older state is evicted instead of accumulating forever.
+    :func:`_events_stream`). The 2-hour watermark bounds state: at
+    100 TB/day of events the store only holds windows newer than (max
+    event time - 2 hours); older state is evicted instead of
+    accumulating forever.
     A sliding window multiplies state by duration/slide overlapping
     windows per key — the watermark bound matters proportionally more.
     """
@@ -42,7 +40,7 @@ def streaming_tumbling_agg(
         F.window("ts", duration, slide) if slide else F.window("ts", duration)
     )
     return (
-        stream.withWatermark("ts", watermark)
+        stream.withWatermark("ts", "2 hours")
         .groupBy(win.alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
@@ -194,14 +192,14 @@ def _drive(
     return out if mode == "complete" else out.drop("batch_id")
 
 
-def streaming_dedup(stream: DataFrame, horizon: str = "2 hours") -> DataFrame:
+def streaming_dedup(stream: DataFrame) -> DataFrame:
     """Watermark-bounded exactly-once dedup on the event id — the
     principled replacement for the reference's poll-loop ingestion +
     full-table drop_duplicates (T2, trading212.py:100-111, 121).
 
     ``dropDuplicatesWithinWatermark`` keys state by event_id and
-    evicts an id once the watermark passes (its event time +
-    ``horizon``), so state is bounded by the dedup horizon instead of
+    evicts an id once the watermark passes (its event time + the
+    2-hour horizon), so state is bounded by the dedup horizon instead of
     growing with the stream. The guarantee is therefore HORIZON-
     BOUNDED, in three regimes (pinned by the hostile test in
     tests/test_events.py::test_streaming_dedup_horizon_semantics):
@@ -211,7 +209,7 @@ def streaming_dedup(stream: DataFrame, horizon: str = "2 hours") -> DataFrame:
     re-send with a FRESH timestamp after eviction is emitted again —
     at-least-once beyond the horizon, the price of bounded state (size
     the horizon to the upstream's max redelivery delay)."""
-    return stream.withWatermark("ts", horizon).dropDuplicatesWithinWatermark(
+    return stream.withWatermark("ts", "2 hours").dropDuplicatesWithinWatermark(
         ["event_id"]
     )
 
@@ -340,11 +338,11 @@ def run_stream_static_join(spark: SparkSession, events_dir: str) -> DataFrame:
 
 
 def stream_stream_attribution_join(
-    clicks: DataFrame, purchases: DataFrame, horizon: str = "1 hour"
+    clicks: DataFrame, purchases: DataFrame
 ) -> DataFrame:
     """Watermarked stream-stream inner join: attribute each purchase to
-    the click(s) by the same user within the preceding ``horizon`` —
-    the canonical event-attribution shape.
+    the click(s) by the same user within the preceding ``horizon`` of
+    1 hour — the canonical event-attribution shape.
 
     Both sides carry a watermark and the join condition bounds event
     time on BOTH ends (purchase.ts in [click.ts, click.ts + horizon]),
@@ -370,6 +368,7 @@ def stream_stream_attribution_join(
     key's events per horizon, and the hot user's scan cost drops from
     O(history^2) to O(events-per-2h x arrivals).
     """
+    horizon = "1 hour"
     # horizon length in seconds, TZ-invariant (the two literals parse
     # in the session zone and the offset cancels in the difference)
     bucket = F.expr(
@@ -451,10 +450,8 @@ def run_stream_stream_join(spark: SparkSession, events_dir: str) -> DataFrame:
     )
 
 
-def run_streaming_tumbling_agg(
-    spark: SparkSession, events_dir: str, duration: str = "1 hour"
-) -> DataFrame:
-    """Drive the streaming aggregate to completion over a static
+def run_streaming_tumbling_agg(spark: SparkSession, events_dir: str) -> DataFrame:
+    """Drive the hourly streaming aggregate to completion over a static
     directory of event parquet (:func:`_drive`) and return the
     converged result.
 
@@ -467,31 +464,25 @@ def run_streaming_tumbling_agg(
     # the file source requires a directory; the corpus keeps one
     # parquet per table in the sf dir, so _events_stream glob-filters
     # to events only and normalizes ts to TimestampType
-    agg = streaming_tumbling_agg(_events_stream(spark, events_dir), duration)
+    agg = streaming_tumbling_agg(_events_stream(spark, events_dir), "1 hour")
     return _drive(agg, _scratch(events_dir, "stream_tumbling"), "complete")
 
 
-def run_streaming_sliding_agg(
-    spark: SparkSession,
-    events_dir: str,
-    duration: str = "2 hours",
-    slide: str = "1 hour",
-) -> DataFrame:
+def run_streaming_sliding_agg(spark: SparkSession, events_dir: str) -> DataFrame:
     """Sliding-window twin of :func:`run_streaming_tumbling_agg`:
-    each event lands in duration/slide overlapping windows; the
+    2-hour windows every hour, so each event lands in two overlapping
+    windows; the
     converged complete-mode output equals the batch sliding aggregate
     (``events_sliding_2h_1h``)."""
     from trading212_etl_spark.registry._core import _scratch
 
     agg = streaming_tumbling_agg(
-        _events_stream(spark, events_dir), duration, slide=slide
+        _events_stream(spark, events_dir), "2 hours", slide="1 hour"
     )
     return _drive(agg, _scratch(events_dir, "stream_sliding"), "complete")
 
 
-def run_streaming_session_window(
-    spark: SparkSession, events_dir: str, gap: str = "30 minutes"
-) -> DataFrame:
+def run_streaming_session_window(spark: SparkSession, events_dir: str) -> DataFrame:
     """Native session-window sessionization as a streaming stateful
     aggregate — the operator session windows exist for: state holds
     OPEN sessions per user (merged as events arrive, emitted once the
@@ -508,8 +499,10 @@ def run_streaming_session_window(
     passes its gap) but holds back the final sessions of a finite
     local run — the wrong smoke-harness semantics.
     """
+    from trading212_etl_spark.operators.events import SESSION_GAP_MIN
     from trading212_etl_spark.registry._core import _scratch
 
+    gap = f"{SESSION_GAP_MIN} minutes"
     stream = _events_stream(spark, events_dir)
     agg = (
         stream.withWatermark("ts", "2 hours")
@@ -592,9 +585,10 @@ def run_streaming_cdc_apply(
     return _drive(changes, out_dir, "append", merge_batch)
 
 
-def streaming_vwap_agg(stream: DataFrame, duration: str = "1 hour") -> DataFrame:
+def streaming_vwap_agg(stream: DataFrame) -> DataFrame:
     """Streaming VWAP/TWAP: the market-data rollup
-    (registry:events_vwap_hourly) as a watermarked windowed aggregate.
+    (registry:events_vwap_hourly) as a watermarked hourly window
+    aggregate.
 
     State per (window, instrument) is three numbers (decimal
     price*qty sum, decimal price sum, counts) — the same algebraic
@@ -616,7 +610,7 @@ def streaming_vwap_agg(stream: DataFrame, duration: str = "1 hour") -> DataFrame
         .withWatermark("ts", "2 hours")
     )
     agged = priced.groupBy(
-        F.window("ts", duration).alias("w"), "event_type"
+        F.window("ts", "1 hour").alias("w"), "event_type"
     ).agg(
         (F.sum(F.col("px") * F.col("qty")) * 1000000)
         .cast("long")
@@ -635,15 +629,13 @@ def streaming_vwap_agg(stream: DataFrame, duration: str = "1 hour") -> DataFrame
     )
 
 
-def run_streaming_vwap(
-    spark: SparkSession, events_dir: str, duration: str = "1 hour"
-) -> DataFrame:
+def run_streaming_vwap(spark: SparkSession, events_dir: str) -> DataFrame:
     """Drive :func:`streaming_vwap_agg` to completion over the static
     events parquet; the converged complete-mode output must equal the
     batch VWAP rollup exactly (integer micro-prices on both paths)."""
     from trading212_etl_spark.registry._core import _scratch
 
-    agg = streaming_vwap_agg(_events_stream(spark, events_dir), duration)
+    agg = streaming_vwap_agg(_events_stream(spark, events_dir))
     return _drive(agg, _scratch(events_dir, "stream_vwap"), "complete")
 
 
@@ -693,7 +685,7 @@ def run_streaming_presence_bitmap(
     return _drive(agg, _scratch(events_dir, "stream_presence"), "complete")
 
 
-def streaming_error_sli_agg(stream: DataFrame, duration: str = "1 hour") -> DataFrame:
+def streaming_error_sli_agg(stream: DataFrame) -> DataFrame:
     """Streaming twin of events_error_rate_sli: the hourly error-rate
     SLI as a watermarked event-time window aggregate. State per
     (window) is the algebraic (n_total, n_error) pair — commutative
@@ -703,7 +695,7 @@ def streaming_error_sli_agg(stream: DataFrame, duration: str = "1 hour") -> Data
     is_err = F.when(F.col("event_type") == "error", 1).otherwise(0)
     return (
         stream.withWatermark("ts", "2 hours")
-        .groupBy(F.window("ts", duration).alias("w"))
+        .groupBy(F.window("ts", "1 hour").alias("w"))
         .agg(
             F.count(F.lit(1)).alias("n_total"),
             F.sum(is_err).cast("bigint").alias("n_error"),
@@ -720,13 +712,11 @@ def streaming_error_sli_agg(stream: DataFrame, duration: str = "1 hour") -> Data
     )
 
 
-def run_streaming_error_sli(
-    spark: SparkSession, events_dir: str, duration: str = "1 hour"
-) -> DataFrame:
+def run_streaming_error_sli(spark: SparkSession, events_dir: str) -> DataFrame:
     """Drive :func:`streaming_error_sli_agg` to completion over the
     static events parquet; converged output must equal the batch SLI
     bit-for-bit."""
     from trading212_etl_spark.registry._core import _scratch
 
-    agg = streaming_error_sli_agg(_events_stream(spark, events_dir), duration)
+    agg = streaming_error_sli_agg(_events_stream(spark, events_dir))
     return _drive(agg, _scratch(events_dir, "stream_sli"), "complete")
