@@ -101,7 +101,7 @@ def test_dedup_operators_on_empty(spark):
 
     docs = _empty_docs(spark)
     assert exact_dedup(docs).count() == 0
-    pairs = jaccard_pairs(docs, 0.5)
+    pairs = jaccard_pairs(docs)
     assert pairs.count() == 0
     # empty pair graph: CC converges immediately, removal is identity
     assert connected_components(pairs).count() == 0
@@ -150,7 +150,7 @@ def test_null_and_empty_text_rows(spark):
     stats = {r["doc_id"]: r["n_tokens"] for r in token_stats(docs).collect()}
     assert stats[1] == 3 and stats[3] == 0 and stats[2] is None
     assert exact_dedup(docs).count() == 3  # null text is its own group
-    assert jaccard_pairs(docs, 0.5).count() == 0
+    assert jaccard_pairs(docs).count() == 0
     assert curate_corpus(docs).count() == 0  # filtered, not crashed
 
 

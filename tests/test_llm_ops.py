@@ -47,7 +47,7 @@ def _band_bucket_sizes(docs, hash_fn):
 def test_minhash_lsh_recall_and_precision(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     exact = {
-        (r.doc_a, r.doc_b) for r in jaccard_pairs(docs, 0.5).collect()
+        (r.doc_a, r.doc_b) for r in jaccard_pairs(docs).collect()
     }
     lsh = {
         (r.doc_a, r.doc_b)
@@ -428,7 +428,7 @@ def test_leakage_safe_split_keeps_clusters_together(spark, sf_dir):
     from trading212_etl_spark.registry import QUERIES
 
     split = QUERIES["sample_leakage_safe_split"](spark, sf_dir)
-    pairs = jaccard_pairs(load_table(spark, sf_dir, "documents"), 0.5)
+    pairs = jaccard_pairs(load_table(spark, sf_dir, "documents"))
     a = split.selectExpr("doc_id AS doc_a", "split AS split_a")
     b = split.selectExpr("doc_id AS doc_b", "split AS split_b")
     crossed = pairs.join(a, "doc_a").join(b, "doc_b")
@@ -1191,8 +1191,8 @@ def test_pairs_top_k_bound_keeps_clique_connectivity(spark):
             "doc_id long, text string",
         )
     )
-    full = jaccard_pairs(docs, threshold=0.5).collect()
-    bounded = jaccard_pairs(docs, threshold=0.5, top_k_per_doc=1).collect()
+    full = jaccard_pairs(docs).collect()
+    bounded = jaccard_pairs(docs, top_k_per_doc=1).collect()
     full_set = {(r.doc_a, r.doc_b): r.jaccard for r in full}
     b_set = {(r.doc_a, r.doc_b): r.jaccard for r in bounded}
     assert len(full_set) == n * (n - 1) // 2  # the quadratic clique
@@ -1258,14 +1258,14 @@ def test_pairs_top_k_bounds_candidate_generation(spark):
     # (b) kept top-k pairs unchanged vs the unbounded path + output
     # truncation, values included
     k = 2
-    full = jaccard_pairs(docs, threshold=0.5)
+    full = jaccard_pairs(docs)
     expect = {
         (r.doc_a, r.doc_b): r.jaccard
         for r in _top_k_per_doc(full, k, "jaccard").collect()
     }
     with _w.catch_warnings(record=True) as caught:
         _w.simplefilter("always")
-        got_df = jaccard_pairs(docs, threshold=0.5, top_k_per_doc=k)
+        got_df = jaccard_pairs(docs, top_k_per_doc=k)
         got = {(r.doc_a, r.doc_b): r.jaccard for r in got_df.collect()}
     assert got == expect
     # (c) the truncation is LOUD: a warning names the bound
@@ -1339,12 +1339,13 @@ def test_decontaminate_bloom_matches_exact_and_prunes(spark, sf_dir):
     assert maybe_rows < 0.2 * probe_rows, (maybe_rows, probe_rows)
 
 
-def test_incremental_minhash_sink_estimator(spark, sf_dir, tmp_path):
+def test_incremental_minhash_sink_estimator(spark, sf_dir, tmp_path, monkeypatch):
     """Incremental-vs-snapshot dedup (md5 signatures): the
     persisted-signature estimator must (a) find every strong bipartite
     near-dup (exact J >= 0.8 — banding and the estimator are both
     near-certain there), (b) stay calibrated against exact Jaccard on
     the pairs it emits, and (c) emit only (new x snapshot) pairs."""
+    from trading212_etl_spark.operators import dedup
     from trading212_etl_spark.operators.dedup import (
         incremental_minhash_pairs,
         jaccard_pairs,
@@ -1361,10 +1362,14 @@ def test_incremental_minhash_sink_estimator(spark, sf_dir, tmp_path):
     new_ids = {r.doc_id for r in new.select("doc_id").collect()}
     old_ids = {r.doc_id for r in snapshot.select("doc_id").collect()}
     assert all(r.doc_new in new_ids and r.doc_old in old_ids for r in inc)
-    # exact bipartite ground truth from the shingle sets
+    # exact bipartite ground truth from the shingle sets (every pair
+    # sharing a shingle: the cut drops to 0 for this listing only)
+    with monkeypatch.context() as mp:
+        mp.setattr(dedup, "JACCARD_THRESHOLD", 0.0)
+        listed = jaccard_pairs(docs).collect()
     exact = {
         frozenset((r.doc_a, r.doc_b)): r.jaccard
-        for r in jaccard_pairs(docs, 0.0).collect()
+        for r in listed
         if (r.doc_a in new_ids) != (r.doc_b in new_ids)
     }
     strong = {p for p, j in exact.items() if j >= 0.8}
@@ -1381,3 +1386,96 @@ def test_incremental_minhash_sink_estimator(spark, sf_dir, tmp_path):
     ]
     assert errs and max(errs) <= 0.45, (max(errs), len(errs))
     assert sum(errs) / len(errs) <= 0.15, sum(errs) / len(errs)
+
+
+SCORE_ADVERSARIAL = [
+    "",
+    "   \t\n ",
+    "Hello WORLD, MiXeD Case!",
+    "tab\tsep\nnew line\r\nand  double  spaces",
+    "café Ünïcode naïve ÀÉÎ ß ø",
+    "emoji 😀 and 𝔘𝔫𝔦 text!",
+    "a\xa0b c — “quotes” 42x 7",
+    "###$$$%%%",
+    "form\x0bfeed",
+]
+
+
+def test_score_counts_equal_extract_and_aggregate_forms(spark, sf_dir):
+    """score_docs counts symbols by deleting the non-symbols and sums
+    token lengths by joining the tokens. Both must equal the
+    match-array and per-token forms — DuckDB's, which the oracles
+    use, and the Spark forms they replaced — on the corpus and on
+    adversarial strings: uppercase (a symbol, being counted on the
+    original case), tabs and newlines, empty and whitespace-only
+    text, non-ASCII and supplementary-plane characters, a vertical
+    tab.
+
+    DuckDB differs from Spark on three of the strings, and the test
+    pins both sides there so the oracles' difference stays visible:
+    its list_sum over no tokens is NULL (the empty and the
+    whitespace-only text), and RE2's \\s lacks the vertical tab that
+    Java's \\s holds, so DuckDB counts it as a symbol and a token."""
+    import os
+
+    import duckdb
+
+    from trading212_etl_spark.operators.textual import score_docs, tokens
+    from trading212_etl_spark.registry._core import _TOKS
+
+    sf001 = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    corpus = [
+        r.text
+        for r in load_table(spark, sf001, "documents").select("text").collect()
+    ]
+    texts = SCORE_ADVERSARIAL + corpus
+    docs = spark.createDataFrame(list(enumerate(texts)), "doc_id bigint, text string")
+    cols = ["n_chars", "n_sym", "n_tokens", "sum_len"]
+    got = {
+        r.doc_id: tuple(r[c] for c in cols)
+        for r in score_docs(docs, "doc_id").select("doc_id", *cols).collect()
+    }
+    toks = tokens("text")
+    replaced = {
+        r.doc_id: tuple(r[c] for c in cols)
+        for r in docs.select(
+            "doc_id",
+            F.length("text").alias("n_chars"),
+            F.size(F.regexp_extract_all("text", F.lit("[^a-z0-9\\s]"), 0)).alias(
+                "n_sym"
+            ),
+            F.size(toks).alias("n_tokens"),
+            F.aggregate(
+                toks, F.lit(0).cast("long"), lambda acc, t: acc + F.length(t)
+            ).alias("sum_len"),
+        ).collect()
+    }
+    duck = {
+        i: tuple(rest)
+        for i, *rest in duckdb.execute(
+            f"""
+            SELECT doc_id, length(text),
+                   len(regexp_extract_all(text, '[^a-z0-9\\s]')),
+                   len(toks),
+                   CAST(list_sum(list_transform(toks, t -> length(t))) AS BIGINT)
+            FROM (SELECT doc_id, text, {_TOKS} AS toks
+                  FROM (SELECT unnest(range(len($texts))) AS doc_id,
+                               unnest($texts) AS text))
+            """,
+            {"texts": texts},
+        ).fetchall()
+    }
+    assert len(got) == len(texts) > len(SCORE_ADVERSARIAL)
+    assert got == replaced
+    empty, blank, vtab = (
+        SCORE_ADVERSARIAL.index(t) for t in ("", "   \t\n ", "form\x0bfeed")
+    )
+    differ = {
+        empty: ((0, 0, 0, 0), (0, 0, 0, None)),
+        blank: ((6, 0, 0, 0), (6, 0, 0, None)),
+        vtab: ((9, 0, 2, 8), (9, 1, 3, 9)),
+    }
+    assert {i: (got[i], duck[i]) for i in differ} == differ
+    assert {i: c for i, c in got.items() if i not in differ} == {
+        i: c for i, c in duck.items() if i not in differ
+    }

@@ -761,14 +761,19 @@ def test_materialize_cuts_lineage(spark):
 
 
 def test_connected_components_frontier_both_broadcast_arms(spark, monkeypatch):
-    """r15 frontier rewrite: each round joins edges against the
-    CHANGED labels only, broadcasting the frontier when its rows times
-    its row width fit spark.sql.autoBroadcastJoinThreshold. A path
-    graph of diameter 5 needs several propagation rounds with a
-    shrinking frontier — the labels must still converge to the exact
-    closure in BOTH regimes (-1 forces the shuffle-join arm, the
-    default forces the broadcast arm at this size), and exhausting
-    the round budget must stay a loud failure."""
+    """The distributed closure joins edges against the CHANGED labels
+    only, broadcasting the frontier when its rows times its row width
+    fit spark.sql.autoBroadcastJoinThreshold. A threshold of the pair
+    table's bytes minus one keeps the graph off the driver arm. On
+    this path graph (diameter 5) the seeded frontier then holds 6
+    labels (96 bytes, shuffle join) and every later one at most 4
+    (broadcast), so round 1 shuffles and rounds 2-5 broadcast; -1
+    shuffles every round. At the default threshold with
+    CC_DRIVER_MAX_PAIRS below the pair count, every round broadcasts.
+    Each regime must reach the exact closure, and exhausting the round
+    budget must stay a loud failure. At the default threshold and cap
+    the graph closes on the driver: no rounds, no frontier broadcast,
+    and the round budget cannot run out."""
     import pytest
     from pyspark.sql import functions as F
 
@@ -784,25 +789,60 @@ def test_connected_components_frontier_both_broadcast_arms(spark, monkeypatch):
         [(2, 1), (2, 3), (3, 4), (5, 4), (5, 6), (10, 11)],
         ["doc_a", "doc_b"],
     )
+    n_pairs = pairs.count()
+    pair_bytes = n_pairs * pairs._jdf.schema().defaultSize()
     want = {(i, 1) for i in range(1, 7)} | {(10, 10), (11, 10)}
     key = "spark.sql.autoBroadcastJoinThreshold"
     old = spark.conf.get(key)
-    for threshold, arm in (("-1", "shuffle"), (old, "broadcast")):
+    driver_max = dedup.CC_DRIVER_MAX_PAIRS
+    for threshold, max_pairs, broadcast_rounds, budget_fails in (
+        ("-1", driver_max, 0, True),
+        (str(pair_bytes - 1), driver_max, 4, True),
+        (old, n_pairs - 1, 5, True),
+        (old, driver_max, 0, False),
+    ):
         spark.conf.set(key, threshold)
+        monkeypatch.setattr(dedup, "CC_DRIVER_MAX_PAIRS", max_pairs)
         hinted.clear()
         try:
             got = {
                 (r.doc_id, r.component)
                 for r in connected_components(pairs).collect()
             }
-            assert got == want, threshold
-            assert bool(hinted) == (arm == "broadcast"), threshold
+            assert got == want, (threshold, max_pairs)
+            assert len(hinted) == broadcast_rounds, (threshold, max_pairs)
             with monkeypatch.context() as mp:
                 mp.setattr(dedup, "CC_MAX_ROUNDS", 1)
-                with pytest.raises(RuntimeError, match="did not converge"):
-                    connected_components(pairs)
+                if budget_fails:
+                    with pytest.raises(RuntimeError, match="did not converge"):
+                        connected_components(pairs)
+                else:
+                    assert connected_components(pairs).count() == len(want)
         finally:
             spark.conf.set(key, old)
+
+
+def test_remove_near_dups_broadcasts_driver_closed_drop_set(spark):
+    """A pair graph that fits the broadcast threshold closes on the
+    driver into a local relation built from Arrow, so the survivor
+    anti-join plans as a broadcast hash join — in any session,
+    including one with Arrow conversion off."""
+    from trading212_etl_spark.operators.dedup import remove_near_dups
+
+    pairs = spark.createDataFrame([(1, 2), (2, 3), (7, 8)], ["doc_a", "doc_b"])
+    docs = spark.range(20).withColumnRenamed("id", "doc_id")
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        kept = remove_near_dups(docs, pairs)
+    finally:
+        spark.conf.set(key, old)
+    p = kept._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" in p and "LeftAnti" in p, p
+    assert sorted(r.doc_id for r in kept.collect()) == sorted(
+        set(range(20)) - {2, 3, 8}
+    )
 
 
 def test_model_quality_filter_zero_shuffle_no_python(spark):
@@ -1086,6 +1126,22 @@ def test_curation_tokenizes_only_above_fan_out(spark):
         assert tokenizer_below_fan_out(df, whole_subtree=True) == [], name
 
 
+def test_quality_score_counts_each_input_once(spark):
+    """text_quality_score's scored stage runs the regex tokenizer and
+    the symbol-deleting regexp_replace once each per row: no
+    match-array symbol count, no per-token lambda sum, and the scores
+    read the counts as attributes (the tokenizer's projection holds
+    no score arithmetic)."""
+    df = registry.QUERIES["text_quality_score"](spark, SF)
+    p = df._jdf.queryExecution().executedPlan().toString()
+    assert p.count("regexp_replace(") == 1, p
+    assert p.count("regexp_extract_all(") == 1, p
+    assert "regexp_extract_all(lower(text" in p, p
+    assert "aggregate(" not in p, p
+    tokenizer_line = next(l for l in p.splitlines() if "regexp_extract_all(" in l)
+    assert "CASE WHEN" not in tokenizer_line, tokenizer_line
+
+
 # at least one registry entry per fan_out call site (operators/dedup.py,
 # operators/textual.py, operators/similarity.py, registry/llm.py)
 FAN_OUT_SITES = [
@@ -1093,7 +1149,7 @@ FAN_OUT_SITES = [
     "dedup_boilerplate_lines",      # dedup.dedup_lines
     "dedup_simhash",                # dedup.simhash
     "dedup_substring_spans",        # dedup.substring_span_pairs
-    "text_quality_score",           # textual._with_tokens
+    "text_quality_score",           # textual.score_docs (_with_tokens)
     "text_tfidf_topk",              # textual._with_tokens + explode
     "text_unigram_lm_score",        # textual._with_tokens + explode
     "text_bm25_topk",               # textual._with_tokens + explode

@@ -746,3 +746,65 @@ def test_ordered_prefix_rank_is_permutation_across_reruns(spark):
         assert sorted(got["rn"]) == list(range(1, 5001))
         outs.append(got)
     assert outs[0].equals(outs[1]) and outs[1].equals(outs[2])
+
+
+def _min_id_components(pairs: list[tuple[int, int]]) -> dict[int, int]:
+    """Reference closure: node -> minimum id of its component, by a
+    graph search over the undirected pair graph."""
+    adj: dict[int, set[int]] = {}
+    for a, b in pairs:
+        adj.setdefault(a, set()).add(b)
+        adj.setdefault(b, set()).add(a)
+    label: dict[int, int] = {}
+    for start in sorted(adj):
+        if start in label:
+            continue
+        stack = [start]
+        label[start] = start
+        while stack:
+            for m in adj[stack.pop()]:
+                if m not in label:
+                    label[m] = start
+                    stack.append(m)
+    return label
+
+
+graph_st = st.tuples(
+    st.lists(
+        st.tuples(st.integers(0, 40), st.integers(0, 40)), min_size=0, max_size=15
+    ),
+    st.integers(0, 9),  # length of a path appended above the random ids
+)
+
+
+@PROP
+@given(graph=graph_st, id_type=st.sampled_from(["int", "bigint"]))
+def test_connected_components_arms_match_reference(spark, graph, id_type):
+    """connected_components closes the pair graph on the driver when
+    the pairs fit Spark's broadcast threshold and in distributed
+    rounds when the threshold is -1. Both arms must return the
+    reference closure (component = minimum reachable id) on random
+    graphs — empty ones, isolated pairs, shared endpoints and a path
+    long enough to need several rounds — typed as the input ids."""
+    from pyspark.sql.types import IntegerType, LongType
+
+    from trading212_etl_spark.operators.dedup import connected_components
+
+    edges, path_len = graph
+    pairs = edges + [(100 + i, 101 + i) for i in range(path_len)]
+    df = spark.createDataFrame(pairs, "doc_a bigint, doc_b bigint").select(
+        F.col("doc_a").cast(id_type), F.col("doc_b").cast(id_type)
+    )
+    want = _min_id_components(pairs)
+    id_cls = IntegerType if id_type == "int" else LongType
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    for threshold in (old, "-1"):
+        spark.conf.set(key, threshold)
+        try:
+            comp = connected_components(df)
+            got = {r.doc_id: r.component for r in comp.collect()}
+        finally:
+            spark.conf.set(key, old)
+        assert got == want, threshold
+        assert [type(f.dataType) for f in comp.schema.fields] == [id_cls, id_cls]

@@ -33,8 +33,9 @@ from .textual import explode_nonempty, tokens
 # MinHash signature length and LSH bands (NUM_HASHES // BANDS rows each)
 NUM_HASHES = 32
 BANDS = 16
-# Jaccard cut of the MinHash paths: the verified J of minhash_lsh_pairs
-# and the n_match / NUM_HASHES estimate of incremental_minhash_pairs
+# Jaccard cut of the near-dup pair generators: the exact J of
+# jaccard_pairs, the verified J of minhash_lsh_pairs and the
+# n_match / NUM_HASHES estimate of incremental_minhash_pairs
 JACCARD_THRESHOLD = 0.5
 # SimHash sketch width, pigeonhole bands and Hamming radius
 SIMHASH_BITS = 48
@@ -46,8 +47,17 @@ SIMHASH_MAX_HAMMING = 3
 # substring_span_pairs, similarity.embedding_near_dup_pairs_lsh and
 # quality.entity_pairs_blocked.
 HOT_BUCKET_CAP = 4096
-# Round budget of the connected-components fixpoint
+# Round budget of the distributed connected-components arm
 CC_MAX_ROUNDS = 20
+# Most pairs connected_components closes on the driver. Measured on 4
+# vCPUs with remove_near_dups over synthetic graphs, driver arm vs
+# distributed rounds at the default broadcast threshold: on isolated
+# pairs (one round; the most nodes and drops per pair) the wall times
+# tie at 100k pairs (1.40 vs 1.31 s) and the driver loses beyond
+# (2.06 vs 1.48 s at 200k, 6.4 vs 2.4 s at 600k), where the local
+# relation's scan dominates; on 16-edge paths it wins at every size
+# (4.0 vs 14.6 s at 600k).
+CC_DRIVER_MAX_PAIRS = 100_000
 # Word n-gram length of the Jaccard shingle sets (word_shingles)
 SHINGLE_N = 3
 # substring_span_pairs: token window length and the shortest span kept
@@ -306,12 +316,11 @@ def _candidate_common_counts(
 
 def jaccard_pairs(
     docs: DataFrame,
-    threshold: float,
     tokens_col: str | None = None,
     top_k_per_doc: int | None = None,
 ) -> DataFrame:
     """Exact word-3-gram Jaccard similar pairs (doc_a < doc_b,
-    J ≥ threshold).
+    J ≥ ``JACCARD_THRESHOLD``).
 
     Plan shape: explode shingles → self-equi-join on the shingle →
     count common shingles per pair → J = |∩| / (|A|+|B|-|∩|). The join
@@ -358,7 +367,7 @@ def jaccard_pairs(
     jac = F.col("n_common") / (F.col("size_a") + F.col("size_b") - F.col("n_common"))
     out = (
         common.withColumn("jaccard", F.round(jac, 4))
-        .filter(F.col("jaccard") >= threshold)
+        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
         .select("doc_a", "doc_b", "jaccard")
     )
     if top_k_per_doc is not None:
@@ -649,84 +658,66 @@ def minhash_lsh_pairs(
 
 
 def connected_components(pairs: DataFrame) -> DataFrame:
-    """Connected components over a near-dup pair graph → (node,
-    component) where component = the minimum doc id reachable — the
+    """Connected components over a near-dup pair graph → ``(doc_id,
+    component)`` where component = the minimum doc id reachable — the
     transitive-closure grouping that turns pairwise near-dups into
-    dedup clusters (pick one survivor per component).
+    dedup clusters (pick one survivor per component). Only nodes that
+    appear in a pair are labeled (isolated docs are their own trivial
+    component and never enter the graph). Both id columns keep the
+    pairs' id type.
 
-    Iterative min-label propagation (the GraphX/Pregel CC algorithm as
-    plain DataFrame joins): each round every node takes the min of its
-    own label and its neighbors'; converges in O(graph diameter)
-    rounds, at most CC_MAX_ROUNDS. Each round is one shuffle join,
-    materialized (lineage cut)
-    so round N's plan doesn't embed rounds 1..N-1 (the classic
-    iterative-algorithm blowup). Driver-side convergence check per
-    round — an intentional action, as in any fixpoint loop.
+    The pairs are checkpointed first (one execution of the pair
+    generator, whatever arm follows), then collected with a bounded
+    ``limit(cap + 1)``, where ``cap`` is the smaller of
+    ``CC_DRIVER_MAX_PAIRS`` (where the driver arm stops paying) and
+    the largest pair table Spark would broadcast: its own
+    ``spark.sql.autoBroadcastJoinThreshold`` divided by the pair row
+    width.
 
-    Two round-count/latency levers vs the textbook loop (they halved
-    local wall on the curate pipeline's tiny pair graphs, and at scale
-    each saved round is a full graph shuffle):
-    - **seeded init**: labels start at min(node, min direct neighbor)
-      — round 1's answer — computed with ONE aggregation over edges
-      instead of distinct + join + groupBy;
-    - **join-free convergence**: each round's materialized output
-      carries a ``__changed`` flag, so detecting the fixpoint is a
-      scan of the just-checkpointed rows, not a second keyed join
-      against the previous labels.
+    - **Driver arm** (at most ``cap`` pairs): a union-find whose root
+      is always the smaller id closes the graph on the driver, and the
+      labels return as a local relation, small enough for the
+      consumer's join to broadcast. Its only jobs are the pair
+      checkpoint and the collect.
+    - **Distributed arm** (more than ``cap`` pairs, or a threshold of
+      -1, which turns the driver arm off as it turns off Spark's
+      broadcasts): min-label propagation as DataFrame joins. Labels
+      start at min(node, min neighbor), one aggregation over the
+      symmetric edges (exploded lazily from the checkpoint, one pass
+      for both directions). Each round then joins the edges against
+      the frontier — the labels that dropped last round — since a
+      label can only drop when a neighbor's did; an empty frontier is
+      the fixpoint. Each round's labels are checkpointed with a
+      ``__changed`` flag, so the frontier's size is a count over the
+      checkpoint, and that count times the frontier's row width picks
+      a broadcast or a shuffle join for the next round against the
+      same threshold. More than ``CC_MAX_ROUNDS`` rounds (a graph
+      diameter beyond the budget) raises instead of returning a
+      partial closure.
 
-    Only nodes that appear in a pair are labeled (isolated docs are
-    their own trivial component and never enter the graph).
-
-    Two r15 levers on top (guide §2.4 remove shuffles, §1.2 algorithm
-    first):
-
-    - **one-pass symmetric edges**: the old ``fwd.union(swap(fwd))``
-      had TWO plan branches over the un-materialized ``pairs``
-      subtree, so the whole pair-generation plan (LSH banding +
-      verify, or the hub-candidate route) EXECUTED TWICE inside the
-      edges checkpoint — measured 58.5 s/execution at 125×, i.e. the
-      union alone doubled the dominant term. An ``explode`` of the
-      2-element struct array emits both directions in ONE pass (the
-      r14 batch-2 literal-struct pattern; ``size(CreateArray)`` folds
-      so no InferFiltersFromGenerate residue).
-    - **frontier (delta) propagation**: a node's label can only drop
-      when a NEIGHBOR'S label dropped last round, so each round joins
-      the edge list against the CHANGED labels only, not all labels.
-      Correctness is the standard delta invariant: every node's label
-      already incorporates each neighbor's value as of that
-      neighbor's last change (the seeded init covers never-changed
-      neighbors, whose label IS their node id), labels decrease
-      monotonically, and every decrease re-enters the frontier — so
-      an empty frontier is exactly the old fixpoint. The frontier
-      after round 1 is typically a tiny fraction of the graph
-      (measured at 125×: 68 500 nodes → 495 → 2 → 0), and a small
-      frontier broadcast turns the per-round full-edge shuffle join
-      into a broadcast probe over the checkpointed edges — no
-      fact-sized exchange after round 1. Convergence is a count over
-      the just-checkpointed rows (the same join-free check as before),
-      and that count times the frontier's row width is the broadcast
-      decision: the frontier is broadcast when it fits Spark's own
-      ``spark.sql.autoBroadcastJoinThreshold`` (-1 disables), decided
-      on the driver with no extra job.
+    Either arm runs its jobs while the DataFrame is built — construct
+    once and reuse the result.
     """
     spark = pairs.sparkSession
     bcast_bytes = (
         spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
     )
-    edges = materialize(
-        pairs.select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-                    ),
-                    F.struct(
-                        F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")
-                    ),
-                )
-            ).alias("__e")
-        ).select("__e.src", "__e.dst")
-    )
+    pairs = materialize(pairs.select("doc_a", "doc_b"))
+    edges = pairs.select(
+        F.explode(
+            F.array(
+                F.struct(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")),
+                F.struct(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")),
+            )
+        ).alias("__e")
+    ).select("__e.src", "__e.dst")
+    if bcast_bytes >= 0:
+        cap = min(
+            bcast_bytes // pairs._jdf.schema().defaultSize(), CC_DRIVER_MAX_PAIRS
+        )
+        collected = pairs.limit(cap + 1).toArrow()
+        if collected.num_rows <= cap:
+            return _close_on_driver(spark, collected, edges.schema["src"])
     labels = materialize(
         edges.groupBy("src")
         .agg(F.min("dst").alias("__mn"))
@@ -776,6 +767,53 @@ def connected_components(pairs: DataFrame) -> DataFrame:
     return labels.select(F.col("node").alias("doc_id"), F.col("label").alias("component"))
 
 
+def _close_on_driver(spark, collected, id_field) -> DataFrame:
+    """Union-find closure of a collected ``(doc_a, doc_b)`` Arrow table
+    → ``(doc_id, component)`` as a local relation. Every union hangs
+    the larger root under the smaller, so each root is its component's
+    minimum id. The relation is built from an Arrow table, not from
+    Python rows, so it stays a sized local relation in any session
+    (rows or pandas become an RDD scan of unknown size when Arrow is
+    off, and the consumer's join stops broadcasting)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+    from pyspark.sql.types import StructField, StructType
+
+    parent: dict = {}
+
+    def find(x):
+        root = x
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:
+            parent[x], x = root, parent[x]
+        return root
+
+    for a, b in zip(
+        collected.column("doc_a").to_pylist(), collected.column("doc_b").to_pylist()
+    ):
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    nodes = list(parent)
+    id_type = to_arrow_type(id_field.dataType)
+    labels = pa.table(
+        {
+            "doc_id": pa.array(nodes, id_type),
+            "component": pa.array([find(x) for x in nodes], id_type),
+        }
+    )
+    schema = StructType(
+        [
+            StructField("doc_id", id_field.dataType, id_field.nullable),
+            StructField("component", id_field.dataType, id_field.nullable),
+        ]
+    )
+    return spark.createDataFrame(labels, schema)
+
+
 def remove_near_dups(docs: DataFrame, pairs: DataFrame) -> DataFrame:
     """Canonicalize a near-dup pair set into a keep/drop decision via
     the exact transitive closure: run :func:`connected_components`
@@ -785,14 +823,14 @@ def remove_near_dups(docs: DataFrame, pairs: DataFrame) -> DataFrame:
     star approximation (drop every pair's higher id) over-kept docs
     that never appeared as a pair's higher id but were transitively
     reachable from the component minimum (e.g. edges {1-5, 3-5} kept
-    both 1 and 3; the closure keeps only 1). Cost: the CC fixpoint is
-    O(diameter) keyed shuffles over the *pair graph* (|pairs| <<
-    |corpus|), then one broadcast-able anti-join on the drop set.
+    both 1 and 3; the closure keeps only 1). The drop set is the
+    closure's non-minimum ids, removed with a left-anti join: a
+    broadcast join whenever the closure ran on the driver.
 
-    NOTE: like every iterative fixpoint, the CC rounds EXECUTE at
-    DataFrame-construction time (per-round materialize + convergence
-    action) — calling this is not free plan-building; construct once
-    and reuse the returned DataFrame.
+    NOTE: the closure EXECUTES at DataFrame-construction time (the
+    pair checkpoint and collect, plus the rounds of a graph too large
+    for the driver) — calling this is not free plan-building;
+    construct once and reuse the returned DataFrame.
     """
     comp = connected_components(pairs)
     drop = (
@@ -813,7 +851,7 @@ def decontaminate(docs: DataFrame, benchmark: DataFrame) -> DataFrame:
     count of distinct leaked shingles and ``contam_bp`` the integer
     basis-point fraction ``floor(n_hits * 10000 / set_size)`` (exact
     integer arithmetic — same cross-engine-exactness policy as
-    quality_bp_col). Callers anti-join or threshold on ``contam_bp``.
+    textual.score_docs). Callers anti-join or threshold on ``contam_bp``.
 
     Scale shape (100 TB corpus vs ~GB benchmark): the benchmark's
     distinct shingle set is tiny relative to the corpus (eval suites

@@ -105,26 +105,63 @@ def token_stats(docs: DataFrame) -> DataFrame:
     )
 
 
-def quality_bp_col(toks: Column, text: Column) -> Column:
-    """Composite quality score in integer **basis points** (0-10000)
-    over a materialized token column — never weighted floating point:
-    decimal weights × dyadic token ratios produce exact-decimal
-    ``.xxxx5`` values where Spark's BigDecimal HALF_UP round and
-    DuckDB's double-multiply round disagree by one ulp. Integer
-    arithmetic (and floor of small-denominator rationals) is
-    bit-identical on both engines.
+def _at_least_1(count: str) -> Column:
+    """A per-document count floored at 1: the denominator of a ratio
+    over tokens or chars, so an empty document divides by 1."""
+    return F.greatest(F.col(count), F.lit(1))
 
-    Components: 3000·min(mean_token_len/10, 1) + 4000·min(4·stop_ratio, 1)
-    + 2000·[10 ≤ n_tokens ≤ 1000] + 1000·(1 - min(10·symbol_ratio, 1)).
+
+def score_docs(docs: DataFrame, *keep: str) -> DataFrame:
+    """Per-document score inputs and the two scores derived from them:
+    ``(keep..., __toks, n_chars, n_sym, n_tokens, sum_len, score_en,
+    score_de, score_es, score_fr, quality_bp, lang_pred)``. Every
+    scoring caller goes through here.
+
+    The tokens come from :func:`_with_tokens`' projection, each count
+    is projected ONCE in the next one, as an attribute, and the scores
+    read the attributes in the third. Written inline, the score
+    expressions repeat their counts (``quality_bp`` alone reads the
+    token count five times and the stopword count twice), and
+    Catalyst does not share common subexpressions across the branches
+    of a CASE. CollapseProject keeps the three projections apart,
+    because merging them would duplicate the count expressions.
+
+    The counts use the cheapest form with the same value: the symbol
+    count is the length of ``text`` with every non-symbol removed (no
+    match array), and the token-length sum is the length of the joined
+    tokens (no lambda). Symbols are counted on the original-case
+    ``text``, so an uppercase letter is a symbol.
+
+    ``quality_bp`` is the composite quality score in integer **basis
+    points** (0-10000) — never weighted floating point: decimal
+    weights × dyadic token ratios produce exact-decimal ``.xxxx5``
+    values where Spark's BigDecimal HALF_UP round and DuckDB's
+    double-multiply round disagree by one ulp. Integer arithmetic (and
+    floor of small-denominator rationals) is bit-identical on both
+    engines. Components: 3000·min(mean_token_len/10, 1)
+    + 4000·min(4·stop_ratio, 1) + 2000·[10 ≤ n_tokens ≤ 1000]
+    + 1000·(1 - min(10·symbol_ratio, 1)).
+
+    ``lang_pred`` is the stopword-profile argmax, priority
+    en→de→es→fr on ties.
     """
-    n_tok = F.size(toks)
-    n_tok1 = F.greatest(n_tok, F.lit(1))
-    n_chars1 = F.greatest(F.length(text), F.lit(1))
-    n_stop = F.size(F.filter(toks, lambda t: t.isin(*STOPWORDS["en"])))
-    n_sym = F.size(F.regexp_extract_all(text, F.lit("[^a-z0-9\\s]"), 0))
-    sum_len = F.aggregate(
-        toks, F.lit(0).cast("long"), lambda acc, t: acc + F.length(t)
+    toks = F.col("__toks")
+    # the counts read text, so it passes the tokenizer's projection once
+    counted = _with_tokens(docs, *dict.fromkeys((*keep, "text"))).select(
+        *keep,
+        "__toks",
+        F.length("text").alias("n_chars"),
+        F.length(F.regexp_replace("text", "[a-z0-9\\s]", "")).alias("n_sym"),
+        F.size(toks).alias("n_tokens"),
+        F.length(F.array_join(toks, "")).cast("long").alias("sum_len"),
+        *(
+            F.size(F.filter(toks, lambda t: t.isin(*words))).alias(f"score_{lang}")
+            for lang, words in STOPWORDS.items()
+        ),
     )
+    n_tok, sum_len, n_sym = F.col("n_tokens"), F.col("sum_len"), F.col("n_sym")
+    n_tok1, n_chars1 = _at_least_1("n_tokens"), _at_least_1("n_chars")
+    n_stop = F.col("score_en")
     comp_len = F.when(sum_len >= 10 * n_tok1, F.lit(3000).cast("long")).otherwise(
         F.floor(F.lit(300) * sum_len / n_tok1)
     )
@@ -137,63 +174,44 @@ def quality_bp_col(toks: Column, text: Column) -> Column:
     comp_sym = F.lit(1000).cast("long") - F.when(
         10 * n_sym >= n_chars1, F.lit(1000).cast("long")
     ).otherwise(F.floor(F.lit(10000) * n_sym / n_chars1))
-    return comp_len + comp_stop + comp_len_ok + comp_sym
-
-
-def lang_pred_col(toks: Column) -> Column:
-    """Deterministic stopword-profile argmax (priority en→de→es→fr on
-    ties) over a materialized token column."""
-    scores = {
-        lang: F.size(F.filter(toks, lambda t: t.isin(*words)))
-        for lang, words in STOPWORDS.items()
-    }
-    s_en, s_de, s_es, s_fr = scores["en"], scores["de"], scores["es"], scores["fr"]
-    return (
+    s_en, s_de, s_es, s_fr = (F.col(f"score_{lang}") for lang in STOPWORDS)
+    return counted.select(
+        "*",
+        (comp_len + comp_stop + comp_len_ok + comp_sym).alias("quality_bp"),
         F.when(s_en >= F.greatest(s_de, s_es, s_fr), "en")
         .when(s_de >= F.greatest(s_es, s_fr), "de")
         .when(s_es >= s_fr, "es")
         .otherwise("fr")
+        .alias("lang_pred"),
     )
 
 
 def quality_score(docs: DataFrame) -> DataFrame:
     """Heuristic quality scoring (length / stopword / symbol ratios) —
-    the C4/Gopher-style filter shape. See :func:`quality_bp_col` for
-    the cross-engine-exact integer formulation."""
-    toks = F.col("__toks")
-    n_tok1 = F.greatest(F.size(toks), F.lit(1))
-    n_chars1 = F.greatest(F.length("text"), F.lit(1))
-    n_stop = F.size(F.filter(toks, lambda t: t.isin(*STOPWORDS["en"])))
-    n_sym = F.size(F.regexp_extract_all(F.col("text"), F.lit("[^a-z0-9\\s]"), 0))
-    return _with_tokens(docs, "doc_id", "text").select(
+    the C4/Gopher-style filter shape. See :func:`score_docs` for the
+    cross-engine-exact integer formulation."""
+    return score_docs(docs, "doc_id").select(
         "doc_id",
-        F.size(toks).alias("n_tokens"),
-        F.round(n_stop.cast("double") / n_tok1, 4).alias("stopword_ratio"),
-        F.round(n_sym.cast("double") / n_chars1, 4).alias("symbol_ratio"),
-        quality_bp_col(toks, F.col("text")).alias("quality_bp"),
+        "n_tokens",
+        F.round(
+            F.col("score_en").cast("double") / _at_least_1("n_tokens"), 4
+        ).alias("stopword_ratio"),
+        F.round(F.col("n_sym").cast("double") / _at_least_1("n_chars"), 4).alias(
+            "symbol_ratio"
+        ),
+        "quality_bp",
     )
 
 
 def lang_id(docs: DataFrame) -> DataFrame:
     """Heuristic language ID: stopword-profile hit counts per language,
-    deterministic argmax (see :func:`lang_pred_col`).
+    deterministic argmax (see :func:`score_docs`).
 
     The classic fastText/CLD replacement shape for when a model can't
     run in the engine: cheap, vectorized, JVM-side.
     """
-    toks = F.col("__toks")
-    scores = {
-        lang: F.size(F.filter(toks, lambda t: t.isin(*words)))
-        for lang, words in STOPWORDS.items()
-    }
-    return _with_tokens(docs, "doc_id", "lang").select(
-        "doc_id",
-        "lang",
-        scores["en"].alias("score_en"),
-        scores["de"].alias("score_de"),
-        scores["es"].alias("score_es"),
-        scores["fr"].alias("score_fr"),
-        lang_pred_col(toks).alias("lang_pred"),
+    return score_docs(docs, "doc_id", "lang").select(
+        "doc_id", "lang", *(f"score_{lang}" for lang in STOPWORDS), "lang_pred"
     )
 
 
@@ -206,7 +224,7 @@ def tfidf_top_terms(docs: DataFrame) -> DataFrame:
     ``score_micro = floor(tf * 1_000_000 / df)`` — monotone in tf and
     in term rarity (1/df), like tf·idf, but free of ``ln`` (libm
     results differ across engines by an ulp, which flips rounded
-    boundaries; see quality_bp_col for the same policy). floor() over
+    boundaries; see score_docs for the same policy). floor() over
     a quotient of exact sub-2^53 integers is provably stable: a
     non-integer true quotient sits ≥ 1/df from the nearest integer,
     orders of magnitude above the double ulp at this magnitude.
@@ -257,7 +275,7 @@ def repetition_stats(docs: DataFrame) -> DataFrame:
     (documents whose n-grams are mostly repeats are boilerplate, spam,
     or generation loops and get dropped before training).
 
-    All three signals are integer basis points (see quality_bp_col for
+    All three signals are integer basis points (see score_docs for
     the cross-engine-exactness policy): ``distinct_bp`` =
     floor(|distinct tokens|·10⁴/n), ``dup_{2,3}gram_bp`` =
     floor((|grams| − |distinct grams|)·10⁴/|grams|).

@@ -7,9 +7,9 @@ transactions pipeline (plans/pipeline.py, trading212.py:113-136):
 canonicalize → filter → dedup → project, rebuilt over text.
 
 Scale shape, stage by stage:
-1. scoring is ONE pass — tokens materialized once (projection
-   boundary, see operators/textual), quality + language computed as
-   sibling expressions;
+1. scoring is ONE pass — tokens and each per-document count
+   projected once (operators/textual.score_docs), quality + language
+   derived from the counts as sibling expressions;
 2. exact dedup partitions by 64-byte sha256 digests, and the quality
    and language filters apply on the window's output (pushed any
    lower, they re-tokenize every row below the fan-out exchange);
@@ -25,8 +25,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..operators.dedup import jaccard_pairs, minhash_lsh_pairs, remove_near_dups
-from ..operators.textual import lang_pred_col, quality_bp_col, tokens
-from ..partitioning import fan_out, freeze_partitions
+from ..operators.textual import score_docs
+from ..partitioning import freeze_partitions
 
 
 def curate_corpus(
@@ -58,17 +58,8 @@ def curate_corpus(
     ``xxhash64`` (production default, JVM-native) or ``md5`` (the
     cross-engine-replicable mode the DuckDB oracle twin runs —
     registry/timeseries.py pipeline_curate_corpus_lsh)."""
-    toks = F.col("__toks")
-    scored = fan_out(docs).select(
-        "doc_id", "text", "lang", tokens("text").alias("__toks")
-    ).select(
-        "doc_id",
-        "text",
-        "lang",
-        "__toks",
-        F.size(toks).alias("n_tokens"),
-        quality_bp_col(toks, F.col("text")).alias("quality_bp"),
-        lang_pred_col(toks).alias("lang_pred"),
+    scored = score_docs(docs, "doc_id", "text", "lang").select(
+        "doc_id", "text", "lang", "__toks", "n_tokens", "quality_bp", "lang_pred"
     )
     # exact dedup as keep-first-by-digest: ONE shuffle (partition by
     # sha256, min doc_id wins) instead of the groupBy-digest +
@@ -116,7 +107,7 @@ def curate_corpus(
         )
     else:
         pairs = jaccard_pairs(
-            canonical, 0.5, tokens_col="__toks", top_k_per_doc=pairs_top_k
+            canonical, tokens_col="__toks", top_k_per_doc=pairs_top_k
         )
     return remove_near_dups(canonical, pairs).select(
         "doc_id", "lang", "lang_pred", "quality_bp", "n_tokens"

@@ -698,7 +698,7 @@ def q_entity_resolution_customers(spark, sf_dir):
     customer here, so every cluster is a star around its base record
     — which is what lets the oracle use the one-round
     min-over-neighbors closed form; the Spark side still runs the
-    general fixpoint."""
+    general closure."""
     from pyspark.sql import functions as F
 
     from ..operators.dedup import connected_components

@@ -8,7 +8,7 @@ unchanged."""
 
 from __future__ import annotations
 
-from ..operators.dedup import SPAN_MIN_TOKENS, SPAN_WINDOW
+from ..operators.dedup import JACCARD_THRESHOLD, SPAN_MIN_TOKENS, SPAN_WINDOW
 from ..operators.multimodal import (
     AUDIO_BANDS,
     FRAME_EVERY,
@@ -24,6 +24,7 @@ from ..operators.similarity import (
     IVF_PROBES,
     NEAR_DUP_COS,
     NEAR_DUP_MAX_ID,
+    ROUND_DP,
 )
 from ..operators.textual import BM25_TOP_K, FINGERPRINT_SHINGLE, TFIDF_TOP_K
 from ._core import (
@@ -76,7 +77,7 @@ def q_dedup_exact(spark, sf_dir):
     SELECT doc_a, doc_b,
            round(CAST(n_common AS DOUBLE) / (size_a + size_b - n_common), 4) AS jaccard
     FROM c
-    WHERE round(CAST(n_common AS DOUBLE) / (size_a + size_b - n_common), 4) >= 0.5
+    WHERE round(CAST(n_common AS DOUBLE) / (size_a + size_b - n_common), 4) >= {JACCARD_THRESHOLD}
     """,
 )
 def q_dedup_jaccard(spark, sf_dir):
@@ -104,11 +105,7 @@ def q_dedup_jaccard(spark, sf_dir):
     driver/oracle runs emit the complete pair set."""
     from ..operators.dedup import jaccard_pairs
 
-    return jaccard_pairs(
-        _t(spark, sf_dir, "documents"),
-        threshold=0.5,
-        top_k_per_doc=pairs_top_k(),
-    )
+    return jaccard_pairs(_t(spark, sf_dir, "documents"), top_k_per_doc=pairs_top_k())
 
 
 @register(
@@ -258,7 +255,7 @@ def q_dedup_boilerplate_lines(spark, sf_dir):
           WHERE a.id < b.id GROUP BY a.id, b.id),
     pairs AS (
       SELECT doc_a, doc_b FROM c
-      WHERE round(CAST(n_common AS DOUBLE) / (size_a + size_b - n_common), 4) >= 0.5
+      WHERE round(CAST(n_common AS DOUBLE) / (size_a + size_b - n_common), 4) >= {JACCARD_THRESHOLD}
     ),
     edges AS (SELECT doc_a AS src, doc_b AS dst FROM pairs
               UNION SELECT doc_b, doc_a FROM pairs),
@@ -274,10 +271,12 @@ def q_dedup_boilerplate_lines(spark, sf_dir):
 def q_dedup_connected_components(spark, sf_dir):
     """Transitive near-dup clustering: connected components over the
     exact Jaccard pair graph (J ≥ 0.5), labels = min reachable doc id.
-    Spark side is iterative min-label propagation (Pregel CC as
-    DataFrame joins, lineage-checkpointed per round); the oracle is a
-    recursive-CTE transitive closure — O(V·E), test-scale only, which
-    is exactly why the iterative form exists.
+    Spark side closes a graph that fits the broadcast threshold with
+    a driver union-find, and a larger one by iterative min-label
+    propagation (Pregel CC as DataFrame joins, lineage-checkpointed
+    per round); the oracle is a recursive-CTE transitive closure —
+    O(V·E), test-scale only, which is exactly why the iterative form
+    exists.
 
     ``SPARK_GRAFT_PAIRS_TOP_K`` (r11; candidate-bounded since r12,
     unset by default) bounds the edge list to the kNN subgraph before
@@ -288,11 +287,7 @@ def q_dedup_connected_components(spark, sf_dir):
     O(n·k)-class (operators/dedup._hub_candidate_pairs)."""
     from ..operators.dedup import connected_components, jaccard_pairs
 
-    pairs = jaccard_pairs(
-        _t(spark, sf_dir, "documents"),
-        threshold=0.5,
-        top_k_per_doc=pairs_top_k(),
-    )
+    pairs = jaccard_pairs(_t(spark, sf_dir, "documents"), top_k_per_doc=pairs_top_k())
     return connected_components(pairs)
 
 
@@ -356,8 +351,6 @@ def _minhash_md5_oracle() -> str:
     band's row mins. This oracles the CANDIDATE GENERATION, not just
     the verified output — the r3/r4 verdicts' open item 'LSH never
     driver-verifiable'."""
-    from ..operators.dedup import JACCARD_THRESHOLD
-
     return f"""
     WITH t AS (
       SELECT doc_id AS id, {_SHINGLES} AS shingles
@@ -654,13 +647,13 @@ def q_text_repetition(spark, sf_dir):
 
 @register(
     "similarity_topk_bruteforce",
-    oracle="""
+    oracle=f"""
     WITH q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS q_emb
                FROM embeddings WHERE vec_id < 8),
     c AS (SELECT vec_id AS corpus_id, CAST(embedding AS DOUBLE[]) AS c_emb
           FROM embeddings),
     s AS (SELECT query_id, corpus_id,
-                 round(list_cosine_similarity(q_emb, c_emb), 4) AS cos_sim
+                 round(list_cosine_similarity(q_emb, c_emb), {ROUND_DP}) AS cos_sim
           FROM q, c WHERE corpus_id <> query_id)
     SELECT query_id, corpus_id, cos_sim, CAST(rn AS BIGINT) AS rank
     FROM (SELECT *, row_number() OVER (PARTITION BY query_id
@@ -712,7 +705,7 @@ ORACLES["similarity_topk_lsh"] = f"""
     ),
     scored AS (
       SELECT cand.query_id, cand.corpus_id,
-             round(list_cosine_similarity(qv.emb, cv.emb), 4) AS cos_sim
+             round(list_cosine_similarity(qv.emb, cv.emb), {ROUND_DP}) AS cos_sim
       FROM cand
       JOIN v qv ON qv.vec_id = cand.query_id
       JOIN v cv ON cv.vec_id = cand.corpus_id
@@ -746,7 +739,7 @@ ORACLES["similarity_topk_lsh"] = f"""
                 FROM cd WHERE vec_id < 8) WHERE rn <= {IVF_PROBES}),
     scored AS (
       SELECT p.query_id, a.vec_id AS corpus_id,
-             round(list_cosine_similarity(qv.emb, cv.emb), 4) AS cos_sim
+             round(list_cosine_similarity(qv.emb, cv.emb), {ROUND_DP}) AS cos_sim
       FROM probes p
       JOIN assign a ON a.cell = p.cell
       JOIN v qv ON qv.vec_id = p.query_id
@@ -822,10 +815,10 @@ def q_embedding_kmeans_step(spark, sf_dir):
     WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings
                WHERE vec_id < {NEAR_DUP_MAX_ID})
     SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-           round(list_cosine_similarity(a.emb, b.emb), 4) AS cos_sim
+           round(list_cosine_similarity(a.emb, b.emb), {ROUND_DP}) AS cos_sim
     FROM v a, v b
     WHERE a.vec_id < b.vec_id
-      AND round(list_cosine_similarity(a.emb, b.emb), 4) >= {NEAR_DUP_COS}
+      AND round(list_cosine_similarity(a.emb, b.emb), {ROUND_DP}) >= {NEAR_DUP_COS}
     """,
 )
 def q_embedding_near_dup(spark, sf_dir):
@@ -863,11 +856,11 @@ ORACLES["embedding_near_dup_lsh"] = f"""
       WHERE a.vec_id < b.vec_id
     )
     SELECT cand.vec_a, cand.vec_b,
-           round(list_cosine_similarity(va.emb, vb.emb), 4) AS cos_sim
+           round(list_cosine_similarity(va.emb, vb.emb), {ROUND_DP}) AS cos_sim
     FROM cand
     JOIN v va ON va.vec_id = cand.vec_a
     JOIN v vb ON vb.vec_id = cand.vec_b
-    WHERE round(list_cosine_similarity(va.emb, vb.emb), 4) >= {NEAR_DUP_COS}
+    WHERE round(list_cosine_similarity(va.emb, vb.emb), {ROUND_DP}) >= {NEAR_DUP_COS}
     """
 
 
@@ -1193,7 +1186,7 @@ _CURATE_SURVIVOR_SQL = """edges AS (SELECT doc_a AS src, doc_b AS dst FROM pairs
           WHERE a.id < b.id GROUP BY a.id, b.id),
     pairs AS (SELECT doc_a, doc_b FROM c
               WHERE round(CAST(n_common AS DOUBLE)
-                          / (size_a + size_b - n_common), 4) >= 0.5),
+                          / (size_a + size_b - n_common), 4) >= {JACCARD_THRESHOLD}),
     {_CURATE_SURVIVOR_SQL}""",
 )
 def q_pipeline_curate(spark, sf_dir):
@@ -1649,16 +1642,13 @@ def q_sample_preference_pairs(spark, sf_dir):
 
     from pyspark.sql import functions as F
 
-    from ..operators.textual import _with_tokens, quality_bp_col
+    from ..operators.textual import score_docs
 
     docs = _t(spark, sf_dir, "documents")
-    # score inline (quality_bp_col over a source-carrying projection)
-    # instead of quality_score(...) + a join back for the source
-    # column — one scan, no doc_id shuffle
-    q = _with_tokens(docs, "doc_id", "source", "text").select(
-        "doc_id",
-        "source",
-        quality_bp_col(F.col("__toks"), F.col("text")).alias("quality_bp"),
+    # score a source-carrying projection instead of quality_score(...)
+    # + a join back for the source column — one scan, no doc_id shuffle
+    q = score_docs(docs, "doc_id", "source").select(
+        "doc_id", "source", "quality_bp"
     )
     w = Window.partitionBy("source").orderBy(
         F.col("quality_bp").desc(), F.col("doc_id")
@@ -1967,14 +1957,11 @@ def q_sample_curriculum_order(spark, sf_dir):
     quality score."""
     from pyspark.sql import functions as F
 
-    from ..operators.textual import _with_tokens, quality_bp_col
+    from ..operators.textual import score_docs
     from ..partitioning import ordered_prefix
 
     docs = _t(spark, sf_dir, "documents")
-    q = _with_tokens(docs, "doc_id", "text").select(
-        "doc_id",
-        quality_bp_col(F.col("__toks"), F.col("text")).alias("quality_bp"),
-    )
+    q = score_docs(docs, "doc_id").select("doc_id", "quality_bp")
     # pin_input (r15): the range sampler re-executes the tokenize+
     # quality chain for its bounds pass — caching the 2-column score
     # frame halves the entry at scale (125×: 90.4 → 48.3 s,
@@ -2259,7 +2246,7 @@ def q_sample_importance_dsir(spark, sf_dir):
 
 @register(
     "similarity_hard_negatives",
-    oracle="""
+    oracle=f"""
     WITH q AS (SELECT vec_id AS query_id,
                       CAST(embedding AS DOUBLE[]) AS q_emb,
                       label AS q_label
@@ -2269,7 +2256,7 @@ def q_sample_importance_dsir(spark, sf_dir):
                  label AS c_label
           FROM embeddings),
     s AS (SELECT query_id, corpus_id,
-                 round(list_cosine_similarity(q_emb, c_emb), 4) AS cos_sim
+                 round(list_cosine_similarity(q_emb, c_emb), {ROUND_DP}) AS cos_sim
           FROM q, c WHERE c_label <> q_label)
     SELECT query_id, corpus_id, cos_sim, CAST(rn AS BIGINT) AS rank
     FROM (SELECT *, row_number() OVER (PARTITION BY query_id
@@ -2311,7 +2298,7 @@ def q_similarity_hard_negatives(spark, sf_dir):
         .select(
             "query_id",
             "corpus_id",
-            F.round(cosine(F.col("q_emb"), F.col("c_emb")), 4).alias(
+            F.round(cosine(F.col("q_emb"), F.col("c_emb")), ROUND_DP).alias(
                 "cos_sim"
             ),
         )
@@ -2333,19 +2320,19 @@ def q_similarity_hard_negatives(spark, sf_dir):
 
 @register(
     "similarity_matryoshka_recall",
-    oracle="""
+    oracle=f"""
     WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
                FROM embeddings),
     q AS (SELECT vec_id AS query_id, emb AS q_emb FROM v WHERE vec_id < 32),
     fs AS (SELECT query_id, vec_id AS corpus_id,
-                  round(list_cosine_similarity(q_emb, emb), 4) AS cs
+                  round(list_cosine_similarity(q_emb, emb), {ROUND_DP}) AS cs
            FROM q JOIN v ON vec_id <> query_id),
     fr AS (SELECT query_id, corpus_id FROM (
              SELECT *, row_number() OVER (PARTITION BY query_id
                         ORDER BY cs DESC, corpus_id) AS rn FROM fs)
            WHERE rn <= 10),
     ps AS (SELECT query_id, vec_id AS corpus_id,
-                  round(list_cosine_similarity(q_emb[1:16], emb[1:16]), 4) AS cs
+                  round(list_cosine_similarity(q_emb[1:16], emb[1:16]), {ROUND_DP}) AS cs
            FROM q JOIN v ON vec_id <> query_id),
     pr AS (SELECT query_id, corpus_id FROM (
              SELECT *, row_number() OVER (PARTITION BY query_id
@@ -2401,13 +2388,13 @@ def q_similarity_matryoshka_recall(spark, sf_dir):
     ).select(
         "query_id",
         "corpus_id",
-        F.round(cosine(F.col("q_emb"), F.col("c_emb")), 4).alias("cs_f"),
+        F.round(cosine(F.col("q_emb"), F.col("c_emb")), ROUND_DP).alias("cs_f"),
         F.round(
             cosine(
                 F.slice(F.col("q_emb"), 1, 16),
                 F.slice(F.col("c_emb"), 1, 16),
             ),
-            4,
+            ROUND_DP,
         ).alias("cs_p"),
     )
     wf = Window.partitionBy("query_id").orderBy(

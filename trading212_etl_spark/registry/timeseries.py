@@ -9,9 +9,10 @@ unchanged."""
 from __future__ import annotations
 
 from ..operators.aggregates import SKEW_TOP_K
+from ..operators.dedup import JACCARD_THRESHOLD
 from ..operators.events import SESSION_GAP_MIN
 from ..operators.sampling import HASH_CHARS, _rate_threshold
-from ..operators.similarity import NEAR_DUP_COS
+from ..operators.similarity import NEAR_DUP_COS, ROUND_DP
 from ..operators.textual import (
     CHUNK_SIZE,
     CHUNK_STRIDE,
@@ -1210,7 +1211,7 @@ def _curate_lsh_oracle() -> str:
     pairs AS (
       SELECT doc_a, doc_b FROM v
       WHERE round(CAST(n_common AS DOUBLE)
-                  / (size_a + size_b - n_common), 4) >= 0.5
+                  / (size_a + size_b - n_common), 4) >= {JACCARD_THRESHOLD}
     ),
     {_CURATE_SURVIVOR_SQL}"""
 
@@ -1374,7 +1375,7 @@ def q_orders_basket_affinity(spark, sf_dir):
           WHERE a.id < b.id GROUP BY a.id, b.id),
     pairs AS (
       SELECT doc_a, doc_b FROM c
-      WHERE round(CAST(n_common AS DOUBLE) / (size_a + size_b - n_common), 4) >= 0.5
+      WHERE round(CAST(n_common AS DOUBLE) / (size_a + size_b - n_common), 4) >= {JACCARD_THRESHOLD}
     ),
     edges AS (SELECT doc_a AS src, doc_b AS dst FROM pairs
               UNION SELECT doc_b, doc_a FROM pairs),
@@ -1407,7 +1408,7 @@ def q_sample_leakage_safe_split(spark, sf_dir):
     assignment as sample_hash_split on the group key, so every member
     of a cluster lands in the same split by construction.
 
-    Scale shape: the CC fixpoint runs on the PAIR GRAPH (|pairs| <<
+    Scale shape: the CC closure runs on the PAIR GRAPH (|pairs| <<
     corpus); the labels join back onto the corpus broadcast (near-dup
     clusters are a small fraction of any curated corpus), and the
     split itself stays a pure projection."""
@@ -1424,7 +1425,7 @@ def q_sample_leakage_safe_split(spark, sf_dir):
     # side of the fence; the r12 hub-candidate route means the
     # quadratic pair mass is never even enumerated
     comp = connected_components(
-        jaccard_pairs(docs, 0.5, top_k_per_doc=pairs_top_k())
+        jaccard_pairs(docs, top_k_per_doc=pairs_top_k())
     )
     grouped = (
         docs.select("doc_id")
@@ -1677,7 +1678,7 @@ def q_dedup_semantic_clusters(spark, sf_dir):
     choice the text pipeline uses.
 
     Scale: the pair graph is a small fraction of the corpus, so the CC
-    fixpoint runs on |pairs| rows; cluster labels join back broadcast
+    closure runs on |pairs| rows; cluster labels join back broadcast
     and the keep flag is a projection. Every vec not in any pair is
     its own cluster."""
     from pyspark.sql import functions as F
@@ -1716,7 +1717,7 @@ ORACLES["dedup_semantic_clusters"] = f"""
       FROM cand
       JOIN v va ON va.vec_id = cand.vec_a
       JOIN v vb ON vb.vec_id = cand.vec_b
-      WHERE round(list_cosine_similarity(va.emb, vb.emb), 4) >= {NEAR_DUP_COS}
+      WHERE round(list_cosine_similarity(va.emb, vb.emb), {ROUND_DP}) >= {NEAR_DUP_COS}
     ),
     edges AS (SELECT vec_a AS src, vec_b AS dst FROM pairs
               UNION SELECT vec_b, vec_a FROM pairs),
