@@ -1411,16 +1411,15 @@ def test_score_counts_equal_extract_and_aggregate_forms(spark, sf_dir):
     text, non-ASCII and supplementary-plane characters, a vertical
     tab.
 
-    DuckDB differs from Spark on three of the strings, and the test
-    pins both sides there so the oracles' difference stays visible:
-    its list_sum over no tokens is NULL (the empty and the
-    whitespace-only text), and RE2's \\s lacks the vertical tab that
-    Java's \\s holds, so DuckDB counts it as a symbol and a token."""
+    The two engines agree on every string: the shared regexes spell
+    the whitespace class out (RE2's \\s lacks the vertical tab that
+    Java's holds), and the oracles' token-length sum over no tokens
+    is 0, not list_sum's NULL."""
     import os
 
     import duckdb
 
-    from trading212_etl_spark.operators.textual import score_docs, tokens
+    from trading212_etl_spark.operators.textual import SYMBOL_RE, score_docs, tokens
     from trading212_etl_spark.registry._core import _TOKS
 
     sf001 = os.path.join(os.path.dirname(sf_dir), "sf0.01")
@@ -1441,9 +1440,7 @@ def test_score_counts_equal_extract_and_aggregate_forms(spark, sf_dir):
         for r in docs.select(
             "doc_id",
             F.length("text").alias("n_chars"),
-            F.size(F.regexp_extract_all("text", F.lit("[^a-z0-9\\s]"), 0)).alias(
-                "n_sym"
-            ),
+            F.size(F.regexp_extract_all("text", F.lit(SYMBOL_RE), 0)).alias("n_sym"),
             F.size(toks).alias("n_tokens"),
             F.aggregate(
                 toks, F.lit(0).cast("long"), lambda acc, t: acc + F.length(t)
@@ -1455,9 +1452,10 @@ def test_score_counts_equal_extract_and_aggregate_forms(spark, sf_dir):
         for i, *rest in duckdb.execute(
             f"""
             SELECT doc_id, length(text),
-                   len(regexp_extract_all(text, '[^a-z0-9\\s]')),
+                   len(regexp_extract_all(text, '{SYMBOL_RE}')),
                    len(toks),
-                   CAST(list_sum(list_transform(toks, t -> length(t))) AS BIGINT)
+                   CAST(coalesce(list_sum(list_transform(toks, t -> length(t))), 0)
+                        AS BIGINT)
             FROM (SELECT doc_id, text, {_TOKS} AS toks
                   FROM (SELECT unnest(range(len($texts))) AS doc_id,
                                unnest($texts) AS text))
@@ -1470,12 +1468,9 @@ def test_score_counts_equal_extract_and_aggregate_forms(spark, sf_dir):
     empty, blank, vtab = (
         SCORE_ADVERSARIAL.index(t) for t in ("", "   \t\n ", "form\x0bfeed")
     )
-    differ = {
-        empty: ((0, 0, 0, 0), (0, 0, 0, None)),
-        blank: ((6, 0, 0, 0), (6, 0, 0, None)),
-        vtab: ((9, 0, 2, 8), (9, 1, 3, 9)),
-    }
-    assert {i: (got[i], duck[i]) for i in differ} == differ
-    assert {i: c for i, c in got.items() if i not in differ} == {
-        i: c for i, c in duck.items() if i not in differ
-    }
+    assert (got[empty], got[blank], got[vtab]) == (
+        (0, 0, 0, 0),
+        (6, 0, 0, 0),
+        (9, 0, 2, 8),
+    )
+    assert got == duck

@@ -1321,3 +1321,38 @@ def test_type_lift_basket_single_scan_no_self_join(spark):
     assert len(re.findall(r"^\(\d+\) SortMergeJoin", p, re.M)) == 0, p[:2000]
     n_bhj = len(re.findall(r"^\(\d+\) BroadcastHashJoin", p, re.M))
     assert n_bhj == 2, f"expected 2 broadcast type-count lookups, got {n_bhj}"
+
+
+def test_curate_pair_stage_prunes_before_rounding(spark, monkeypatch):
+    """pipeline_curate_corpus' exact pair stage (the plan its
+    connected_components collects): the self-join's condition holds
+    the size bound least(|A|, |B|) ≥ τ′·greatest(|A|, |B|), and the
+    aggregate's output is cut on the unrounded J ≥ τ′ ahead of
+    round(J, 4)."""
+    from trading212_etl_spark.operators import dedup
+
+    captured = []
+    closure = dedup.connected_components
+
+    def capture(pairs):
+        captured.append(pairs)
+        return closure(pairs)
+
+    monkeypatch.setattr(dedup, "connected_components", capture)
+    registry.QUERIES["pipeline_curate_corpus"](spark, SF)
+    (pairs,) = captured
+    nodes = list(_physical_nodes(pairs._jdf.queryExecution().executedPlan()))
+
+    def exprs(n):
+        return " ".join(e.toString() for e in _seq(n.expressions()))
+
+    floor = repr(dedup.rounding_floor(dedup.JACCARD_THRESHOLD, 4))
+    joins = [n for n in nodes if _JOIN_NODE.fullmatch(n.nodeName())]
+    assert joins and all(
+        "least(" in n.condition().toString() and floor in n.condition().toString()
+        for n in joins
+    )
+    cuts = [
+        exprs(n) for n in nodes if n.nodeName() == "Filter" and "round(" in exprs(n)
+    ]
+    assert cuts and all(0 <= c.find(f">= {floor}") < c.find("round(") for c in cuts)

@@ -808,3 +808,85 @@ def test_connected_components_arms_match_reference(spark, graph, id_type):
             spark.conf.set(key, old)
         assert got == want, threshold
         assert [type(f.dataType) for f in comp.schema.fields] == [id_cls, id_cls]
+
+
+def _jaccard_reference(docs: dict[int, list[str]]) -> dict[tuple[int, int], float]:
+    """jaccard_pairs in pure Python: word-shingle sets as word_shingles
+    builds them (a document shorter than SHINGLE_N is one shingle, the
+    empty one included), J as an exact fraction, rounded half up to 4
+    places, kept at ≥ JACCARD_THRESHOLD."""
+    import math
+    from fractions import Fraction
+
+    from trading212_etl_spark.operators import dedup
+
+    n = dedup.SHINGLE_N
+    sets = {
+        i: {" ".join(t[s : s + n]) for s in range(max(len(t) - n + 1, 1))}
+        for i, t in docs.items()
+    }
+    cut = Fraction(str(dedup.JACCARD_THRESHOLD))
+    out = {}
+    for a in sets:
+        for b in sets:
+            common = len(sets[a] & sets[b])
+            if a < b and common:
+                j = Fraction(common, len(sets[a] | sets[b]))
+                kept = Fraction(math.floor(j * 10**4 + Fraction(1, 2)), 10**4)
+                if kept >= cut:
+                    out[(a, b)] = float(kept)
+    return out
+
+
+def _jaccard_pairs_of(spark, docs: dict[int, list[str]]) -> dict:
+    """jaccard_pairs over the documents' token arrays."""
+    from trading212_etl_spark.operators.dedup import jaccard_pairs
+
+    df = spark.createDataFrame(list(docs.items()), "doc_id bigint, toks array<string>")
+    pairs = jaccard_pairs(df, tokens_col="toks")
+    return {(r.doc_a, r.doc_b): r.jaccard for r in pairs.collect()}
+
+
+@PROP
+@given(
+    docs=st.lists(
+        st.lists(st.sampled_from("abcd"), max_size=10), min_size=0, max_size=8
+    )
+)
+def test_jaccard_pairs_match_exact_reference(spark, docs):
+    """The exact pair generator equals the reference on random small
+    documents over a four-word vocabulary (many overlaps, empty and
+    short documents, J on both sides of the threshold): the size bound
+    in the join and the unrounded cut before the round drop no kept
+    pair."""
+    docs = dict(enumerate(docs))
+    assert _jaccard_pairs_of(spark, docs) == _jaccard_reference(docs)
+
+
+def test_jaccard_pairs_keep_the_threshold_edges(spark):
+    """Constructed pairs at the rounding and size-bound edges: J =
+    0.49994 rounds to 0.4999 and is dropped; J = 0.49995 rounds up to
+    0.5 and J = 0.5 is kept; a subset pair with |A| = 2|B| (J = 0.5,
+    min/max = 0.5) is kept, and one with |A| = 2|B| + 1 is dropped.
+    Each pair has words of its own, so no two pairs share a shingle."""
+
+    def pair(tag: str, size_a: int, size_b: int, offset: int) -> list[list[str]]:
+        # shingles of A start at 0..size_a-1 and those of B at
+        # offset..offset+size_b-1: consecutive words, one shingle each
+        words = [f"{tag}{k}" for k in range(max(size_a, offset + size_b) + 2)]
+        return [words[: size_a + 2], words[offset : offset + size_b + 2]]
+
+    cases = {
+        # (|A|, |B|, B's first shingle) -> (|A ∩ B|, |A ∪ B|)
+        "p": (37_499, 37_498, 37_499 - 24_997),  # 24 997 / 50 000
+        "q": (15_000, 14_999, 15_000 - 9_999),  # 9 999 / 20 000
+        "r": (3, 3, 1),  # 2 / 4
+        "s": (20, 10, 5),  # B inside A: 10 / 20
+        "t": (21, 10, 5),  # B inside A: 10 / 21
+    }
+    docs = {}
+    for tag, shape in cases.items():
+        docs.update(zip((len(docs), len(docs) + 1), pair(tag, *shape)))
+    want = _jaccard_reference(docs)
+    assert want == {(2, 3): 0.5, (4, 5): 0.5, (6, 7): 0.5}
+    assert _jaccard_pairs_of(spark, docs) == want

@@ -106,3 +106,64 @@ def test_repeated_round_compiles_nothing(spark, sf_dir):
     before = _compiled_classes(spark)
     one_round()
     assert _compiled_classes(spark) - before == 0
+
+
+# Py4J round trips of one registry build, pinned when get_session
+# turned off PySpark's call-site capture; with it on they were 1289
+# and 618. Upper bounds: never raise them to pass. The test keeps the
+# least of three builds: when Python's garbage collector frees the
+# JVM proxies of earlier builds, each one costs a round trip of its
+# own, at a build nobody can predict.
+BUILD_ROUND_TRIPS = {"text_quality_score": 569, "similarity_topk_lsh": 308}
+
+
+def test_plan_construction_skips_call_site_capture(spark, sf_dir, monkeypatch):
+    """get_session turns off PySpark 4's DataFrame debugging, which
+    walks the Python stack and makes about six extra Py4J round trips
+    for every Column and function call, and the two zero-job builds
+    stay within their measured round trips."""
+    import pyspark.errors.utils as origin
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    # PySpark reads the conf once per process, from the session active
+    # then; read it again from this one
+    monkeypatch.setattr(origin, "_enable_debugging_cache", None)
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    sent = [0]
+
+    def counting(*args, **kwargs):
+        sent[0] += 1
+        return send(*args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counting)
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    for name, most in BUILD_ROUND_TRIPS.items():
+        trips = []
+        for _ in range(3):
+            jobs = dag.numTotalJobs()
+            sent[0] = 0
+            QUERIES[name](spark, sf_dir)
+            trips.append(sent[0])
+            assert dag.numTotalJobs() == jobs, f"{name} ran a job while built"
+        assert min(trips) <= most, (name, trips)
+
+
+def test_analysis_errors_name_what_they_cannot_resolve(spark, monkeypatch):
+    """With call-site capture off, an analysis error still names the
+    column it cannot resolve and shows the plan that holds it; what it
+    no longer carries is the Python file and line of the call that
+    built the expression."""
+    import pyspark.errors.utils as origin
+    from pyspark.errors import AnalysisException
+    from pyspark.sql import functions as F
+
+    monkeypatch.setattr(origin, "_enable_debugging_cache", None)
+    with pytest.raises(AnalysisException) as err:
+        spark.range(3).select((F.col("id") + F.col("no_such_col")).alias("x")).schema
+    assert err.value.getCondition() == "UNRESOLVED_COLUMN.WITH_SUGGESTION"
+    message = str(err.value)
+    assert "`no_such_col`" in message and "'no_such_col" in message, message
+    # with capture on, the DataFrame context names this file and line
+    sites = [c.callSite() for c in err.value.getQueryContext()]
+    assert not any("test_session.py" in site for site in sites), sites

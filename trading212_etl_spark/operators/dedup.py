@@ -102,6 +102,17 @@ def word_shingles(toks: Column) -> Column:
     )
 
 
+def rounding_floor(threshold: float, dp: int) -> float:
+    """A cut strictly below every value that rounds (half up, to
+    ``dp`` places) to ``threshold`` or more. Rounding moves a value by
+    at most half a unit in the last place, so ``round(x, dp) >=
+    threshold`` implies ``x >= threshold - 10**-dp``: a filter on the
+    unrounded value keeps every row the rounded cut keeps, and leaves
+    the round (a BigDecimal built from the double's decimal string) to
+    the rows near or above the threshold."""
+    return threshold - 10.0**-dp
+
+
 def _check_hash_fn(hash_fn: str) -> None:
     """Reject a signature hash family other than the two the sketches
     and their DuckDB twins are written for."""
@@ -320,7 +331,7 @@ def jaccard_pairs(
     top_k_per_doc: int | None = None,
 ) -> DataFrame:
     """Exact word-3-gram Jaccard similar pairs (doc_a < doc_b,
-    J ≥ ``JACCARD_THRESHOLD``).
+    J ≥ ``JACCARD_THRESHOLD``, J rounded to 4 places).
 
     Plan shape: explode shingles → self-equi-join on the shingle →
     count common shingles per pair → J = |∩| / (|A|+|B|-|∩|). The join
@@ -328,6 +339,19 @@ def jaccard_pairs(
     ever meet — no cross product. Stop-shingle skew (a shingle shared
     by millions of docs) is the scale hazard; LSH (minhash_lsh_pairs)
     is the production path, with this as its verifier.
+
+    Two bounds implied by the rounded cut prune candidates first,
+    with τ′ = :func:`rounding_floor` of the threshold (below every J
+    that rounds up to it): the join itself carries
+    ``least(|A|, |B|) ≥ τ′·greatest(|A|, |B|)``, since J ≤ min/max,
+    so pairs of very unequal sizes never reach the count; and the
+    counted pairs are filtered on the unrounded J ≥ τ′ before
+    ``round(J, 4)``, so the round runs only near the threshold.
+    Neither changes an output row. The ``top_k_per_doc``
+    route keeps the plain rounded cut: its ``n_common`` is an
+    array_intersect that Catalyst inlines into the scoring join's
+    condition once per conjunct, so every added cut would repeat it
+    (minhash_lsh_pairs' verify keeps it for the same reason).
 
     ``top_k_per_doc`` (opt-in) bounds the result to each document's k
     strongest partners (see :func:`_top_k_per_doc`): the full listing
@@ -360,11 +384,20 @@ def jaccard_pairs(
     DuckDB oracles join on the strings, so a collision in a test
     corpus shows as an oracle mismatch, not as silent drift.
     """
+    size_a, size_b = F.col("size_a"), F.col("size_b")
+    n_common = F.col("n_common")
+    jac = n_common / (size_a + size_b - n_common)
     if top_k_per_doc is not None:
         common = _candidate_common_counts(docs, tokens_col, top_k_per_doc)
     else:
-        common = _common_shingle_counts(docs, tokens_col)
-    jac = F.col("n_common") / (F.col("size_a") + F.col("size_b") - F.col("n_common"))
+        # the two implied bounds in ONE filter: Catalyst moves the size
+        # bound (set sizes only) into the self-join and leaves J ≥ τ′ on
+        # the counted pairs, ahead of the round below
+        floor = rounding_floor(JACCARD_THRESHOLD, 4)
+        common = _common_shingle_counts(docs, tokens_col).filter(
+            (F.least(size_a, size_b) >= floor * F.greatest(size_a, size_b))
+            & (jac >= floor)
+        )
     out = (
         common.withColumn("jaccard", F.round(jac, 4))
         .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
@@ -385,12 +418,7 @@ def _common_shingle_counts(docs: DataFrame, tokens_col: str | None) -> DataFrame
     the equi-join compares longs. A 64-bit collision would need two
     distinct shingles hashing alike within one corpus (~2^-64 x
     pairs); the verified-pair contract is unchanged."""
-    sh = _shingle_sets(docs, tokens_col).withColumn(
-        "set_size", F.size("shingles")
-    )
-    exploded = explode_nonempty(sh, ["id", "set_size"], "shingles", "__s").select(
-        "id", "set_size", F.xxhash64("__s").alias("shingle")
-    )
+    exploded = _shingle_hashes(docs, tokens_col)
     a, b = exploded.alias("a"), exploded.alias("b")
     return (
         a.join(b, "shingle")
@@ -423,12 +451,19 @@ def containment_pairs(
     ratio differs, so the 100 TB analysis carries over unchanged.
     ``top_k_per_doc=None`` keeps the complete pair set.
     """
+    n_common = F.col("n_common")
     if top_k_per_doc is not None:
         common = _candidate_common_counts(docs, None, top_k_per_doc)
     else:
-        common = _common_shingle_counts(docs, None)
-    c_ab = F.round(F.col("n_common") / F.col("size_a"), 4)
-    c_ba = F.round(F.col("n_common") / F.col("size_b"), 4)
+        # the larger containment is n_common over the smaller set: cut
+        # the counted pairs on it unrounded, ahead of the rounds (see
+        # rounding_floor). No size bound here: a small document inside
+        # a large one has containment 1.
+        common = _common_shingle_counts(docs, None).filter(
+            n_common / F.least("size_a", "size_b") >= rounding_floor(threshold, 4)
+        )
+    c_ab = F.round(n_common / F.col("size_a"), 4)
+    c_ba = F.round(n_common / F.col("size_b"), 4)
     out = (
         common.withColumn("contain_a_in_b", c_ab)
         .withColumn("contain_b_in_a", c_ba)
@@ -879,12 +914,12 @@ def decontaminate(docs: DataFrame, benchmark: DataFrame) -> DataFrame:
     )
 
 
-def _shingle_hashes(docs: DataFrame) -> DataFrame:
+def _shingle_hashes(docs: DataFrame, tokens_col: str | None = None) -> DataFrame:
     """(id, set_size, shingle) — one row per shingle of each document,
-    the shingle as its xxhash64: the probe side of the decontamination
-    joins."""
+    the shingle as its xxhash64: both sides of the shingle self-join
+    and the probe side of the decontamination joins."""
     return explode_nonempty(
-        _shingle_sets(docs).withColumn("set_size", F.size("shingles")),
+        _shingle_sets(docs, tokens_col).withColumn("set_size", F.size("shingles")),
         ["id", "set_size"],
         "shingles",
         "__s",

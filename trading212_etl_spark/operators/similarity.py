@@ -622,13 +622,20 @@ def embedding_near_dup_pairs(corpus: DataFrame) -> DataFrame:
     )
     a = v.select(F.col("vec_id").alias("vec_a"), F.col("emb").alias("emb_a"))
     b = v.select(F.col("vec_id").alias("vec_b"), F.col("emb").alias("emb_b"))
-    pairs = a.join(b, F.col("vec_a") < F.col("vec_b"))
+    cos = cosine(F.col("emb_a"), F.col("emb_b"))
+    # the unrounded cut keeps every pair the rounded one keeps
+    # (dedup.rounding_floor), so the round runs near the threshold
+    # only. One filter, id order first: Catalyst pushes it into the
+    # join condition in this order, and a condition given to the join
+    # itself would end up behind the pushed cosine, run on both orders
+    # of every pair.
     return (
-        pairs.select(
-            "vec_a",
-            "vec_b",
-            F.round(cosine(F.col("emb_a"), F.col("emb_b")), ROUND_DP).alias("cos_sim"),
+        a.crossJoin(b)
+        .filter(
+            (F.col("vec_a") < F.col("vec_b"))
+            & (cos >= dedup.rounding_floor(NEAR_DUP_COS, ROUND_DP))
         )
+        .select("vec_a", "vec_b", F.round(cos, ROUND_DP).alias("cos_sim"))
         .filter(F.col("cos_sim") >= NEAR_DUP_COS)
     )
 

@@ -21,10 +21,19 @@ from pyspark.sql import functions as F
 from ..partitioning import fan_out
 from ..session import drop_zip_importers
 
+# ASCII whitespace as Java's \s matches it, spelled out because RE2,
+# the DuckDB oracles' regex engine, leaves the vertical tab (\x0B) out
+# of its \s: a shared regex written with \s splits text holding one
+# differently in the two engines.
+WHITESPACE = " \\t\\n\\x0B\\f\\r"
+# the characters that are not symbols: lowercase letters, digits and
+# whitespace; a symbol is any other character
+_SYMBOL_FREE = f"a-z0-9{WHITESPACE}"
+SYMBOL_RE = f"[^{_SYMBOL_FREE}]"
 # BPE-ish pre-tokenizer: letter runs | digit runs | single non-space
 # symbol — the regex shape GPT-2-style tokenizers use as their split
 # pass. Identical regex runs on the DuckDB side.
-TOKEN_RE = "[a-z]+|[0-9]+|[^a-z0-9\\s]"
+TOKEN_RE = f"[a-z]+|[0-9]+|{SYMBOL_RE}"
 
 # tokens per winnowing shingle (fingerprint)
 FINGERPRINT_SHINGLE = 5
@@ -89,7 +98,7 @@ def token_stats(docs: DataFrame) -> DataFrame:
     char/avg-length stats. One projection, zero shuffles — at 100 TB
     this runs at parquet-scan speed."""
     toks = F.col("__toks")
-    ws = F.split(F.col("text"), "\\s+")
+    ws = F.split(F.col("text"), f"[{WHITESPACE}]+")
     return _with_tokens(docs, "doc_id", "text").select(
         "doc_id",
         F.length("text").alias("n_chars_actual"),
@@ -151,7 +160,7 @@ def score_docs(docs: DataFrame, *keep: str) -> DataFrame:
         *keep,
         "__toks",
         F.length("text").alias("n_chars"),
-        F.length(F.regexp_replace("text", "[a-z0-9\\s]", "")).alias("n_sym"),
+        F.length(F.regexp_replace("text", f"[{_SYMBOL_FREE}]", "")).alias("n_sym"),
         F.size(toks).alias("n_tokens"),
         F.length(F.array_join(toks, "")).cast("long").alias("sum_len"),
         *(

@@ -14,7 +14,12 @@ Scale shape, stage by stage:
    and language filters apply on the window's output (pushed any
    lower, they re-tokenize every row below the fan-out exchange);
 3. near-dup pairs come from the shingle join (or swap in
-   minhash_lsh_pairs at cluster scale — same pair contract);
+   minhash_lsh_pairs at cluster scale — same pair contract). The
+   exact generator prunes on two bounds the rounded cut implies, τ′
+   sitting just below every J that rounds up to the threshold
+   (operators/dedup.jaccard_pairs): the self-join carries the size
+   bound least(|A|, |B|) ≥ τ′·greatest(|A|, |B|), and the counted
+   pairs are cut on the unrounded J ≥ τ′ before ``round(J, 4)``;
 4. removal is a left-anti join on the drop set (broadcast-able:
    |near-dup pairs| << |corpus|).
 """

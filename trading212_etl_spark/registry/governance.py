@@ -9,6 +9,7 @@ unchanged."""
 from __future__ import annotations
 
 from ._core import (
+    _TOKS,
     _basket_pairs,
     _t,
     register,
@@ -313,8 +314,7 @@ def q_sample_weighted(spark, sf_dir):
     "text_inverted_index",
     oracle=f"""
     WITH toks AS (
-      SELECT DISTINCT doc_id, unnest(regexp_extract_all(
-               lower(text), '[a-z]+|[0-9]+|[^a-z0-9\\s]')) AS token
+      SELECT DISTINCT doc_id, unnest({_TOKS}) AS token
       FROM documents
     )
     SELECT token, count(*) AS df,

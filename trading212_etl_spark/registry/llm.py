@@ -26,7 +26,13 @@ from ..operators.similarity import (
     NEAR_DUP_MAX_ID,
     ROUND_DP,
 )
-from ..operators.textual import BM25_TOP_K, FINGERPRINT_SHINGLE, TFIDF_TOP_K
+from ..operators.textual import (
+    BM25_TOP_K,
+    FINGERPRINT_SHINGLE,
+    SYMBOL_RE,
+    TFIDF_TOP_K,
+    WHITESPACE,
+)
 from ._core import (
     ORACLES,
     _SHINGLES,
@@ -466,10 +472,11 @@ def q_dedup_simhash(spark, sf_dir):
     WITH t AS (SELECT doc_id, text, {_TOKS} AS toks FROM documents)
     SELECT doc_id,
            CAST(length(text) AS INTEGER) AS n_chars_actual,
-           CAST(len(string_split_regex(text, '\\s+')) AS INTEGER) AS n_words,
+           CAST(len(string_split_regex(text, '[{WHITESPACE}]+')) AS INTEGER) AS n_words,
            CAST(len(toks) AS INTEGER) AS n_tokens,
-           round(CAST(list_sum(list_transform(toks, t -> length(t))) AS DOUBLE)
-                 / greatest(len(toks), 1), 4) AS avg_token_len
+           CASE WHEN toks IS NULL THEN NULL
+                ELSE round(CAST(coalesce(list_sum(list_transform(toks, t -> length(t))), 0)
+                                AS DOUBLE) / greatest(len(toks), 1), 4) END AS avg_token_len
     FROM t
     """,
 )
@@ -486,7 +493,7 @@ def q_text_token_stats(spark, sf_dir):
     oracle=f"""
     WITH t AS (
       SELECT doc_id, text, {_TOKS} AS toks,
-             regexp_extract_all(text, '[^a-z0-9\\s]') AS syms
+             regexp_extract_all(text, '{SYMBOL_RE}') AS syms
       FROM documents
     ),
     m AS (
@@ -497,7 +504,9 @@ def q_text_token_stats(spark, sf_dir):
              len(list_filter(toks, t -> list_contains(
                ['the','a','and','of','to','in','is'], t))) AS n_stop,
              len(syms) AS n_sym,
-             CAST(list_sum(list_transform(toks, t -> length(t))) AS BIGINT) AS sum_len
+             CASE WHEN toks IS NULL THEN NULL
+                  ELSE CAST(coalesce(list_sum(list_transform(toks, t -> length(t))), 0)
+                            AS BIGINT) END AS sum_len
       FROM t
     )
     SELECT doc_id, n_tokens,
@@ -1111,7 +1120,7 @@ def q_multimodal_frames(spark, sf_dir):
 # string is byte-identical to its r12 driver-hash-green form.
 _CURATE_CANONICAL_CTES = f"""t AS (
       SELECT doc_id, text, lang, {_TOKS} AS toks,
-             regexp_extract_all(text, '[^a-z0-9\\s]') AS syms
+             regexp_extract_all(text, '{SYMBOL_RE}') AS syms
       FROM documents
     ),
     m AS (
@@ -1128,8 +1137,9 @@ _CURATE_CANONICAL_CTES = f"""t AS (
              len(list_filter(toks, x -> list_contains(
                ['le','la','et','les','des','un'], x))) AS s_fr,
              len(syms) AS n_sym,
-             CAST(list_sum(list_transform(toks, x -> length(x))) AS BIGINT)
-               AS sum_len
+             CASE WHEN toks IS NULL THEN NULL
+                  ELSE CAST(coalesce(list_sum(list_transform(toks, x -> length(x))), 0)
+                            AS BIGINT) END AS sum_len
       FROM t
     ),
     scored AS (
@@ -1576,10 +1586,10 @@ def q_sink_ivf_partitioned_ann(spark, sf_dir):
     return _rank_probed(spark.read.parquet(path), probes, "vec_id", 10)
 
 
-_QBP_SQL = """
+_QBP_SQL = f"""
     WITH t AS (
-      SELECT doc_id, source, text, {toks} AS toks,
-             regexp_extract_all(text, '[^a-z0-9\\s]') AS syms
+      SELECT doc_id, source, text, {_TOKS} AS toks,
+             regexp_extract_all(text, '{SYMBOL_RE}') AS syms
       FROM documents
     ),
     m AS (
@@ -1590,7 +1600,9 @@ _QBP_SQL = """
              len(list_filter(toks, t -> list_contains(
                ['the','a','and','of','to','in','is'], t))) AS n_stop,
              len(syms) AS n_sym,
-             CAST(list_sum(list_transform(toks, t -> length(t))) AS BIGINT) AS sum_len
+             CASE WHEN toks IS NULL THEN NULL
+                  ELSE CAST(coalesce(list_sum(list_transform(toks, t -> length(t))), 0)
+                            AS BIGINT) END AS sum_len
       FROM t
     ),
     q AS (
@@ -1611,7 +1623,7 @@ _QBP_SQL = """
 
 @register(
     "sample_preference_pairs",
-    oracle=_QBP_SQL.format(toks=_TOKS) + """
+    oracle=_QBP_SQL + """
     , r AS (
       SELECT doc_id, source, quality_bp,
              row_number() OVER (PARTITION BY source
@@ -1939,7 +1951,7 @@ def q_dedup_rate_by_source(spark, sf_dir):
 
 @register(
     "sample_curriculum_order",
-    oracle=_QBP_SQL.format(toks=_TOKS) + """
+    oracle=_QBP_SQL + """
     SELECT doc_id, quality_bp,
            CAST(row_number() OVER (ORDER BY quality_bp DESC, doc_id)
                 AS BIGINT) AS curriculum_rank

@@ -689,14 +689,12 @@ def q_text_code_detection(spark, sf_dir):
     classifier gate in this registry."""
     from pyspark.sql import functions as F
 
+    from ..operators.textual import tokens
+
     d = _t(spark, sf_dir, "documents").where(F.col("text").isNotNull())
-    toks = (
-        "CAST(size(regexp_extract_all(lower(text),"
-        " '[a-z]+|[0-9]+|[^a-z0-9\\\\s]', 0)) AS BIGINT)"
-    )
     c = d.select(
         "doc_id",
-        F.expr(toks).alias("n_tokens"),
+        F.size(tokens("text")).cast("bigint").alias("n_tokens"),
         F.expr(
             "CAST(size(regexp_extract_all(text, '[{}]', 0)) AS BIGINT)"
         ).alias("n_braces"),

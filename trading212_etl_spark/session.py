@@ -184,6 +184,15 @@ def get_session(
         .config("spark.sql.session.timeZone", "UTC")
         # -- python interop ------------------------------------------
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # PySpark 4 otherwise captures the Python call site of every
+        # Column and function call for error messages: a stack walk
+        # plus about six Py4J round trips per call, which doubled the
+        # round trips of building a registry plan (text_quality_score
+        # 1289 -> 569). An analysis error still names the column or
+        # function it cannot resolve and shows the plan holding it; no
+        # error carries the Python file and line that built the
+        # failing expression (tests/test_session.py).
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.ui.enabled", "false")
         # -- status-store retention ----------------------------------
         # The app/SQL status listeners run even with the UI off, and
