@@ -1,12 +1,14 @@
 """The engine's one sizing policy (session.shuffle_partitions_for):
 a pure function of (cores, input bytes), applied both by get_session
-and by every registry call; the core count it starts from; and the
+and by every registry call; the core count it starts from; the
 generated-class cache that lets a long-lived session repeat a round
-without compiling again."""
+without compiling again; PySpark's call-site capture, off in every
+session a registry call sees; and the driver JVM's collector."""
 
 from __future__ import annotations
 
 import os
+import threading
 
 import pytest
 
@@ -110,35 +112,29 @@ def test_repeated_round_compiles_nothing(spark, sf_dir):
 
 # Py4J round trips of one registry build, pinned when get_session
 # turned off PySpark's call-site capture; with it on they were 1289
-# and 618. Upper bounds: never raise them to pass. The test keeps the
-# least of three builds: when Python's garbage collector frees the
-# JVM proxies of earlier builds, each one costs a round trip of its
-# own, at a build nobody can predict.
+# and 618. Upper bounds: never raise them to pass.
 BUILD_ROUND_TRIPS = {"text_quality_score": 569, "similarity_topk_lsh": 308}
 
 
-def test_plan_construction_skips_call_site_capture(spark, sf_dir, monkeypatch):
-    """get_session turns off PySpark 4's DataFrame debugging, which
-    walks the Python stack and makes about six extra Py4J round trips
-    for every Column and function call, and the two zero-job builds
-    stay within their measured round trips."""
-    import pyspark.errors.utils as origin
-
-    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
-    # PySpark reads the conf once per process, from the session active
-    # then; read it again from this one
-    monkeypatch.setattr(origin, "_enable_debugging_cache", None)
+@pytest.fixture
+def build_round_trips(spark, sf_dir, monkeypatch):
+    """Py4J round trips of each of three builds of a registry entry,
+    none of which may run a job. Only the building thread's commands
+    count: the deletes that free the JVM proxies of earlier builds go
+    out from another thread, whenever Python's collector gets to them."""
     client = spark.sparkContext._gateway._gateway_client
     send = client.send_command
+    builder = threading.get_ident()
     sent = [0]
 
     def counting(*args, **kwargs):
-        sent[0] += 1
+        sent[0] += threading.get_ident() == builder
         return send(*args, **kwargs)
 
     monkeypatch.setattr(client, "send_command", counting)
     dag = spark.sparkContext._jsc.sc().dagScheduler()
-    for name, most in BUILD_ROUND_TRIPS.items():
+
+    def builds(name: str) -> list[int]:
         trips = []
         for _ in range(3):
             jobs = dag.numTotalJobs()
@@ -146,7 +142,44 @@ def test_plan_construction_skips_call_site_capture(spark, sf_dir, monkeypatch):
             QUERIES[name](spark, sf_dir)
             trips.append(sent[0])
             assert dag.numTotalJobs() == jobs, f"{name} ran a job while built"
+        return trips
+
+    return builds
+
+
+def test_plan_construction_skips_call_site_capture(spark, build_round_trips):
+    """get_session turns off PySpark 4's DataFrame debugging, which
+    walks the Python stack and makes about six extra Py4J round trips
+    for every Column and function call, and the two zero-job builds
+    stay within their measured round trips."""
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    for name, most in BUILD_ROUND_TRIPS.items():
+        trips = build_round_trips(name)
         assert min(trips) <= most, (name, trips)
+
+
+def test_registry_call_turns_off_call_site_capture(build_round_trips, monkeypatch):
+    """A session the caller built (the driver's) has PySpark's default,
+    capture on, and the conf is static. The registry wrapper turns off
+    the flag PySpark caches from it, so the builds stay within the same
+    round trips as in a get_session session."""
+    import pyspark.errors.utils as origin
+
+    # what PySpark caches from a session with the default conf
+    monkeypatch.setattr(origin, "_enable_debugging_cache", True)
+    for name, most in BUILD_ROUND_TRIPS.items():
+        trips = build_round_trips(name)
+        assert min(trips) <= most, (name, trips)
+    assert origin.is_debugging_enabled() is False
+
+
+def test_session_jvm_runs_the_throughput_collector(spark):
+    """get_session starts the driver JVM with -XX:+UseParallelGC, whose
+    young and old collectors are PS Scavenge and PS MarkSweep (G1's
+    are G1 Young Generation and G1 Old Generation)."""
+    beans = spark._jvm.java.lang.management.ManagementFactory.getGarbageCollectorMXBeans()
+    names = sorted(bean.getName() for bean in beans)
+    assert names == ["PS MarkSweep", "PS Scavenge"], names
 
 
 def test_analysis_errors_name_what_they_cannot_resolve(spark, monkeypatch):

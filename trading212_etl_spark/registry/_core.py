@@ -38,7 +38,20 @@ def pin_oracle_confs(spark: SparkSession, sf_dir: str | None = None) -> None:
     over the session's cores and ``sf_dir``'s bytes — a vanilla
     session's 200 partitions are pure scheduling overhead at harness
     SFs. A ``get_session`` default session keeps its width unless
-    the corpus outgrows the floor."""
+    the corpus outgrows the floor.
+
+    It also turns off PySpark's call-site capture in a session the
+    caller built, as ``get_session`` does in its own: with capture on, a
+    registry build makes about twice the Py4J round trips
+    (``text_quality_score`` 1289 against 569). The conf behind it,
+    ``spark.python.sql.dataFrameDebugging.enabled``, is static, so a
+    running session cannot change it; PySpark reads it once per process
+    into ``pyspark.errors.utils._enable_debugging_cache``, and this sets
+    that flag. Errors then lose only the Python file and line that built
+    the failing expression."""
+    import pyspark.errors.utils as origin
+
+    origin._enable_debugging_cache = False
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     n = shuffle_partitions_for(
         spark.sparkContext.defaultParallelism,

@@ -34,6 +34,26 @@ them, and at 1000 a later HEADLINE pass still recompiles 1798. The
 conf is static: a session the caller built itself (a caller of
 ``__spark_entry__.py`` brings its own) keeps its own cache size, which
 changes its timings but never its results.
+
+The driver JVM runs on the throughput collector (``-XX:+UseParallelGC``
+in ``spark.driver.extraJavaOptions``, a fixed value) instead of the
+JDK's default G1. In local mode every executor thread runs inside this
+one JVM, and a batch round needs throughput, not G1's pause-time goal,
+for which every reference store pays a card-marking and refinement
+barrier and concurrent threads take CPU of their own. Measured on 4
+cores over 10 interleaved perfbench pairs per workload,
+``cpu_s_per_krow`` fell 8.6 % on ``etl_parquet`` and 4.8 % on
+``llm_curate``, and ``rows_per_s`` rose 7.1 % and 4.1 %, with the
+same jobs, tasks and shuffle bytes; the cost is 11-21 % more peak RSS,
+as this collector keeps the heap it grows. The option takes
+effect only when ``get_session`` launches the JVM: a session that is
+already running (or one the caller built) keeps its collector, and on a
+cluster the executors keep whatever ``spark.executor.extraJavaOptions``
+names. The value replaces a ``spark.driver.extraJavaOptions`` set in
+``spark-defaults.conf``. Another collector named in
+``JAVA_TOOL_OPTIONS`` (``-XX:+UseG1GC``, say) makes the JVM refuse to
+start ("Multiple garbage collectors selected", as ``java -version``
+with both flags shows).
 """
 
 from __future__ import annotations
@@ -211,6 +231,8 @@ def get_session(
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.sql.codegen.useIdInClassName", "false")
         .config("spark.driver.memory", driver_memory())
+        # -- the JVM's collector (module docstring) ------------------
+        .config("spark.driver.extraJavaOptions", "-XX:+UseParallelGC")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
