@@ -247,7 +247,7 @@ def _simhash_with_bits(spark, bits: int):
 # (call, message) per input check; each raises before any Spark job
 _INPUT_CHECKS = {
     "ordered_prefix_rn_name": (
-        lambda s: ordered_prefix(s.range(10), [F.col("id")], rn_name="__pid"),
+        lambda s: ordered_prefix(s.range(10), [F.col("id")], rn_name="__bucket"),
         "shadows",
     ),
     "ordered_prefix_clash": (
@@ -256,9 +256,11 @@ _INPUT_CHECKS = {
         ),
         "collide",
     ),
-    "ordered_prefix_parts": (
-        lambda s: ordered_prefix(s.range(10), [F.col("id")], num_parts=1_000_001),
-        "1,000,000 range partitions",
+    "ordered_prefix_key_type": (
+        lambda s: ordered_prefix(
+            s.range(10).selectExpr("CAST(id AS STRING) AS s"), [F.col("s")]
+        ),
+        "numeric, date or timestamp",
     ),
     "hash_split_weights": (
         lambda s: hash_split(s.range(4), "id", {"a": 0.5, "b": 0.4}), "sum to 1"
@@ -277,9 +279,10 @@ _INPUT_CHECKS = {
 @pytest.mark.parametrize("check", sorted(_INPUT_CHECKS))
 def test_input_checks_raise_value_error(spark, check):
     """Input checks raise ValueError, so they still run under
-    ``python -O`` (which strips asserts): the ordered_prefix partition
-    cap is all that stops silently wrong ranks, and the codec checks
-    read bytes that come from outside the program."""
+    ``python -O`` (which strips asserts): the ordered_prefix checks
+    stop a leading key it cannot bucket and outputs that would
+    overwrite columns, and the codec checks read bytes that come from
+    outside the program."""
     call, message = _INPUT_CHECKS[check]
     with pytest.raises(ValueError, match=message):
         call(spark)

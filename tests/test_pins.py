@@ -1,9 +1,8 @@
 """Pin lifecycle: the lazy persists freeze_partitions takes inside a
 registry build must be released by the next build — a long-lived
-session must not accumulate CacheManager entries (VERDICT r5 item 5:
-every cached entry taxes every later query's canonicalized-plan
-lookup, ~1.3-1.5x at ~100 pins) — and a release must never free a pin
-its owner still uses."""
+session must not accumulate CacheManager entries (every cached entry
+taxes every later query's canonicalized-plan lookup, ~1.3-1.5x at ~100
+pins) — and a release must never free a pin its owner still uses."""
 
 from __future__ import annotations
 
@@ -17,6 +16,9 @@ from trading212_etl_spark.partitioning import (
     materialize,
     ordered_prefix,
 )
+
+from .test_plans import _confs
+from .test_properties import ordered_prefix_reference
 
 SF = "/root/testdata/sf0.001"
 
@@ -47,8 +49,8 @@ def test_registry_invocation_releases_prior_pins(spark, monkeypatch):
     again."""
     spark.catalog.clearCache()
     taken = _record_pins(monkeypatch)
-    # orders_rfm_segments pins via ordered_prefix -> freeze_partitions
-    df = registry.QUERIES["orders_rfm_segments"](spark, SF)
+    # documents_source_overlap pins its (source, fingerprint) frame
+    df = registry.QUERIES["documents_source_overlap"](spark, SF)
     df.write.format("noop").mode("overwrite").save()
     assert taken, "entry under test no longer pins"
     assert all(p.storageLevel.useMemory for p in taken)
@@ -74,21 +76,15 @@ def test_registry_releases_corrupt_record_pin(spark):
 
 def test_registry_build_keeps_caller_pins(spark, monkeypatch):
     """A registry build releases only the pins earlier registry builds
-    took. A caller's own live ordered_prefix pin stays cached across
-    it, so actioning the caller's frame again reads the same
-    partition assignment and returns the same rows (an unpersisted pin
-    would let the offsets branch resample the range exchange and
-    mis-join)."""
+    took. A caller's own live freeze_partitions pin stays cached across
+    it and keeps serving the caller's frame."""
     spark.catalog.clearCache()
     taken = _record_pins(monkeypatch)
-    df = spark.range(3000).selectExpr("id", "(id * 7919) % 101 AS k")
-    ranked = ordered_prefix(
-        df, [F.col("k"), F.col("id")], rn_name="rn", sum_cols=["k"]
-    )
-    first = sorted(ranked.collect())
-    (mine,) = taken
+    agg = spark.range(3000).selectExpr("id % 101 AS k").groupBy("k").count()
+    mine = partitioning.freeze_partitions(agg)
+    first = sorted(mine.collect())
     # a registry build that pins, then one whose build frees those
-    registry.QUERIES["orders_rfm_segments"](spark, SF).write.format(
+    registry.QUERIES["documents_source_overlap"](spark, SF).write.format(
         "noop"
     ).mode("overwrite").save()
     assert len(taken) > 1
@@ -96,9 +92,47 @@ def test_registry_build_keeps_caller_pins(spark, monkeypatch):
     registry.QUERIES["projection_reorder"](spark, SF)
     live = [p for p in taken if p.storageLevel.useMemory]
     assert len(live) == 1 and live[0] is mine, "caller's pin was unpersisted"
-    assert sorted(ranked.collect()) == first
+    assert sorted(mine.collect()) == first
     mine.unpersist(blocking=True)
     assert _cache_empty(spark)
+
+
+def test_ordered_prefix_takes_no_pin(spark):
+    """ordered_prefix ranks by data, not by partition id, so it needs
+    no cache: with exchange reuse off (each branch runs its own
+    shuffle) and AQE coalescing to a small advisory size over a
+    shuffled upstream, it leaves the CacheManager empty, and its ranks
+    and running sums equal a pure-Python scan."""
+    spark.catalog.clearCache()
+    upstream = (
+        spark.range(6000)
+        .selectExpr(
+            "id % 3000 AS id",
+            "((id % 3000) * 7919) % 101 - 50 AS k",
+            "CASE WHEN id % 13 = 0 THEN NULL ELSE id % 17 END AS v",
+        )
+        .groupBy("id")
+        .agg(F.max("k").alias("k"), F.sum("v").alias("v"))
+    )
+    confs = {
+        "spark.sql.exchange.reuse": "false",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes": "1k",
+    }
+    with _confs(spark, confs):
+        rows = [tuple(r) for r in upstream.select("id", "k", "v").collect()]
+        ranked = ordered_prefix(
+            upstream, [F.col("k").desc(), F.col("id")], rn_name="rn",
+            sum_cols=["v"],
+        )
+        got = {
+            r["id"]: (r["rn"], r["run_v"], r["total_n"], r["total_v"])
+            for r in ranked.collect()
+        }
+        assert _cache_empty(spark)
+    assert got == ordered_prefix_reference(
+        rows, descending=True, nulls_first=False, exclusive=False
+    )
 
 
 def test_checkpoint_dir_makes_pins_reliable(spark, tmp_path):

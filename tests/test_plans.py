@@ -180,6 +180,17 @@ NESTED_LOOP_BY_DESIGN = {
     "pipeline_release_gate",
     # r6: 1-row session-total broadcast onto the pair-count frame
     "events_type_lift_matrix",
+    # 1-row broadcast of the leading sort key's min/max onto the frame
+    # partitioning.ordered_prefix buckets
+    "orders_pareto_8020",
+    "orders_gini_coefficient",
+    "orders_rfm_segments",
+    "parts_abc_classification",
+    "drift_value_ks_distance",
+    "drift_value_mann_whitney",
+    "events_concurrency_peak",
+    "text_bpe_merges",
+    "sample_curriculum_order",
     # r6: 1-row corpus-stats broadcast onto the tf frame
     "text_bm25_topk",
     # r6: 1-row total-pairs broadcast onto the pair-frequency frame
@@ -947,7 +958,7 @@ def test_ordered_scans_have_no_unpartitioned_window_over_data(spark):
     """The r3 verdict's scale-killer fix: the five rank/ECDF entries
     must not move their (unbounded-cardinality) frame through a
     single-partition WindowExec. After the ordered_prefix rewrite,
-    every window over DATA is partitioned on spark_partition_id();
+    every window over DATA is partitioned on the sort-key bucket;
     the only permitted unpartitioned stage is the final scalar
     aggregate (gini/KS/U emit one row), which is a partial-agg +
     SinglePartition reduce, not a window. We assert on the window
@@ -977,14 +988,17 @@ def test_ordered_scans_have_no_unpartitioned_window_over_data(spark):
 
 def test_ordered_prefix_sort_stage_is_parallel(spark):
     """>1 partition must survive the sort stage: the pareto scan's
-    row_number window hash-partitions on __pid (the session's shuffle
-    partitions), not SinglePartition."""
+    row_number window hash-partitions on its sort-key bucket (the
+    session's shuffle partitions), not SinglePartition, and no range
+    exchange samples the input."""
     df = registry.QUERIES["orders_pareto_8020"](spark, SF)
     simple = df._jdf.queryExecution().executedPlan().toString()
-    assert "hashpartitioning(__pid" in simple
+    assert "hashpartitioning(__bucket" in simple
+    assert "rangepartitioning" not in simple
     # the lone SinglePartition exchanges allowed are under the
-    # broadcast of the partition-count-sized offsets frame — no
-    # SinglePartition may feed a Sort over the data frame
+    # broadcasts of the one-row key bounds and the metadata-sized
+    # offsets frame — no SinglePartition may feed a Sort over the
+    # data frame
     import re
 
     for m in re.finditer(r"Exchange SinglePartition[^\n]*\n([^\n]*)", simple):

@@ -15,7 +15,7 @@ from unittest import mock
 
 import pandas as pd
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from pyspark.sql import functions as F
@@ -719,13 +719,12 @@ def test_rolling_volatility_matches_quadratic_reference(
 
 
 def test_ordered_prefix_rank_is_permutation_across_reruns(spark):
-    """Value-level pin for the freeze_partitions consistency contract
-    (the r3 'flapping u2' regression class): the lazy persist pin must
-    keep spark_partition_id assignments identical between the running
-    scan and the offsets subtree, so the global rank is an exact
-    1..n permutation — and the SAME permutation — on every
-    cache-cleared re-execution. A pid divergence shows up here as a
-    duplicated/missing rank or a run-to-run diff."""
+    """The running scan and the offsets subtree each compute every
+    row's bucket from its data, so the global rank is an exact 1..n
+    permutation — and the SAME permutation — on every cache-cleared
+    re-execution (the 'flapping u2' regression class, when buckets
+    were partition ids). A divergence between the branches shows up
+    here as a duplicated/missing rank or a run-to-run diff."""
     from trading212_etl_spark.partitioning import ordered_prefix
 
     df = (
@@ -736,8 +735,7 @@ def test_ordered_prefix_rank_is_permutation_across_reruns(spark):
     for _ in range(3):
         spark.catalog.clearCache()
         got = (
-            ordered_prefix(df, [F.col("k"), F.col("id")], rn_name="rn",
-                           num_parts=8)
+            ordered_prefix(df, [F.col("k"), F.col("id")], rn_name="rn")
             .select("id", "rn")
             .toPandas()
             .sort_values("id")
@@ -746,6 +744,114 @@ def test_ordered_prefix_rank_is_permutation_across_reruns(spark):
         assert sorted(got["rn"]) == list(range(1, 5001))
         outs.append(got)
     assert outs[0].equals(outs[1]) and outs[1].equals(outs[2])
+
+
+def ordered_prefix_reference(rows, *, descending, nulls_first, exclusive):
+    """Pure-Python ordered scan over ``(id, k, v)`` rows, ordered by
+    ``k`` the way Spark sorts (NaN above +inf, nulls first or last as
+    asked) and then by ``id``: id -> (rank, running sum of v with null
+    cells as 0, total_n, total_v)."""
+    def order(row):
+        rid, k, _v = row
+        if k is None:
+            return (0 if nulls_first else 2, (0, 0), rid)
+        nan = k != k
+        if descending:
+            return (1, (0, 0) if nan else (1, -k), rid)
+        return (1, (1, 0) if nan else (0, k), rid)
+
+    ranked = sorted(rows, key=order)
+    present = [v for _i, _k, v in rows if v is not None]
+    total_v = sum(present) if present else None
+    out, run = {}, 0
+    for rn, (rid, _k, v) in enumerate(ranked, 1):
+        run += v or 0
+        out[rid] = (rn, run - (v or 0) if exclusive else run, len(rows), total_v)
+    return out
+
+
+_INF = float("inf")
+_KEYS = {
+    "bigint": st.one_of(
+        st.none(),
+        st.integers(min_value=-3, max_value=3),
+        st.sampled_from([-(2**63), 2**63 - 1]),
+    ),
+    "double": st.one_of(
+        st.none(),
+        st.integers(min_value=-3, max_value=3).map(float),
+        st.sampled_from([float("nan"), _INF, -_INF, -1e308, 1e308, -0.5, 2.25]),
+    ),
+}
+_scan_case = st.sampled_from(sorted(_KEYS)).flatmap(
+    lambda kind: st.tuples(
+        st.just(kind),
+        st.lists(
+            st.tuples(
+                _KEYS[kind], st.one_of(st.none(), st.integers(-5, 5))
+            ),
+            max_size=25,
+        ),
+    )
+)
+
+
+@PROP
+@given(
+    case=_scan_case,
+    descending=st.booleans(),
+    nulls_first=st.booleans(),
+    exclusive=st.booleans(),
+)
+@example(case=("bigint", []), descending=False, nulls_first=True, exclusive=False)
+@example(case=("bigint", [(-2, 4)]), descending=True, nulls_first=False, exclusive=True)
+@example(
+    case=("bigint", [(7, 1), (7, None), (7, -3), (7, 2)]),
+    descending=False, nulls_first=True, exclusive=True,
+)
+@example(
+    case=(
+        "double",
+        [(float("nan"), 1), (_INF, None), (None, 2), (-_INF, 3), (-1.5, None),
+         (float("nan"), 4), (None, None), (2.0, -1), (_INF, 5)],
+    ),
+    descending=True, nulls_first=True, exclusive=True,
+)
+@example(
+    case=("double", [(None, 1), (float("nan"), None), (None, 3)]),
+    descending=False, nulls_first=False, exclusive=False,
+)
+def test_ordered_prefix_matches_reference(
+    spark, case, descending, nulls_first, exclusive
+):
+    """ordered_prefix against a pure-Python scan: ascending and
+    descending leading keys, both null placements, ties broken by the
+    id tiebreaker, empty and one-row inputs, all-equal keys, negative
+    values, null leading keys and null sum cells, and a double key with
+    NaN and ±inf."""
+    from trading212_etl_spark.partitioning import ordered_prefix
+
+    kind, keys = case
+    rows = [(i, k, v) for i, (k, v) in enumerate(keys)]
+    df = spark.createDataFrame(rows, f"id bigint, k {kind}, v bigint")
+    key = F.col("k")
+    lead = {
+        (False, True): key.asc_nulls_first(),
+        (False, False): key.asc_nulls_last(),
+        (True, True): key.desc_nulls_first(),
+        (True, False): key.desc_nulls_last(),
+    }[(descending, nulls_first)]
+    got = {
+        r["id"]: (r["rn"], r["run_v"], r["total_n"], r["total_v"])
+        for r in ordered_prefix(
+            df, [lead, F.col("id")], sum_cols=["v"], rn_name="rn",
+            exclusive=exclusive,
+        ).collect()
+    }
+    assert got == ordered_prefix_reference(
+        rows, descending=descending, nulls_first=nulls_first,
+        exclusive=exclusive,
+    )
 
 
 def _min_id_components(pairs: list[tuple[int, int]]) -> dict[int, int]:

@@ -4,9 +4,9 @@ Two distinct hazards at the two ends of the scale spectrum:
 
 - **Under-split input** (bench/local): a small parquet file arrives as
   ONE split, so a CPU-heavy operator (regex shingling, MinHash, Arrow
-  decode) serializes on one core while 31 idle. ``fan_out`` widens the
-  plan to cluster parallelism (one round-robin shuffle, each row
-  moved once).
+  decode) serializes on one core while the session's other cores
+  idle. ``fan_out`` widens the plan to cluster parallelism (one
+  round-robin shuffle, each row moved once).
 - **Skewed shuffle keys** (cluster): one hot key turns a shuffle stage
   into a single straggler task. ``with_salt``/``salted_agg`` implement
   two-phase salted aggregation; AQE's skew-join splitting (enabled in
@@ -71,18 +71,11 @@ def materialize(df: DataFrame) -> DataFrame:
 # registry build is not recorded: it belongs to its caller, like any
 # ``df.persist()``. Eager localCheckpoint/checkpoint blocks are never
 # recorded: they live outside the CacheManager and are reclaimed by the
-# ContextCleaner when their RDD is garbage-collected.
-#
-# Releasing a LIVE pin is NOT merely a lost cache hit — it can CORRUPT
-# results. After unpersist there is no InMemoryRelation; a later action
-# replans the lineage, and its broadcast subtree (the ordered_prefix
-# offsets) and main subtree each materialize their OWN instance of the
-# range exchange with independently sampled boundaries, so
-# ``spark_partition_id`` diverges between the branches and the offset
-# join mis-assigns. While the pin lives, block EVICTION is still safe —
-# a recompute of cached partition *i* re-reads the same immutable
-# shuffle outputs. So a build frees only the previous build's pins,
-# which are dead once the next build starts.
+# ContextCleaner when their RDD is garbage-collected. Every pin is a
+# performance cache only: no plan in the package reads a result that
+# depends on which cached partition a row sits in, so releasing a pin
+# early costs a recompute, never a wrong row. A build still frees only
+# the previous build's pins, which are dead once the next build starts.
 
 # the open build's pin list, or None outside a registry build
 _BUILD_PINS: list[DataFrame] | None = None
@@ -107,27 +100,6 @@ def serial_pins(held: list[DataFrame]):
         _BUILD_PINS = None
 
 
-def agg_parts(spark) -> int:
-    """Range-partition count for AGGREGATE-SIZED frames (per-customer,
-    per-day, per-group rollups) fed to ``ordered_prefix``.
-
-    ``spark.sql.shuffle.partitions`` is sized for FACT-scale shuffles;
-    an aggregate is typically orders of magnitude smaller, and on such
-    frames the two-pass rank machinery is task-overhead-bound — each
-    extra range partition is an extra sort task, an extra totals row,
-    and an extra sampled bound, for no memory relief. conf/4 (floor 8)
-    keeps the same scaling LAW as the deployment conf — a 100 TB
-    session running shuffle.partitions=4000 still gets 1000-way
-    parallel rank scans over its per-customer frame — while a
-    32-partition session drops from 32 tiny tasks to 8 (measured 1.9x
-    on orders_rfm_segments at local[32]). Below 32 partitions the
-    floor of 8 applies: on a 4-core host, whose policy width is 4
-    (session.shuffle_partitions_for), that is 8 range partitions.
-    Callers whose input is fact-sized must NOT use this: pass
-    num_parts=None to inherit the full conf."""
-    return max(8, int(spark.conf.get("spark.sql.shuffle.partitions")) // 4)
-
-
 def bounded_bucket(col: str) -> Column:
     """Non-foldable pseudo-constant partition key for windows over
     DOMAIN-BOUNDED frames — day/month/hour/dimension-indexed
@@ -140,10 +112,9 @@ def bounded_bucket(col: str) -> Column:
     ``partitionBy(floor(col / 1e6))`` yields ONE partition for any
     domain below the 1M cap (identical frames, identical results) while
     surviving the optimizer — a literal key is constant-folded away
-    and the warning returns. Same contract as the ordered_prefix
-    offsets cascade: the cap sits safely above the domain's reachable
-    range (1M day indices = year 4707; 1M embedding dims), because a
-    domain that outgrows it would SPLIT the window. The column passed
+    and the warning returns. The cap sits safely above the domain's
+    reachable range (1M day indices = year 4707; 1M embedding dims),
+    because a domain that outgrows it would SPLIT the window. The column passed
     here must be an integer index with a hard domain bound, never a
     data-scaling key — and it must be NON-NEGATIVE: ``floor(-1/cap)``
     is ``-1``, so a signed index (e.g. a day epoch anchored mid-range)
@@ -176,29 +147,17 @@ def scalar_bucket(col: str) -> Column:
 
 
 def freeze_partitions(df: DataFrame) -> DataFrame:
-    """Pin a frame's partition ASSIGNMENT across multi-consumer plan
-    branches — the cheap sibling of ``materialize`` for plans whose
-    only hazard is ``spark_partition_id()`` divergence, not lineage
-    blow-up.
+    """Cache a frame that several plan branches consume, so its subtree
+    runs once instead of once per consumer — the cheap sibling of
+    ``materialize`` for plans whose cost is duplicated work, not
+    lineage blow-up. The pin is a performance cache only: every
+    consumer computes the same rows without it.
 
-    Lazy ``persist(MEMORY_AND_DISK)`` is sufficient and consistent
-    here, where an eager ``localCheckpoint`` costs a whole extra job
-    per call (3 extra jobs in orders_rfm_segments alone — the r4
-    bench regression):
-
-    - the plan has ONE exchange below ONE InMemoryRelation, so every
-      consumer — including broadcast subtrees, which execute first and
-      fill the cache — reads the same cached partitions; there is no
-      second exchange instance for AQE to coalesce differently (the
-      r3-observed pid-flapping mode);
-    - shuffle map outputs are immutable once written, so an
-      eviction-triggered recompute of cached partition *i* re-reads
-      exactly the same shuffle rows — ``spark_partition_id`` is the
-      partition INDEX and cannot drift.
-
-    With a checkpoint directory set, the pin is a fault-tolerant
+    Lazy ``persist(MEMORY_AND_DISK)`` fills on the first action, where
+    an eager ``localCheckpoint`` costs a whole extra job per call. With
+    a checkpoint directory set, the pin is a fault-tolerant
     ``checkpoint()`` instead (an executor-loss recompute is then a
-    checkpoint read, free of any shuffle-service dependency).
+    checkpoint read).
 
     Inside a registry build the persist is recorded and the next build
     unpersists it (``serial_pins``). A pin taken outside a registry
@@ -295,6 +254,78 @@ def salted_agg(
     )
 
 
+# Equi-width buckets per shuffle partition in ordered_prefix: the hash
+# exchange on the bucket spreads about this many buckets over each
+# partition, so uneven bucket sizes even out across tasks, while the
+# per-bucket totals stay a metadata-sized frame.
+_BUCKETS_PER_PARTITION = 64
+
+
+_NUMERIC_TYPES = {"byte", "short", "integer", "long", "decimal", "float", "double"}
+
+
+def _with_sort_bucket(
+    df: DataFrame, order_by: list[Column], n_buckets: int
+) -> DataFrame:
+    """``df`` plus ``__bucket``, each row's bucket under ``order_by``: a
+    pure function of the row's leading sort key that never decreases
+    along the sort order.
+
+    The key maps to a double that never decreases as it grows (dates
+    through ``unix_date``, timestamps through ``unix_micros``) and is
+    cut into ``n_buckets`` equal-width buckets between its smallest
+    and largest finite value, read from a one-row aggregate broadcast
+    onto every row (a broadcast stage starts with the input's own
+    stages; a scalar subquery would start only once the bucket stage
+    is planned, measured 0.1-0.2 s slower per call at sf0.1).
+    The ends get their own buckets: nulls first or last as the order
+    places them, NaN above +inf (Spark sorts it above every number),
+    and -inf/+inf share the lowest/highest value bucket. Halving both
+    operands keeps ``pos - lo`` finite for any pair of doubles.
+    """
+    # analysing df.orderBy(order_by[0]) resolves a plain column and a
+    # desc() / asc_nulls_last() form alike, with Spark's own defaults
+    order = df.orderBy(order_by[0])._jdf.queryExecution().analyzed().order().head()
+    utils = df.sparkSession._jvm.org.apache.spark.sql.classic.ExpressionUtils
+    key = Column(utils.column(order.child()))
+    type_name = order.child().dataType().typeName()
+    ascending = bool(order.isAscending())
+    nulls_first = order.nullOrdering().sql() == "NULLS FIRST"
+    if type_name == "date":
+        pos = F.unix_date(key).cast("double")
+    elif type_name == "timestamp":
+        pos = F.unix_micros(key).cast("double")
+    elif type_name.split("(")[0] in _NUMERIC_TYPES:
+        pos = key.cast("double")
+    else:
+        raise ValueError(
+            "ordered_prefix buckets on a numeric, date or timestamp leading "
+            f"sort key, not {type_name}"
+        )
+    floating = type_name in ("float", "double")
+    inf = F.lit(float("inf"))
+    finite = F.when(~F.isnan(pos) & (F.abs(pos) < inf), pos) if floating else pos
+    lo, hi = F.col("__lo"), F.col("__hi")
+    span = F.when(hi > lo, hi / 2 - lo / 2).otherwise(F.lit(1.0))
+    idx = F.least(
+        F.floor((pos / 2 - lo / 2) / span * n_buckets), F.lit(n_buckets - 1)
+    )
+    if floating:
+        idx = F.when(pos == -inf, 0).when(pos == inf, n_buckets - 1).otherwise(idx)
+    # 0: nulls first; 1: NaN descending; 2 .. n+1: values in sort
+    # order; n+2: NaN ascending; n+3: nulls last
+    bucket = F.when(pos.isNull(), 0 if nulls_first else n_buckets + 3)
+    if floating:
+        bucket = bucket.when(F.isnan(pos), n_buckets + 2 if ascending else 1)
+    bucket = bucket.otherwise(2 + (idx if ascending else n_buckets - 1 - idx))
+    bounds = df.agg(F.min(finite).alias("__lo"), F.max(finite).alias("__hi"))
+    return (
+        df.crossJoin(F.broadcast(bounds))
+        .withColumn("__bucket", bucket.cast("bigint"))
+        .drop("__lo", "__hi")
+    )
+
+
 def ordered_prefix(
     df: DataFrame,
     order_by: list[Column],
@@ -302,44 +333,52 @@ def ordered_prefix(
     sum_cols: list[str] | None = None,
     rn_name: str | None = None,
     exclusive: bool = False,
-    num_parts: int | None = None,
-    pin_input: bool = False,
 ) -> DataFrame:
     """Distributed ORDER BY scan: global ``row_number`` and/or running
     sums over a total order WITHOUT a single-partition WindowExec.
 
     The naive ``Window.orderBy(...)`` moves the entire frame through
-    one task ("No Partition Defined" — the r3 verdict's named
-    100x-scale killer). This is the two-pass rewrite it prescribes:
+    one task ("No Partition Defined"). This is the two-pass rewrite:
 
-    1. ``repartitionByRange`` on the sort order — partition *i* holds a
-       contiguous key range wholly below partition *i+1* (the range
-       partitioner places each row against sampled bounds), so a
-       per-partition scan plus a per-partition additive offset equals
-       the global scan;
-    2. per-partition prefix via a window PARTITIONED on
-       ``spark_partition_id()`` (parallel across the cluster);
-    3. per-partition totals (``num_parts`` rows, partition-count-sized
-       METADATA, not data) cascaded into exclusive offsets and
-       broadcast-joined back.
+    1. each row gets an equal-width bucket of its LEADING sort key
+       between the key's min and max (``_with_sort_bucket``), a pure
+       function of the row's data that never decreases along the sort
+       order, so bucket *b* holds a contiguous stretch of the order
+       wholly below bucket *b+1*;
+    2. one hash exchange on the bucket feeds a per-bucket window
+       (``row_number`` and running sums, parallel across the cluster)
+       and the per-bucket totals;
+    3. the totals (at most ``_BUCKETS_PER_PARTITION`` x shuffle
+       partitions rows, plus the null/NaN end buckets: METADATA, not
+       data) are cascaded into exclusive offsets and broadcast-joined
+       back.
+
+    No branch depends on partition ids, sampled range bounds or a
+    cache: re-executing any subtree, with or without exchange reuse
+    or AQE coalescing, assigns every row the same bucket. The bucket
+    count is ``spark.sql.shuffle.partitions`` x
+    ``_BUCKETS_PER_PARTITION``.
+
+    The skew trade: all rows with one leading value land in one
+    bucket, so a hot leading value is one task's window, where a range
+    partitioner could split it on the tiebreaker. The leading key must
+    be numeric, a date or a timestamp.
 
     ``order_by`` must define a TOTAL order (include a unique
-    tiebreaker) — equal sort keys could otherwise straddle a range
-    boundary and the offset addition would double-count their prefix.
+    tiebreaker), or equal sort keys get an arbitrary order.
     ``sum_cols`` get running sums as ``run_<col>`` (inclusive, or
-    exclusive of the current row with ``exclusive=True``);
-    ``rn_name`` adds the global row number. The per-partition totals
-    also yield grand totals, emitted as ``total_<col>`` / ``total_n``
-    on every row — the usual companions (they'd otherwise need a
-    second unpartitioned window).
+    exclusive of the current row with ``exclusive=True``; null cells
+    count as 0); ``rn_name`` adds the global row number. The
+    per-bucket totals also yield grand totals, emitted as
+    ``total_<col>`` / ``total_n`` on every row.
 
-    Cost: two full-width shuffles (range + pid-hash), one broadcast.
-    The only ordered window over unbounded data runs per-pid; the
-    offsets window runs over <= num_parts rows and is partitioned by a
-    constant key so no stage is both unbounded and single-partition.
+    Cost: one full-width shuffle (the bucket hash), one extra read of
+    the input for the min/max aggregate, two broadcasts.
     """
+    from pyspark.sql import Window
+
     sum_cols = list(sum_cols or [])
-    reserved = {"__pid", "__rn", "__off_n"} | {
+    reserved = {"__bucket", "__lo", "__hi", "__rn", "__cnt", "__off_n"} | {
         p + c for c in sum_cols for p in ("__run_", "__off_", "__sum_")
     }
     if rn_name in reserved:
@@ -357,86 +396,40 @@ def ordered_prefix(
             f"ordered_prefix outputs {sorted(clash)} collide with input "
             "columns — rename them upstream"
         )
-    spark = df.sparkSession
-    n_parts = num_parts or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    # The offsets cascade below buckets by floor(__pid / 1M); beyond
-    # 1M range partitions the buckets would not be chained and every
-    # global rank/sum would be silently wrong — fail loudly instead.
-    if n_parts > 1_000_000:
-        raise ValueError(
-            f"ordered_prefix supports at most 1,000,000 range partitions "
-            f"(got {n_parts}); widen the cascade bucketing first"
-        )
-    from pyspark.sql import Window
-
-    # r15 (VERDICT r14 item 9, measured): repartitionByRange SAMPLES
-    # its child to pick range bounds, so the input plan executes
-    # twice — sample job then shuffle pass, SEQUENTIALLY (the
-    # idle-core concurrency that makes sibling-stage duplication
-    # nearly free at bench SF does not apply here: the sample job
-    # must finish before the exchange can start). ``pin_input``
-    # (per-call-site OPT-IN) caches the input so the second execution
-    # is a cache read. It must stay opt-in because the win is decided
-    # by compute-per-output-byte, which no Catalyst size estimate
-    # sees: measured at 125× (isolated A/B vs the pre-change tree,
-    # min-of-2) the pin is 1.87× FASTER on sample_curriculum_order (expensive tokenize
-    # chain, 625k-row output: 90.4 → 48.3 s) but 1.8-2.3× SLOWER on
-    # the cheap fact-aggregate inputs whose Catalyst estimate is just
-    # as "heavy" (orders_pareto_8020 5.3 → 9.4, drift_value_ks 2.2 →
-    # 4.6, orders_gini 4.1 → 7.7 — cache encode/store of a wide
-    # aggregate costs more than recomputing it). freeze_when_heavy's
-    # size threshold still gates the opted-in pin so bench-SF plans
-    # stay byte-identical.
-    if pin_input:
-        df = freeze_when_heavy(df)
-    # The pid column MUST be frozen into data before the plan branches:
-    # spark_partition_id() is non-deterministic, and the running scan
-    # and the per-partition totals below are two separate consumers —
-    # if the range exchange is re-executed (or its AQE shuffle-read
-    # differs) between them, the two branches see DIFFERENT pid
-    # assignments and the offset addition silently corrupts ranks
-    # (observed: run-to-run flapping u2 at sf0.1 before the freeze).
-    # freeze_partitions is the LAZY pin: one cached exchange feeds
-    # both consumers, so pids cannot diverge, and no eager checkpoint
-    # job runs per call (the r4 bench cost of the sort rewrites was
-    # exactly three such jobs chained in orders_rfm_segments); a
-    # session with a checkpoint directory gets a fault-tolerant
-    # checkpoint instead.
-    ranged = freeze_partitions(
-        df.repartitionByRange(n_parts, *order_by).withColumn(
-            "__pid", F.spark_partition_id()
-        )
+    n_buckets = _BUCKETS_PER_PARTITION * int(
+        df.sparkSession.conf.get("spark.sql.shuffle.partitions")
     )
-    local = Window.partitionBy("__pid").orderBy(*order_by)
-    running = ranged.withColumn("__rn", F.row_number().over(local))
+    bucketed = _with_sort_bucket(df, order_by, n_buckets).repartition("__bucket")
+    local = Window.partitionBy("__bucket").orderBy(*order_by)
+    running = bucketed.withColumn("__rn", F.row_number().over(local))
     for c in sum_cols:
         running = running.withColumn(
             f"__run_{c}",
             F.sum(c).over(local.rowsBetween(Window.unboundedPreceding, 0)),
         )
 
-    totals = ranged.groupBy("__pid").agg(
-        F.count(F.lit(1)).alias("__cnt"),
+    # Totals from the window's output, already clustered on __bucket:
+    # max(__rn) keeps the window, so this branch reads the sort and sum
+    # columns through the same exchange as the rows, and when those are
+    # all of df's columns the two branches share one shuffle (an
+    # aggregate straight off ``bucketed`` prunes to the sum columns and
+    # re-executes df up to its last exchange).
+    totals = running.groupBy("__bucket").agg(
+        F.max("__rn").cast("bigint").alias("__cnt"),
         *[F.sum(c).alias(f"__sum_{c}") for c in sum_cols],
     )
-    # Exclusive cascade over the per-partition totals: <= n_parts rows
-    # regardless of data volume, so a constant partition key (one
-    # partition, but partition-count-sized METADATA, not data) is the
-    # correct scale class. The key must be non-foldable — a plain
-    # lit(0) (and even __pid * 0) is constant-folded out of the window
-    # spec, reverting to the "No Partition Defined" plan this helper
-    # exists to avoid. floor(__pid / 1M) survives the optimizer and is
-    # honest about the scale contract: the cascade is bucketed per
-    # million shuffle partitions (one bucket for any real job).
-    totals = totals.withColumn(
-        "__zero", F.floor(F.col("__pid") / F.lit(1_000_000))
-    )
-    cascade = Window.partitionBy("__zero").orderBy("__pid").rowsBetween(
+    # Exclusive cascade over the per-bucket totals, a metadata-sized
+    # frame, so one window partition is the right scale class. The
+    # partition key must survive the optimizer (a literal is folded
+    # away, reverting to the "No Partition Defined" plan):
+    # scalar_bucket is 0 on every row.
+    zero = scalar_bucket("__bucket")
+    cascade = Window.partitionBy(zero).orderBy("__bucket").rowsBetween(
         Window.unboundedPreceding, -1
     )
-    grand = Window.partitionBy("__zero")
+    grand = Window.partitionBy(zero)
     offsets = totals.select(
-        "__pid",
+        "__bucket",
         F.coalesce(F.sum("__cnt").over(cascade), F.lit(0)).alias("__off_n"),
         F.sum("__cnt").over(grand).alias("total_n"),
         *[
@@ -451,18 +444,17 @@ def ordered_prefix(
         ],
     )
 
-    out = running.join(F.broadcast(offsets), "__pid")
+    out = running.join(F.broadcast(offsets), "__bucket")
     if rn_name is not None:
         out = out.withColumn(rn_name, F.col("__rn") + F.col("__off_n"))
     for c in sum_cols:
-        run = F.col(f"__run_{c}") + F.col(f"__off_{c}")
+        # coalesce: a bucket whose rows so far are all null has a null
+        # window sum; the prefix before it still counts
+        run = F.coalesce(F.col(f"__run_{c}"), F.lit(0)) + F.col(f"__off_{c}")
         if exclusive:
-            # coalesce: the rowsBetween(unboundedPreceding, -1) window
-            # this replaces SKIPS null cells; inclusive-minus-current
-            # must not null out the whole prefix on a null row.
             run = run - F.coalesce(F.col(c), F.lit(0))
         out = out.withColumn(f"run_{c}", run)
-    drop = ["__pid", "__rn", "__off_n"]
+    drop = ["__bucket", "__rn", "__off_n"]
     drop += [f"__run_{c}" for c in sum_cols] + [f"__off_{c}" for c in sum_cols]
     return out.drop(*drop)
 

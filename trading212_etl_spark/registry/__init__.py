@@ -88,7 +88,7 @@ _DRIVER_WINDOW = [
     "join_point_in_time",
     # (2) growth rule — query code changed in r15 (CC frontier +
     #     one-pass edges, hashed verify payloads, basket explode,
-    #     curriculum pin_input), plus the two r14 one-pass rewrites
+    #     curriculum input pin), plus the two r14 one-pass rewrites
     #     whose hash-identical claim ADVICE r14 wanted backed by the
     #     primary correctness artifact.
     "dedup_connected_components",

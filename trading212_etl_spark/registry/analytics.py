@@ -217,15 +217,15 @@ def q_orders_pareto_8020(spark, sf_dir):
     cross-multiplied integer inequality 5·cum_before < 4·total — no
     percentage float ever materializes, so both engines agree
     exactly. The ordered scan is the DISTRIBUTED two-pass prefix
-    (partitioning.ordered_prefix): repartitionByRange on
-    (rev_cents DESC, custkey) + per-partition running sums +
-    broadcast per-partition offsets — rank, cumulative revenue, and
-    the grand total all come out of the same pass with no
+    (partitioning.ordered_prefix): equal-width buckets of rev_cents +
+    per-bucket running sums over (rev_cents DESC, custkey) +
+    broadcast per-bucket offsets — rank, cumulative revenue, and the
+    grand total all come out of the same pass with no
     single-partition WindowExec, so a billion-customer catalog scans
-    in parallel (the r3 verdict's named fix, applied)."""
+    in parallel."""
     from pyspark.sql import functions as F
 
-    from ..partitioning import agg_parts, ordered_prefix
+    from ..partitioning import ordered_prefix
 
     o = _t(spark, sf_dir, "orders")
     rev = o.groupBy("o_custkey").agg(
@@ -238,7 +238,6 @@ def q_orders_pareto_8020(spark, sf_dir):
         [F.desc("rev_cents"), F.col("o_custkey")],
         sum_cols=["rev_cents"],
         rn_name="rev_rank",
-        num_parts=agg_parts(spark),
     ).select(
         "o_custkey",
         "rev_cents",
@@ -1557,14 +1556,13 @@ def q_drift_value_ks(spark, sf_dir):
     symbolic until the final ppm division. No ECDF fraction ever
     floats. The ordered scan over the DISTINCT-value frame is the
     DISTRIBUTED two-pass prefix (partitioning.ordered_prefix:
-    repartitionByRange on value + per-partition running sums +
+    equal-width buckets of value + per-bucket running sums +
     broadcast offsets — values are unique post-groupBy, so the order
     is total without a tiebreaker), and the grand totals N1/N2 ride
-    the same pass; no single-partition WindowExec anywhere (the r3
-    verdict's named fix, applied)."""
+    the same pass; no single-partition WindowExec anywhere."""
     from pyspark.sql import functions as F
 
-    from ..partitioning import agg_parts, ordered_prefix
+    from ..partitioning import ordered_prefix
 
     ev = _t(spark, sf_dir, "events")
     in_a = F.when(
@@ -1578,7 +1576,6 @@ def q_drift_value_ks(spark, sf_dir):
         per_value,
         [F.col("value")],
         sum_cols=["c1", "c2"],
-        num_parts=agg_parts(spark),
     ).select(
         F.col("run_c1").cast("decimal(38,0)").alias("cum1"),
         F.col("run_c2").cast("decimal(38,0)").alias("cum2"),

@@ -259,7 +259,7 @@ def q_dedup_boilerplate_lines(spark, sf_dir):
                  count(*) AS n_common
           FROM e a JOIN e b USING (shingle)
           WHERE a.id < b.id GROUP BY a.id, b.id),
-    pairs AS (
+    pairs AS MATERIALIZED (
       SELECT doc_a, doc_b FROM c
       WHERE round(CAST(n_common AS DOUBLE) / (size_a + size_b - n_common), 4) >= {JACCARD_THRESHOLD}
     ),
@@ -304,9 +304,11 @@ def _minhash_md5_cand_ctes(source: str) -> str:
     :func:`_minhash_md5_oracle` entry and the curate-LSH twin
     (registry/timeseries.py, VERDICT r12 item 2). Splicing this after
     a prefix that FILTERS the corpus oracles the banding over exactly
-    the surviving documents, not the raw table."""
+    the surviving documents, not the raw table. ``sig`` is
+    MATERIALIZED: both sides of the band self-join read it, and DuckDB
+    would otherwise run the NUM_HASHES md5 mins once per reader."""
     return f"""e AS (SELECT id, unnest(shingles) AS s FROM {source}),
-    sig AS (
+    sig AS MATERIALIZED (
       SELECT id, {_md5_mins_sql()}
       FROM e GROUP BY id
     ),
@@ -1164,11 +1166,14 @@ _CURATE_CANONICAL_CTES = f"""t AS (
              WHERE quality_bp >= 5200 AND lang_pred IN ('en')),
     canon_ids AS (SELECT min(doc_id) AS doc_id FROM kept GROUP BY sha256(text)),
     canonical AS (SELECT k.* FROM kept k JOIN canon_ids USING (doc_id)),
-    sh AS (SELECT doc_id AS id, {_SHINGLES} AS shingles FROM canonical)"""
+    sh AS MATERIALIZED (SELECT doc_id AS id, {_SHINGLES} AS shingles
+                        FROM canonical)"""
 
 # Survivor rule shared by both curate oracles: recursive-CTE closure
 # over the near-dup pair graph, drop every non-minimum member, return
-# the canonical survivors' metadata columns.
+# the canonical survivors' metadata columns. Each oracle defines
+# ``pairs AS MATERIALIZED``, like the other closure oracles, so the
+# pair stage runs once however often ``edges`` is read.
 _CURATE_SURVIVOR_SQL = """edges AS (SELECT doc_a AS src, doc_b AS dst FROM pairs
               UNION SELECT doc_b, doc_a FROM pairs),
     reach(src, dst) AS (
@@ -1194,7 +1199,7 @@ _CURATE_SURVIVOR_SQL = """edges AS (SELECT doc_a AS src, doc_b AS dst FROM pairs
                  count(*) AS n_common
           FROM e a JOIN e b USING (shingle)
           WHERE a.id < b.id GROUP BY a.id, b.id),
-    pairs AS (SELECT doc_a, doc_b FROM c
+    pairs AS MATERIALIZED (SELECT doc_a, doc_b FROM c
               WHERE round(CAST(n_common AS DOUBLE)
                           / (size_a + size_b - n_common), 4) >= {JACCARD_THRESHOLD}),
     {_CURATE_SURVIVOR_SQL}""",
@@ -1517,16 +1522,15 @@ def q_text_bpe_merges(spark, sf_dir):
     ranked = counts.orderBy(F.col("n_pair").desc(), F.col("pair").asc()).limit(20)
     # merge_rank via ordered_prefix, not Window.partitionBy(lit(1)):
     # the literal key is constant-folded away, resurrecting the
-    # unpartitioned-WindowExec warning this repo bans (r6 verdict
-    # item 1). The frame is 20 post-limit rows, so the two
-    # ordered_prefix shuffles are metadata-sized.
+    # unpartitioned-WindowExec warning this repo bans. The frame is 20
+    # post-limit rows, so the ordered_prefix shuffles are
+    # metadata-sized.
     from ..partitioning import ordered_prefix
 
     return ordered_prefix(
         ranked,
         [F.col("n_pair").desc(), F.col("pair").asc()],
         rn_name="merge_rank",
-        num_parts=4,
     ).select(
         F.col("merge_rank").cast("int").alias("merge_rank"),
         "pair",
@@ -1963,27 +1967,27 @@ def q_sample_curriculum_order(spark, sf_dir):
     corpus — highest-quality documents first (quality-descending,
     doc_id tiebreak), the sequencing a curriculum-learning data
     loader consumes. The global row_number rides ``ordered_prefix``
-    (range partition on the sort order, per-partition ranks, offset
-    cascade) so no single-partition WindowExec exists at any corpus
-    size — the same rewrite as the rfm/pareto entries, here over the
-    quality score."""
+    (buckets of the quality score, per-bucket ranks, offset cascade)
+    so no single-partition WindowExec exists at any corpus size — the
+    same rewrite as the rfm/pareto entries, here over the quality
+    score."""
     from pyspark.sql import functions as F
 
     from ..operators.textual import score_docs
-    from ..partitioning import ordered_prefix
+    from ..partitioning import freeze_when_heavy, ordered_prefix
 
     docs = _t(spark, sf_dir, "documents")
-    q = score_docs(docs, "doc_id").select("doc_id", "quality_bp")
-    # pin_input (r15): the range sampler re-executes the tokenize+
-    # quality chain for its bounds pass — caching the 2-column score
-    # frame halves the entry at scale (125×: 90.4 → 48.3 s,
-    # isolated min-of-2); the freeze_when_heavy threshold skips
-    # the pin at bench SF so the sf0.1 plan is unchanged.
+    # ordered_prefix reads its input twice (the key's min/max, then the
+    # bucket exchange), and each read re-runs the tokenize+quality
+    # chain. Caching the 2-column score frame halved the entry at 125×
+    # against the same two reads by a range partitioner (90.4 → 48.3 s,
+    # isolated min-of-2); the freeze_when_heavy threshold skips the
+    # pin at bench SF.
+    q = freeze_when_heavy(score_docs(docs, "doc_id").select("doc_id", "quality_bp"))
     ranked = ordered_prefix(
         q,
         [F.col("quality_bp").desc(), F.col("doc_id")],
         rn_name="curriculum_rank",
-        pin_input=True,
     )
     return ranked.select(
         "doc_id",
@@ -2593,7 +2597,7 @@ def _incremental_md5_oracle() -> str:
       FROM (SELECT doc_id, {_TOKS} AS toks FROM documents)
     ),
     e AS (SELECT id, unnest(shingles) AS s FROM t),
-    sig AS (
+    sig AS MATERIALIZED (
       SELECT id, {_md5_mins_sql()}
       FROM e GROUP BY id
     ),

@@ -50,15 +50,15 @@ def q_orders_gini(spark, sf_dir):
     G = (2·Σi·xᵢ − (n+1)·Σxᵢ) / (n·Σxᵢ) over revenues sorted
     ascending with a deterministic (x, custkey) tiebreak. The rank is
     the DISTRIBUTED two-pass row number (partitioning.ordered_prefix:
-    repartitionByRange + per-partition row_number + broadcast
+    equal-width buckets of x + per-bucket row_number + broadcast
     offsets), so the docstring's own "at a billion customers" sizing
-    now holds for the PLAN too — no single-partition WindowExec (the
-    r3 verdict's named fix). Every term stays in HUGEINT/DECIMAL(38)
-    until the final ppm division. i·x peaks at n·max_rev — ~10²³ at a
-    billion customers, comfortably inside 38 digits."""
+    holds for the PLAN too — no single-partition WindowExec. Every
+    term stays in HUGEINT/DECIMAL(38) until the final ppm division.
+    i·x peaks at n·max_rev — ~10²³ at a billion customers,
+    comfortably inside 38 digits."""
     from pyspark.sql import functions as F
 
-    from ..partitioning import agg_parts, ordered_prefix
+    from ..partitioning import ordered_prefix
 
     o = _t(spark, sf_dir, "orders")
     rev = o.groupBy("o_custkey").agg(
@@ -70,7 +70,6 @@ def q_orders_gini(spark, sf_dir):
         rev,
         [F.col("x"), F.col("o_custkey")],
         rn_name="i",
-        num_parts=agg_parts(spark),
     ).select("x", F.col("i").cast("decimal(38,0)").alias("i"))
     return ranked.agg(
         F.count(F.lit(1)).alias("n_customers"),
@@ -545,6 +544,9 @@ def q_documents_source_overlap(spark, sf_dir):
 
     d = _t(spark, sf_dir, "documents").where(F.col("text").isNotNull())
     fps = fingerprint(d).select("doc_id", "winnow_fp")
+    # pinned: measured on 4 vCPUs, 3 interleaved runs per arm, pin vs
+    # none: wall 0.93 vs 4.17 s and JVM CPU 3.0 vs 7.1 s at sf0.1,
+    # 2.53 vs 39.06 s and 8.3 vs 50.0 s at 10x
     sigs = freeze_partitions(
         d.select("doc_id", "source")
         .join(fps, "doc_id")
@@ -1021,12 +1023,12 @@ def q_drift_mann_whitney(spark, sf_dir):
     value ECDF skeleton as drift_value_ks_distance — and the same
     DISTRIBUTED scan: partitioning.ordered_prefix with
     ``exclusive=True`` gives the strictly-preceding cum₂ directly
-    (range partition + per-partition prefix + broadcast offsets, no
-    single-partition WindowExec; the r3 verdict's named fix).
+    (value buckets + per-bucket prefix + broadcast offsets, no
+    single-partition WindowExec).
     Everything HUGEINT/DECIMAL(38)."""
     from pyspark.sql import functions as F
 
-    from ..partitioning import agg_parts, ordered_prefix
+    from ..partitioning import ordered_prefix
 
     ev = _t(spark, sf_dir, "events")
     in_a = F.when(
@@ -1041,7 +1043,6 @@ def q_drift_mann_whitney(spark, sf_dir):
         [F.col("value")],
         sum_cols=["c2"],
         exclusive=True,
-        num_parts=agg_parts(spark),
     ).select(
         F.col("c1").cast("decimal(38,0)").alias("c1"),
         F.col("c2").cast("decimal(38,0)").alias("c2"),

@@ -407,27 +407,23 @@ def q_orders_rfm_segments(spark, sf_dir):
     swapping two customers' quartiles. Scale shape (the r3 verdict's
     named fix, applied; restructured r5 for local cost): each quartile
     score is the EXACT distributed ntile — partitioning.ordered_prefix
-    computes the global rank via repartitionByRange + per-partition
+    computes the global rank via key buckets + per-bucket
     row_number + broadcast offsets, and ntile_from_rank projects rank
     → bucket with SQL ntile's integer bucket-size rule. The three rank
-    scans run over NARROW (key, custkey) projections of ONE frozen
-    base aggregate — not chained full-width (r4's shape: 6 wide
-    shuffles + 3 eager checkpoints; 1.9x slower locally) — and join
-    back on o_custkey (aggregate-sized: AQE broadcasts locally, stays
-    hash-co-partitioned after the first join at scale). num_parts is
-    agg_parts: the per-customer frame is overhead-bound at the
-    fact-sized shuffle conf. No global ntile window, no
-    single-partition sort, and still bit-identical to the oracle's
+    scans run over NARROW (key, custkey) projections of ONE base
+    aggregate — not chained full-width (r4's shape: 6 wide shuffles +
+    3 eager checkpoints; 1.9x slower locally) — and join back on
+    o_custkey (aggregate-sized: AQE broadcasts locally, stays
+    hash-co-partitioned after the first join at scale). The base is
+    not pinned: its four readers share the orders exchange, and a pin
+    measured no faster (4 vCPUs, 3 interleaved runs per arm: 1.58 vs
+    1.70 s at sf0.1, 4.71 vs 4.04 s at 10x). No global ntile window,
+    no single-partition sort, and still bit-identical to the oracle's
     ntile(4) (approx-quantile cuts would NOT be — equal-frequency
     buckets are a rank property, not a value property)."""
     from pyspark.sql import functions as F
 
-    from ..partitioning import (
-        agg_parts,
-        freeze_partitions,
-        ntile_from_rank,
-        ordered_prefix,
-    )
+    from ..partitioning import ntile_from_rank, ordered_prefix
 
     orders = _t(spark, sf_dir, "orders")
     rfm = orders.groupBy("o_custkey").agg(
@@ -437,18 +433,16 @@ def q_orders_rfm_segments(spark, sf_dir):
     )
     # ntile sorts on the EXACT decimal; the emitted monetary column is
     # its double image (deterministic — the decimal is already 2dp)
-    base = freeze_partitions(rfm)
-    scored = base
+    scored = rfm
     for key, out in (
         ("last_order", "r_score"),
         ("frequency", "f_score"),
         ("monetary", "m_score"),
     ):
         ranks = ordered_prefix(
-            base.select(key, "o_custkey"),
+            rfm.select(key, "o_custkey"),
             [F.col(key), F.col("o_custkey")],
             rn_name="__rank",
-            num_parts=agg_parts(spark),
         ).select(
             "o_custkey",
             ntile_from_rank(F.col("__rank"), F.col("total_n"), 4).alias(out),
@@ -1208,7 +1202,7 @@ def _curate_lsh_oracle() -> str:
       JOIN sh ta ON ta.id = c.doc_a
       JOIN sh tb ON tb.id = c.doc_b
     ),
-    pairs AS (
+    pairs AS MATERIALIZED (
       SELECT doc_a, doc_b FROM v
       WHERE round(CAST(n_common AS DOUBLE)
                   / (size_a + size_b - n_common), 4) >= {JACCARD_THRESHOLD}
@@ -1373,7 +1367,7 @@ def q_orders_basket_affinity(spark, sf_dir):
                  count(*) AS n_common
           FROM e a JOIN e b USING (shingle)
           WHERE a.id < b.id GROUP BY a.id, b.id),
-    pairs AS (
+    pairs AS MATERIALIZED (
       SELECT doc_a, doc_b FROM c
       WHERE round(CAST(n_common AS DOUBLE) / (size_a + size_b - n_common), 4) >= {JACCARD_THRESHOLD}
     ),
@@ -1712,7 +1706,7 @@ ORACLES["dedup_semantic_clusters"] = f"""
       FROM banded a JOIN banded b ON a.tbl = b.tbl AND a.bkt = b.bkt
       WHERE a.vec_id < b.vec_id
     ),
-    pairs AS (
+    pairs AS MATERIALIZED (
       SELECT cand.vec_a, cand.vec_b
       FROM cand
       JOIN v va ON va.vec_id = cand.vec_a
